@@ -936,8 +936,6 @@ object Dedup {
       if (cutoff > 0) base.limit(cutoff + 1).collect()
       else Array.empty[org.apache.spark.sql.Row]
     if (cutoff > 0 && probe.length <= cutoff) {
-      if (sys.env.contains("SPARK_GRAFT_CC_DEBUG"))
-        System.err.println(s"[dupClusters] driver path edges=${probe.length}")
       val (roots, vs) = driverMinForest(probe)
       val idType = canon.schema("src").dataType
       val schema = org.apache.spark.sql.types.StructType(Seq(
@@ -1016,8 +1014,6 @@ object Dedup {
       edges = ss
       it += 1
     }
-    if (sys.env.contains("SPARK_GRAFT_CC_DEBUG"))
-      System.err.println(s"[dupClusters] converged=$converged rounds=$it")
     // hitting the cap un-converged means components may be silently
     // UNDER-merged (the q192 failure mode on a long name-edit chain) —
     // that is a wrong answer, not a degraded one; fail loud instead

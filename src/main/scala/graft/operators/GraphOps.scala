@@ -856,7 +856,6 @@ object GraphOps {
         c1.unionAll(e2.join(fr(col("id")), "u")
           .select(col("v").as("id"), lit(2).as("d")))
       else c1
-      val tc = System.nanoTime()
       // visited broadcast is OPT-IN, decoupled from the frontier: a
       // frontier is one BFS layer (bounded), but visited grows toward
       // the full reachable component — broadcasting it by default
@@ -874,15 +873,10 @@ object GraphOps {
         // hits() renorm trick) — one job per round instead of an eager
         // checkpoint job plus a count job
         .localCheckpoint(false)
-      if (sys.env.contains("SPARK_GRAFT_BFS_DEBUG"))
-        System.err.println(f"[bfs] hop=$hop ckpt=${(System.nanoTime() - tc) / 1e9}%.3f")
       // one cached-frame pass tells us both layers' sizes — no second
       // expansion job for the emptiness probes
-      val t0 = System.nanoTime()
       val layerN = next.groupBy(col("hop")).count().collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      if (sys.env.contains("SPARK_GRAFT_BFS_DEBUG"))
-        System.err.println(f"[bfs] hop=$hop layers=$layerN count=${(System.nanoTime() - t0) / 1e9}%.3f")
       if (layerN.isEmpty) done = true
       else {
         // no checkpoint here: visited is a shallow union of ≤hops
@@ -1083,7 +1077,11 @@ object GraphOps {
                                minCommon: Long = 2L,
                                maxDegree: Option[Long] = None)
       : DataFrame = {
+    // a NULL endpoint is no edge: dropped once here, so the degrees the
+    // census counts agree on both paths (the string path's encoding
+    // joins would drop it anyway)
     val und = pairs.select(col("id_a").as("u"), col("id_b").as("v"))
+      .where(col("u").isNotNull && col("v").isNotNull)
     if (und.schema("u").dataType !=
         org.apache.spark.sql.types.StringType)
       return cncCore(und, minCommon, maxDegree)

@@ -14,16 +14,90 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object Pipelines {
 
-  /** Store existence resolved through Hadoop's FileSystem so the check
-    * works for ANY scheme the cluster can read (hdfs://, s3a://, file:,
-    * bare local paths) — `java.io.File.exists` is local-only and would
-    * silently disable cross-run dedup on exactly the filesystems a
-    * 100 TB deployment uses. */
-  private def storeExists(spark: org.apache.spark.sql.SparkSession,
-                          storePath: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(storePath)
+  /** The one open path for every persistent store dir: heal a torn
+    * [[swapStore]] at `live` (see there for the crash windows), then
+    * answer whether the store exists. Resolved through Hadoop's
+    * FileSystem so the check works for ANY scheme the cluster can read
+    * (hdfs://, s3a://, file:, bare local paths) — `java.io.File.exists`
+    * is local-only and would silently disable cross-run dedup on
+    * exactly the filesystems a 100 TB deployment uses. A healthy store
+    * costs one `exists` call. */
+  private def openStore(spark: org.apache.spark.sql.SparkSession,
+                        live: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(live)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.exists(p)
+    fs.exists(p) || {
+      recoverTornSwap(fs, p, Seq("_next", "_compacting", "_old")
+        .map(s => new org.apache.hadoop.fs.Path(live + s)))
+      fs.exists(p)
+    }
+  }
+
+  /** Blue/green replacement of the store dir `live` — the one swap
+    * behind every compaction and the per-batch reservoir rewrite. In
+    * order: heal a torn earlier swap ([[openStore]]), delete debris at
+    * `live + aside` and `live_old`, run `rewrite(live + aside)` — it
+    * reads `live`, writes the complete replacement at the given path
+    * and runs its own check (row count, live keys, members, mass),
+    * throwing to abort — then rename `live` → `live_old`, the
+    * replacement → `live`, and delete `live_old`.
+    *
+    * Crash contract. Nothing is deleted before its replacement is fully
+    * written and checked, so every crash leaves a complete copy:
+    *  - before the first rename: `live` is intact; the next swap deletes
+    *    the half-written or unpromoted aside as debris;
+    *  - between the renames: `live` is missing, `live_old` holds the
+    *    pre-swap copy and the aside the checked replacement;
+    *  - after the second rename: `live` is the replacement, and a
+    *    leftover `live_old` is debris.
+    * The missing-`live` window is healed by [[openStore]], which every
+    * reader, writer and retried swap calls first: it promotes the first
+    * complete (`_SUCCESS`-marked) copy among `live_next`,
+    * `live_compacting` and `live_old` — the newer copy wins, and both
+    * hold the same read-out (a replayed batch re-merges idempotently).
+    * Without it the store would read as empty, the next batch would
+    * re-emit already-ingested rows, and the next swap would delete the
+    * last copy of the history as debris.
+    *
+    * Single-writer: run a swap with no concurrent batch or swap on the
+    * same store (the discipline any streaming-append table's compaction
+    * needs). Returns what `rewrite` returns. */
+  private def swapStore[A](spark: org.apache.spark.sql.SparkSession,
+                           live: String, aside: String = "_compacting")(
+      rewrite: String => A): A = {
+    val livePath = new org.apache.hadoop.fs.Path(live)
+    val fs = livePath.getFileSystem(spark.sessionState.newHadoopConf())
+    val asidePath = new org.apache.hadoop.fs.Path(live + aside)
+    val old = new org.apache.hadoop.fs.Path(live + "_old")
+    val haveLive = openStore(spark, live)
+    fs.delete(asidePath, true); fs.delete(old, true)
+    val out = rewrite(asidePath.toString)
+    if (haveLive)
+      require(fs.rename(livePath, old), s"cannot move $live aside")
+    require(fs.rename(asidePath, livePath), s"cannot promote $asidePath")
+    fs.delete(old, true)
+    out
+  }
+
+  /** Data files per leaf dir under `dir` (recursive), excluding
+    * bookkeeping (`_SUCCESS`, `.crc`) — the driver-side small-file
+    * census behind every compaction trigger; no Spark job. Empty when
+    * `dir` does not exist. */
+  private def leafFileCounts(spark: org.apache.spark.sql.SparkSession,
+                             dir: String): Iterable[Long] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val perDir = scala.collection.mutable.HashMap.empty[String, Long]
+    if (fs.exists(p)) {
+      val it = fs.listFiles(p, true)
+      while (it.hasNext) {
+        val f = it.next().getPath
+        if (!f.getName.startsWith("_") && !f.getName.startsWith("."))
+          perDir(f.getParent.toString) =
+            perDir.getOrElse(f.getParent.toString, 0L) + 1L
+      }
+    }
+    perDir.values
   }
 
   /** Schema memo per (session, store data path) — the
@@ -44,6 +118,7 @@ object Pipelines {
 
   private[graft] def readStore(spark: org.apache.spark.sql.SparkSession,
                                path: String): DataFrame = {
+    openStore(spark, path)
     val perSession = storeSchemaCache.synchronized {
       var m = storeSchemaCache.get(spark)
       if (m == null) {
@@ -58,18 +133,13 @@ object Pipelines {
     spark.read.schema(schema).parquet(path)
   }
 
-  /** Recover a torn blue/green swap BEFORE touching a store. Every
-    * swap in this file replaces a live dir via write-aside + two
-    * renames (live→aside, next→live); a crash between the renames
-    * leaves NO live dir while the only surviving complete copies sit
-    * under the aside names — and the retry's unconditional
-    * delete-asides-first would destroy them, silently reinitializing
-    * the store from empty. So: if the live dir is missing but a
-    * candidate copy is complete (`_SUCCESS` present — every candidate
-    * was itself a fully-written Spark parquet dir), promote the FIRST
-    * complete candidate back to the live path; callers order
-    * candidates newest-first where both are valid. No-op when live
-    * exists (normal) or nothing exists (genuinely fresh store). */
+  /** Heal a torn [[swapStore]] (crash windows documented there): if
+    * the live dir is missing but a candidate copy is complete
+    * (`_SUCCESS` present — every candidate was itself a fully-written
+    * Spark parquet dir), promote the FIRST complete candidate back to
+    * the live path; candidates come newest-first. No-op when live
+    * exists (normal) or nothing exists (genuinely fresh store). Called
+    * only through [[openStore]]. */
   private[graft] def recoverTornSwap(
       fs: org.apache.hadoop.fs.FileSystem,
       live: org.apache.hadoop.fs.Path,
@@ -377,7 +447,7 @@ object Pipelines {
       pmod(xxhash64(key), lit(buckets.toLong)).cast("int")
 
     def hasData(spark: org.apache.spark.sql.SparkSession, path: String): Boolean =
-      storeExists(spark, s"$path/data")
+      openStore(spark, s"$path/data")
 
     // (path, params) already validated in THIS process — openOrInit
     // runs once per micro-batch, and re-reading the one-row config
@@ -392,7 +462,7 @@ object Pipelines {
     def openOrInit(spark: org.apache.spark.sql.SparkSession, path: String,
                    params: Seq[(String, Int)]): Unit = {
       val memoKey = path + "|" + params.map(p => s"${p._1}=${p._2}").mkString(",")
-      val haveConfig = storeExists(spark, s"$path/config")
+      val haveConfig = openStore(spark, s"$path/config")
       if (validated.contains(memoKey) && haveConfig) return
       if (!haveConfig) {
         val row = org.apache.spark.sql.Row.fromSeq(params.map(_._2))
@@ -432,24 +502,6 @@ object Pipelines {
     def batchBuckets(df: DataFrame): Seq[Int] =
       df.select("pb").where(col("pb").isNotNull).distinct()
         .collect().map(_.getInt(0)).toSeq
-
-    /** Data files under `dir` (recursive), excluding bookkeeping
-      * (`_SUCCESS`, `.crc`) — the small-file census compaction reports. */
-    def dataFileCount(spark: org.apache.spark.sql.SparkSession,
-                      dir: String): Long = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(p)) 0L
-      else {
-        val it = fs.listFiles(p, true)
-        var n = 0L
-        while (it.hasNext) {
-          val f = it.next().getPath.getName
-          if (!f.startsWith("_") && !f.startsWith(".")) n += 1
-        }
-        n
-      }
-    }
   }
 
   /** Offline compaction for a [[DedupStore]] (any of the three
@@ -459,42 +511,26 @@ object Pipelines {
     * partition; this rewrites `path/data` to ONE file per `pb` dir
     * (`repartition(pb)` hash-routes each bucket to exactly one task,
     * the same trick the append path uses) without changing a single
-    * row, partition value, or the pinned `config`.
-    *
-    * Blue/green on the data dir: the compacted copy is written to
-    * `path/data_compacting`, row-count-verified against the live dir,
-    * and swapped in with two FileSystem renames (live → `data_old`,
-    * compacted → live) before `data_old` is deleted. A crash mid-swap
-    * leaves either the live dir or `data_old` intact — nothing is
-    * destroyed before its replacement is fully written and verified.
-    * Run it from ONE process with no concurrent ingestion batches (the
-    * same discipline any streaming-append table's compaction needs).
+    * row, partition value, or the pinned `config`. The rewrite is a
+    * row-count-checked [[swapStore]] (crash contract there).
     *
     * Returns (rows, filesBefore, filesAfter). */
   def compactStore(spark: org.apache.spark.sql.SparkSession,
                    path: String): (Long, Long, Long) = {
-    require(storeExists(spark, s"$path/data"),
-      s"no dedup store data at $path/data")
-    val conf = spark.sessionState.newHadoopConf()
-    val data = new org.apache.hadoop.fs.Path(s"$path/data")
-    val fs = data.getFileSystem(conf)
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/data_compacting")
-    val old = new org.apache.hadoop.fs.Path(s"$path/data_old")
-    fs.delete(tmp, true); fs.delete(old, true)   // debris from a prior crash
-
-    val before = spark.read.parquet(s"$path/data")
-    val nBefore = before.count()
-    val filesBefore = DedupStore.dataFileCount(spark, s"$path/data")
-    before.repartition(col("pb")).write.mode("overwrite")
-      .partitionBy("pb").parquet(tmp.toString)
-    val nAfter = spark.read.parquet(tmp.toString).count()
-    require(nAfter == nBefore,
-      s"compaction row drift: $nBefore before, $nAfter after — aborting swap")
-
-    require(fs.rename(data, old), s"cannot move live data dir aside: $data")
-    require(fs.rename(tmp, data), s"cannot promote compacted dir: $tmp")
-    fs.delete(old, true)
-    (nAfter, filesBefore, DedupStore.dataFileCount(spark, s"$path/data"))
+    val data = s"$path/data"
+    require(openStore(spark, data), s"no dedup store data at $data")
+    val filesBefore = leafFileCounts(spark, data).sum
+    val rows = swapStore(spark, data) { aside =>
+      val before = spark.read.parquet(data)
+      val nBefore = before.count()
+      before.repartition(col("pb")).write.mode("overwrite")
+        .partitionBy("pb").parquet(aside)
+      val nAfter = spark.read.parquet(aside).count()
+      require(nAfter == nBefore,
+        s"compaction row drift: $nBefore before, $nAfter after — aborting swap")
+      nAfter
+    }
+    (rows, filesBefore, leafFileCounts(spark, data).sum)
   }
 
   /** Outcome of [[compactStoreIfNeeded]]. `rows` is −1 when the
@@ -507,28 +543,20 @@ object Pipelines {
     * the rewrite only when some `pb` partition dir has accumulated more
     * than `maxFilesPerDir` data files (each streaming append leaves one
     * file per touched dir per batch). The census is a driver-side
-    * directory listing — ≤ `buckets` dirs, no Spark job — so calling
+    * directory listing ([[leafFileCounts]]) — no Spark job — so calling
     * this after every N batches (or from a maintenance cron) costs
     * nothing when the store is healthy. Same single-writer discipline
     * as [[compactStore]]. */
   def compactStoreIfNeeded(spark: org.apache.spark.sql.SparkSession,
                            path: String,
                            maxFilesPerDir: Int = 8): CompactDecision = {
-    require(storeExists(spark, s"$path/data"),
-      s"no dedup store data at $path/data")
-    val data = new org.apache.hadoop.fs.Path(s"$path/data")
-    val fs = data.getFileSystem(spark.sessionState.newHadoopConf())
-    val perDir = fs.listStatus(data).filter(_.isDirectory).map { d =>
-      fs.listStatus(d.getPath).count { f =>
-        val n = f.getPath.getName
-        !n.startsWith("_") && !n.startsWith(".")
-      }.toLong
-    }
-    val maxPer = if (perDir.isEmpty) 0L else perDir.max
-    if (maxPer <= maxFilesPerDir) {
-      val total = DedupStore.dataFileCount(spark, s"$path/data")
-      CompactDecision(compacted = false, maxPer, -1L, total, total)
-    } else {
+    val data = s"$path/data"
+    require(openStore(spark, data), s"no dedup store data at $data")
+    val perDir = leafFileCounts(spark, data)
+    val maxPer = perDir.foldLeft(0L)(math.max)
+    if (maxPer <= maxFilesPerDir)
+      CompactDecision(compacted = false, maxPer, -1L, perDir.sum, perDir.sum)
+    else {
       val (rows, before, after) = compactStore(spark, path)
       CompactDecision(compacted = true, maxPer, rows, before, after)
     }
@@ -1022,12 +1050,10 @@ object Pipelines {
     * Redelivery is idempotent (same id ⇒ same key ⇒ dropDuplicates by
     * merge); a re-arrival with a HIGHER weight improves the item's key
     * (min-key merge — monotone), a lower one is ignored. The reservoir
-    * dir is replaced per batch via write-aside + two renames, so a
-    * crash leaves a complete reservoir copy on disk — and the next
-    * batch's open RECOVERS it (promotes the surviving `_next`/`_old`
-    * copy) if the crash landed between the renames, instead of
-    * mistaking the missing live dir for a fresh store. `sink`
-    * receives the post-merge reservoir (stratum, id, w4, key10, rn). */
+    * dir is replaced per batch by a [[swapStore]] (aside
+    * `reservoir_next`; crash contract there), so a crash never loses
+    * the reservoir. `sink` receives the post-merge reservoir (stratum,
+    * id, w4, key10, rn). */
   def weightedSampleAgainstStore(idCol: String, weightCol: String,
                                  stratumCol: String, storePath: String,
                                  k: Int)(
@@ -1042,43 +1068,22 @@ object Pipelines {
           "id", "__w")
         .select("stratum", "id", "w4", "key10")
       val live = s"$storePath/reservoir"
-      // a crash between the two swap renames below leaves no live dir —
-      // recover the surviving complete copy (prefer `_next`: it already
-      // holds the crashed batch's merge; the replayed batch re-merges
-      // idempotently either way) before the reads and deletes, or this
-      // batch would silently restart the reservoir from empty
-      locally {
-        val lp = new org.apache.hadoop.fs.Path(live)
-        val rfs = lp.getFileSystem(spark.sessionState.newHadoopConf())
-        recoverTornSwap(rfs, lp, Seq(
-          new org.apache.hadoop.fs.Path(s"$storePath/reservoir_next"),
-          new org.apache.hadoop.fs.Path(s"$storePath/reservoir_old")))
+      val merged = swapStore(spark, live, "_next") { next =>
+        val merged0 =
+          if (openStore(spark, live)) readStore(spark, live)
+            .select("stratum", "id", "w4", "key10").unionByName(cand)
+          else cand
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("stratum")).orderBy(col("key10"), col("id"))
+        val out = merged0
+          .groupBy("stratum", "id")
+          .agg(max(col("w4")).as("w4"), min(col("key10")).as("key10"))
+          .withColumn("rn", row_number().over(w))
+          .where(col("rn") <= k)
+          .persist()
+        out.coalesce(1).write.mode("overwrite").parquet(next)
+        out
       }
-      val merged0 =
-        if (storeExists(spark, live)) readStore(spark, live)
-          .select("stratum", "id", "w4", "key10").unionByName(cand)
-        else cand
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("stratum")).orderBy(col("key10"), col("id"))
-      val merged = merged0
-        .groupBy("stratum", "id")
-        .agg(max(col("w4")).as("w4"), min(col("key10")).as("key10"))
-        .withColumn("rn", row_number().over(w))
-        .where(col("rn") <= k)
-        .persist()
-      // write-aside + swap: the previous reservoir stays complete until
-      // its replacement is fully on disk
-      val conf = spark.sessionState.newHadoopConf()
-      val livePath = new org.apache.hadoop.fs.Path(live)
-      val fs = livePath.getFileSystem(conf)
-      val next = new org.apache.hadoop.fs.Path(s"$storePath/reservoir_next")
-      val old = new org.apache.hadoop.fs.Path(s"$storePath/reservoir_old")
-      fs.delete(next, true); fs.delete(old, true)
-      merged.coalesce(1).write.mode("overwrite").parquet(next.toString)
-      if (fs.exists(livePath))
-        require(fs.rename(livePath, old), s"cannot move reservoir aside: $live")
-      require(fs.rename(next, livePath), s"cannot promote reservoir: $next")
-      fs.delete(old, true)
       sink(merged)
       merged.unpersist()
       ()
@@ -1419,13 +1424,6 @@ object Pipelines {
                                  sink: DataFrame => Unit): Unit = {
     {
       val spark = batch0.sparkSession
-      val dbg = sys.env.contains("SPARK_GRAFT_HIER_DEBUG")
-      var t0 = System.nanoTime()
-      def lap(what: String): Unit = if (dbg) {
-        System.err.println(
-          f"[hier] $what ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        t0 = System.nanoTime()
-      }
       DedupStore.openOrInit(spark, storePath, Seq("buckets" -> buckets))
       val logP = s"$storePath/log"
       val ev = batch0.select(col("id"), col("parent"), col("value"))
@@ -1442,7 +1440,6 @@ object Pipelines {
       require(probe.forall(r => r.getLong(1) == r.getLong(2)),
         "hierarchyIngestStream: one event per node per batch")
       val pbs = probe.map(_.getInt(0)).toSeq
-      lap("ev+probe")
       val emptyOut = ev.select(col("id"), lit(0L).as("n_subtree"),
         lit(0L).as("subtree_sum")).limit(0)
       if (pbs.isEmpty) {
@@ -1511,7 +1508,6 @@ object Pipelines {
       val st = ev.join(cur, Seq("id"), "left")
         .join(accCur, Seq("id"), "left")
         .localCheckpoint(true)
-      lap("st")
       if (replayAcc.value > 0L) {
         // The change feed must still carry this batch's aggregate rows:
         // if the FIRST attempt crashed between the commit and sink(),
@@ -1615,7 +1611,6 @@ object Pipelines {
         fpbs = npbs
         allPbs ++= fpbs
         visited = visited.unionByName(frontier)
-        lap(s"walk round $depth")
       }
       val delta = visited.groupBy(col("start").as("id"))
         .agg(sum(col("dn")).as("dn"), sum(col("dsum")).as("dsum"))
@@ -1629,7 +1624,6 @@ object Pipelines {
       // bucket union is a sound (slightly wide when some deltas cancel
       // to zero) pruning set — no dedicated distinct+collect job
       val dpbs = allPbs.toSeq
-      lap("delta+buckets")
       val accBase = accRel.filter(_ => dpbs.nonEmpty).map { rel =>
           val rows = rel.where(col("pb").isin(dpbs: _*))
             .join(broadcast(dpb.select("id")), Seq("id"), "left_semi")
@@ -1668,13 +1662,10 @@ object Pipelines {
         .repartition(col("pb"))
         .write.mode("append").partitionBy("fam", "pb")
         .parquet(s"$logP/data")
-      lap("log-append")
       sink(accNew.select(col("id"), col("n_subtree"), col("subtree_sum")))
       accNew.unpersist()
-      if (autoCompactFilesPerDir > 0) {
+      if (autoCompactFilesPerDir > 0)
         hierCompactIfNeeded(spark, storePath, autoCompactFilesPerDir)
-        lap("auto-compact")
-      }
       ()
     }
   }
@@ -1695,24 +1686,17 @@ object Pipelines {
   /** Compact a [[hierarchyIngestStream]] store: both row families are
     * latest-wins (a node's current row is its max `batch_id`), so
     * superseded versions are dead weight that grows with CHURN — this
-    * rewrites `log/data` blue/green keeping only each (id, fam)'s
-    * latest row (surviving `batch_id`s preserved, so replayed old
-    * batches still absorb; same partitioned layout — ids don't move,
-    * so `(fam, pb)` doesn't). Read-out is bit-identical before and
-    * after (spec-asserted); crash windows heal via [[recoverTornSwap]]
-    * as in every store swap. Returns (live nodes, rows retired). */
+    * rewrites `log/data` keeping only each (id, fam)'s latest row
+    * (surviving `batch_id`s preserved, so replayed old batches still
+    * absorb; same partitioned layout — ids don't move, so `(fam, pb)`
+    * doesn't). Read-out is bit-identical before and after
+    * (spec-asserted); the rewrite is a live-key-checked [[swapStore]]
+    * (crash contract there). Returns (live nodes, rows retired). */
   def hierCompact(spark: org.apache.spark.sql.SparkSession,
                   storePath: String): (Long, Long) = {
-    val conf = spark.sessionState.newHadoopConf()
     val dataPath = s"$storePath/log/data"
-    val dir = new org.apache.hadoop.fs.Path(dataPath)
-    val fs = dir.getFileSystem(conf)
-    val old = new org.apache.hadoop.fs.Path(s"${dataPath}_old")
-    recoverTornSwap(fs, dir, Seq(old))
-    if (!fs.exists(dir)) (0L, 0L)   // store never received a batch
-    else {
-      val tmp = new org.apache.hadoop.fs.Path(s"${dataPath}_compacting")
-      fs.delete(tmp, true); fs.delete(old, true)
+    if (!openStore(spark, dataPath)) (0L, 0L)   // store never received a batch
+    else swapStore(spark, dataPath) { aside =>
       val rows = spark.read.parquet(dataPath)
       val nBefore = rows.count()
       val latest = rows.groupBy(col("id"), col("fam"), col("pb"))
@@ -1723,17 +1707,13 @@ object Pipelines {
           col("m.subtree_sum").as("subtree_sum"),
           col("m.batch_id").as("batch_id"), col("fam"), col("pb"))
       latest.repartition(col("pb")).write.mode("overwrite")
-        .partitionBy("fam", "pb").parquet(tmp.toString)
-      val nAfter = spark.read.parquet(tmp.toString).count()
+        .partitionBy("fam", "pb").parquet(aside)
+      val out = spark.read.parquet(aside)
+      val nAfter = out.count()
       val nKeys = rows.select("id", "fam").distinct().count()
       require(nAfter == nKeys,
         s"hier compaction drift: $nKeys live (id, fam) keys, $nAfter rows")
-      require(fs.rename(dir, old), s"cannot move log aside: $dir")
-      require(fs.rename(tmp, dir), s"cannot promote compacted log: $tmp")
-      fs.delete(old, true)
-      val live = spark.read.parquet(dataPath)
-        .where(col("fam") === "n").count()
-      (live, nBefore - nAfter)
+      (out.where(col("fam") === "n").count(), nBefore - nAfter)
     }
   }
 
@@ -1746,31 +1726,19 @@ object Pipelines {
 
   /** File-count-triggered retirement policy over [[hierCompact]] (the
     * [[compactStoreIfNeeded]] / [[clusterCompactIfNeeded]] precedent):
-    * each batch's append leaves one data file per touched `pb` dir in
-    * `nodes/data` and `acc/data`, so the max per-dir file count is a
-    * driver-side census of superseded-version growth since the last
-    * retirement — no Spark job to decide, and none runs while the
-    * store is healthy. Wired into every [[hierarchyIngestStream]]
-    * batch (`autoCompactFilesPerDir`); also callable from a
-    * maintenance cron. Same single-writer discipline as
-    * [[hierCompact]]. */
+    * each batch's append leaves one data file per touched (fam, pb)
+    * leaf dir of `log/data`, so the max per-dir file count
+    * ([[leafFileCounts]]) is a driver-side census of superseded-version
+    * growth since the last retirement — no Spark job to decide, and
+    * none runs while the store is healthy. Wired into every
+    * [[hierarchyIngestStream]] batch (`autoCompactFilesPerDir`); also
+    * callable from a maintenance cron. Same single-writer discipline
+    * as [[hierCompact]]. */
   def hierCompactIfNeeded(spark: org.apache.spark.sql.SparkSession,
                           storePath: String,
                           maxFilesPerDir: Int = 16): HierCompactDecision = {
-    val conf = spark.sessionState.newHadoopConf()
-    val data = new org.apache.hadoop.fs.Path(s"$storePath/log/data")
-    val fs = data.getFileSystem(conf)
-    // leaf dirs are two levels down (fam=*/pb=*)
     val maxPer =
-      if (!fs.exists(data)) 0L
-      else fs.listStatus(data).filter(_.isDirectory)
-        .flatMap(fam => fs.listStatus(fam.getPath).filter(_.isDirectory))
-        .foldLeft(0L) { (acc, d) =>
-          math.max(acc, fs.listStatus(d.getPath).count { f =>
-            val n = f.getPath.getName
-            !n.startsWith("_") && !n.startsWith(".")
-          }.toLong)
-        }
+      leafFileCounts(spark, s"$storePath/log/data").foldLeft(0L)(math.max)
     if (maxPer <= maxFilesPerDir)
       HierCompactDecision(compacted = false, maxPer, -1L, -1L)
     else {
@@ -1832,13 +1800,6 @@ object Pipelines {
       sink: DataFrame => Unit = _ => ()): (DataFrame, Long) => Unit = {
     (batch0: DataFrame, _: Long) => {
       val spark = batch0.sparkSession
-      val dbg = sys.env.contains("SPARK_GRAFT_CC_DEBUG")
-      var t0 = System.nanoTime()
-      def lap(what: String): Unit = if (dbg) {
-        System.err.println(
-          f"[clst] $what ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        t0 = System.nanoTime()
-      }
       DedupStore.openOrInit(spark, storePath, Seq("buckets" -> buckets))
       val members = s"$storePath/members"
       // localCheckpoint (not persist): the batch frame may be a
@@ -1874,7 +1835,6 @@ object Pipelines {
       val verts = pairs.select(col("id_a").as("id"))
         .unionByName(pairs.select(col("id_b").as("id"))).distinct()
         .withColumn("pb", DedupStore.bucketOf(col("id"), buckets))
-      lap("verts+buckets")
       val known =
         if (DedupStore.hasData(spark, members) && pbs.nonEmpty)
           resolveCids(spark,
@@ -1886,7 +1846,6 @@ object Pipelines {
             .localCheckpoint(true)
         else verts.select(col("id"), col("id").as("cid")).limit(0)
           .localCheckpoint(true)
-      lap("known-resolve")
       // supernode edges: known endpoints collapse to their resolved
       // root; self-loops (both ends already co-clustered — e.g. a
       // replayed batch) drop out entirely
@@ -1942,7 +1901,6 @@ object Pipelines {
           graft.operators.Dedup.dupClusters(snodes, "id", sedges)
             .select(col("id").as("snode"), col("cluster_rep").as("winner"))
         }
-      lap("batch-cc")
       // ONE accumulator frame — (id, pb, kcid, rep) per batch vertex —
       // materialized once; member append, merge events, and the sink
       // read-out are all cheap scans of it (formerly three independent
@@ -1971,7 +1929,6 @@ object Pipelines {
             col("kcid").isNotNull && col("rep") =!= col("kcid")).as("pb"),
           col("kcid"), col("rep"))
         .localCheckpoint(true)
-      lap("acc")
       // new members: first-seen vertices, stored with the winner cid
       // their supernode resolved to this batch (supernode = the raw id
       // for unknown vertices; a lone new vertex pair keeps itself).
@@ -1982,7 +1939,6 @@ object Pipelines {
         .select(col("id"), col("rep").as("cid"), col("pb"))
       if (DedupStore.hasData(spark, members) || newAcc.value > 0L)
         DedupStore.append(newMembers, members)
-      lap("member-append")
       // merge events: a KNOWN root that lost its minimum points at the
       // winner; roots that stayed minimal append nothing
       if (mergeAcc.value > 0L) {
@@ -1992,16 +1948,13 @@ object Pipelines {
           .distinct()
         merged.coalesce(1).write.mode("append").parquet(s"$storePath/merges")
       }
-      lap("merges")
       sink(acc.select(col("id"), col("rep").as("cluster_rep")))
       // automatic forest retirement: the decision is one driver-side
       // dir listing (no Spark job while healthy), and the triggered
       // rewrite keeps resolveCids' per-batch collect bounded by merges
       // SINCE LAST RETIREMENT over an unbounded ingest lifetime
-      if (autoCompactMergeFiles > 0) {
+      if (autoCompactMergeFiles > 0)
         clusterCompactIfNeeded(spark, storePath, autoCompactMergeFiles)
-        lap("auto-compact")
-      }
       ()
     }
   }
@@ -2019,7 +1972,7 @@ object Pipelines {
   private[graft] def resolveCids(spark: org.apache.spark.sql.SparkSession,
                                  rows: DataFrame,
                                  storePath: String): DataFrame = {
-    if (!storeExists(spark, s"$storePath/merges")) rows
+    if (!openStore(spark, s"$storePath/merges")) rows
     else {
       val raw = readStore(spark, s"$storePath/merges")
         .select("cid", "parent").distinct()
@@ -2117,49 +2070,42 @@ object Pipelines {
   }
 
   /** Compact a [[clusterIngestStream]] store: resolve every member's
-    * cid to its live root ONCE, rewrite `members/data` blue/green
-    * (same bucketed layout — ids don't change, so `pb` doesn't), then
-    * retire the merge forest. Read-out is bit-identical before and
-    * after (spec-asserted) and later batches resolve against an empty
-    * forest until new merges accrue — this is the path-compression
-    * step that keeps resolution pointer-jumping O(merges-since-last-
-    * compaction) over an unbounded ingest life. Crash-ordering: the
-    * member swap completes (with [[recoverTornSwap]] healing) BEFORE
-    * merges are dropped, and resolving an already-resolved member
-    * against a stale forest is a no-op, so every crash window
-    * re-reads correctly. Single-writer discipline as [[compactStore]].
+    * cid to its live root ONCE, rewrite `members/data` (same bucketed
+    * layout — ids don't change, so `pb` doesn't) by a member-count-
+    * checked [[swapStore]], then retire the merge forest. Read-out is
+    * bit-identical before and after (spec-asserted) and later batches
+    * resolve against an empty forest until new merges accrue — this is
+    * the path-compression step that keeps resolution pointer-jumping
+    * O(merges-since-last-compaction) over an unbounded ingest life.
+    * Crash-ordering: the member swap completes BEFORE merges are
+    * dropped, and resolving an already-resolved member against a stale
+    * forest is a no-op, so every crash window re-reads correctly.
     * Returns (member rows, merge entries retired). */
   def clusterCompact(spark: org.apache.spark.sql.SparkSession,
                      storePath: String): (Long, Long) = {
     val dataPath = s"$storePath/members/data"
-    val conf = spark.sessionState.newHadoopConf()
-    val dir = new org.apache.hadoop.fs.Path(dataPath)
-    val fs = dir.getFileSystem(conf)
-    val tmp = new org.apache.hadoop.fs.Path(s"${dataPath}_compacting")
-    val old = new org.apache.hadoop.fs.Path(s"${dataPath}_old")
-    recoverTornSwap(fs, dir, Seq(old))
-    fs.delete(tmp, true); fs.delete(old, true)
-    val mergesPath = new org.apache.hadoop.fs.Path(s"$storePath/merges")
+    val mergesPath = s"$storePath/merges"
     val nMerges =
-      if (fs.exists(mergesPath))
-        spark.read.parquet(mergesPath.toString).count()
+      if (openStore(spark, mergesPath)) spark.read.parquet(mergesPath).count()
       else 0L
-    val live = spark.read.parquet(dataPath)
-    // count DISTINCT members: replayed appends can hold one id twice
-    // (with cids that resolve identically) — compaction absorbs them
-    val before = live.select("id").distinct().count()
-    resolveCids(spark, live.select("id", "cid"), storePath)
-      .groupBy(col("id")).agg(min(col("cid")).as("cid"))
-      .join(live.select(col("id"), col("pb")).distinct(), Seq("id"))
-      .repartition(col("pb"))
-      .write.partitionBy("pb").mode("overwrite").parquet(tmp.toString)
-    val after = spark.read.parquet(tmp.toString).count()
-    require(after == before,
-      s"cluster compaction member drift: $before -> $after — aborting")
-    require(fs.rename(dir, old), s"cannot move member store aside: $dir")
-    require(fs.rename(tmp, dir), s"cannot promote compacted members: $tmp")
-    fs.delete(old, true)
-    fs.delete(mergesPath, true)
+    val after = swapStore(spark, dataPath) { aside =>
+      val live = spark.read.parquet(dataPath)
+      // count DISTINCT members: replayed appends can hold one id twice
+      // (with cids that resolve identically) — compaction absorbs them
+      val before = live.select("id").distinct().count()
+      resolveCids(spark, live.select("id", "cid"), storePath)
+        .groupBy(col("id")).agg(min(col("cid")).as("cid"))
+        .join(live.select(col("id"), col("pb")).distinct(), Seq("id"))
+        .repartition(col("pb"))
+        .write.partitionBy("pb").mode("overwrite").parquet(aside)
+      val after = spark.read.parquet(aside).count()
+      require(after == before,
+        s"cluster compaction member drift: $before -> $after — aborting")
+      after
+    }
+    val merges = new org.apache.hadoop.fs.Path(mergesPath)
+    merges.getFileSystem(spark.sessionState.newHadoopConf())
+      .delete(merges, true)
     (after, nMerges)
   }
 
@@ -2173,25 +2119,18 @@ object Pipelines {
   /** Merge-forest-growth-triggered policy over [[clusterCompact]] (the
     * [[compactStoreIfNeeded]] precedent): every batch that merges live
     * clusters appends exactly ONE file to `merges/`, so the dir's data
-    * file count is a driver-side census of forest growth since the
-    * last retirement — no Spark job to decide, and none runs while the
-    * store is healthy. Crossing `maxMergeFiles` triggers the full
-    * path-compression rewrite: members resolve to live roots and the
-    * forest retires, so [[resolveCids]]' per-batch collect stays
-    * merges-since-last-compaction-bounded over an UNBOUNDED ingest
-    * lifetime instead of growing with total merge history. Same
-    * single-writer discipline as [[clusterCompact]]. */
+    * file count ([[leafFileCounts]]) is a driver-side census of forest
+    * growth since the last retirement — no Spark job to decide, and
+    * none runs while the store is healthy. Crossing `maxMergeFiles`
+    * triggers the full path-compression rewrite: members resolve to
+    * live roots and the forest retires, so [[resolveCids]]' per-batch
+    * collect stays merges-since-last-compaction-bounded over an
+    * UNBOUNDED ingest lifetime instead of growing with total merge
+    * history. Same single-writer discipline as [[clusterCompact]]. */
   def clusterCompactIfNeeded(spark: org.apache.spark.sql.SparkSession,
                              storePath: String,
                              maxMergeFiles: Int = 64): ClusterCompactDecision = {
-    val mergesPath = new org.apache.hadoop.fs.Path(s"$storePath/merges")
-    val fs = mergesPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val n =
-      if (!fs.exists(mergesPath)) 0L
-      else fs.listStatus(mergesPath).count { f =>
-        val name = f.getPath.getName
-        f.isFile && !name.startsWith("_") && !name.startsWith(".")
-      }.toLong
+    val n = leafFileCounts(spark, s"$storePath/merges").sum
     if (n <= maxMergeFiles) ClusterCompactDecision(compacted = false, n, -1L, -1L)
     else {
       val (members, retired) = clusterCompact(spark, storePath)
@@ -2913,17 +2852,10 @@ object Pipelines {
   def histStream(keyCol: String, scoreCol: String, storePath: String)
       : (DataFrame, Long) => Unit =
     (batch: DataFrame, batchId: Long) => {
-      // writers must heal a torn compaction swap too — an append into
-      // the missing live dir would otherwise recreate it fresh and
-      // strand the full history under `_old` (histWatermark's recovery
-      // would then see a live dir and never fire)
-      locally {
-        val p = new org.apache.hadoop.fs.Path(storePath)
-        val fs = p.getFileSystem(
-          batch.sparkSession.sessionState.newHadoopConf())
-        recoverTornSwap(fs, p,
-          Seq(new org.apache.hadoop.fs.Path(s"${storePath}_old")))
-      }
+      // writers open (heal) first: an append into a torn store's
+      // missing live dir would recreate it fresh and strand the full
+      // history under the swap's aside names
+      openStore(batch.sparkSession, storePath)
       batch.select(col(keyCol).as("grp"),
           round(col(scoreCol) * 1e4).cast("long").as("s4"))
         .groupBy("grp", "s4").agg(count(lit(1)).as("n"))
@@ -2932,18 +2864,27 @@ object Pipelines {
       ()
     }
 
-  /** The merged histogram of a [[histStream]] store: rows below the
-    * compaction watermark are dropped (their mass lives in the
-    * baseline row set, batch_id −1 — see [[histCompact]]), the rest
-    * replay-absorbed (one row per (batch_id, grp, s4) survives), then
-    * cell counts summed across batches → `(grp, s4, n)`. */
+  /** The merged histogram of a [[histStream]] store: the
+    * [[absorbedCounts]] read over the grid cells, then cell counts
+    * summed across batches → `(grp, s4, n)`. */
   def histCells(spark: org.apache.spark.sql.SparkSession,
-                storePath: String): DataFrame = {
-    val wm = histWatermark(spark, storePath)
-    spark.read.parquet(storePath)
-      .where(col("batch_id") === -1L || col("batch_id") > wm)
-      .groupBy("batch_id", "grp", "s4").agg(max(col("n")).as("n"))
+                storePath: String): DataFrame =
+    absorbedCounts(spark, storePath, Seq("grp", "s4"))
       .groupBy("grp", "s4").agg(sum(col("n")).as("n"))
+
+  /** The replay-absorbed rows of a watermark-compacted count dir (a
+    * [[histStream]] store or one [[basketStream]] family): rows below
+    * the compaction watermark are dropped (their mass lives in the
+    * baseline row set, batch_id −1 — see [[baselineCompact]]), and one
+    * row per (batch_id, keys) survives, since a replayed batch
+    * re-appends identical counts under the same batch_id →
+    * `(batch_id, keys…, n)`. */
+  private def absorbedCounts(spark: org.apache.spark.sql.SparkSession,
+                             dir: String, keys: Seq[String]): DataFrame = {
+    val wm = histWatermark(spark, dir)
+    spark.read.parquet(dir)
+      .where(col("batch_id") === -1L || col("batch_id") > wm)
+      .groupBy(("batch_id" +: keys).map(col): _*).agg(max(col("n")).as("n"))
   }
 
   /** The store's compaction watermark: batches ≤ this id have been
@@ -2952,18 +2893,14 @@ object Pipelines {
     * compaction — are ignored by every reader. Carried as an
     * underscore-prefixed file INSIDE the parquet dir (parquet readers
     * skip `_`-files), so the compaction's rename swap moves data and
-    * watermark atomically — no window where they disagree. */
+    * watermark atomically — no window where they disagree. Every
+    * reader resolves the watermark first, so it opens (heals) the
+    * store here. */
   private[graft] def histWatermark(spark: org.apache.spark.sql.SparkSession,
                                    storePath: String): Long = {
     val p = new org.apache.hadoop.fs.Path(s"$storePath/_graft_wm")
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    // every reader resolves the watermark first, so this is the shared
-    // choke point to heal a compaction swap that crashed between its
-    // two renames — without it the next append would recreate the live
-    // dir EMPTY and the retried compaction would then delete `_old`,
-    // the only surviving copy of the store's history
-    recoverTornSwap(fs, new org.apache.hadoop.fs.Path(storePath),
-      Seq(new org.apache.hadoop.fs.Path(s"${storePath}_old")))
+    openStore(spark, storePath)
     if (!fs.exists(p)) Long.MinValue
     else {
       val in = fs.open(p)
@@ -2975,53 +2912,52 @@ object Pipelines {
 
   /** Compact a [[histStream]] store: merge every batch with id ≤
     * `upToBatchId` (plus any prior baseline) into ONE baseline cell
-    * set (batch_id −1), keep later batches raw, and swap the dir
-    * blue/green with the new watermark riding inside it. The store
-    * stays bounded over an unbounded ingest life while every report
-    * stays bit-identical (mass-verified before the swap, spec-asserted
-    * after), and a pre-watermark batch REPLAYED after compaction is
-    * ignored by readers instead of double-counting. Single-writer
-    * discipline as [[compactStore]]. Returns (cell rows after, total
-    * mass). */
+    * set (batch_id −1) and keep later batches raw — the
+    * [[baselineCompact]] over the grid-cell keys. The store stays
+    * bounded over an unbounded ingest life while every report stays
+    * bit-identical (spec-asserted), and a pre-watermark batch REPLAYED
+    * after compaction is ignored by readers instead of double-counting.
+    * Returns (cell rows after, total mass). */
   def histCompact(spark: org.apache.spark.sql.SparkSession,
-                  storePath: String, upToBatchId: Long): (Long, Long) = {
+                  storePath: String, upToBatchId: Long): (Long, Long) =
+    baselineCompact(spark, storePath, Seq("grp", "s4"), upToBatchId)
+
+  /** Watermark-baseline compaction of one count dir (a [[histStream]]
+    * store, one [[basketStream]] family) over its key columns: the
+    * [[absorbedCounts]] rows with batch_id ≤ `upToBatchId` sum into ONE
+    * baseline row per key (batch_id −1), later batches stay raw, and
+    * the new watermark rides inside the rewritten dir. A mass-checked
+    * [[swapStore]] (crash contract there). Returns (rows after,
+    * mass). */
+  private def baselineCompact(spark: org.apache.spark.sql.SparkSession,
+                              dir: String, keys: Seq[String],
+                              upToBatchId: Long): (Long, Long) = {
     require(upToBatchId >= 0L, s"bad watermark: $upToBatchId")
-    val conf = spark.sessionState.newHadoopConf()
-    val dir = new org.apache.hadoop.fs.Path(storePath)
-    val fs = dir.getFileSystem(conf)
-    val tmp = new org.apache.hadoop.fs.Path(s"${storePath}_compacting")
-    val old = new org.apache.hadoop.fs.Path(s"${storePath}_old")
-    // a retry after a crash between the two renames below must restore
-    // `_old` (the only surviving copy) BEFORE these deletes destroy it
-    recoverTornSwap(fs, dir, Seq(old))
-    fs.delete(tmp, true); fs.delete(old, true)
-    val wm = histWatermark(spark, storePath)
-    // valid rows under the CURRENT watermark, replay-absorbed
-    val valid = spark.read.parquet(storePath)
-      .where(col("batch_id") === -1L || col("batch_id") > wm)
-      .groupBy("batch_id", "grp", "s4").agg(max(col("n")).as("n"))
-    val massBefore = valid.agg(sum(col("n"))).head().getLong(0)
-    val baseline = valid.where(col("batch_id") <= upToBatchId)
-      .groupBy("grp", "s4").agg(sum(col("n")).as("n"))
-      .select(col("grp"), col("s4"), col("n"), lit(-1L).as("batch_id"))
-    val rest = valid.where(col("batch_id") > upToBatchId)
-      .select("grp", "s4", "n", "batch_id")
-    baseline.unionByName(rest).coalesce(4)
-      .write.mode("overwrite").parquet(tmp.toString)
-    val outWm = fs.create(
-      new org.apache.hadoop.fs.Path(s"${tmp.toString}/_graft_wm"), true)
-    try outWm.write(upToBatchId.toString
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally outWm.close()
-    val after = spark.read.parquet(tmp.toString)
-    val massAfter = after.agg(sum(col("n"))).head().getLong(0)
-    require(massAfter == massBefore,
-      s"compaction mass drift: $massBefore before, $massAfter after — aborting")
-    val nRows = after.count()
-    require(fs.rename(dir, old), s"cannot move live hist store aside: $dir")
-    require(fs.rename(tmp, dir), s"cannot promote compacted hist store: $tmp")
-    fs.delete(old, true)
-    (nRows, massAfter)
+    def mass(df: DataFrame): Long =
+      df.agg(coalesce(sum(col("n")), lit(0L))).head().getLong(0)
+    swapStore(spark, dir) { aside =>
+      val valid = absorbedCounts(spark, dir, keys)
+      val massBefore = mass(valid)
+      val baseline = valid.where(col("batch_id") <= upToBatchId)
+        .groupBy(keys.map(col): _*).agg(sum(col("n")).as("n"))
+        .where(col("n").isNotNull)   // keyless, no pre-watermark batch → no row
+        .select((keys.map(col) :+ col("n")) :+ lit(-1L).as("batch_id"): _*)
+      val rest = valid.where(col("batch_id") > upToBatchId)
+        .select((keys.map(col) :+ col("n")) :+ col("batch_id"): _*)
+      baseline.unionByName(rest).coalesce(2)
+        .write.mode("overwrite").parquet(aside)
+      val wm = new org.apache.hadoop.fs.Path(s"$aside/_graft_wm")
+      val outWm = wm.getFileSystem(spark.sessionState.newHadoopConf())
+        .create(wm, true)
+      try outWm.write(upToBatchId.toString
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally outWm.close()
+      val after = spark.read.parquet(aside)
+      val massAfter = mass(after)
+      require(massAfter == massBefore,
+        s"$dir compaction mass drift: $massBefore -> $massAfter — aborting")
+      (after.count(), massAfter)
+    }
   }
 
   /** Streaming market-basket census — the incremental face of
@@ -3038,21 +2974,14 @@ object Pipelines {
     * Σ|basket|² within the batch only — the store is never read.
     *
     * Store size is (batches × occupied cells), vocabulary²-bounded
-    * per batch family; [[histCompact]]'s pattern applies if batch
-    * count ever dominates. */
+    * per batch family; [[basketCompact]] bounds it if batch count ever
+    * dominates. */
   def basketStream(basketCol: String, itemCol: String, storePath: String)
       : (DataFrame, Long) => Unit =
     (batch: DataFrame, batchId: Long) => {
-      // heal any family whose compaction swap crashed mid-rename before
-      // appending (same rationale as histStream's recovery)
-      locally {
-        val conf = batch.sparkSession.sessionState.newHadoopConf()
-        Seq("items", "pairs", "baskets").foreach { fam =>
-          val p = new org.apache.hadoop.fs.Path(s"$storePath/$fam")
-          recoverTornSwap(p.getFileSystem(conf), p,
-            Seq(new org.apache.hadoop.fs.Path(s"$storePath/${fam}_old")))
-        }
-      }
+      // open (heal) every family before appending, as histStream does
+      basketFamilies.foreach { case (fam, _) =>
+        openStore(batch.sparkSession, s"$storePath/$fam") }
       val d = batch.select(col(basketCol).as("__b"), col(itemCol).as("__i"))
         .where(col("__b").isNotNull && col("__i").isNotNull)
         .distinct()
@@ -3086,13 +3015,8 @@ object Pipelines {
                            storePath: String,
                            minSupportFrac: Double): DataFrame = {
     import graft.operators.Itemsets
-    def absorbed(dir: String, keys: Seq[String]): DataFrame = {
-      val wm = histWatermark(spark, s"$storePath/$dir")
-      spark.read.parquet(s"$storePath/$dir")
-        .where(col("batch_id") === -1L || col("batch_id") > wm)
-        .groupBy((keys :+ "batch_id").map(col): _*)
-        .agg(max(col("n")).as("n"))
-    }
+    def absorbed(fam: String, keys: Seq[String]): DataFrame =
+      absorbedCounts(spark, s"$storePath/$fam", keys)
     val nB = Itemsets.thresholdOf(
       absorbed("baskets", Nil).agg(sum(col("n")).as("__nb")),
       minSupportFrac)
@@ -3106,70 +3030,25 @@ object Pipelines {
     Itemsets.rules(freq, pairs, nB)
   }
 
+  /** A [[basketStream]] store's count families and their key columns. */
+  private val basketFamilies = Seq("items" -> Seq("item"),
+    "pairs" -> Seq("item_a", "item_b"), "baskets" -> Seq.empty[String])
+
   /** Compact a [[basketStream]] store: each count family (items /
-    * pairs / baskets) gets the [[histCompact]] treatment — batches ≤
-    * `upToBatchId` merge into ONE baseline row set (batch_id −1), the
-    * family's watermark rides inside its parquet dir, and the swap is
-    * blue/green with a mass check before promotion. Bounds the store
-    * (and every [[basketRulesFromStore]] read) over an unbounded
+    * pairs / baskets) gets the [[baselineCompact]] treatment — batches
+    * ≤ `upToBatchId` merge into ONE baseline row set (batch_id −1) and
+    * the family's watermark rides inside its parquet dir. Bounds the
+    * store (and every [[basketRulesFromStore]] read) over an unbounded
     * ingest life; a pre-watermark batch replayed after compaction is
-    * ignored by readers. Single-writer discipline as [[histCompact]].
-    * Returns (family, rows, mass) per family. */
+    * ignored by readers. Returns (family, rows, mass) per family. */
   def basketCompact(spark: org.apache.spark.sql.SparkSession,
                     storePath: String,
-                    upToBatchId: Long): Seq[(String, Long, Long)] = {
-    require(upToBatchId >= 0L, s"bad watermark: $upToBatchId")
-    val families = Seq("items" -> Seq("item"),
-      "pairs" -> Seq("item_a", "item_b"), "baskets" -> Seq.empty[String])
-    families.map { case (fam, keys) =>
-      val path = s"$storePath/$fam"
-      val conf = spark.sessionState.newHadoopConf()
-      val dir = new org.apache.hadoop.fs.Path(path)
-      val fs = dir.getFileSystem(conf)
-      val tmp = new org.apache.hadoop.fs.Path(s"${path}_compacting")
-      val old = new org.apache.hadoop.fs.Path(s"${path}_old")
-      // same torn-swap discipline as histCompact: restore `_old` before
-      // the deletes if the previous compaction crashed mid-swap
-      recoverTornSwap(fs, dir, Seq(old))
-      fs.delete(tmp, true); fs.delete(old, true)
-      val wm = histWatermark(spark, path)
-      val valid = spark.read.parquet(path)
-        .where(col("batch_id") === -1L || col("batch_id") > wm)
-        .groupBy((keys :+ "batch_id").map(col): _*)
-        .agg(max(col("n")).as("n"))
-      val massBefore = valid.agg(coalesce(sum(col("n")), lit(0L)))
-        .head().getLong(0)
-      val baselined =
-        if (keys.isEmpty)
-          valid.where(col("batch_id") <= upToBatchId)
-            .agg(sum(col("n")).as("n"))
-            .where(col("n").isNotNull)   // no pre-watermark batches → no baseline row
-            .select(col("n"), lit(-1L).as("batch_id"))
-        else
-          valid.where(col("batch_id") <= upToBatchId)
-            .groupBy(keys.map(col): _*).agg(sum(col("n")).as("n"))
-            .select((keys.map(col) :+ col("n")) :+ lit(-1L).as("batch_id"): _*)
-      val rest = valid.where(col("batch_id") > upToBatchId)
-        .select((keys.map(col) :+ col("n")) :+ col("batch_id"): _*)
-      baselined.unionByName(rest).coalesce(2)
-        .write.mode("overwrite").parquet(tmp.toString)
-      val outWm = fs.create(
-        new org.apache.hadoop.fs.Path(s"${tmp.toString}/_graft_wm"), true)
-      try outWm.write(upToBatchId.toString
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally outWm.close()
-      val after = spark.read.parquet(tmp.toString)
-      val massAfter = after.agg(coalesce(sum(col("n")), lit(0L)))
-        .head().getLong(0)
-      require(massAfter == massBefore,
-        s"basket $fam compaction mass drift: $massBefore -> $massAfter")
-      val nRows = after.count()
-      require(fs.rename(dir, old), s"cannot move live store aside: $dir")
-      require(fs.rename(tmp, dir), s"cannot promote compacted store: $tmp")
-      fs.delete(old, true)
-      (fam, nRows, massAfter)
+                    upToBatchId: Long): Seq[(String, Long, Long)] =
+    basketFamilies.map { case (fam, keys) =>
+      val (rows, mass) =
+        baselineCompact(spark, s"$storePath/$fam", keys, upToBatchId)
+      (fam, rows, mass)
     }
-  }
 
   /** Incremental data profiling: each micro-batch appends its
     * [[graft.operators.Profiling.profileSketched]] rows (one per
@@ -3218,16 +3097,12 @@ object Pipelines {
     * of [[graft.operators.Similarity.ivfDriftReport]]. All from the
     * persisted cells; ingested rows are never re-scanned. */
   def histDriftReport(spark: org.apache.spark.sql.SparkSession,
-                      storePath: String): DataFrame = {
-    val wm = histWatermark(spark, storePath)
+                      storePath: String): DataFrame =
     graft.operators.TextStats.groupScoreDriftFromCells(
-      spark.read.parquet(storePath)
-        .where(col("batch_id") === -1L || col("batch_id") > wm)
-        .groupBy("batch_id", "grp", "s4").agg(max(col("n")).as("n"))
+      absorbedCounts(spark, storePath, Seq("grp", "s4"))
         .groupBy(col("batch_id").as("grp"), col("s4"))
         .agg(sum(col("n")).as("n")))
       .select(col("grp").as("batch_id"), col("n_rows"), col("ks4"))
-  }
 
   /** Per-batch PSI against the merged store (see
     * [[graft.operators.TextStats.groupPsiFromCells]]) — the
@@ -3236,16 +3111,12 @@ object Pipelines {
     * integrated mismatch with its standard 0.1/0.25 action
     * thresholds. Same replay-absorption and watermark discipline. */
   def histPsiReport(spark: org.apache.spark.sql.SparkSession,
-                    storePath: String): DataFrame = {
-    val wm = histWatermark(spark, storePath)
+                    storePath: String): DataFrame =
     graft.operators.TextStats.groupPsiFromCells(
-      spark.read.parquet(storePath)
-        .where(col("batch_id") === -1L || col("batch_id") > wm)
-        .groupBy("batch_id", "grp", "s4").agg(max(col("n")).as("n"))
+      absorbedCounts(spark, storePath, Seq("grp", "s4"))
         .groupBy(col("batch_id").as("grp"), col("s4"))
         .agg(sum(col("n")).as("n")))
       .select(col("grp").as("batch_id"), col("n_rows"), col("psi8"))
-  }
 
   /** Quantile report over a [[histStream]] store: per-key exact
     * quantiles at the requested per-10000 points, plus the corpus-wide
@@ -3284,7 +3155,7 @@ object Pipelines {
       val cells = batch.select(col(maxCol).as("u"), col(minCol).as("t"))
         .groupBy("u", "t").agg(count(lit(1)).as("n"))
       val pruned =
-        if (!storeExists(spark, storePath)) cells
+        if (!openStore(spark, storePath)) cells
         else {
           val front = graft.operators.Profiling.skylineOfCells(
             spark.read.parquet(storePath)

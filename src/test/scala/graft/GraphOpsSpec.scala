@@ -423,6 +423,25 @@ class GraphOpsSpec extends SparkSpec {
     assert(uncapped.count() === capped.count())
   }
 
+  test("commonNeighborCandidates: a NULL endpoint is no edge, on the long and the encoded string path alike") {
+    // the square again, plus edges with one or both endpoints NULL:
+    // they must count toward no degree on either path
+    val square = Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L))
+      .map { case (a, b) => (Option(a), Option(b)) }
+    val edges = (square ++ Seq((Some(1L), None), (None, Some(3L)), (None, None)))
+      .toDF("id_a", "id_b")
+    val longs = graft.operators.GraphOps.commonNeighborCandidates(edges)
+      .as[(Long, Long, Long, Long, Long, Long)].collect().toSet
+    assert(longs === Set((1L, 3L, 2L, 2L, 2L, 1000000L),
+      (2L, 4L, 2L, 2L, 2L, 1000000L)))
+    val strings = graft.operators.GraphOps.commonNeighborCandidates(
+        edges.select(col("id_a").cast("string").as("id_a"),
+          col("id_b").cast("string").as("id_b")))
+      .as[(String, String, Long, Long, Long, Long)].collect().toSet
+    assert(strings === longs.map { case (a, b, c, da, db, j) =>
+      (a.toString, b.toString, c, da, db, j) })
+  }
+
   test("assortativity: path and star are perfectly disassortative; regular graph null") {
     def r(pairs: Seq[(Long, Long)]) =
       graft.operators.GraphOps.assortativity(pairs.toDF("id_a", "id_b"))

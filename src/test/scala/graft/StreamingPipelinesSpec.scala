@@ -1854,6 +1854,99 @@ class StreamingPipelinesSpec extends SparkSpec {
     assert(mass() === m + 1, "append after heal keeps pre-crash history")
   }
 
+  test("torn swap, every store family: the next batch and a retried compaction see the full history") {
+    import org.apache.hadoop.fs.Path
+    // one row per family: its three micro-batches (each returns what
+    // the batch emitted), its compaction, its read-out, and the live
+    // dirs its swap replaces
+    final case class Family(name: String, live: Seq[String],
+                            ingest: (String, Int) => Seq[String],
+                            compact: String => Unit,
+                            readOut: String => Seq[String])
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    def collecting(run: (org.apache.spark.sql.DataFrame => Unit) => Unit)
+        : Seq[String] = {
+      var out = Seq.empty[String]
+      run(df => out = rows(df))
+      out
+    }
+    val docs = Seq(Seq((1L, "alpha one"), (2L, "beta two")),
+      Seq((3L, "gamma three"), (4L, "alpha one")),
+      Seq((5L, "beta two"), (6L, "delta four")))
+    val nodes: Seq[Seq[(Long, Option[Long], Long)]] = Seq(
+      Seq((1L, None, 10L), (2L, Some(1L), 5L)),
+      Seq((3L, Some(2L), 7L), (2L, Some(1L), 6L)),
+      Seq((4L, Some(3L), 1L)))
+    val edges = Seq(Seq((1L, 2L), (3L, 4L)), Seq((2L, 3L)),
+      Seq((4L, 5L), (6L, 7L)))
+    val baskets = Seq(Seq((1L, "x"), (1L, "y"), (2L, "x"), (2L, "z")),
+      Seq((3L, "x"), (3L, "y")), Seq((4L, "y"), (4L, "z"), (5L, "x"), (5L, "y")))
+    val families = Seq(
+      Family("dedup", Seq("data"),
+        (s, b) => collecting(sink => Pipelines.dedupAgainstStore("text", s, 8) {
+          f => sink(f.select("doc_id")) }(docs(b).toDF("doc_id", "text"), b.toLong)),
+        s => Pipelines.compactStore(spark, s),
+        s => rows(spark.read.parquet(s"$s/data").select("fingerprint"))),
+      Family("hierarchy", Seq("log/data"),
+        (s, b) => collecting(sink => Pipelines.hierarchyIngestStream(s,
+          buckets = 8, autoCompactFilesPerDir = 0)(sink)(
+          nodes(b).toDF("id", "parent", "value"), b.toLong)),
+        s => Pipelines.hierCompact(spark, s),
+        s => rows(Pipelines.hierStoreAggregates(spark, s))),
+      Family("cluster", Seq("members/data"),
+        (s, b) => collecting(sink => Pipelines.clusterIngestStream(s,
+          buckets = 8, autoCompactMergeFiles = 0)(sink)(
+          edges(b).toDF("id_a", "id_b"), b.toLong)),
+        s => Pipelines.clusterCompact(spark, s),
+        s => rows(Pipelines.clusterStoreReps(spark, s))),
+      Family("basket", Seq("items", "pairs", "baskets"),
+        (s, b) => {
+          Pipelines.basketStream("b", "i", s)(baskets(b).toDF("b", "i"), b.toLong)
+          Nil
+        },
+        s => Pipelines.basketCompact(spark, s, 1L),
+        s => rows(Pipelines.basketRulesFromStore(spark, s, 0.2))))
+    val conf = spark.sessionState.newHadoopConf()
+    families.foreach { f =>
+      val base = java.nio.file.Files.createTempDirectory(s"torn-${f.name}").toString
+      f.ingest(base, 0); f.ingest(base, 1); f.compact(base)
+      val pre = f.readOut(base)
+      val fs = new Path(base).getFileSystem(conf)
+      def copyOf(suffix: String): String = {
+        assert(org.apache.hadoop.fs.FileUtil.copy(fs, new Path(base),
+          fs, new Path(base + suffix), false, conf))
+        base + suffix
+      }
+      // the uncrashed twin: its batch-2 output and read-out are the
+      // pre-crash state plus the new batch
+      val twin = copyOf("-twin")
+      val emitted = f.ingest(twin, 2)
+      val post = f.readOut(twin)
+      assert(post !== pre, s"${f.name}: batch 2 must change the read-out")
+      Seq("_old", "_compacting").foreach { window =>
+        val tag = s"${f.name}, only $window survives"
+        val s = copyOf(s"-torn$window")
+        // a crash between the swap's two renames, with one copy left
+        def tear(): Unit = f.live.foreach { d =>
+          assert(fs.rename(new Path(s"$s/$d"), new Path(s"$s/$d$window")), tag)
+        }
+        tear()
+        assert(f.ingest(s, 2) === emitted,
+          s"$tag: the next batch re-emitted already-ingested rows")
+        assert(f.readOut(s) === post, s"$tag: read-out lost pre-crash history")
+        tear()
+        f.compact(s)
+        assert(f.readOut(s) === post, s"$tag: retried compaction lost history")
+        f.live.foreach { d =>
+          Seq("_old", "_compacting").foreach { aside =>
+            assert(!fs.exists(new Path(s"$s/$d$aside")), s"$tag: $d$aside left")
+          }
+        }
+      }
+    }
+  }
+
   test("scd2IngestStream: equal-timestamp conflicting restatements drop deterministically") {
     def d(s: String) = Timestamp.valueOf(s + " 00:00:00")
     val store = java.nio.file.Files.createTempDirectory("scd2ties").toString
