@@ -45,6 +45,14 @@ object GraftSession {
     .config("spark.sql.warehouse.dir",
       sys.props.getOrElse("graft.warehouse.dir", "file:/tmp/graft-warehouse"))
     .config("spark.ui.enabled", "false")
+    // `file:` for both Hadoop APIs without a chmod/readlink process per
+    // file operation (LocalFs.scala). Pinned, too, because otherwise the
+    // last service registration on the classpath wins. The FileSystem
+    // cache is JVM-wide and its key ignores the conf, so this holds only
+    // if no `file:` FileSystem was created before the first session.
+    .config("spark.hadoop.fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
+    .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+      classOf[ForkFreeLocalFs].getName)
    extraConf(b)
   }
 

@@ -11,7 +11,13 @@ import org.apache.spark.sql.SparkSession
   * identityHashCode string key, a live-object key cannot collide with a
   * later session reusing the same hash. Values for distinct `key`s
   * within one live session are kept for that session's lifetime (the
-  * stored-index semantics the callers want). */
+  * stored-index semantics the callers want).
+  *
+  * `build` runs outside the map: builds nest (a shared frame built from
+  * other shared frames), and a nested `computeIfAbsent` on the same map
+  * is forbidden — the JDK throws "Recursive update" when the inner key
+  * lands in the outer key's bin. Two threads racing on one key may both
+  * build; the first value published wins and both callers get it. */
 private[queries] final class SessionCache[V] {
   private val bySession =
     new java.util.WeakHashMap[SparkSession,
@@ -26,6 +32,12 @@ private[queries] final class SessionCache[V] {
       }
       m
     }
-    perSession.computeIfAbsent(key, _ => build)
+    val hit = perSession.get(key)
+    if (hit != null) hit
+    else {
+      val built = build
+      val prev = perSession.putIfAbsent(key, built)
+      if (prev == null) built else prev
+    }
   }
 }

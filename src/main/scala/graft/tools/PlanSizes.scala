@@ -9,11 +9,19 @@ import graft.queries.Registry
   * the embedded subtree at every stage). Prints name, plan bytes and
   * node-ish line count, largest first.
   *
+  * Not a dry run: building a query runs the one-time materialization
+  * jobs of the session-shared frames it uses (`Materialized`,
+  * `SessionCache`), so the first consumer of each pays real Spark work.
+  *
   * Usage: runMain graft.tools.PlanSizes [minBytes]
   */
 object PlanSizes {
   def main(args: Array[String]): Unit = {
-    val minBytes = args.headOption.map(_.toInt).getOrElse(20000)
+    val minBytes = args.headOption.fold(20000)(a => a.toIntOption.getOrElse {
+      System.err.println(
+        s"usage: runMain graft.tools.PlanSizes [minBytes] (an integer, got '$a')")
+      sys.exit(2)
+    })
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val spark = GraftSession.local(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt, "plan-sizes")
