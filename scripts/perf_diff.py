@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Round-over-round diff of PerfAudit artifacts (PERF_r{N}.json).
+"""Round-over-round diff of `Audit perf` artifacts (PERF_r{N}.json).
 
 Wall time on this box is noise (±15% measured r10); jobs and shuffle
 bytes are deterministic, so THOSE are the regression signal. Flags any
@@ -9,23 +9,42 @@ query whose job count grew, or whose shuffle write grew by more than
 A +1-job delta with no shuffle growth is NOT flagged as REGRESSED: it
 matches the one adjudicated measurement-flicker class (r11's q218, an
 AQE broadcast-exchange-reuse race that shifts one query-stage job even
-warm) — those print as "FLICKER?" with an isolated-DbgJobs rerun
+warm) — those print as "FLICKER?" with an isolated `Audit jobs` rerun
 instruction and do not fail the diff. Anything beyond +-1 job, or +1
 job WITH shuffle growth, stays a hard REGRESSED.
+
+The core count sets the shuffle partitions, so two artifacts are
+compared only if they ran on the same cores and scale factor (the
+`sf_dir` name); otherwise, or on a usage error, the exit is 2.
 
 Usage: perf_diff.py OLD.json NEW.json
 Exit 1 if any regression is flagged (walls and flickers never flag).
 """
 import json
+import os
 import sys
+
+
+def run_config(art):
+    """(scale factor dir name, cores) of an artifact; None where absent."""
+    sf = art.get("sf_dir")
+    return (sf and os.path.basename(sf.rstrip("/")), art.get("cores"))
 
 
 def main():
     if len(sys.argv) != 3:
         print(__doc__)
         return 2
-    old = json.load(open(sys.argv[1]))["queries"]
-    new = json.load(open(sys.argv[2]))["queries"]
+    old_art = json.load(open(sys.argv[1]))
+    new_art = json.load(open(sys.argv[2]))
+    for name, o, n in zip(("sf_dir", "cores"), run_config(old_art),
+                          run_config(new_art)):
+        if o is not None and n is not None and o != n:
+            print(f"NOT COMPARABLE: {name} {o} -> {n}; job and shuffle "
+                  "counts depend on it")
+            return 2
+    old = old_art["queries"]
+    new = new_art["queries"]
     shared = sorted(set(old) & set(new))
     added = sorted(set(new) - set(old))
     removed = sorted(set(old) - set(new))
@@ -64,7 +83,7 @@ def main():
     if flickers:
         print(f"FLICKER? ({len(flickers)}) — +1 job, shuffle flat: the "
               "adjudicated AQE broadcast-reuse race class. Rerun "
-              "'sbt \"runMain graft.tools.DbgJobs <query>\"' twice in "
+              "'scripts/run.sh graft.tools.Audit jobs <query>' twice in "
               "isolation before treating any of these as a regression:")
         for f in flickers:
             print(f"  {f}")

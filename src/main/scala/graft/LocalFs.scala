@@ -5,8 +5,8 @@ import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermission
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus,
-  FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSDataInputStream,
+  FileStatus, FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -65,9 +65,17 @@ class ForkFreeLocalFileSystem extends LocalFileSystem(new ForkFreeRawLocalFileSy
 /** `fs.AbstractFileSystem.file.impl`: the FileContext API's checksummed
   * `file:`, mirroring `org.apache.hadoop.fs.local.LocalFs` over
   * `RawLocalFs`. Hadoop builds it by reflection from (URI, Configuration)
-  * and, like LocalFs, ignores the URI. */
+  * and, like LocalFs, ignores the URI.
+  *
+  * Unlike stock LocalFs, `open(p)` verifies checksums: ChecksumFs inherits
+  * FilterFs.open(p), which opens the raw file unchecked, and Spark's
+  * FileContext checkpoint manager reads offset, commit and state-store
+  * files through exactly that call. */
 class ForkFreeLocalFs(uri: URI, conf: Configuration)
-    extends ChecksumFs(new ForkFreeLocalFs.Raw(conf))
+    extends ChecksumFs(new ForkFreeLocalFs.Raw(conf)) {
+  override def open(f: Path): FSDataInputStream =
+    open(f, getServerDefaults(f).getFileBufferSize)
+}
 
 object ForkFreeLocalFs {
   private[graft] final class Raw(conf: Configuration)

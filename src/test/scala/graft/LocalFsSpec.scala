@@ -8,8 +8,8 @@ import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumException, CreateFlag, FileAlreadyExistsException,
-  FileContext, FileSystem, LocalFileSystem, Options, Path}
+import org.apache.hadoop.fs.{ChecksumException, CreateFlag, FSDataInputStream,
+  FileAlreadyExistsException, FileContext, FileSystem, LocalFileSystem, Options, Path}
 import org.apache.hadoop.fs.Options.CreateOpts
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -110,8 +110,9 @@ class LocalFsSpec extends SparkSpec {
     // Through FileContext, whose ChecksumFs only reports the failure (the
     // FileSystem API's LocalFileSystem would also move the file into a
     // `bad_files` directory at the top of its mount; its .crc bytes are
-    // checked against stock above). open(p, bufferSize): ChecksumFs
-    // inherits FilterFs.open(p), which reads the raw file unchecked.
+    // checked against stock above). Both opens verify: open(p), the call
+    // Spark's checkpoint manager makes, is unchecked in stock LocalFs,
+    // whose ChecksumFs inherits FilterFs.open(p) and reads the raw file.
     val conf = spark.sessionState.newHadoopConf()
     val dir = Files.createTempDirectory("localfs-crc")
     val fc = FileContext.getFileContext(dir.toUri, conf)
@@ -119,12 +120,18 @@ class LocalFsSpec extends SparkSpec {
     val o = fc.create(p, EnumSet.of(CreateFlag.CREATE))
     o.write(Array.fill[Byte](2000)(7)); o.close()
     assert(Files.exists(dir.resolve(".data.crc")))
-    val in0 = fc.open(p, 4096)
-    try assert(in0.readAllBytes().length === 2000) finally in0.close()
+    val opens = Seq[(String, () => FSDataInputStream)](
+      "open(p, 4096)" -> (() => fc.open(p, 4096)), "open(p)" -> (() => fc.open(p)))
+    for ((_, open) <- opens) {
+      val in = open()
+      try assert(in.readAllBytes().length === 2000) finally in.close()
+    }
     val raf = new java.io.RandomAccessFile(dir.resolve("data").toFile, "rw")
     try { raf.seek(1000); raf.write(8) } finally raf.close()
-    val in = fc.open(p, 4096)
-    try intercept[ChecksumException](in.readAllBytes()) finally in.close()
+    for ((name, open) <- opens) {
+      val in = open()
+      try withClue(name)(intercept[ChecksumException](in.readAllBytes())) finally in.close()
+    }
   }
 
   test("FileContext rename with Rename.NONE onto an existing path still refuses") {
