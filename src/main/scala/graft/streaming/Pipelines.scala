@@ -2285,51 +2285,85 @@ object Pipelines {
       }
   }
 
-  /** Exactly-once file publication for at-least-once foreachBatch:
-    * data lands under `data/batch=<id>/` (a REPLAY overwrites the same
-    * dir — idempotent), and the batch becomes visible only when its
-    * manifest entry commits — written to a temp name and RENAMED into
-    * `manifest/<id>` (atomic on a real filesystem), write-if-absent so
-    * a replay of a committed batch is a no-op. [[readCommitted]] lists
-    * the manifest and reads ONLY committed batch dirs, so a crash
-    * between data write and commit leaves a torn dir that no reader
-    * ever sees (re-delivery completes it). This is the sink-side
-    * delivery contract the dedup stores assume ("idempotent sink"),
-    * made concrete. */
-  def manifestSink(outDir: String): (DataFrame, Long) => Unit =
+  /** Exactly-once file publication for at-least-once foreachBatch. A
+    * batch's rows land as parquet files under `data/batch=<id>/`, and the
+    * batch becomes visible only when its manifest entry commits: written
+    * to a temp name and RENAMED into `manifest/<id>` (atomic on a real
+    * filesystem), write-if-absent. The entry lists the batch's files, one
+    * `batch=<id>/<file>` per line, relative to `data/`.
+    *
+    * A replay of a committed batch is skipped before it writes anything
+    * (as Spark's `FileStreamSink` does), so the committed data is never
+    * rewritten under a reader. A delivery of an uncommitted batch first
+    * deletes what an earlier, failed or torn delivery left in its dir; a
+    * crash between data write and commit leaves files that no entry
+    * names and no reader sees, and re-delivery completes the batch. This
+    * is the sink-side delivery contract the dedup stores assume
+    * ("idempotent sink"), made concrete.
+    *
+    * The files are written by one [[ParquetAppend]] per sink: one job
+    * per batch, named `manifestSink batch=<id>` in its job description,
+    * whose tasks read the Hadoop conf from a broadcast the sink keeps
+    * across batches instead of deserializing it from every task's
+    * closure. One file per non-empty partition (partition 0 always);
+    * `spark.sql.files.maxRecordsPerFile` is not honoured. */
+  def manifestSink(outDir: String): (DataFrame, Long) => Unit = {
+    val files = new ParquetAppend
     (batch: DataFrame, batchId: Long) => {
       val spark = batch.sparkSession
-      batch.write.mode("overwrite").parquet(s"$outDir/data/batch=$batchId")
-      val conf = spark.sessionState.newHadoopConf()
       val m = new org.apache.hadoop.fs.Path(s"$outDir/manifest/$batchId")
-      val fs = m.getFileSystem(conf)
+      val fs = m.getFileSystem(spark.sessionState.newHadoopConf())
       if (!fs.exists(m)) {
-        fs.mkdirs(m.getParent)
-        val tmp = new org.apache.hadoop.fs.Path(
-          s"$outDir/manifest/.$batchId.tmp")
-        val out = fs.create(tmp, true)
-        try out.write(s"batch=$batchId"
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-        // rename may race a concurrent committer of the SAME batch —
-        // losing the race means the entry exists, which is success
-        if (!fs.rename(tmp, m)) fs.delete(tmp, false)
+        val dir = new org.apache.hadoop.fs.Path(s"$outDir/data/batch=$batchId")
+        fs.delete(dir, true)
+        val sc = spark.sparkContext
+        val desc = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(s"manifestSink batch=$batchId")
+        val names =
+          try files(batch, dir.toString)
+          finally sc.setLocalProperty("spark.job.description", desc)
+        commitManifest(fs, outDir, batchId, names.map(n => s"batch=$batchId/$n"))
       }
-      ()
     }
+  }
 
-  /** Every row of every COMMITTED batch of a [[manifestSink]] dir —
-    * torn (uncommitted) batch dirs are invisible. */
+  /** Commits batch `batchId` of a [[manifestSink]] dir as the files
+    * `entries` (relative to `data/`): temp file, then rename, so a
+    * concurrent committer of the same batch loses cleanly. */
+  private[graft] def commitManifest(fs: org.apache.hadoop.fs.FileSystem, outDir: String,
+                                    batchId: Long, entries: Seq[String]): Unit = {
+    val m = new org.apache.hadoop.fs.Path(s"$outDir/manifest/$batchId")
+    fs.mkdirs(m.getParent)
+    val tmp = new org.apache.hadoop.fs.Path(s"$outDir/manifest/.$batchId.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(entries.mkString("\n")
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+    // rename may race a concurrent committer of the SAME batch —
+    // losing the race means the entry exists, which is success
+    if (!fs.rename(tmp, m)) fs.delete(tmp, false)
+  }
+
+  /** Every row of every COMMITTED batch of a [[manifestSink]] dir: the
+    * files each manifest entry lists, with no listing of the batch dirs,
+    * so uncommitted files are invisible. An entry in the earlier format,
+    * the bare line `batch=<id>`, reads that batch's whole dir. */
   def readCommitted(spark: org.apache.spark.sql.SparkSession,
                     outDir: String): DataFrame = {
     val m = new org.apache.hadoop.fs.Path(s"$outDir/manifest")
     val fs = m.getFileSystem(spark.sessionState.newHadoopConf())
-    val ids =
-      if (!fs.exists(m)) Array.empty[String]
-      else fs.listStatus(m).map(_.getPath.getName)
-        .filterNot(_.startsWith(".")).sorted
-    require(ids.nonEmpty, s"no committed batches under $outDir")
-    spark.read.parquet(ids.map(id => s"$outDir/data/batch=$id"): _*)
+    val entries =
+      if (!fs.exists(m)) Array.empty[org.apache.hadoop.fs.Path]
+      else fs.listStatus(m).map(_.getPath)
+        .filterNot(_.getName.startsWith(".")).sortBy(_.getName)
+    require(entries.nonEmpty, s"no committed batches under $outDir")
+    val paths = entries.flatMap { e =>
+      val in = fs.open(e)
+      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+        .filter(_.nonEmpty).map(rel => s"$outDir/data/$rel").toList
+      finally in.close()
+    }
+    spark.read.parquet(paths.toIndexedSeq: _*)
   }
 
   final case class DayCount(key: String, day: Long, n: Long)

@@ -26,7 +26,8 @@ import org.apache.spark.sql.streaming.{StateOperatorProgress, StreamingQueryList
   * {{{
   *   Audit perf <out.json> [sfDir]  every query warm, then measured: JSON of jobs,
   *                                  shuffle MB, wall; top 15; exit 1 over 8 GB
-  *   Audit jobs <query>             job count, then each job's cost and stages
+  *   Audit jobs <query>             job count, then each job's cost, task
+  *                                  deserialization, description and stages
   *   Audit time <q1,…> [reps]       build / plan / exec split of each rep
   *   Audit stream <query> [reps]    each micro-batch's durationMs and state
   *   Audit plans [q…]               static-plan census (exit 1 on a cartesian
@@ -46,34 +47,53 @@ object Audit {
   /** No query at the test scale factors legitimately shuffles this much. */
   val MaxShuffleBytes: Long = 8000000000L
 
-  final case class Job(id: Int, startMs: Long, endMs: Long, stages: String)
+  /** One finished job: its description (first line, "" if unset), stage
+    * names and the executor deserialization time of its tasks. */
+  final case class Job(id: Int, startMs: Long, endMs: Long, stages: String,
+      description: String, deserializeMs: Long)
   final case class Batch(query: String, id: Long, rows: Long,
       durationMs: Map[String, Long], state: Seq[StateOperatorProgress])
 
-  /** Jobs, per-job timings and stage names, shuffle bytes of completed
-    * stages and stream micro-batch progress, fed by one SparkListener and
-    * one StreamingQueryListener. */
+  /** Jobs, per-job timings, descriptions, stage names and task
+    * deserialization time, shuffle bytes of completed stages and stream
+    * micro-batch progress, fed by one SparkListener and one
+    * StreamingQueryListener. */
   private[graft] final class Collector {
     private val jobs, readBytes, writeBytes = new AtomicLong
     val finished = new ConcurrentLinkedQueue[Job]
     val batches = new ConcurrentLinkedQueue[Batch]
     private val events = new AtomicLong
-    private val open = new ConcurrentHashMap[Int, (Long, String)]
+    private final case class Open(startMs: Long, description: String, stages: String,
+        stageIds: Seq[Int], deserializeMs: AtomicLong)
+    private val open = new ConcurrentHashMap[Int, Open]
+    private val stageJob = scala.collection.concurrent.TrieMap.empty[Int, Int]
 
+    private def firstLine(s: String) = s.takeWhile(_ != '\n')
     private val jobListener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
         jobs.incrementAndGet()
-        open.put(j.jobId, (j.time, j.stageInfos.map(_.name.takeWhile(_ != '\n')).mkString(" | ")))
+        val desc = Option(j.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+        open.put(j.jobId, Open(j.time, desc.map(firstLine).getOrElse(""),
+          j.stageInfos.map(s => firstLine(s.name)).mkString(" | "), j.stageIds, new AtomicLong))
+        // a stage two open jobs share counts once, for the job that listed it first
+        j.stageIds.foreach(stageJob.putIfAbsent(_, j.jobId))
         events.incrementAndGet()
       }
       override def onJobEnd(j: SparkListenerJobEnd): Unit = {
-        Option(open.remove(j.jobId)).foreach(o => finished.add(Job(j.jobId, o._1, j.time, o._2)))
+        Option(open.remove(j.jobId)).foreach { o =>
+          o.stageIds.foreach(stageJob.remove(_, j.jobId))
+          finished.add(Job(j.jobId, o.startMs, j.time, o.stages, o.description,
+            o.deserializeMs.get))
+        }
         events.incrementAndGet()
       }
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
         val m = s.stageInfo.taskMetrics
         readBytes.addAndGet(m.shuffleReadMetrics.totalBytesRead)
         writeBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+        // a stage completes before the job that ran it ends
+        stageJob.get(s.stageInfo.stageId).flatMap(id => Option(open.get(id)))
+          .foreach(_.deserializeMs.addAndGet(m.executorDeserializeTime))
         events.incrementAndGet()
       }
     }
@@ -216,7 +236,10 @@ object Audit {
         val js = c.finished.asScala.toSeq.map(j => (j.endMs - j.startMs, j)).sortBy(-_._1)
         println(f"[jobs] ${r.name}: ${r.jobs} jobs, ${r.wall}%.2f s")
         println(f"[jobs] job-sum=${js.map(_._1).sum / 1e3}%.2f s")
-        for ((ms, j) <- js.take(40)) println(f"[jobs] $ms%8d ms  job#${j.id}  ${j.stages}")
+        println(f"[jobs] deserialize-sum=${js.map(_._2.deserializeMs).sum / 1e3}%.2f s")
+        for ((ms, j) <- js.take(40)) println(f"[jobs] $ms%8d ms  job#${j.id}  " +
+          f"deser=${j.deserializeMs}%d ms  ${if (j.description.isEmpty) "" else s"[${j.description}] "}" +
+          j.stages)
         0
       case "time" =>
         val qs = named("q127_curation_v7")

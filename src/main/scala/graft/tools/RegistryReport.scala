@@ -24,7 +24,8 @@ import java.nio.file.{Files, Paths}
   * short, and the perf gate lost its baseline row for it). Each file
   * after the flag is parsed for query names — a PERF/bench JSON
   * (`"queries": {...}` map), the SURVEY appendix (`` | `qNN_…` | ``
-  * table rows), or a ShuffleAudit text dump (`qNN_…` tokens) — and
+  * table rows), or the text output of `Audit perf` (`qNN_…` tokens,
+  * e.g. its `[shuffleaudit] audited (N): …` roster line) — and
   * its name set must EQUAL `Registry.all`'s: any name in the
   * registry but not the artifact (stale artifact) or in the artifact
   * but not the registry (dropped query) exits 1 with the exact

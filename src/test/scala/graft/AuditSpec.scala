@@ -52,6 +52,31 @@ class AuditSpec extends SparkSpec {
     }
   }
 
+  test("per job, the collector sums task deserialization time as a task-level listener does") {
+    val deser = new AtomicLong
+    val independent = new SparkListener {
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        Option(t.taskMetrics).foreach(m => deser.addAndGet(m.executorDeserializeTime))
+    }
+    spark.sparkContext.addSparkListener(independent)
+    val c = new Audit.Collector().attach(spark)
+    val out = Files.createTempDirectory("audit-deser")
+    try {
+      c.settle()
+      c.finished.clear()
+      val base = deser.get
+      spark.range(0, 20000, 1, 4).write.mode("overwrite").parquet(out.resolve("t").toString)
+      c.settle()
+      val jobs = c.finished.asScala.toSeq
+      assert(jobs.nonEmpty && jobs.map(_.deserializeMs).sum === deser.get - base, s"$jobs")
+      assert(jobs.map(_.deserializeMs).sum > 0, s"$jobs")
+    } finally {
+      c.detach(spark)
+      spark.sparkContext.removeSparkListener(independent)
+      org.apache.commons.io.FileUtils.deleteDirectory(out.toFile)
+    }
+  }
+
   test("the census flags a non-broadcast cartesian product and passes a broadcast one") {
     val (a, b) = (spark.range(50).toDF("a"), spark.range(50).toDF("b"))
     withConf("spark.sql.adaptive.enabled" -> "false",
