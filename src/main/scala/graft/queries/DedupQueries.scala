@@ -2810,7 +2810,7 @@ object DedupQueries {
     pairs.unpersist()
     Pipelines.splitAgainstStore(s, store,
         Tables.documents(s, dir).select(col("doc_id"), col("lang")),
-        "doc_id", testPct = 10, buckets = 16)
+        "doc_id", testPct = 10)
       .groupBy(col("lang"), col("split"))
       .agg(count(lit(1)).as("n_docs"),
         countDistinct(col("cluster_rep")).as("n_clusters"))

@@ -418,30 +418,38 @@ object Pipelines {
         col("total_bytes"))
   }
 
-  /** Bucketed layout shared by the persistent cross-run dedup stores
-    * ([[dedupAgainstStore]] / [[nearDupAgainstStore]] /
-    * [[imageDedupAgainstStore]]):
+  /** Bucketed layout shared by every store that keeps its history and
+    * absorbs replays against it: the cross-run dedup stores, the score
+    * cache, the SCD2 change store (and [[PitEnricher]] over it), the
+    * cluster members, and — on `id` — the hierarchy log.
     *
-    *   - `path/data` — signature rows, parquet PARTITIONED BY `pb`, a
-    *     stable xxhash64 bucket of the join key. A micro-batch derives
-    *     its own bucket set driver-side (≤ `buckets` ints) and reads
-    *     the store `.where(pb isin ...)` — a directory-level PARTITION
-    *     filter, so per-batch read cost is the batch's share of the
-    *     store, never the full accumulated history (the pruning
-    *     contract [[graft.operators.Search.writePostings]] /
-    *     `postingsFor` already proves; spec-asserted here too).
+    *   - `path/data` — rows parquet-PARTITIONED BY `pb`, a stable
+    *     xxhash64 bucket of the family's join key. Appends repartition
+    *     by `pb` first (one file per touched dir per batch); compact a
+    *     long-lived store ([[compactStoreIfNeeded]]) as with any
+    *     streaming-append table.
     *   - `path/config` — 1 row pinning the parameters that shaped the
-    *     stored rows (bucket count, banding scheme). Validated on every
-    *     open: a later run with different banding would silently join
-    *     mismatched keys and MISS duplicates, so it is a hard error.
+    *     stored rows (bucket count, banding scheme). Written by the
+    *     first writer and validated on every open ([[openOrInit]]): a
+    *     later run with different parameters would silently join
+    *     mismatched keys and MISS matches, so it is a hard error.
     *
-    * Store-side joins BROADCAST the micro-batch side, so the store
-    * slice streams through a broadcast hash join — never shuffled,
-    * never sorted; per-batch join state is batch-bounded. Appends
-    * repartition by `pb` first (one file per touched dir per batch);
-    * compact offline on a long-lived deployment, as with any
-    * streaming-append table. Size `buckets` ≫ expected batch key count
-    * (default 256, up to 65536) so the `isin` prunes most dirs. */
+    * A micro-batch's read of the store makes three decisions, all of
+    * them here:
+    *   1. the bucket COUNT is the store's pinned one ([[pinnedBuckets]]).
+    *      Only writers, which create and validate the config row, take
+    *      `buckets`; a reader bucketing at any other count would prune
+    *      to the wrong dirs and silently miss stored rows;
+    *   2. the batch's bucket SET comes from [[census]]: it adds `pb`,
+    *      checkpoints the frame, and harvests the set inside that
+    *      checkpoint job, so the set costs no job of its own;
+    *   3. the SLICE ([[slice]]) reads only those `pb` dirs — a
+    *      directory-level PARTITION filter, so per-batch read cost is the
+    *      batch's share of the store, never its accumulated history —
+    *      and joins them to the BROADCAST batch keys, so the store side
+    *      is never shuffled or sorted (both plan-asserted in the spec).
+    * Size `buckets` ≫ the expected batch key count (default 256, up to
+    * 65536) so the set prunes most dirs. */
   private[graft] object DedupStore {
     def bucketOf(key: Column, buckets: Int): Column =
       pmod(xxhash64(key), lit(buckets.toLong)).cast("int")
@@ -454,9 +462,12 @@ object Pipelines {
     // parquet is a whole Spark job of pure latency on the streaming
     // hot path. Correctness is unchanged: config is write-once, and a
     // concurrent writer with different params is already outside the
-    // single-writer discipline every store documents.
+    // single-writer discipline every store documents. `pinned` is the
+    // same memo for the bucket count, path → count.
     private val validated =
       java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    private val pinned =
+      new java.util.concurrent.ConcurrentHashMap[String, Integer]()
 
     /** Config row: write-if-absent, validate-if-present. */
     def openOrInit(spark: org.apache.spark.sql.SparkSession, path: String,
@@ -481,27 +492,70 @@ object Pipelines {
               s"$n stored=${have.getInt(have.fieldIndex(n))} requested=$v" }
               .mkString(", "))
       }
+      params.collectFirst { case ("buckets", b) => pinned.put(path, b) }
       validated.add(memoKey)
       ()
     }
+
+    /** The bucket count pinned in `path/config`; None before any writer
+      * has opened the store. */
+    private def pinnedBuckets(spark: org.apache.spark.sql.SparkSession,
+                              path: String): Option[Int] =
+      if (!openStore(spark, s"$path/config")) None
+      else Some(pinned.computeIfAbsent(path, _ => Int.box(
+        spark.read.parquet(s"$path/config").head().getAs[Int]("buckets")))
+        .intValue)
 
     def append(df: DataFrame, path: String): Unit =
       df.repartition(col("pb")).write.mode("append")
         .partitionBy("pb").parquet(s"$path/data")
 
-    /** The batch's slice of the store — `pb` is a PARTITION filter.
-      * Schema served from the per-session memo ([[readStore]]): the
-      * footer-inference job this call used to pay per micro-batch is
-      * skipped; the file index (and so visibility of appends) is not. */
-    def prunedRead(spark: org.apache.spark.sql.SparkSession, path: String,
-                   pbs: Seq[Int]): DataFrame =
-      readStore(spark, s"$path/data").where(col("pb").isin(pbs: _*))
+    /** Bucket census of a batch frame against the store at `path`: `df`
+      * with `pb` (the bucket of `key` at the pinned count) added and
+      * checkpointed, plus the batch's sorted bucket set. When the store
+      * whose data the set will prune (`path + sub`) holds no data there
+      * is nothing to slice: the set is empty and the checkpoint is lazy
+      * (its first consumer materializes it, as a `persist` would), so an
+      * empty store pays no job for its census. */
+    def census(path: String, df: DataFrame, key: Column,
+               sub: String = ""): (DataFrame, Seq[Int]) = {
+      val spark = df.sparkSession
+      pinnedBuckets(spark, path) match {
+        case Some(b) if hasData(spark, path + sub) =>
+          harvest(df.withColumn("pb", bucketOf(key, b)))
+        case b =>
+          (df.withColumn("pb", b.fold(lit(null).cast("int"))(bucketOf(key, _)))
+            .localCheckpoint(false), Nil)
+      }
+    }
 
-    /** The batch's bucket set, derived driver-side (≤ `buckets` ints —
-      * bounded, so the collect is a legal driver action). */
-    def batchBuckets(df: DataFrame): Seq[Int] =
-      df.select("pb").where(col("pb").isNotNull).distinct()
-        .collect().map(_.getInt(0)).toSeq
+    /** Eager checkpoint of `df`, which carries `pb`, and its sorted
+      * bucket set, harvested by a [[PbSetAccumulator]] inside the
+      * checkpoint job. */
+    def harvest(df: DataFrame): (DataFrame, Seq[Int]) = {
+      val acc = new PbSetAccumulator
+      df.sparkSession.sparkContext.register(acc, "pb-census")
+      val add = udf { (pb: java.lang.Integer) =>
+        if (pb != null) acc.add(pb.toInt)
+        pb
+      }
+      val out = df.withColumn("pb", add(col("pb"))).localCheckpoint(true)
+      (out, acc.value.toSeq.sorted)
+    }
+
+    /** The batch's slice of the store at `path`: its `pbs` dirs, joined
+      * (`how`) to the BROADCAST batch `keys` on `on`. The schema comes
+      * from the per-session memo ([[readStore]]), so the slice pays no
+      * footer-inference job; the file index (and so visibility of
+      * appends) is rebuilt per call. None when the store has no data or
+      * the batch no buckets. */
+    def slice(path: String, pbs: Seq[Int], keys: DataFrame, on: Seq[String],
+              how: String = "left_semi"): Option[DataFrame] = {
+      val spark = keys.sparkSession
+      if (pbs.isEmpty || !hasData(spark, path)) None
+      else Some(readStore(spark, s"$path/data").where(col("pb").isin(pbs: _*))
+        .join(broadcast(keys), on, how))
+    }
   }
 
   /** Offline compaction for a [[DedupStore]] (any of the three
@@ -533,33 +587,31 @@ object Pipelines {
     (rows, filesBefore, leafFileCounts(spark, data).sum)
   }
 
-  /** Outcome of [[compactStoreIfNeeded]]. `rows` is −1 when the
-    * threshold was not crossed (the no-op path never scans the data). */
-  final case class CompactDecision(compacted: Boolean, maxFilesPerDir: Long,
-                                   rows: Long, filesBefore: Long,
-                                   filesAfter: Long)
+  /** Outcome of [[compactStoreIfNeeded]]: the file census of the dir —
+    * its largest per-leaf-dir data-file count and its total — and what
+    * the compaction returned, when the threshold was crossed. */
+  final case class CompactDecision[A](maxFilesPerDir: Long, files: Long,
+                                      result: Option[A]) {
+    def compacted: Boolean = result.isDefined
+  }
 
-  /** File-count-triggered compaction policy over [[compactStore]]: run
-    * the rewrite only when some `pb` partition dir has accumulated more
-    * than `maxFilesPerDir` data files (each streaming append leaves one
-    * file per touched dir per batch). The census is a driver-side
-    * directory listing ([[leafFileCounts]]) — no Spark job — so calling
-    * this after every N batches (or from a maintenance cron) costs
-    * nothing when the store is healthy. Same single-writer discipline
-    * as [[compactStore]]. */
-  def compactStoreIfNeeded(spark: org.apache.spark.sql.SparkSession,
-                           path: String,
-                           maxFilesPerDir: Int = 8): CompactDecision = {
-    val data = s"$path/data"
-    require(openStore(spark, data), s"no dedup store data at $data")
-    val perDir = leafFileCounts(spark, data)
+  /** The one file-count compaction trigger of every store family: run
+    * `compact` only when some leaf dir under `dir` holds more than
+    * `maxFilesPerDir` data files. Each streaming append leaves one file
+    * per touched leaf dir (a `pb` dir; `merges/` is one flat dir), so
+    * the census counts batches since the last compaction. The census is
+    * a driver-side listing ([[leafFileCounts]]) — no Spark job — so a
+    * healthy store costs nothing and touches no file, whether this runs
+    * after every batch (the hierarchy and cluster ingests wire it in)
+    * or from a maintenance cron. A missing `dir` is a no-op. Same
+    * single-writer discipline as the compaction it runs. */
+  def compactStoreIfNeeded[A](spark: org.apache.spark.sql.SparkSession,
+                              dir: String, maxFilesPerDir: Int)(
+      compact: => A): CompactDecision[A] = {
+    val perDir = leafFileCounts(spark, dir)
     val maxPer = perDir.foldLeft(0L)(math.max)
-    if (maxPer <= maxFilesPerDir)
-      CompactDecision(compacted = false, maxPer, -1L, perDir.sum, perDir.sum)
-    else {
-      val (rows, before, after) = compactStore(spark, path)
-      CompactDecision(compacted = true, maxPer, rows, before, after)
-    }
+    CompactDecision(maxPer, perDir.sum,
+      if (maxPer > maxFilesPerDir) Some(compact) else None)
   }
 
   /** Per-batch core of [[dedupAgainstStore]], factored out so the spec
@@ -568,28 +620,16 @@ object Pipelines {
     * the batch and the store, with `fingerprint`/`pb` still attached
     * (the append side needs them). */
   private[graft] def dedupFresh(batch: DataFrame, textCol: String,
-                                storePath: String, buckets: Int): DataFrame = {
-    val spark = batch.sparkSession
-    val fp = batch
+                                storePath: String): DataFrame = {
+    val (fp, pbs) = DedupStore.census(storePath, batch
       .withColumn("fingerprint",
         graft.functions.TextFunctions.fingerprint(col(textCol)))
-      .dropDuplicates("fingerprint")
-      .withColumn("pb", DedupStore.bucketOf(col("fingerprint"), buckets))
-    if (!DedupStore.hasData(spark, storePath)) fp
-    else {
-      val pbs = DedupStore.batchBuckets(fp)
-      if (pbs.isEmpty) fp
-      else {
-        // store slice streams through a broadcast SEMI join (build side
-        // = the batch's fingerprints); the ≤batch-sized hit list then
-        // anti-joins back — the store is never shuffled or sorted
-        val hits = DedupStore.prunedRead(spark, storePath, pbs)
-          .join(broadcast(fp.select("fingerprint")),
-            Seq("fingerprint"), "left_semi")
-        fp.join(broadcast(hits.select("fingerprint")),
-          Seq("fingerprint"), "left_anti")
-      }
-    }
+      .dropDuplicates("fingerprint"), col("fingerprint"))
+    // the store slice is semi-joined on the batch's fingerprints; the
+    // ≤batch-sized hit list then anti-joins back
+    DedupStore.slice(storePath, pbs, fp.select("fingerprint"), Seq("fingerprint"))
+      .fold(fp)(hits => fp.join(broadcast(hits.select("fingerprint")),
+        Seq("fingerprint"), "left_anti"))
   }
 
   /** Incremental ingestion dedup against a persistent fingerprint store:
@@ -600,13 +640,11 @@ object Pipelines {
     * This is the cross-run complement of [[streamingDedup]]:
     * `dropDuplicatesWithinWatermark` bounds state to the watermark
     * horizon, while the store carries the full ingestion history as a
-    * TABLE in the [[DedupStore]] bucketed layout — each batch reads
-    * only its own fingerprint buckets (partition-pruned) and the store
-    * side never shuffles, so per-batch cost tracks the batch, not the
-    * deployment lifetime. Delivery is at-least-once: a crash between
-    * `sink` and the store append can re-emit a batch's docs; land the
-    * sink idempotently (same fingerprint key) for exactly-once
-    * end-to-end. */
+    * TABLE in the [[DedupStore]] bucketed layout, so per-batch cost
+    * tracks the batch, not the deployment lifetime. Delivery is
+    * at-least-once: a crash between `sink` and the store append can
+    * re-emit a batch's docs; land the sink idempotently (same
+    * fingerprint key) for exactly-once end-to-end. */
   def dedupAgainstStore(textCol: String, storePath: String,
                         buckets: Int = 256)(
       sink: DataFrame => Unit): (DataFrame, Long) => Unit = {
@@ -614,7 +652,7 @@ object Pipelines {
     (batch: DataFrame, _: Long) => {
       val spark = batch.sparkSession
       DedupStore.openOrInit(spark, storePath, Seq("buckets" -> buckets))
-      val fresh = dedupFresh(batch, textCol, storePath, buckets).persist()
+      val fresh = dedupFresh(batch, textCol, storePath).persist()
       sink(fresh.drop("fingerprint", "pb"))
       DedupStore.append(fresh.select("fingerprint", "pb"), storePath)
       fresh.unpersist()
@@ -634,9 +672,7 @@ object Pipelines {
     *
     * Documents shorter than `n` tokens have no signature and always
     * pass (nothing to estimate against). At-least-once like
-    * [[dedupAgainstStore]]; the store lives in the [[DedupStore]]
-    * bucketed layout keyed on (band, bucket) — the batch reads only its
-    * own band-bucket partitions and the store side never shuffles.
+    * [[dedupAgainstStore]]; the [[DedupStore]] key is (band, bucket).
     * `n`/`k`/`bands` shape the stored signatures, so they are pinned in
     * the store config and validated on every open; `minEstJaccard` is a
     * read-time threshold, free to vary per run. */
@@ -645,64 +681,72 @@ object Pipelines {
                           minEstJaccard: Double = 0.8, buckets: Int = 256)(
       sink: DataFrame => Unit): (DataFrame, Long) => Unit = {
     import graft.operators.Dedup
+    bandedDedupAgainstStore(idCol, storePath,
+      Seq("n" -> n, "k" -> k, "bands" -> bands, "buckets" -> buckets),
+      Seq("band", "bucket"), "sig", minhashClose(k, minEstJaccard))(batch =>
+      Dedup.lshBuckets(Dedup.minhashSignatures(batch, idCol, textCol, n, k),
+        k, bands))(sink)
+  }
+
+  /** MinHash closeness: the exact agreement fraction over the `k`
+    * signature components — the Jaccard estimate — reaches
+    * `minEstJaccard`. */
+  private[graft] def minhashClose(k: Int, minEstJaccard: Double)(
+      a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => when(x === y, 1).otherwise(0)),
+      lit(0), (acc, x) => acc + x).cast("double") / k >= minEstJaccard
+
+  /** Perceptual closeness: the Hamming distance of two 64-bit signature
+    * strings is at most `maxHamming`. */
+  private[graft] def hammingClose(maxHamming: Int)(a: Column, b: Column): Column =
+    call_function(graft.plans.HammingDist.fnName, a, b) <= maxHamming
+
+  /** The one per-batch body of the banded signature stores
+    * ([[nearDupAgainstStore]], [[imageDedupAgainstStore]],
+    * [[videoDedupAgainstStore]]): open the store, band the batch
+    * (`band` → id, `sig`, `keys`…), census it on its band key, sink the
+    * [[bandedFresh]] rows and append the survivors' bands. */
+  private def bandedDedupAgainstStore(idCol: String, storePath: String,
+                                      params: Seq[(String, Int)],
+                                      keys: Seq[String], sig: String,
+                                      close: (Column, Column) => Column)(
+      band: DataFrame => DataFrame)(
+      sink: DataFrame => Unit): (DataFrame, Long) => Unit =
     (batch: DataFrame, _: Long) => {
-      val spark = batch.sparkSession
-      DedupStore.openOrInit(spark, storePath,
-        Seq("n" -> n, "k" -> k, "bands" -> bands, "buckets" -> buckets))
-      val banded = Dedup.lshBuckets(
-        Dedup.minhashSignatures(batch, idCol, textCol, n, k), k, bands)
-        .withColumn("pb", DedupStore.bucketOf(
-          concat_ws(":", col("band"), col("bucket")), buckets))
-        .persist()
-      val fresh = nearDupFresh(batch, banded, idCol, storePath, k,
-        minEstJaccard).persist()
+      DedupStore.openOrInit(batch.sparkSession, storePath, params)
+      val (banded, pbs) = DedupStore.census(storePath, band(batch),
+        concat_ws(":", keys.map(col): _*))
+      val fresh = bandedFresh(batch, banded, pbs, idCol, storePath, keys,
+        sig, close).persist()
       sink(fresh)
       DedupStore.append(
         banded.join(fresh.select(col(idCol).as("id")), Seq("id"), "left_semi"),
         storePath)
-      fresh.unpersist(); banded.unpersist()
+      fresh.unpersist()
       ()
     }
-  }
 
-  /** Per-batch core of [[nearDupAgainstStore]] (factored for the spec's
-    * plan assertions): `banded` is the batch's banded signature frame
-    * (id, sig, band, bucket, pb). Returns the batch rows that near-dup
-    * neither the store nor an earlier (smaller-id) in-batch doc. */
-  private[graft] def nearDupFresh(batch: DataFrame, banded: DataFrame,
-                                  idCol: String, storePath: String, k: Int,
-                                  minEstJaccard: Double): DataFrame = {
-    val spark = batch.sparkSession
-    // exact agreement fraction over k components — the MinHash estimate
-    def sigAgree(a: Column, b: Column) =
-      aggregate(zip_with(a, b, (x, y) => when(x === y, 1).otherwise(0)),
-        lit(0), (acc, x) => acc + x).cast("double") / k
-    // within the batch: keep the smaller id of a colliding dup pair
-    // (one side broadcast — a micro-batch is broadcastable by contract)
-    val dupInBatch = banded.select(col("id").as("id_b"), col("sig").as("sig_b"),
-        col("band"), col("bucket"))
-      .join(broadcast(banded.select(col("id").as("id_a"), col("sig").as("sig_a"),
-        col("band"), col("bucket"))), Seq("band", "bucket"))
-      .where(col("id_a") < col("id_b") &&
-        sigAgree(col("sig_a"), col("sig_b")) >= minEstJaccard)
+  /** Per-batch core of the banded signature stores (factored for the
+    * spec's plan assertions): `banded` is the batch's censused band
+    * frame (id, `sig`, `keys`…, pb) and `pbs` its bucket set. Returns
+    * the batch rows that are `close` to no row sharing a band key —
+    * neither in the store nor earlier (smaller id) in the batch. */
+  private[graft] def bandedFresh(batch: DataFrame, banded: DataFrame,
+                                 pbs: Seq[Int], idCol: String,
+                                 storePath: String, keys: Seq[String],
+                                 sig: String,
+                                 close: (Column, Column) => Column): DataFrame = {
+    def side(s: String) = banded.select(
+      col("id").as(s"id_$s") +: col(sig).as(s"sig_$s") +: keys.map(col): _*)
+    // within the batch: keep the smaller id of a close pair (one side
+    // broadcast — a micro-batch is broadcastable by contract)
+    val dupInBatch = side("b").join(broadcast(side("a")), keys)
+      .where(col("id_a") < col("id_b") && close(col("sig_a"), col("sig_b")))
       .select(col("id_b").as("id"))
-    val dups =
-      if (!DedupStore.hasData(spark, storePath)) dupInBatch
-      else {
-        val pbs = DedupStore.batchBuckets(banded)
-        if (pbs.isEmpty) dupInBatch
-        else {
-          // pruned store slice streams against the BROADCAST batch
-          // signatures; output is collision-bounded (≤ batch × bands)
-          val dupVsStore = DedupStore.prunedRead(spark, storePath, pbs)
-            .select(col("sig").as("sig_o"), col("band"), col("bucket"))
-            .join(broadcast(banded.select(col("id"), col("sig"),
-              col("band"), col("bucket"))), Seq("band", "bucket"))
-            .where(sigAgree(col("sig"), col("sig_o")) >= minEstJaccard)
-            .select("id")
-          dupVsStore.unionByName(dupInBatch)
-        }
-      }
+    // the store slice's output is collision-bounded (≤ batch × bands)
+    val dups = DedupStore.slice(storePath, pbs, side("b"), keys, "inner")
+      .fold(dupInBatch)(_.where(close(col(sig), col("sig_b")))
+        .select(col("id_b").as("id")).unionByName(dupInBatch))
     batch.join(broadcast(dups.withColumnRenamed("id", idCol).distinct()),
       Seq(idCol), "left_anti")
   }
@@ -722,41 +766,26 @@ object Pipelines {
     * absorbed BY CONSTRUCTION: a replayed image collides with its own
     * stored signature at distance 0, so nothing re-emits and nothing
     * re-appends (spec-asserted). Store joins are (band, key) equi-joins
-    * over the banded store in the [[DedupStore]] bucketed layout — the
-    * batch reads only its own band-key partitions and the store side
-    * never shuffles; never a full-store Hamming scan. `maxHamming`
-    * fixes the pigeonhole band split that shaped the stored keys, so it
-    * is pinned in the store config and a later run with a different
-    * value is a hard error instead of silently missed duplicates. */
+    * over the [[DedupStore]] slice — never a full-store Hamming scan.
+    * `maxHamming` fixes the pigeonhole band split that shaped the
+    * stored keys, so it is pinned in the store config and a later run
+    * with a different value is a hard error instead of silently missed
+    * duplicates. */
   def imageDedupAgainstStore(idCol: String, blobCol: String,
                              storePath: String, maxHamming: Int = 3,
                              buckets: Int = 256)(
-      sink: DataFrame => Unit): (DataFrame, Long) => Unit = {
-    import graft.operators.Multimodal
-    (batch: DataFrame, _: Long) => {
-      val spark = batch.sparkSession
-      graft.plans.HammingDist.register(spark)
-      DedupStore.openOrInit(spark, storePath,
-        Seq("maxHamming" -> maxHamming, "buckets" -> buckets))
-      val banded = imageBanded(batch, blobCol, idCol, maxHamming, buckets)
-        .persist()
-      val fresh = imageDedupFresh(batch, banded, idCol, storePath,
-        maxHamming).persist()
-      sink(fresh)
-      DedupStore.append(
-        banded.join(fresh.select(col(idCol).as("id")), Seq("id"), "left_semi"),
-        storePath)
-      fresh.unpersist(); banded.unpersist()
-      ()
-    }
-  }
+      sink: DataFrame => Unit): (DataFrame, Long) => Unit =
+    bandedDedupAgainstStore(idCol, storePath,
+      Seq("maxHamming" -> maxHamming, "buckets" -> buckets),
+      Seq("band", "key"), "dhash", hammingClose(maxHamming))(
+      imageBanded(_, blobCol, idCol, maxHamming))(sink)
 
-  /** Pigeonhole band split + store bucket over ANY (id, dhash)
-    * 64-bit-string signature frame → (id, dhash, band, key, pb) —
-    * signature-agnostic, shared by the image (dHash) and video
-    * (frame-size profile) stores. */
-  private[graft] def sigBanded(sigs: DataFrame, maxHamming: Int,
-                               buckets: Int): DataFrame = {
+  /** Pigeonhole band split over ANY (id, dhash) 64-bit-string signature
+    * frame → (id, dhash, band, key) — signature-agnostic, shared by the
+    * image (dHash) and video (frame-size profile) stores, whose
+    * closeness test ([[hammingClose]]) it registers. */
+  private[graft] def sigBanded(sigs: DataFrame, maxHamming: Int): DataFrame = {
+    graft.plans.HammingDist.register(sigs.sparkSession)
     val b = maxHamming + 1
     val bounds = (0 to b).map(i => 1 + i * 64 / b)
     val bandCols = (0 until b).map { i =>
@@ -767,21 +796,18 @@ object Pipelines {
       .select(col("id"), col("dhash"), explode(array(bandCols: _*)).as("bb"))
       .select(col("id"), col("dhash"),
         col("bb.band").as("band"), col("bb.key").as("key"))
-      .withColumn("pb", DedupStore.bucketOf(
-        concat_ws(":", col("band"), col("key")), buckets))
   }
 
-  /** A batch's banded dHash frame (id, dhash, band, key, pb): REAL
-    * pixel decode → dHash → [[sigBanded]]. */
+  /** A batch's banded dHash frame (id, dhash, band, key): REAL pixel
+    * decode → dHash → [[sigBanded]]. */
   private[graft] def imageBanded(batch: DataFrame, blobCol: String,
-                                 idCol: String, maxHamming: Int,
-                                 buckets: Int): DataFrame = {
+                                 idCol: String, maxHamming: Int): DataFrame = {
     import graft.operators.Multimodal
     sigBanded(
       Multimodal.decodeImageHashPartitions(batch, blobCol, idCol)
         .where(col("format") =!= "corrupt")
         .select(col("id"), col("dhash")),
-      maxHamming, buckets)
+      maxHamming)
   }
 
   /** Cross-run VIDEO ingestion dedup — [[imageDedupAgainstStore]]'s
@@ -790,71 +816,21 @@ object Pipelines {
     * (same samples, different container bytes/branding/keyframe
     * settings) fingerprints identically and is suppressed where
     * byte-level dedup would pass it; a lightly re-encoded one lands
-    * within `maxHamming`. Same [[DedupStore]] bucketed layout, pruned
-    * per-batch reads, broadcast joins, config pinning, at-least-once
+    * within `maxHamming`. Same store, config pinning, at-least-once
     * absorption, and corrupt-bypass contract as the image store. */
   def videoDedupAgainstStore(idCol: String, blobCol: String,
                              storePath: String, maxHamming: Int = 3,
                              buckets: Int = 256)(
       sink: DataFrame => Unit): (DataFrame, Long) => Unit = {
     import graft.operators.Multimodal
-    (batch: DataFrame, _: Long) => {
-      val spark = batch.sparkSession
-      graft.plans.HammingDist.register(spark)
-      DedupStore.openOrInit(spark, storePath,
-        Seq("maxHamming" -> maxHamming, "buckets" -> buckets))
-      val banded = sigBanded(
+    bandedDedupAgainstStore(idCol, storePath,
+      Seq("maxHamming" -> maxHamming, "buckets" -> buckets),
+      Seq("band", "key"), "dhash", hammingClose(maxHamming))(batch =>
+      sigBanded(
         Multimodal.decodeVideoSigPartitions(batch, blobCol, idCol)
           .where(col("format") =!= "corrupt")
           .select(col("id"), col("vsig").as("dhash")),
-        maxHamming, buckets).persist()
-      val fresh = imageDedupFresh(batch, banded, idCol, storePath,
-        maxHamming).persist()
-      sink(fresh)
-      DedupStore.append(
-        banded.join(fresh.select(col(idCol).as("id")), Seq("id"), "left_semi"),
-        storePath)
-      fresh.unpersist(); banded.unpersist()
-      ()
-    }
-  }
-
-  /** Per-batch core of [[imageDedupAgainstStore]] (factored for the
-    * spec's plan assertions): `banded` is the batch's banded dHash
-    * frame (id, dhash, band, key, pb). Returns the batch rows that
-    * match neither the store nor an earlier (smaller-id) in-batch
-    * image within `maxHamming`. */
-  private[graft] def imageDedupFresh(batch: DataFrame, banded: DataFrame,
-                                     idCol: String, storePath: String,
-                                     maxHamming: Int): DataFrame = {
-    val spark = batch.sparkSession
-    val ham = call_function(graft.plans.HammingDist.fnName,
-      col("dhash"), col("dhash_o"))
-    // one side broadcast — a micro-batch is broadcastable by contract
-    val dupInBatch = banded.select(col("id").as("id_b"),
-        col("dhash").as("dhash_o"), col("band"), col("key"))
-      .join(broadcast(banded.select(col("id").as("id_a"), col("dhash"),
-        col("band"), col("key"))), Seq("band", "key"))
-      .where(col("id_a") < col("id_b") && ham <= maxHamming)
-      .select(col("id_b").as("id"))
-    val dups =
-      if (!DedupStore.hasData(spark, storePath)) dupInBatch
-      else {
-        val pbs = DedupStore.batchBuckets(banded)
-        if (pbs.isEmpty) dupInBatch
-        else {
-          // pruned store slice vs the BROADCAST batch signatures
-          val dupVsStore = DedupStore.prunedRead(spark, storePath, pbs)
-            .select(col("dhash").as("dhash_o"), col("band"), col("key"))
-            .join(broadcast(banded.select(col("id"), col("dhash"),
-              col("band"), col("key"))), Seq("band", "key"))
-            .where(ham <= maxHamming)
-            .select("id")
-          dupVsStore.unionByName(dupInBatch)
-        }
-      }
-    batch.join(broadcast(dups.withColumnRenamed("id", idCol).distinct()),
-      Seq(idCol), "left_anti")
+        maxHamming))(sink)
   }
 
   /** Cross-run SHIFTED-CONTENT ingestion dedup — the content-defined-
@@ -873,12 +849,11 @@ object Pipelines {
     * chunk is appended once: fresh documents' chunks are anti-joined
     * against the already-known set before the append, so a viral
     * boilerplate chunk occupies ONE store row no matter how many
-    * documents carry it. Same [[DedupStore]] layout/contract as the
-    * siblings: pruned per-batch partition reads, batch side broadcast
-    * everywhere (the store never shuffles), `w`/`mask` pinned in the
-    * config, at-least-once replays absorbed by construction (a
-    * redelivered doc's chunks all hit → overlap 1). `minOverlap` is a
-    * read-time threshold, free to vary per run. */
+    * documents carry it. Same [[DedupStore]] layout as the siblings,
+    * batch side broadcast everywhere, `w`/`mask` pinned in the config,
+    * at-least-once replays absorbed by construction (a redelivered
+    * doc's chunks all hit → overlap 1). `minOverlap` is a read-time
+    * threshold, free to vary per run. */
   def cdcDedupAgainstStore(idCol: String, textCol: String, storePath: String,
                            w: Int = 8, mask: Int = 64,
                            minOverlap: Double = 0.5, buckets: Int = 256)(
@@ -889,8 +864,9 @@ object Pipelines {
       val spark = batch.sparkSession
       DedupStore.openOrInit(spark, storePath,
         Seq("w" -> w, "mask" -> mask, "buckets" -> buckets))
-      val chunks = cdcHashed(batch, idCol, textCol, w, mask, buckets).persist()
-      val known = cdcKnown(spark, chunks, storePath).persist()
+      val (chunks, pbs) = DedupStore.census(storePath,
+        cdcHashed(batch, idCol, textCol, w, mask), col("ch"))
+      val known = cdcKnown(chunks, pbs, storePath).persist()
       val fresh = cdcFresh(batch, chunks, known, idCol, minOverlap).persist()
       sink(fresh)
       DedupStore.append(
@@ -898,39 +874,28 @@ object Pipelines {
           .join(broadcast(known), Seq("ch"), "left_anti")
           .select("ch", "pb").distinct(),
         storePath)
-      chunks.unpersist(); known.unpersist(); fresh.unpersist()
+      known.unpersist(); fresh.unpersist()
       ()
     }
   }
 
-  /** A batch's distinct (id, chunk-md5, pb) frame — pure fused map +
-    * one batch-bounded distinct. */
+  /** A batch's distinct (id, chunk-md5) frame — pure fused map + one
+    * batch-bounded distinct. */
   private[graft] def cdcHashed(batch: DataFrame, idCol: String,
-                               textCol: String, w: Int, mask: Int,
-                               buckets: Int): DataFrame =
+                               textCol: String, w: Int, mask: Int): DataFrame =
     graft.operators.Dedup.cdcChunks(
         batch.select(col(idCol).as("id"), col(textCol)), "id", textCol,
         w, mask)
       .select(col("id"), md5(col("chunk")).as("ch"))
       .distinct()
-      .withColumn("pb", DedupStore.bucketOf(col("ch"), buckets))
 
-  /** The batch's already-known chunk hashes: pruned store slice,
-    * semi-joined against the BROADCAST batch chunk set — output is
-    * batch-bounded, the store side never shuffles. */
-  private[graft] def cdcKnown(spark: org.apache.spark.sql.SparkSession,
-                              chunks: DataFrame,
-                              storePath: String): DataFrame = {
-    val none = chunks.select("ch").limit(0)
-    if (!DedupStore.hasData(spark, storePath)) none
-    else {
-      val pbs = DedupStore.batchBuckets(chunks)
-      if (pbs.isEmpty) none
-      else DedupStore.prunedRead(spark, storePath, pbs)
-        .join(broadcast(chunks.select("ch").distinct()), Seq("ch"), "left_semi")
-        .select("ch").distinct()
-    }
-  }
+  /** The batch's already-known chunk hashes: the store slice of the
+    * censused batch `chunks` (bucket set `pbs`), semi-joined on its
+    * chunk set — batch-bounded output. */
+  private[graft] def cdcKnown(chunks: DataFrame, pbs: Seq[Int],
+                              storePath: String): DataFrame =
+    DedupStore.slice(storePath, pbs, chunks.select("ch").distinct(), Seq("ch"))
+      .fold(chunks.select("ch").limit(0))(_.select("ch").distinct())
 
   /** Per-batch core of [[cdcDedupAgainstStore]] (factored for the
     * spec's plan assertions): suppress batch docs whose chunk-overlap
@@ -970,10 +935,7 @@ object Pipelines {
     * must keep a stable schema across batches (they are the store's
     * schema).
     *
-    * Same [[DedupStore]] scale contract as the dedup stores: the store
-    * is partitioned by a fingerprint bucket, each batch derives its
-    * bucket set driver-side and partition-prunes the read, the store
-    * side never shuffles (the batch is broadcast into the slice), and
+    * The store is a [[DedupStore]] keyed on the fingerprint, so
     * per-batch cost tracks the batch, not the deployment lifetime.
     * At-least-once: a crash between `sink` and the append recomputes
     * (not corrupts) on replay; the append is anti-joined against the
@@ -985,12 +947,11 @@ object Pipelines {
     (batch: DataFrame, _: Long) => {
       val spark = batch.sparkSession
       DedupStore.openOrInit(spark, storePath, Seq("buckets" -> buckets))
-      val fp = batch
+      val (fp, pbs) = DedupStore.census(storePath, batch
         .withColumn("fingerprint",
-          graft.functions.TextFunctions.fingerprint(col(textCol)))
-        .withColumn("pb", DedupStore.bucketOf(col("fingerprint"), buckets))
-        .persist()
-      val cached = scoreCacheLookup(spark, fp, storePath).map(_.persist())
+          graft.functions.TextFunctions.fingerprint(col(textCol))),
+        col("fingerprint"))
+      val cached = scoreCacheLookup(fp, pbs, storePath).map(_.persist())
       val knownFps = cached.map(_.select("fingerprint"))
         .getOrElse(fp.select("fingerprint").limit(0))
       // one representative row per fingerprint the cache has never seen
@@ -1012,28 +973,20 @@ object Pipelines {
         computed.withColumn("pb",
           DedupStore.bucketOf(col("fingerprint"), buckets)),
         storePath)
-      fp.unpersist(); cached.foreach(_.unpersist()); computed.unpersist()
+      cached.foreach(_.unpersist()); computed.unpersist()
       ()
     }
   }
 
-  /** The batch's cached result rows: pruned store slice semi-joined
-    * against the BROADCAST batch fingerprint set — batch-bounded
-    * output, the store never shuffles. None when the cache has no data
-    * or the batch no fingerprints (first batch — result schema is not
-    * knowable until `compute` defines it). */
-  private[graft] def scoreCacheLookup(
-      spark: org.apache.spark.sql.SparkSession, fp: DataFrame,
-      storePath: String): Option[DataFrame] = {
-    if (!DedupStore.hasData(spark, storePath)) None
-    else {
-      val pbs = DedupStore.batchBuckets(fp)
-      if (pbs.isEmpty) None
-      else Some(DedupStore.prunedRead(spark, storePath, pbs)
-        .join(broadcast(fp.select("fingerprint").distinct()),
-          Seq("fingerprint"), "left_semi"))
-    }
-  }
+  /** The batch's cached result rows: the store slice of the censused
+    * batch `fp` (bucket set `pbs`), semi-joined on its fingerprints.
+    * None when the cache has no data or the batch no fingerprints
+    * (first batch — the result schema is not knowable until `compute`
+    * defines it). */
+  private[graft] def scoreCacheLookup(fp: DataFrame, pbs: Seq[Int],
+                                      storePath: String): Option[DataFrame] =
+    DedupStore.slice(storePath, pbs, fp.select("fingerprint").distinct(),
+      Seq("fingerprint"))
 
   /** Streaming weighted reservoir: maintain, across micro-batches and
     * restarts, the per-stratum k-sample a batch A-ES pass
@@ -1096,11 +1049,10 @@ object Pipelines {
     * persistent CHANGE store; only rows whose attributes differ from
     * the key's current state are appended, so unchanged re-snapshots
     * and replays are absorbed (the store IS the compression). The
-    * store is a [[DedupStore]]: `data/` partitioned by
-    * `pb = hash(key) % buckets`, and each batch reads ONLY its keys'
-    * buckets (partition-pruned) to recover current state — per-batch
-    * cost tracks batch size, not dimension history. Intervals are
-    * derived at read time by [[scd2StoreIntervals]].
+    * store is a [[DedupStore]] keyed on `key`; each batch recovers its
+    * keys' current state from its slice, so per-batch cost tracks batch
+    * size, not dimension history. Intervals are derived at read time by
+    * [[scd2StoreIntervals]].
     *
     * Delivery contract (same as `transitionStream`): per-key
     * non-decreasing snapshot timestamps across batches; a snapshot
@@ -1123,26 +1075,14 @@ object Pipelines {
     (batch0: DataFrame, batchId: Long) => {
       val spark = batch0.sparkSession
       DedupStore.openOrInit(spark, storePath, Seq("buckets" -> buckets))
-      // bucket set harvested inside the batch checkpoint job (the
-      // [[PbSetAccumulator]] zero-extra-job pattern): the former
-      // distinct+collect action per micro-batch is gone, and the
-      // checkpoint also stops the window ladder below from re-deriving
-      // the batch's (possibly deep) source plan per consumer.
-      val pbAcc = new PbSetAccumulator
-      spark.sparkContext.register(pbAcc, "scd2-batch-pbs")
-      val pbHarvest = udf { (pb: java.lang.Integer) =>
-        if (pb != null) pbAcc.add(pb.toInt)
-        pb
-      }
-      val batch = batch0
+      // the census checkpoint also stops the window ladder below from
+      // re-deriving the batch's (possibly deep) source plan per consumer
+      val (batch, pbs) = DedupStore.census(storePath, batch0
         .select(col(keyCol).as("k") +: col(snapCol).as("snap_ts") +:
           attrCols.map(col): _*)
-        .withColumn("pb", pbHarvest(DedupStore.bucketOf(col("k"), buckets)))
-        .withColumn("seed", lit(false))
-        .localCheckpoint(true)
-      val pbs = pbAcc.value.toSeq.sorted
-      // seed rows: the touched keys' FULL stored change history —
-      // bucket-pruned and semi-joined on the broadcast batch keys.
+        .withColumn("seed", lit(false)), col("k"))
+      // seed rows: the touched keys' FULL stored change history — the
+      // store slice semi-joined on the batch keys.
       // Using the history directly (instead of a groupBy max-struct
       // "current state" aggregate plus a current-ts guard join) keeps
       // the whole cycle one keyed window ladder: the late-data guard
@@ -1151,11 +1091,10 @@ object Pipelines {
       // changes by construction (each differs from its predecessor)
       // and never re-emit, so the first surviving batch row still
       // chains off the key's latest stored state.
-      val guarded =
-        if (DedupStore.hasData(spark, storePath) && pbs.nonEmpty) {
-          val hist = DedupStore.prunedRead(spark, storePath, pbs)
-            .join(broadcast(batch.select("k").distinct()),
-              Seq("k"), "left_semi")
+      val guarded = DedupStore.slice(storePath, pbs,
+          batch.select("k").distinct(), Seq("k"))
+        .fold(batch) { slice =>
+          val hist = slice
             .select(col("k") +: col("snap_ts") +: attrCols.map(col) :+
               col("pb"): _*)
             .withColumn("seed", lit(true))
@@ -1169,7 +1108,7 @@ object Pipelines {
             .where(col("seed") || col("__cur_ts").isNull ||
               col("snap_ts") >= col("__cur_ts"))
             .drop("__cur_ts")
-        } else batch
+        }
       // strict (k, snap_ts) uniqueness resolves FIRST: one row per
       // (k, snap_ts) survives — the seed (stored state) if present,
       // else the first batch row in attribute order (first-writer-wins
@@ -1275,18 +1214,16 @@ object Pipelines {
     * of per-batch enrichments equals the batch point-in-time join over
     * the complete histories (spec- and oracle-asserted, q329).
     *
-    * Scale: the enrich-side store read follows the [[DedupStore]]
-    * pruning contract — a fact batch derives its keys' `pb` bucket
-    * set driver-side, reads ONLY those partitions (a directory-level
-    * partition filter, plan-asserted), and semi-joins the broadcast
-    * fact keys — so per-batch enrich cost tracks the batch's share of
-    * the dimension, never total dim HISTORY. A key's full change
-    * history lives inside its one `pb` bucket, so the pruned slice
-    * carries every interval the as-of lookup can need (the pruning is
-    * hash-preserving by construction). The as-of join itself is the
-    * audited [[graft.operators.AsOfJoin.leftAsOf]] keyed shuffle, and
-    * the point-in-time lookup needs only each key's `valid_from`
-    * ladder — no `valid_to` lead window on the hot path. */
+    * Scale: the enrich side reads the fact batch's [[DedupStore]]
+    * slice of the change store, so per-batch enrich cost tracks the
+    * batch's share of the dimension, never total dim HISTORY. A key's
+    * full change history lives inside its one `pb` bucket, so the slice
+    * carries every interval the as-of lookup can need. The as-of join
+    * itself is the audited [[graft.operators.AsOfJoin.leftAsOf]] keyed
+    * shuffle, and the point-in-time lookup needs only each key's
+    * `valid_from` ladder — no `valid_to` lead window on the hot path.
+    * `buckets` shapes the store, so only [[ingestDim]] uses it; the
+    * enrich side reads the store's pinned count. */
   final case class PitEnricher(storePath: String, attrCols: Seq[String],
                                buckets: Int = 64) {
     /** Feed one dimension micro-batch (cols: k, snap_ts, attrs). */
@@ -1300,33 +1237,30 @@ object Pipelines {
       * run at that point of the stream could have seen (the audited
       *-restatement answer to "what did this report say then"), via
       * the change store's knowledge-time axis (as
-      * [[scd2StoreIntervalsAsOf]]). */
+      * [[scd2StoreIntervalsAsOf]]). Before the store holds any change
+      * row every fact enriches to null attributes, as a point-in-time
+      * join against an empty dimension does. */
     def enrichAsOfBatch(facts: DataFrame, factKey: String, factTs: String,
                         asOfBatch: Long): DataFrame = {
+      val dim = dimSliceFor(facts, factKey, asOfBatch).getOrElse(
+        facts.select(col(factKey).as("k") +: col(factTs).as("valid_from") +:
+          attrCols.map(lit(null).as(_)): _*).limit(0))
       graft.operators.Scd.pointInTimeJoin(
-        facts, dimSliceFor(facts, factKey, asOfBatch),
-        factKey, "k", factTs, attrCols)
+        facts, dim, factKey, "k", factTs, attrCols)
     }
-    /** The fact batch's slice of the change store: bucket-pruned to
-      * the batch's `pb` set, semi-joined on the broadcast fact keys,
-      * knowledge-filtered to `asOfBatch`. `valid_from` rows only —
+    /** The fact batch's slice of the change store, knowledge-filtered
+      * to `asOfBatch`. `valid_from` rows only —
       * [[graft.operators.Scd.pointInTimeJoin]] drops `valid_to`, so
       * deriving it here would be a pure window-exchange tax. */
     private def dimSliceFor(facts: DataFrame, factKey: String,
-                            asOfBatch: Long): DataFrame = {
-      val spark = facts.sparkSession
-      // no eager checkpoint: micro-batch latency is job-count-bound,
-      // and re-deriving the batch-sized key distinct inside the main
-      // action is cheaper than a whole materialization job
-      val keys = facts
-        .select(col(factKey).as("k")).where(col("k").isNotNull).distinct()
-        .withColumn("pb", DedupStore.bucketOf(col("k"), buckets))
-      val pbs = DedupStore.batchBuckets(keys)
-      DedupStore.prunedRead(spark, storePath, pbs)
-        .where(col("batch_id") <= asOfBatch)
-        .join(broadcast(keys.select("k")), Seq("k"), "left_semi")
-        .select(col("k") +: col("snap_ts").as("valid_from") +:
-          attrCols.map(col): _*)
+                            asOfBatch: Long): Option[DataFrame] = {
+      val (keys, pbs) = DedupStore.census(storePath, facts
+        .select(col(factKey).as("k")).where(col("k").isNotNull).distinct(),
+        col("k"))
+      DedupStore.slice(storePath, pbs, keys.select("k"), Seq("k"))
+        .map(_.where(col("batch_id") <= asOfBatch)
+          .select(col("k") +: col("snap_ts").as("valid_from") +:
+            attrCols.map(col): _*))
     }
   }
 
@@ -1405,7 +1339,7 @@ object Pipelines {
     * algebra avoids. Superseded versions retire automatically:
     * `autoCompactFilesPerDir` (0 disables) triggers [[hierCompact]]
     * off one driver-side listing per batch
-    * ([[hierCompactIfNeeded]]) once some `pb` dir accumulates that
+    * ([[compactStoreIfNeeded]]) once some `pb` dir accumulates that
     * many files, bounding store growth under unbounded churn. */
   def hierarchyIngestStream(storePath: String, buckets: Int = 64,
                             maxDepth: Int = 30,
@@ -1536,27 +1470,15 @@ object Pipelines {
         .unionByName(repar.select(col("parent").as("start"),
           col("n_subtree").as("dn"), col("subtree_sum").as("dsum")))
         .where(col("start").isNotNull)
-      // every frontier (the seeds included) is checkpointed WITH its
-      // bucket column, and a set accumulator evaluated inside that
-      // same checkpoint job harvests the round's bucket set — the
-      // bucket probe AND the emptiness check cost ZERO extra jobs
-      // (previously a distinct+collect action per round, the dominant
-      // share of the micro-batch job ladder). Downstream reads use
-      // the materialized rows, so the census is exact and evaluated
-      // once.
-      def checkpointWithPbs(df: DataFrame): (DataFrame, Seq[Int]) = {
-        val acc = new PbSetAccumulator
-        spark.sparkContext.register(acc, "hier-frontier-pbs")
-        val harvest = udf { (pb: java.lang.Integer) =>
-          if (pb != null) acc.add(pb.toInt)
-          pb
-        }
-        val out = df
-          .withColumn("pb",
-            harvest(DedupStore.bucketOf(col("start"), buckets)))
-          .localCheckpoint(true)
-        (out, acc.value.toSeq.sorted)
-      }
+      // every frontier (the seeds included) goes through the bucket
+      // census ([[DedupStore.harvest]]): its checkpoint job also yields
+      // the round's bucket set, so the bucket probe AND the emptiness
+      // check cost ZERO extra jobs (previously a distinct+collect
+      // action per round, the dominant share of the micro-batch job
+      // ladder)
+      def checkpointWithPbs(df: DataFrame): (DataFrame, Seq[Int]) =
+        DedupStore.harvest(
+          df.withColumn("pb", DedupStore.bucketOf(col("start"), buckets)))
       var (frontier, fpbs) = checkpointWithPbs(
         insertSeeds.unionByName(valueSeeds).unionByName(reparSeeds))
       // visited stays a lazy union of CHECKPOINTED frontiers — the
@@ -1665,7 +1587,8 @@ object Pipelines {
       sink(accNew.select(col("id"), col("n_subtree"), col("subtree_sum")))
       accNew.unpersist()
       if (autoCompactFilesPerDir > 0)
-        hierCompactIfNeeded(spark, storePath, autoCompactFilesPerDir)
+        compactStoreIfNeeded(spark, s"$logP/data", autoCompactFilesPerDir)(
+          hierCompact(spark, storePath))
       ()
     }
   }
@@ -1717,36 +1640,6 @@ object Pipelines {
     }
   }
 
-  /** Outcome of [[hierCompactIfNeeded]]. `live`/`retired` are −1 when
-    * the threshold was not crossed (the no-op path runs no Spark job
-    * and touches no file). */
-  final case class HierCompactDecision(compacted: Boolean,
-                                       maxFilesPerDir: Long,
-                                       live: Long, retired: Long)
-
-  /** File-count-triggered retirement policy over [[hierCompact]] (the
-    * [[compactStoreIfNeeded]] / [[clusterCompactIfNeeded]] precedent):
-    * each batch's append leaves one data file per touched (fam, pb)
-    * leaf dir of `log/data`, so the max per-dir file count
-    * ([[leafFileCounts]]) is a driver-side census of superseded-version
-    * growth since the last retirement — no Spark job to decide, and
-    * none runs while the store is healthy. Wired into every
-    * [[hierarchyIngestStream]] batch (`autoCompactFilesPerDir`); also
-    * callable from a maintenance cron. Same single-writer discipline
-    * as [[hierCompact]]. */
-  def hierCompactIfNeeded(spark: org.apache.spark.sql.SparkSession,
-                          storePath: String,
-                          maxFilesPerDir: Int = 16): HierCompactDecision = {
-    val maxPer =
-      leafFileCounts(spark, s"$storePath/log/data").foldLeft(0L)(math.max)
-    if (maxPer <= maxFilesPerDir)
-      HierCompactDecision(compacted = false, maxPer, -1L, -1L)
-    else {
-      val (live, retired) = hierCompact(spark, storePath)
-      HierCompactDecision(compacted = true, maxPer, live, retired)
-    }
-  }
-
   // ---- streaming incremental near-dup clustering ----
 
   /** Streaming cluster maintenance — the incremental form of
@@ -1770,9 +1663,8 @@ object Pipelines {
     *    and the structure is a forest whose roots are live cluster
     *    minima.
     *
-    * Per-batch cost is batch-bounded: the member read partition-prunes
-    * to the batch's id buckets and semi-joins the broadcast batch; the
-    * CC runs over SUPERNODES (known vertices collapse to their
+    * Per-batch cost is batch-bounded: the member read is the batch's
+    * [[DedupStore]] slice ([[memberCids]]); the CC runs over SUPERNODES (known vertices collapse to their
     * resolved cid), so its input is edges-in-batch-sized — and below
     * `driverCcMaxEdges` it is solved by a driver union-find off one
     * bounded collect (micro-batch latency is job-count-bound, and the
@@ -1781,7 +1673,7 @@ object Pipelines {
     * table is merge-event-bounded (≤ clusters ever merged, NOT corpus)
     * and resolution pointer-jumps over it, never over members — and
     * `autoCompactMergeFiles` retires the forest automatically once it
-    * crosses the threshold ([[clusterCompactIfNeeded]]: one driver-side
+    * crosses the threshold ([[compactStoreIfNeeded]]: one driver-side
     * dir listing per batch, a [[clusterCompact]] rewrite only when
     * triggered), so resolution cost is bounded by merges since the
     * LAST retirement over an unbounded ingest lifetime (0 disables —
@@ -1806,46 +1698,18 @@ object Pipelines {
       // DERIVED SLICE of a deep pipeline (q303 feeds a shingle-join
       // pair graph); without truncation every one of the ~10 actions
       // below re-plans that whole logical tree — measured 8-10 s of
-      // pure Catalyst time per micro-batch on an 80-edge batch
-      // the batch's bucket set is harvested by a set accumulator INSIDE
-      // the pairs checkpoint job (the [[PbSetAccumulator]] zero-extra-
-      // job pattern): the vertex set is exactly the pair endpoints, so
-      // pb(id_a) ∪ pb(id_b) over the materialized pairs IS
-      // batchBuckets(verts) — the former dedicated distinct+collect
-      // job per micro-batch is gone, and `verts` no longer needs its
-      // own checkpoint (it is re-derived from the checkpointed pairs
-      // scan inside its consumers' jobs). Set semantics make task
-      // retries idempotent.
-      val pbAcc = new PbSetAccumulator
-      spark.sparkContext.register(pbAcc, "clst-batch-pbs")
-      val pbHarvest = udf { (a: java.lang.Integer, b: java.lang.Integer) =>
-        if (a != null) pbAcc.add(a.toInt)
-        if (b != null) pbAcc.add(b.toInt)
-        true
-      }
+      // pure Catalyst time per micro-batch on an 80-edge batch. Lazy:
+      // the vertex census job below materializes it.
       val pairs = batch0.select(col("id_a"), col("id_b"))
         .where(col("id_a").isNotNull && col("id_b").isNotNull &&
           col("id_a") =!= col("id_b"))
         .distinct()
-        .withColumn("__pbh", pbHarvest(
-          DedupStore.bucketOf(col("id_a"), buckets),
-          DedupStore.bucketOf(col("id_b"), buckets)))
-        .localCheckpoint(true)
-      val pbs = pbAcc.value.toSeq.sorted
-      val verts = pairs.select(col("id_a").as("id"))
-        .unionByName(pairs.select(col("id_b").as("id"))).distinct()
-        .withColumn("pb", DedupStore.bucketOf(col("id"), buckets))
-      val known =
-        if (DedupStore.hasData(spark, members) && pbs.nonEmpty)
-          resolveCids(spark,
-            DedupStore.prunedRead(spark, members, pbs)
-              .join(broadcast(verts.select("id")), Seq("id"), "left_semi")
-              .select(col("id"), col("cid")),
-            storePath)
-            .groupBy(col("id")).agg(min(col("cid")).as("cid"))
-            .localCheckpoint(true)
-        else verts.select(col("id"), col("id").as("cid")).limit(0)
-          .localCheckpoint(true)
+        .localCheckpoint(false)
+      val (verts, stored) = memberCids(spark, storePath,
+        pairs.select(col("id_a").as("id"))
+          .unionByName(pairs.select(col("id_b").as("id"))).distinct())
+      val known = stored.map(_.localCheckpoint(true))
+        .getOrElse(verts.select(col("id"), col("id").as("cid")).limit(0))
       // supernode edges: known endpoints collapse to their resolved
       // root; self-loops (both ends already co-clustered — e.g. a
       // replayed batch) drop out entirely
@@ -1954,7 +1818,8 @@ object Pipelines {
       // rewrite keeps resolveCids' per-batch collect bounded by merges
       // SINCE LAST RETIREMENT over an unbounded ingest lifetime
       if (autoCompactMergeFiles > 0)
-        clusterCompactIfNeeded(spark, storePath, autoCompactMergeFiles)
+        compactStoreIfNeeded(spark, s"$storePath/merges",
+          autoCompactMergeFiles)(clusterCompact(spark, storePath))
       ()
     }
   }
@@ -2004,6 +1869,21 @@ object Pipelines {
     }
   }
 
+  /** The one member read of the cluster store: `ids` (one `id` column)
+    * through the [[DedupStore]] census against `members/`, plus — when
+    * the store holds members — each stored id's current cid: its member
+    * slice resolved through the merge forest ([[resolveCids]]), min cid
+    * per id. Shared by [[clusterIngestStream]] and [[splitAgainstStore]]. */
+  private def memberCids(spark: org.apache.spark.sql.SparkSession,
+                         storePath: String,
+                         ids: DataFrame): (DataFrame, Option[DataFrame]) = {
+    val (censused, pbs) = DedupStore.census(storePath, ids, col("id"), "/members")
+    (censused, DedupStore.slice(s"$storePath/members", pbs,
+        censused.select("id"), Seq("id")).map(slice =>
+      resolveCids(spark, slice.select("id", "cid"), storePath)
+        .groupBy(col("id")).agg(min(col("cid")).as("cid"))))
+  }
+
   /** The store's full cluster map `(id, cluster_rep)` — bit-equal to
     * [[graft.operators.Dedup.dupClusters]] over every pair ingested so
     * far, restricted to paired vertices (join your corpus with
@@ -2021,9 +1901,8 @@ object Pipelines {
     * live ingest, a document arriving AFTER its near-dup cluster was
     * assigned must land in the SAME split or evaluation leakage
     * returns. Resolves each doc's CURRENT cluster rep from a
-    * [[clusterIngestStream]] store (bucket-pruned member read,
-    * broadcast semi-join on the batch ids, merge-forest resolution —
-    * the [[clusterStoreReps]] path restricted to the batch) and splits
+    * [[clusterIngestStream]] store ([[memberCids]] — the
+    * [[clusterStoreReps]] path restricted to the batch) and splits
     * on the rep; unclustered docs fall back to their own id, exactly
     * the batch operator's null-group rule.
     *
@@ -2037,33 +1916,13 @@ object Pipelines {
     * is. Returns `docs` + (cluster_rep, split). */
   def splitAgainstStore(spark: org.apache.spark.sql.SparkSession,
                         storePath: String, docs: DataFrame,
-                        idCol: String, testPct: Int,
-                        buckets: Int = 256): DataFrame = {
-    val members = s"$storePath/members"
-    // bucket set harvested inside the ids checkpoint job (the
-    // [[PbSetAccumulator]] zero-extra-job pattern) — no dedicated
-    // distinct+collect action
-    val pbAcc = new PbSetAccumulator
-    spark.sparkContext.register(pbAcc, "split-batch-pbs")
-    val pbHarvest = udf { (pb: java.lang.Integer) =>
-      if (pb != null) pbAcc.add(pb.toInt)
-      pb
-    }
-    val ids = docs.select(col(idCol).as("id")).distinct()
-      .withColumn("pb", pbHarvest(DedupStore.bucketOf(col("id"), buckets)))
-      .localCheckpoint(true)
-    val pbs = pbAcc.value.toSeq.sorted
-    val reps =
-      if (DedupStore.hasData(spark, members) && pbs.nonEmpty)
-        resolveCids(spark,
-          DedupStore.prunedRead(spark, members, pbs)
-            .join(broadcast(ids.select("id")), Seq("id"), "left_semi")
-            .select(col("id"), col("cid")),
-          storePath)
-          .groupBy(col("id")).agg(min(col("cid")).as("cluster_rep"))
-      else ids.select(col("id"), col("id").as("cluster_rep")).limit(0)
+                        idCol: String, testPct: Int): DataFrame = {
+    val (ids, stored) = memberCids(spark, storePath,
+      docs.select(col(idCol).as("id")).distinct())
+    val reps = stored.getOrElse(ids.select(col("id"), col("id").as("cid")).limit(0))
+      .select(col("id").as(idCol), col("cid").as("cluster_rep"))
     graft.operators.Sampling.groupTrainTestSplit(
-        docs.join(reps.withColumnRenamed("id", idCol), Seq(idCol), "left"),
+        docs.join(reps, Seq(idCol), "left"),
         "cluster_rep", idCol, testPct)
       .withColumn("cluster_rep",
         coalesce(col("cluster_rep"), col(idCol)))
@@ -2107,35 +1966,6 @@ object Pipelines {
     merges.getFileSystem(spark.sessionState.newHadoopConf())
       .delete(merges, true)
     (after, nMerges)
-  }
-
-  /** Outcome of [[clusterCompactIfNeeded]]. `members`/`mergesRetired`
-    * are −1 when the threshold was not crossed (the no-op path runs no
-    * Spark job at all). */
-  final case class ClusterCompactDecision(compacted: Boolean,
-                                          mergeFiles: Long, members: Long,
-                                          mergesRetired: Long)
-
-  /** Merge-forest-growth-triggered policy over [[clusterCompact]] (the
-    * [[compactStoreIfNeeded]] precedent): every batch that merges live
-    * clusters appends exactly ONE file to `merges/`, so the dir's data
-    * file count ([[leafFileCounts]]) is a driver-side census of forest
-    * growth since the last retirement — no Spark job to decide, and
-    * none runs while the store is healthy. Crossing `maxMergeFiles`
-    * triggers the full path-compression rewrite: members resolve to
-    * live roots and the forest retires, so [[resolveCids]]' per-batch
-    * collect stays merges-since-last-compaction-bounded over an
-    * UNBOUNDED ingest lifetime instead of growing with total merge
-    * history. Same single-writer discipline as [[clusterCompact]]. */
-  def clusterCompactIfNeeded(spark: org.apache.spark.sql.SparkSession,
-                             storePath: String,
-                             maxMergeFiles: Int = 64): ClusterCompactDecision = {
-    val n = leafFileCounts(spark, s"$storePath/merges").sum
-    if (n <= maxMergeFiles) ClusterCompactDecision(compacted = false, n, -1L, -1L)
-    else {
-      val (members, retired) = clusterCompact(spark, storePath)
-      ClusterCompactDecision(compacted = true, n, members, retired)
-    }
   }
 
   /** Stream-static join: enrich a stream against a (broadcastable) batch

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
 object Soak {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val copies = sys.env.getOrElse("SPARK_GRAFT_SOAK_COPIES", "10").toInt
+    val copies = 10
     val spark = GraftSession.local(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "graft-soak")
     spark.sparkContext.setLogLevel("WARN")
@@ -48,6 +48,21 @@ object Soak {
       s
     }
 
+    // the one gate every leg ends in: time the small and the grown run
+    // (min of `reps` each), print the growth factor, and fail the soak
+    // (exit 1) when it exceeds `bound`
+    def gate(name: String, growth: String, bound: Double, reps: Int = 1)(
+        small: => Any, grown: => Any): Unit = {
+      val t1 = (1 to reps).map(_ => time(s"$name small")(small)).min
+      val tN = (1 to reps).map(_ => time(s"$name $growth")(grown)).min
+      val r = tN / t1
+      println(f"[soak] $name%-28s ${r}%5.1fx for $growth (${t1}%.2f s -> ${tN}%.2f s)")
+      if (r > bound) {
+        System.err.println(f"[soak] FAIL $name: ${r}%.1fx for $growth exceeds ${bound}%.1fx")
+        spark.stop(); sys.exit(1)
+      }
+    }
+
     // each op is forced with a cheap count; candidate-generation cost
     // dominates every one of these
     def ops(docs: DataFrame): Seq[(String, () => Long)] = {
@@ -72,24 +87,11 @@ object Soak {
         }))
     }
 
-    val results = ops(docs1).zip(ops(docsN)).map {
-      case ((name, f1), (_, fN)) =>
-        val t1 = time(s"$name 1x")(f1())
-        val tN = time(s"$name ${copies}x")(fN())
-        (name, t1, tN, tN / t1)
-    }
-    println("[soak] --- scaling factors (rows x" + copies + ") ---")
-    var bad = List.empty[String]
-    results.foreach { case (name, t1, tN, r) =>
-      println(f"[soak] $name%-28s ${r}%5.1fx (${t1}%.2f s -> ${tN}%.2f s)")
-      // 3x headroom over row growth before we call it super-linear:
-      // the duplicated corpus makes every chunk/shingle a heavy hitter,
-      // the worst case for candidate generation
-      if (r > copies * 3.0) bad ::= name
-    }
-    if (bad.nonEmpty) {
-      System.err.println(s"[soak] FAIL super-linear: ${bad.mkString(", ")}")
-      spark.stop(); sys.exit(1)
+    // 3x headroom over row growth before we call it super-linear: the
+    // duplicated corpus makes every chunk/shingle a heavy hitter, the
+    // worst case for candidate generation
+    ops(docs1).zip(ops(docsN)).foreach { case ((name, f1), (_, fN)) =>
+      gate(name, s"${copies}x rows", copies * 3.0)(f1(), fN())
     }
 
     // --- leg: persistent dedup store — per-batch cost vs store size ---
@@ -114,17 +116,11 @@ object Soak {
         concat(lit("probe batch doc "), col("id")).as("text")).cache()
       batch.count()
       def runBatch(store: String): Long =
-        Pipelines.dedupFresh(batch, "text", store, buckets).count()
+        Pipelines.dedupFresh(batch, "text", store).count()
       val small = mkStore(20_000); val big = mkStore(200_000)
       runBatch(small) // warm (codegen, parquet footers)
-      val tS = time("store_batch vs 20k store")(runBatch(small))
-      val tB = time("store_batch vs 200k store")(runBatch(big))
-      val r = tB / tS
-      println(f"[soak] store_dedup_batch        ${r}%5.1fx per-batch cost for 10x store growth")
-      if (r > 3.0) {
-        System.err.println("[soak] FAIL store-size-linear per-batch dedup")
-        spark.stop(); sys.exit(1)
-      }
+      gate("store_dedup_batch", "10x store growth", 3.0)(
+        runBatch(small), runBatch(big))
     }
 
     // --- leg: CDC chunk store — per-batch cost vs store size ---
@@ -151,20 +147,15 @@ object Soak {
           lit(" with novel wording throughout")).as("text")).cache()
       batch.count()
       def runBatch(store: String): Long = {
-        val chunks = Pipelines.cdcHashed(batch, "doc_id", "text", 8, 64, buckets)
-        val known = Pipelines.cdcKnown(spark, chunks, store)
+        val (chunks, pbs) = Pipelines.DedupStore.census(store,
+          Pipelines.cdcHashed(batch, "doc_id", "text", 8, 64), col("ch"))
+        val known = Pipelines.cdcKnown(chunks, pbs, store)
         Pipelines.cdcFresh(batch, chunks, known, "doc_id", 0.5).count()
       }
       val small = mkStore(20_000); val big = mkStore(200_000)
       runBatch(small) // warm
-      val tS = time("cdc_batch vs 20k store")(runBatch(small))
-      val tB = time("cdc_batch vs 200k store")(runBatch(big))
-      val r = tB / tS
-      println(f"[soak] cdc_store_batch          ${r}%5.1fx per-batch cost for 10x store growth")
-      if (r > 3.0) {
-        System.err.println("[soak] FAIL store-size-linear per-batch CDC dedup")
-        spark.stop(); sys.exit(1)
-      }
+      gate("cdc_store_batch", "10x store growth", 3.0)(
+        runBatch(small), runBatch(big))
     }
 
     // --- leg: SCD2 change store — per-batch cost vs dimension size ---
@@ -195,14 +186,8 @@ object Soak {
           buckets)()(batch, 1L)
       val small = mkStore(20_000); val big = mkStore(200_000)
       runBatch(small); runBatch(big) // apply the update once each (warm)
-      val tS = time("scd2_batch vs 20k dims")(runBatch(small))
-      val tB = time("scd2_batch vs 200k dims")(runBatch(big))
-      val r = tB / tS
-      println(f"[soak] scd2_store_batch         ${r}%5.1fx per-batch cost for 10x dimension growth")
-      if (r > 3.0) {
-        System.err.println("[soak] FAIL dimension-size-linear SCD2 batch")
-        spark.stop(); sys.exit(1)
-      }
+      gate("scd2_store_batch", "10x dimension growth", 3.0)(
+        runBatch(small), runBatch(big))
     }
 
     // --- leg: PIT enrichment — per-batch enrich cost vs dim HISTORY ---
@@ -237,16 +222,8 @@ object Soak {
           .enrich(facts, "ck", "ts").count()
       val small = mkStore(1); val big = mkStore(10)
       runEnrich(small); runEnrich(big) // warm
-      val tS = math.min(time("pit_enrich vs 1x history")(runEnrich(small)),
-        time("pit_enrich vs 1x history")(runEnrich(small)))
-      val tB = math.min(time("pit_enrich vs 10x history")(runEnrich(big)),
-        time("pit_enrich vs 10x history")(runEnrich(big)))
-      val r = tB / tS
-      println(f"[soak] pit_enrich_batch         ${r}%5.1fx per-batch enrich cost for 10x dim-history growth")
-      if (r > 1.5) {
-        System.err.println("[soak] FAIL history-linear PIT enrichment")
-        spark.stop(); sys.exit(1)
-      }
+      gate("pit_enrich_batch", "10x dim-history growth", 1.5, reps = 2)(
+        runEnrich(small), runEnrich(big))
     }
 
     // --- leg: hierarchy store — per-batch cost vs tree size ---
@@ -280,14 +257,8 @@ object Soak {
       runBatch(small, 1L); runBatch(big, 1L) // apply once (warm)
       // the timed run is an exact REPLAY (absorbed: zero deltas) —
       // isolating the read/walk path that must not scale with corpus
-      val tS = time("hier_batch vs 20k nodes")(runBatch(small, 1L))
-      val tB = time("hier_batch vs 200k nodes")(runBatch(big, 1L))
-      val r = tB / tS
-      println(f"[soak] hier_store_batch         ${r}%5.1fx per-batch cost for 10x tree growth")
-      if (r > 3.0) {
-        System.err.println("[soak] FAIL corpus-size-linear hierarchy batch")
-        spark.stop(); sys.exit(1)
-      }
+      gate("hier_store_batch", "10x tree growth", 3.0)(
+        runBatch(small, 1L), runBatch(big, 1L))
     }
 
     // --- leg: streaming weighted reservoir — per-batch cost vs history ---
@@ -318,14 +289,8 @@ object Soak {
           dir, k) { _ => () }(batch, 1L)
       val young = mkReservoir(10_000); val old = mkReservoir(1_000_000)
       runBatch(mkReservoir(10_000)) // warm
-      val tY = time("reservoir_batch vs 10k history")(runBatch(young))
-      val tO = time("reservoir_batch vs 1M history")(runBatch(old))
-      val r = tO / tY
-      println(f"[soak] reservoir_batch           ${r}%5.1fx per-batch cost for 100x history")
-      if (r > 3.0) {
-        System.err.println("[soak] FAIL history-dependent reservoir batch")
-        spark.stop(); sys.exit(1)
-      }
+      gate("reservoir_batch", "100x history", 3.0)(
+        runBatch(young), runBatch(old))
     }
 
     // --- leg: mega-class exact-dup group emission stays linear ---
@@ -338,17 +303,12 @@ object Soak {
             lit("1010101010101010101010101010101010101010101010101010101010101010"))
           .otherwise(concat(lit("0"),
             lpad(conv(col("id").cast("string"), 10, 2), 63, "0"))).as("simhash64"))
-      def run(classSize: Int): Double = time(s"dup_groups class=$classSize") {
+      def run(classSize: Int): Long =
         graft.operators.Dedup.hammingDupGroups(sigs(classSize)).count()
-      }
       run(10_000) // warm
-      val t1 = run(10_000); val t10 = run(100_000)
-      val r = t10 / t1
-      println(f"[soak] mega_class_groups        ${r}%5.1fx for 10x class size")
-      if (r > 30.0) {   // 10x rows × 3x headroom, same gate as above
-        System.err.println("[soak] FAIL super-linear mega-class grouping")
-        spark.stop(); sys.exit(1)
-      }
+      // 10x rows × 3x headroom, same gate as the operator legs
+      gate("mega_class_groups", "10x class size", 30.0)(
+        run(10_000), run(100_000))
     }
 
     // --- leg: streaming cluster store — per-batch cost vs history ---
@@ -378,14 +338,8 @@ object Soak {
         Pipelines.clusterIngestStream(dir, driverCcMaxEdges = 0)()(batch, 1L)
       val small = mkStore(10_000); val big = mkStore(100_000)
       runBatch(mkStore(10_000)) // warm
-      val tS = time("cluster_batch vs 20k members")(runBatch(small))
-      val tB = time("cluster_batch vs 200k members")(runBatch(big))
-      val r = tB / tS
-      println(f"[soak] cluster_store_batch       ${r}%5.1fx per-batch cost for 10x member growth")
-      if (r > 3.0) {
-        System.err.println("[soak] FAIL member-history-linear cluster batch")
-        spark.stop(); sys.exit(1)
-      }
+      gate("cluster_store_batch", "10x member growth", 3.0)(
+        runBatch(small), runBatch(big))
     }
 
     // --- leg: graph iteration family at 10× edges ---
@@ -409,15 +363,7 @@ object Soak {
           ((col("id") + 1L) % n).as("id_b"))
           .unionAll(spark.range(n).select(col("id").as("id_a"),
             ((col("id") + 7L) % n).as("id_b")))
-      def gate(name: String, t1: Double, tN: Double): Unit = {
-        val r = tN / t1
-        println(f"[soak] $name%-28s ${r}%5.1fx for 10x edges")
-        if (r > 30.0) {
-          System.err.println(s"[soak] FAIL super-linear graph op: $name")
-          spark.stop(); sys.exit(1)
-        }
-      }
-      def ccRun(n: Long): Double = time(s"cc_chain n=$n") {
+      def ccRun(n: Long): Unit = {
         val docs = spark.range(n + 1).select(col("id").as("doc_id"))
         // driverMaxEdges = 0: the soak leg gates the DISTRIBUTED
         // rewiring round count — the driver union-find shortcut would
@@ -428,38 +374,38 @@ object Soak {
         require(wrong == 0L, s"cc_chain merged wrong: $wrong")
       }
       ccRun(2000) // warm
-      gate("cc_chain", ccRun(2000), ccRun(20000))
-      def bfsRun(n: Long): Double = time(s"bfs_ring n=$n") {
+      gate("cc_chain", "10x edges", 30.0)(ccRun(2000), ccRun(20000))
+      def bfsRun(n: Long): Long = {
         GraphOps.bfsHops(ring(n),
           spark.range(1).select(col("id")), maxHops = 8).count()
       }
       bfsRun(30_000) // warm
-      gate("bfs_ring", bfsRun(30_000), bfsRun(300_000))
-      def hitsRun(n: Long): Double = time(s"hits_ring n=$n") {
+      gate("bfs_ring", "10x edges", 30.0)(bfsRun(30_000), bfsRun(300_000))
+      def hitsRun(n: Long): Long = {
         GraphOps.hits(ring(n).select(col("id_a").as("src"),
           col("id_b").as("dst")), iters = 3).count()
       }
       hitsRun(30_000) // warm
-      gate("hits_ring", hitsRun(30_000), hitsRun(300_000))
-      def kcoreRun(n: Long): Double = time(s"kcore_ring n=$n") {
+      gate("hits_ring", "10x edges", 30.0)(hitsRun(30_000), hitsRun(300_000))
+      def kcoreRun(n: Long): Long = {
         // ring+chords is 4-regular → the 3-core is everything and the
         // 5-core empty; peel at k=5 so rounds exercise full peeling
         GraphOps.kCore(ring(n), k = 5).count()
       }
       kcoreRun(30_000) // warm
-      gate("kcore_ring", kcoreRun(30_000), kcoreRun(300_000))
+      gate("kcore_ring", "10x edges", 30.0)(kcoreRun(30_000), kcoreRun(300_000))
       // hub-heavy link prediction: an n-leaf star riding a small ring —
       // without the maxDegree cap the hub alone generates O(n²) wedges
       // (the boilerplate-hub cliff); with the cap the hub drops from
       // the center role and wall must track the degree census, not n²
-      def cncRun(n: Long): Double = time(s"cnc_hub n=$n") {
+      def cncRun(n: Long): Long = {
         val star = spark.range(n).select(lit(0L).as("id_a"),
           (col("id") + 1L).as("id_b"))
         GraphOps.commonNeighborCandidates(star.unionAll(ring(1000)),
           minCommon = 2L, maxDegree = Some(1000L)).count()
       }
       cncRun(30_000) // warm
-      gate("cnc_hub", cncRun(30_000), cncRun(300_000))
+      gate("cnc_hub", "10x edges", 30.0)(cncRun(30_000), cncRun(300_000))
     }
 
     println("[soak] OK: no super-linear operator")

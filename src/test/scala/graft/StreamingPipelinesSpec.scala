@@ -391,7 +391,7 @@ class StreamingPipelinesSpec extends SparkSpec {
     // a 2-doc batch touches ≤2 buckets → the store scan must prune to them
     val batch = Seq((900L, "tiny batch doc alpha"), (901L, "tiny batch doc beta"))
       .toDF("doc_id", "text")
-    val fresh = Pipelines.dedupFresh(batch, "text", store, buckets)
+    val fresh = Pipelines.dedupFresh(batch, "text", store)
     val plan = fresh.queryExecution.sparkPlan
     val storeScans = plan.collect {
       case f: FileSourceScanExec
@@ -438,12 +438,13 @@ class StreamingPipelinesSpec extends SparkSpec {
       buckets = buckets) { _ => () }(lshSeed, 0L)
     val probe = Seq((900L, "a wholly novel probe sentence about nothing else"))
       .toDF("doc_id", "text")
-    val probeBanded = Dedup.lshBuckets(
-        Dedup.minhashSignatures(probe, "doc_id", "text", 3, 9), 9, 3)
-      .withColumn("pb", Pipelines.DedupStore.bucketOf(
-        concat_ws(":", col("band"), col("bucket")), buckets))
-    checkPlan(Pipelines.nearDupFresh(probe, probeBanded, "doc_id",
-      lshStore, 9, 0.8), "prunelsh", maxParts = 3)
+    val (probeBanded, probePbs) = Pipelines.DedupStore.census(lshStore,
+      Dedup.lshBuckets(
+        Dedup.minhashSignatures(probe, "doc_id", "text", 3, 9), 9, 3),
+      concat_ws(":", col("band"), col("bucket")))
+    checkPlan(Pipelines.bandedFresh(probe, probeBanded, probePbs, "doc_id",
+      lshStore, Seq("band", "bucket"), "sig", Pipelines.minhashClose(9, 0.8)),
+      "prunelsh", maxParts = 3)
     // image dHash store: 1-image batch at maxHamming=0 → exactly 1 bucket
     val imgStore = java.nio.file.Files.createTempDirectory("pruneimg").toString
     val imgSeed = (1L to 120L).map(i =>
@@ -452,10 +453,12 @@ class StreamingPipelinesSpec extends SparkSpec {
       maxHamming = 0, buckets = buckets) { _ => () }(imgSeed, 0L)
     val imgProbe = Seq((900L, Multimodal.encodePng(12, 10, seed = 900L)))
       .toDF("id", "blob")
-    val imgBanded = Pipelines.imageBanded(imgProbe, "blob", "id",
-      maxHamming = 0, buckets = buckets)
-    checkPlan(Pipelines.imageDedupFresh(imgProbe, imgBanded, "id",
-      imgStore, 0), "pruneimg", maxParts = 1)
+    val (imgBanded, imgPbs) = Pipelines.DedupStore.census(imgStore,
+      Pipelines.imageBanded(imgProbe, "blob", "id", maxHamming = 0),
+      concat_ws(":", col("band"), col("key")))
+    checkPlan(Pipelines.bandedFresh(imgProbe, imgBanded, imgPbs, "id",
+      imgStore, Seq("band", "key"), "dhash", Pipelines.hammingClose(0)),
+      "pruneimg", maxParts = 1)
     // CDC chunk store: a short 1-doc probe touches few chunk buckets
     val cdcStore = java.nio.file.Files.createTempDirectory("prunecdc").toString
     val cdcSeed = (1L to 200L).map(i =>
@@ -465,10 +468,11 @@ class StreamingPipelinesSpec extends SparkSpec {
       buckets = buckets) { _ => () }(cdcSeed, 0L)
     val cdcProbe = Seq((900L, "short probe text with a few words only"))
       .toDF("doc_id", "text")
-    val cdcChunks = Pipelines.cdcHashed(cdcProbe, "doc_id", "text",
-      w = 8, mask = 64, buckets = buckets)
+    val (cdcChunks, cdcPbs) = Pipelines.DedupStore.census(cdcStore,
+      Pipelines.cdcHashed(cdcProbe, "doc_id", "text", w = 8, mask = 64),
+      col("ch"))
     val nChunks = cdcChunks.count().toInt
-    val cdcKnown = Pipelines.cdcKnown(spark, cdcChunks, cdcStore)
+    val cdcKnown = Pipelines.cdcKnown(cdcChunks, cdcPbs, cdcStore)
     checkPlan(cdcKnown, "prunecdc", maxParts = nChunks)
     // and the fresh computation itself stays broadcast-only
     val cdcPlan = Pipelines.cdcFresh(cdcProbe, cdcChunks, cdcKnown,
@@ -484,12 +488,13 @@ class StreamingPipelinesSpec extends SparkSpec {
     Pipelines.scoreAgainstStore("doc_id", "text", scStore, buckets) { reps =>
       reps.select(col("fingerprint"), length(col("text")).as("score"))
     } { _ => () }(scSeed, 0L)
-    val scProbe = Seq((900L, "cached corpus doc 7 distinct body"),
-      (901L, "unseen probe body")).toDF("doc_id", "text")
-      .withColumn("fingerprint",
-        graft.functions.TextFunctions.fingerprint(col("text")))
-      .withColumn("pb", Pipelines.DedupStore.bucketOf(col("fingerprint"), buckets))
-    checkPlan(Pipelines.scoreCacheLookup(spark, scProbe, scStore).get,
+    val (scProbe, scPbs) = Pipelines.DedupStore.census(scStore,
+      Seq((900L, "cached corpus doc 7 distinct body"),
+        (901L, "unseen probe body")).toDF("doc_id", "text")
+        .withColumn("fingerprint",
+          graft.functions.TextFunctions.fingerprint(col("text"))),
+      col("fingerprint"))
+    checkPlan(Pipelines.scoreCacheLookup(scProbe, scPbs, scStore).get,
       "prunescore", maxParts = 2)
   }
 
@@ -833,15 +838,18 @@ class StreamingPipelinesSpec extends SparkSpec {
     }
     val beforeFiles = fileSet()
     // generous threshold: healthy store, decision reports but touches nothing
-    val noop = Pipelines.compactStoreIfNeeded(spark, store, maxFilesPerDir = 100)
-    assert(!noop.compacted && noop.rows === -1L)
-    assert(noop.filesBefore === noop.filesAfter)
+    def policy(maxFilesPerDir: Int) = Pipelines.compactStoreIfNeeded(spark,
+      s"$store/data", maxFilesPerDir)(Pipelines.compactStore(spark, store))
+    val noop = policy(maxFilesPerDir = 100)
+    assert(!noop.compacted && noop.result === None)
+    assert(policy(maxFilesPerDir = 100).files === noop.files)
     assert(fileSet() === beforeFiles, "no-op path must not rewrite any file")
     assert(noop.maxFilesPerDir > 1, "several appends must stack files per dir")
     // tight threshold: the same census now triggers the real compaction
-    val did = Pipelines.compactStoreIfNeeded(spark, store, maxFilesPerDir = 1)
-    assert(did.compacted && did.rows === 120L)
-    assert(did.filesAfter < did.filesBefore)
+    val did = policy(maxFilesPerDir = 1)
+    val Some((rows, filesBefore, filesAfter)) = did.result
+    assert(did.compacted && rows === 120L)
+    assert(filesAfter < filesBefore)
     new java.io.File(s"$store/data").listFiles()
       .filter(_.getName.startsWith("pb=")).foreach { d =>
         assert(d.listFiles().count(_.getName.endsWith(".parquet")) === 1)
@@ -1204,16 +1212,16 @@ class StreamingPipelinesSpec extends SparkSpec {
     assert(mergeFiles() === 2L)
     val expect = repsNow()
     // healthy: threshold not crossed → no-op, forest untouched
-    val noop = Pipelines.clusterCompactIfNeeded(spark, store,
-      maxMergeFiles = 2)
-    assert(!noop.compacted && noop.mergeFiles === 2L &&
-      noop.members === -1L && mergeFiles() === 2L)
+    def policy(maxMergeFiles: Int) = Pipelines.compactStoreIfNeeded(spark,
+      s"$store/merges", maxMergeFiles)(Pipelines.clusterCompact(spark, store))
+    val noop = policy(maxMergeFiles = 2)
+    assert(!noop.compacted && noop.files === 2L &&
+      noop.result === None && mergeFiles() === 2L)
     assert(repsNow() === expect)
     // crossed: forest retires, members resolve to live roots, read-out
     // bit-identical
-    val did = Pipelines.clusterCompactIfNeeded(spark, store,
-      maxMergeFiles = 1)
-    assert(did.compacted && did.mergeFiles === 2L && did.mergesRetired === 2L)
+    val did = policy(maxMergeFiles = 1)
+    assert(did.compacted && did.files === 2L && did.result.get._2 === 2L)
     assert(!mergesDir.exists())
     assert(repsNow() === expect)
 
@@ -1539,13 +1547,14 @@ class StreamingPipelinesSpec extends SparkSpec {
     }
     // healthy: below threshold → no-op, not a single file touched
     val census0 = fileCensus()
-    val noop = Pipelines.hierCompactIfNeeded(spark, store,
-      maxFilesPerDir = 100)
-    assert(!noop.compacted && noop.live === -1L)
+    def policy(maxFilesPerDir: Int) = Pipelines.compactStoreIfNeeded(spark,
+      s"$store/log/data", maxFilesPerDir)(Pipelines.hierCompact(spark, store))
+    val noop = policy(maxFilesPerDir = 100)
+    assert(!noop.compacted && noop.result === None)
     assert(fileCensus() === census0, "no-op path must touch no file")
     // past threshold: retirement, read-out bit-identical
-    val did = Pipelines.hierCompactIfNeeded(spark, store, maxFilesPerDir = 1)
-    assert(did.compacted && did.retired >= 1L)
+    val did = policy(maxFilesPerDir = 1)
+    assert(did.compacted && did.result.get._2 >= 1L)
     assert(aggNow() === before)
     assert(spark.read.parquet(s"$store/log/data")
       .where(col("fam") === "a").count() === 4L)
@@ -1686,6 +1695,53 @@ class StreamingPipelinesSpec extends SparkSpec {
     assert(got === Map(7L -> "t7", 9L -> "s9"))
   }
 
+  test("PitEnricher: against a store with no change rows, facts enrich to null attributes like a point-in-time join against an empty dim") {
+    def d(s: String) = Timestamp.valueOf(s + " 00:00:00")
+    val emptyDim = Seq.empty[(Long, Timestamp, String)].toDF("k", "snap_ts", "seg")
+    val facts = Seq((1L, d("2020-01-10"), 10.0), (2L, d("2020-02-01"), 20.0))
+      .toDF("ck", "ts", "amt")
+    def canon(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("ck"), col("ts"), col("amt"), col("seg"))
+        .as[(Long, Timestamp, Double, Option[String])]
+        .collect().sortBy(_._1).toSeq
+    val batch = canon(graft.operators.Scd.pointInTimeJoin(facts,
+      graft.operators.Scd.scd2Build(emptyDim, "k", "snap_ts", Seq("seg")),
+      "ck", "k", "ts", Seq("seg")))
+    assert(batch.map(_._4) === Seq(None, None))
+    // an empty first dim batch appends nothing: the store has its config
+    // but no data dir yet
+    val enr = Pipelines.PitEnricher(
+      java.nio.file.Files.createTempDirectory("pitempty").toString, Seq("seg"))
+    enr.ingestDim(emptyDim, 0L)
+    assert(canon(enr.enrich(facts, "ck", "ts")) === batch)
+    // and before any dim batch at all (no config either)
+    val fresh = Pipelines.PitEnricher(
+      java.nio.file.Files.createTempDirectory("pitnone").toString, Seq("seg"))
+    assert(canon(fresh.enrich(facts, "ck", "ts")) === batch)
+  }
+
+  test("splitAgainstStore: reads the store's pinned bucket count, not a default of its own") {
+    import graft.operators.{Dedup, Sampling}
+    val store = java.nio.file.Files.createTempDirectory("splpinned").toString
+    val pairs = (0L until 40L).map(i => (2 * i, 2 * i + 1))
+    Pipelines.clusterIngestStream(store, buckets = 16)()(
+      pairs.toDF("id_a", "id_b"), 0L)
+    val docs = (0L until 80L).map(Tuple1(_)).toDF("doc_id")
+    def canon(df: org.apache.spark.sql.DataFrame): Map[Long, (Long, String)] =
+      df.select(col("doc_id"), col("cluster_rep"), col("split"))
+        .as[(Long, Long, String)].collect()
+        .map(r => r._1 -> ((r._2, r._3))).toMap
+    val streamed = canon(
+      Pipelines.splitAgainstStore(spark, store, docs, "doc_id", 50))
+    val batch = canon(Sampling.groupTrainTestSplit(
+      docs.join(Dedup.dupClusters(docs, "doc_id", pairs.toDF("id_a", "id_b")),
+        Seq("doc_id")),
+      "cluster_rep", "doc_id", 50))
+    assert(streamed === batch)
+    // every odd doc is clustered with its even partner
+    assert(streamed.count { case (id, (rep, _)) => rep != id } === 40)
+  }
+
   test("splitAgainstStore: streamed ≡ batch groupTrainTestSplit at every boundary; cross-batch consistency; merge restatement; replay idempotent") {
     import graft.operators.{Dedup, Sampling}
     val store = java.nio.file.Files.createTempDirectory("splstore").toString
@@ -1693,8 +1749,7 @@ class StreamingPipelinesSpec extends SparkSpec {
     val docs = (0L to 9L).map(Tuple1(_)).toDF("doc_id")
     val Pct = 50
     def streamed(): Map[Long, (Long, String)] =
-      Pipelines.splitAgainstStore(spark, store, docs, "doc_id", Pct,
-        buckets = 8)
+      Pipelines.splitAgainstStore(spark, store, docs, "doc_id", Pct)
         .select(col("doc_id"), col("cluster_rep"), col("split"))
         .as[(Long, Long, String)].collect()
         .map(r => r._1 -> ((r._2, r._3))).toMap
