@@ -889,13 +889,6 @@ object Dedup {
     * iteration runs over the PAIR-GRAPH edges only (docs with a
     * near-dup — a small derived set even at full scale); the corpus is
     * touched once at the end. */
-  /** Driver-path edge budget for [[dupClusters]] (0 disables): env-
-    * tunable for cluster runs, deliberately conservative by default —
-    * the collected rows are (id, id) pairs, so 100k rows is a few MB
-    * of driver state, the same class as a broadcast build. */
-  private def ccDriverMaxEdges: Int = sys.env
-    .getOrElse("SPARK_GRAFT_CC_DRIVER_MAX_EDGES", "100000").toInt
-
   def dupClusters(docs: DataFrame, idCol: String,
                   pairs: DataFrame, maxIters: Int = 20,
                   driverMaxEdges: Int = -1): DataFrame = {
@@ -920,34 +913,31 @@ object Dedup {
     // rewiring loop below costs ~2 jobs + 2 plan builds PER ROUND —
     // pure dispatch latency when the pair graph is small, which it is
     // for every shared-frame consumer at bench scale and for any
-    // steady-state incremental batch. Up to `cutoff` edge rows the
-    // components are solved by a min-rooted union-find off ONE bounded
-    // collect (duplicates and orientation are irrelevant to a UF, so
-    // the probe skips the distinct too); the labeling is bit-identical
-    // by construction — cluster_rep IS the component minimum on both
-    // paths (spec-asserted). Beyond the cutoff (or with it set <= 0,
+    // steady-state incremental batch. Up to the shared budget
+    // ([[DriverPath.maxEdges]]) of edge rows the components are solved
+    // by a min-rooted union-find off ONE bounded collect (duplicates
+    // and orientation are irrelevant to a UF, so the probe skips the
+    // distinct too); the labeling is bit-identical by construction —
+    // cluster_rep IS the component minimum on both paths
+    // (spec-asserted). Beyond the budget (or with it set to 0,
     // e.g. by the round-count gates in the spec suite and Soak) the
     // distributed O(log n) loop runs unchanged — the 100 TB path never
     // collects. The probe is a limit() over the checkpointed blocks:
     // partition-local short-circuit, no recompute either way.
-    val cutoff =
-      if (driverMaxEdges >= 0) driverMaxEdges else ccDriverMaxEdges
-    val probe =
-      if (cutoff > 0) base.limit(cutoff + 1).collect()
-      else Array.empty[org.apache.spark.sql.Row]
-    if (cutoff > 0 && probe.length <= cutoff) {
-      val (roots, vs) = driverMinForest(probe)
+    val probe = DriverPath.described(docs.sparkSession, "Dedup.dupClusters probe") {
+      DriverPath.collectWithin(base, DriverPath.budget(driverMaxEdges))
+    }
+    if (probe.isDefined) {
+      val (roots, vs) = driverMinForest(probe.get)
       val idType = canon.schema("src").dataType
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField(idCol, idType),
         org.apache.spark.sql.types.StructField("rep", idType)))
-      val spark = docs.sparkSession
-      val labelRows = vs.iterator.flatMap { v =>
-        val r = roots(v)
-        if (r == v) None else Some(org.apache.spark.sql.Row(v, r))
-      }.toSeq
-      val labels = spark.createDataFrame(
-        spark.sparkContext.parallelize(labelRows, 1), schema)
+      val labels = DriverPath.localFrame(docs.sparkSession, schema,
+        vs.iterator.flatMap { v =>
+          val r = roots(v)
+          if (r == v) None else Some(org.apache.spark.sql.Row(v, r))
+        }.toSeq)
       return docs.select(col(idCol))
         .join(broadcast(labels), Seq(idCol), "left")
         .select(col(idCol), coalesce(col("rep"), col(idCol)).as("cluster_rep"))
@@ -1034,10 +1024,8 @@ object Dedup {
     * every vertex seen, in first-seen order). The smaller root adopts
     * the larger at each union, so every tree's root is its component
     * MINIMUM — exactly the distributed [[dupClusters]] `cluster_rep`
-    * (spec-asserted equal on both paths). Strings compare by UTF-8
-    * bytes, matching Spark's min()/binary ordering — Java's
-    * String.compareTo is UTF-16 code-unit order and diverges on
-    * supplementary-plane characters. */
+    * (spec-asserted equal on both paths): roots compare in Spark's
+    * order ([[DriverPath.idOrdering]], UTF-8 bytes for strings). */
   private[graft] def driverMinForest(
       rows: Array[org.apache.spark.sql.Row])
       : (Any => Any, scala.collection.mutable.LinkedHashSet[Any]) = {
@@ -1051,21 +1039,10 @@ object Dedup {
       }
       r
     }
-    def lt(a: Any, b: Any): Boolean = (a, b) match {
-      case (sa: String, sb: String) =>
-        val ba = sa.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        val bb = sb.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        var i = 0
-        val n = math.min(ba.length, bb.length)
-        while (i < n && ba(i) == bb(i)) i += 1
-        if (i < n) (ba(i) & 0xff) < (bb(i) & 0xff)
-        else ba.length < bb.length
-      case _ => a.asInstanceOf[Comparable[Any]].compareTo(b) < 0
-    }
     rows.foreach { row =>
       val ra = find(row.get(0)); val rb = find(row.get(1))
       if (ra != rb) {
-        if (lt(ra, rb)) parent.update(rb, ra)
+        if (DriverPath.idOrdering.lt(ra, rb)) parent.update(rb, ra)
         else parent.update(ra, rb)
       }
     }

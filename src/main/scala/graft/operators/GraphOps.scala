@@ -149,47 +149,134 @@ object GraphOps {
     * one (vertex, label) count, and one per-vertex argmax window —
     * all keyed, nothing corpus-crossing; labels localCheckpoint per
     * round (lineage truncation, the [[pageRank]] discipline). Returns
-    * (id, community). */
+    * (id, community).
+    *
+    * Small graphs solve on the driver ([[DriverPath]]): when the edge
+    * list and the vertex frame both fit the budget (`driverMaxEdges`:
+    * negative → [[DriverPath.maxEdges]], 0 → never collect), the rounds
+    * run over one collect of each and the labels come back as a local
+    * relation — bit-identical to the distributed rounds (ties to the
+    * smallest label in Spark's order, isolated vertices keep their
+    * own, an edge whose `dst` is not a vertex casts no vote;
+    * spec-asserted). A null id, a null weight, a duplicate vertex id
+    * or an id type outside [[DriverPath.supported]] takes the
+    * distributed path. */
   def labelPropagation(vertices: DataFrame, edges: DataFrame,
-                       iters: Int = 3): DataFrame =
-    labelPropagationImpl(vertices, edges, iters, weighted = false)
+                       iters: Int = 3, driverMaxEdges: Int = -1): DataFrame =
+    labelPropagationImpl(vertices, edges, iters, weighted = false,
+      driverMaxEdges)
 
   /** WEIGHTED synchronous label propagation over an integer-weighted
     * symmetrized edge list `(src, dst, w)`: each round a vertex adopts
     * the label with the largest incident WEIGHT SUM (ties → smallest
     * label) — one heavy near-identity edge outvotes several light
     * ones, which is the right call on a similarity-weighted dup graph.
-    * Same determinism/scale contract as [[labelPropagation]]; w = 1
-    * degrades to it exactly (spec-asserted). */
+    * Same determinism/scale contract and driver path as
+    * [[labelPropagation]]; w = 1 degrades to it exactly
+    * (spec-asserted). */
   def labelPropagationWeighted(vertices: DataFrame, edges: DataFrame,
-                               iters: Int = 3): DataFrame =
-    labelPropagationImpl(vertices, edges, iters, weighted = true)
+                               iters: Int = 3,
+                               driverMaxEdges: Int = -1): DataFrame =
+    labelPropagationImpl(vertices, edges, iters, weighted = true,
+      driverMaxEdges)
 
   private def labelPropagationImpl(vertices: DataFrame, edges: DataFrame,
-                                   iters: Int, weighted: Boolean): DataFrame = {
+                                   iters: Int, weighted: Boolean,
+                                   driverMaxEdges: Int): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
     val v = vertices.select(col("id"))
     val e =
       if (weighted) edges.select(col("src"), col("dst"),
         col("w").cast("long").as("w"))
       else edges.select(col("src"), col("dst"))
-    var labels = v.select(col("id"), col("id").as("lbl"))
-    for (_ <- 1 to iters) {
-      val votes = e
-        .join(labels.select(col("id").as("dst"), col("lbl")), "dst")
-        .groupBy(col("src"), col("lbl"))
-        .agg((if (weighted) sum(col("w")) else count(lit(1))).as("c"))
-      val best = votes
-        .withColumn("rn", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("src"))
-            .orderBy(col("c").desc, col("lbl").asc)))
-        .where(col("rn") === 1)
-        .select(col("src").as("id"), col("lbl").as("nlbl"))
-      labels = labels.join(best, Seq("id"), "left")
-        .select(col("id"), coalesce(col("nlbl"), col("lbl")).as("lbl"))
-        .localCheckpoint()
+    val spark = v.sparkSession
+    val budget = DriverPath.budget(driverMaxEdges)
+    val onDriver =
+      if (!driverIds(e, v.schema("id"))) None
+      else DriverPath.described(spark, "GraphOps.lpa probe") {
+        for {
+          er <- DriverPath.collectWithin(e, budget)
+          if er.forall(r => !r.anyNull)
+          vr <- DriverPath.collectWithin(v, budget)
+          out <- lpaOnDriver(spark, v.schema("id"), vr, er, iters, weighted)
+        } yield out
+      }
+    onDriver.getOrElse {
+      var labels = v.select(col("id"), col("id").as("lbl"))
+      for (k <- 1 to iters) {
+        val votes = e
+          .join(labels.select(col("id").as("dst"), col("lbl")), "dst")
+          .groupBy(col("src"), col("lbl"))
+          .agg((if (weighted) sum(col("w")) else count(lit(1))).as("c"))
+        val best = votes
+          .withColumn("rn", row_number().over(
+            org.apache.spark.sql.expressions.Window.partitionBy(col("src"))
+              .orderBy(col("c").desc, col("lbl").asc)))
+          .where(col("rn") === 1)
+          .select(col("src").as("id"), col("lbl").as("nlbl"))
+        labels = DriverPath.described(spark, s"GraphOps.lpa round=$k") {
+          labels.join(best, Seq("id"), "left")
+            .select(col("id"), coalesce(col("nlbl"), col("lbl")).as("lbl"))
+            .localCheckpoint()
+        }
+      }
+      labels.select(col("id"), col("lbl").as("community"))
     }
-    labels.select(col("id"), col("lbl").as("community"))
+  }
+
+  /** Whether a graph's ids can take the driver path: `id`'s type is
+    * [[DriverPath.supported]] and both edge endpoints share it (a
+    * mixed-type join coerces in Spark, while driver-side lookups
+    * compare boxed values of one type). */
+  private def driverIds(e: DataFrame, id: org.apache.spark.sql.types.StructField)
+      : Boolean =
+    DriverPath.supported(id.dataType) &&
+      e.schema("src").dataType == id.dataType &&
+      e.schema("dst").dataType == id.dataType
+
+  /** The synchronous rounds of [[labelPropagation]] over collected
+    * vertex ids `vr` and edges `er` (src, dst[, w]), as a local
+    * (id, community) relation; None on a null or duplicate vertex id.
+    * Labels are vertex indices (every label is some vertex's id), and
+    * a label's rank in [[DriverPath.idOrdering]] breaks vote ties. */
+  private def lpaOnDriver(spark: org.apache.spark.sql.SparkSession,
+                          id: org.apache.spark.sql.types.StructField,
+                          vr: Array[org.apache.spark.sql.Row],
+                          er: Array[org.apache.spark.sql.Row],
+                          iters: Int, weighted: Boolean): Option[DataFrame] = {
+    val n = vr.length
+    val ids = vr.map(_.get(0))
+    val index = new java.util.HashMap[Any, Integer](n * 2)
+    ids.indices.foreach(i => index.put(ids(i), i))
+    if (ids.contains(null) || index.size != n) return None
+    val rank = new Array[Int](n)
+    ids.indices.sortBy(ids(_))(DriverPath.idOrdering).zipWithIndex
+      .foreach { case (i, r) => rank(i) = r }
+    // adjacency over the edges whose endpoints are both vertices: an
+    // edge whose dst is not a vertex casts no vote (the distributed
+    // join on dst drops it), and a non-vertex src never lands a label
+    val adj = Array.fill(n)(scala.collection.mutable.ArrayBuffer.empty[(Int, Long)])
+    er.foreach { r =>
+      val s = index.get(r.get(0)); val d = index.get(r.get(1))
+      if (s != null && d != null)
+        adj(s) += ((d.intValue, if (weighted) r.getLong(2) else 1L))
+    }
+    var lbl = Array.tabulate(n)(identity)
+    for (_ <- 1 to iters) {
+      val next = lbl.clone()
+      for (u <- 0 until n if adj(u).nonEmpty) {
+        val votes = scala.collection.mutable.HashMap.empty[Int, Long]
+        for ((d, w) <- adj(u))
+          votes(lbl(d)) = Math.addExact(votes.getOrElse(lbl(d), 0L), w)
+        // the largest vote wins, ties to the smallest label
+        next(u) = votes.maxBy { case (l, c) => (c, -rank(l)) }._1
+      }
+      lbl = next
+    }
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      id, id.copy(name = "community")))
+    Some(DriverPath.localFrame(spark, schema,
+      ids.indices.map(i => org.apache.spark.sql.Row(ids(i), ids(lbl(i))))))
   }
 
   /** Newman modularity of a vertex partition, in EXACT integers —
@@ -207,29 +294,42 @@ object GraphOps {
     * each, one 1-row edge count — nothing corpus-crossing. `labels`
     * is (id, community); `edges` the symmetrized (src, dst) list.
     * Returns (community, n_members, d_c, intra_dir, q_4m2_part, e2)
-    * — isolated vertices appear as zero-contribution singletons. */
-  def modularity(labels: DataFrame, edges: DataFrame): DataFrame = {
+    * — isolated vertices appear as zero-contribution singletons.
+    *
+    * Small graphs solve on the driver ([[DriverPath]], the
+    * [[labelPropagation]] rule: edge list and label frame both within
+    * the budget, `driverMaxEdges` as there): one collect of each, the
+    * census in driver hash maps, a local relation back — bit-identical
+    * to the plan below (spec-asserted), with every integer step
+    * overflow-checked (`Math.addExact`/`multiplyExact`/`subtractExact`)
+    * so a past-headroom graph fails loudly, as the plan does under
+    * ANSI arithmetic. A null id or community, a duplicate label id or
+    * an id type outside [[DriverPath.supported]] takes the plan. */
+  def modularity(labels: DataFrame, edges: DataFrame,
+                 driverMaxEdges: Int = -1): DataFrame = {
     val l = labels.select(col("id"), col("community"))
     val e = edges.select(col("src"), col("dst"))
-    val e2 = e.agg(count(lit(1)).as("e2"))
-    val dg = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
-    val cm = l.join(dg, Seq("id"), "left")
-      .groupBy(col("community"))
-      .agg(count(lit(1)).as("n_members"),
-        sum(coalesce(col("deg"), lit(0L))).as("d_c"))
-    val intra = e
-      .join(l.select(col("id").as("src"), col("community").as("ca")), "src")
-      .join(l.select(col("id").as("dst"), col("community").as("cb")), "dst")
-      .where(col("ca") === col("cb"))
-      .groupBy(col("ca").as("community"))
-      .agg(count(lit(1)).as("intra_dir"))
-    cm.join(intra, Seq("community"), "left")
-      .crossJoin(broadcast(e2))
-      .select(col("community"), col("n_members"), col("d_c"),
-        coalesce(col("intra_dir"), lit(0L)).as("intra_dir"),
-        (col("e2") * coalesce(col("intra_dir"), lit(0L))
-          - col("d_c") * col("d_c")).as("q_4m2_part"),
-        col("e2"))
+    modularityOnDriver(l, e, weighted = false, driverMaxEdges).getOrElse {
+      val e2 = e.agg(count(lit(1)).as("e2"))
+      val dg = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
+      val cm = l.join(dg, Seq("id"), "left")
+        .groupBy(col("community"))
+        .agg(count(lit(1)).as("n_members"),
+          sum(coalesce(col("deg"), lit(0L))).as("d_c"))
+      val intra = e
+        .join(l.select(col("id").as("src"), col("community").as("ca")), "src")
+        .join(l.select(col("id").as("dst"), col("community").as("cb")), "dst")
+        .where(col("ca") === col("cb"))
+        .groupBy(col("ca").as("community"))
+        .agg(count(lit(1)).as("intra_dir"))
+      cm.join(intra, Seq("community"), "left")
+        .crossJoin(broadcast(e2))
+        .select(col("community"), col("n_members"), col("d_c"),
+          coalesce(col("intra_dir"), lit(0L)).as("intra_dir"),
+          (col("e2") * coalesce(col("intra_dir"), lit(0L))
+            - col("d_c") * col("d_c")).as("q_4m2_part"),
+          col("e2"))
+    }
   }
 
   /** [[modularity]] for an integer-weighted symmetrized edge list
@@ -239,31 +339,95 @@ object GraphOps {
     * community's weighted degree sum and intra_w the directed
     * intra-community weight. All BIGINT (headroom: Σw < 2³¹·√2 ≈
     * 3·10⁹ — past that, lift to 128-bit decimal), so an oracle replays
-    * it bit-for-bit. Same shape as the unweighted census: two label
-    * lookups on the edge list, keyed sums, one 1-row total. Returns
+    * it bit-for-bit. Same shape and driver path as the unweighted
+    * census (a null weight also takes the plan): two label lookups on
+    * the edge list, keyed sums, one 1-row total. Returns
     * (community, n_members, d_c, intra_w, q_4w2_part, e2). */
-  def modularityWeighted(labels: DataFrame, edges: DataFrame): DataFrame = {
+  def modularityWeighted(labels: DataFrame, edges: DataFrame,
+                         driverMaxEdges: Int = -1): DataFrame = {
     val l = labels.select(col("id"), col("community"))
     val e = edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
-    val e2 = e.agg(coalesce(sum(col("w")), lit(0L)).as("e2"))
-    val dg = e.groupBy(col("src").as("id")).agg(sum(col("w")).as("deg"))
-    val cm = l.join(dg, Seq("id"), "left")
-      .groupBy(col("community"))
-      .agg(count(lit(1)).as("n_members"),
-        sum(coalesce(col("deg"), lit(0L))).as("d_c"))
-    val intra = e
-      .join(l.select(col("id").as("src"), col("community").as("ca")), "src")
-      .join(l.select(col("id").as("dst"), col("community").as("cb")), "dst")
-      .where(col("ca") === col("cb"))
-      .groupBy(col("ca").as("community"))
-      .agg(sum(col("w")).as("intra_w"))
-    cm.join(intra, Seq("community"), "left")
-      .crossJoin(broadcast(e2))
-      .select(col("community"), col("n_members"), col("d_c"),
-        coalesce(col("intra_w"), lit(0L)).as("intra_w"),
-        (col("e2") * coalesce(col("intra_w"), lit(0L))
-          - col("d_c") * col("d_c")).as("q_4w2_part"),
-        col("e2"))
+    modularityOnDriver(l, e, weighted = true, driverMaxEdges).getOrElse {
+      val e2 = e.agg(coalesce(sum(col("w")), lit(0L)).as("e2"))
+      val dg = e.groupBy(col("src").as("id")).agg(sum(col("w")).as("deg"))
+      val cm = l.join(dg, Seq("id"), "left")
+        .groupBy(col("community"))
+        .agg(count(lit(1)).as("n_members"),
+          sum(coalesce(col("deg"), lit(0L))).as("d_c"))
+      val intra = e
+        .join(l.select(col("id").as("src"), col("community").as("ca")), "src")
+        .join(l.select(col("id").as("dst"), col("community").as("cb")), "dst")
+        .where(col("ca") === col("cb"))
+        .groupBy(col("ca").as("community"))
+        .agg(sum(col("w")).as("intra_w"))
+      cm.join(intra, Seq("community"), "left")
+        .crossJoin(broadcast(e2))
+        .select(col("community"), col("n_members"), col("d_c"),
+          coalesce(col("intra_w"), lit(0L)).as("intra_w"),
+          (col("e2") * coalesce(col("intra_w"), lit(0L))
+            - col("d_c") * col("d_c")).as("q_4w2_part"),
+          col("e2"))
+    }
+  }
+
+  /** The driver census behind [[modularity]] / [[modularityWeighted]]
+    * over `l` (id, community) and `e` (src, dst[, w: long]): None when
+    * either frame is over the budget, an id type is unsupported, or a
+    * null or duplicate label id turns up. Communities come back in the
+    * label frame's first-seen order. */
+  private def modularityOnDriver(l: DataFrame, e: DataFrame, weighted: Boolean,
+                                 driverMaxEdges: Int): Option[DataFrame] = {
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val spark = l.sparkSession
+    val comField = l.schema("community")
+    if (!driverIds(e, l.schema("id")) ||
+        !DriverPath.supported(comField.dataType)) return None
+    val budget = DriverPath.budget(driverMaxEdges)
+    DriverPath.described(spark, "GraphOps.modularity probe") {
+      for {
+        er <- DriverPath.collectWithin(e, budget)
+        if er.forall(r => !r.anyNull)
+        lr <- DriverPath.collectWithin(l, budget)
+        if lr.forall(r => !r.anyNull)
+        comm = lr.iterator.map(r => r.get(0) -> r.get(1)).toMap
+        if comm.size == lr.length
+      } yield {
+        def w(r: org.apache.spark.sql.Row): Long = if (weighted) r.getLong(2) else 1L
+        var e2 = 0L
+        val deg = scala.collection.mutable.HashMap.empty[Any, Long]
+        er.foreach { r =>
+          e2 = Math.addExact(e2, w(r))
+          deg(r.get(0)) = Math.addExact(deg.getOrElse(r.get(0), 0L), w(r))
+        }
+        // per community: (n_members, d_c, intra)
+        val parts = scala.collection.mutable.LinkedHashMap.empty[Any, Array[Long]]
+        lr.foreach { r =>
+          val p = parts.getOrElseUpdate(r.get(1), new Array[Long](3))
+          p(0) += 1
+          p(1) = Math.addExact(p(1), deg.getOrElse(r.get(0), 0L))
+        }
+        er.foreach { r =>
+          val ca = comm.get(r.get(0))
+          if (ca.isDefined && ca == comm.get(r.get(1))) {
+            val p = parts(ca.get)
+            p(2) = Math.addExact(p(2), w(r))
+          }
+        }
+        val (intraName, partName) =
+          if (weighted) ("intra_w", "q_4w2_part") else ("intra_dir", "q_4m2_part")
+        val schema = StructType(Seq(comField,
+          StructField("n_members", LongType, nullable = false),
+          StructField("d_c", LongType),
+          StructField(intraName, LongType, nullable = false),
+          StructField(partName, LongType),
+          StructField("e2", LongType, nullable = false)))
+        DriverPath.localFrame(spark, schema, parts.iterator.map { case (c, p) =>
+          org.apache.spark.sql.Row(c, p(0), p(1), p(2),
+            Math.subtractExact(Math.multiplyExact(e2, p(2)),
+              Math.multiplyExact(p(1), p(1))), e2)
+        }.toSeq)
+      }
+    }
   }
 
   /** One SYNCHRONOUS greedy modularity-refinement sweep (the Louvain
@@ -743,16 +907,17 @@ object GraphOps {
     * proves the distributed frontier iteration equals the textbook
     * fixpoint.
     *
-    * `driverMaxEdges > 0` opts into a HYBRID small-graph path (the
-    * [[graft.streaming.Pipelines]] cluster-ingest cutoff rationale): a
-    * deep traversal costs one sequential Spark job per round — pure
-    * scheduler latency when the graph is small — so below the cutoff
-    * the edge list is collected once and the BFS runs driver-side,
-    * bit-identically (spec-asserted). The default 0 never collects;
-    * callers whose pair graphs are bounded by construction
-    * (dup-population graphs, k-hop neighborhoods) set an explicit
-    * budget, and anything over it falls back to the distributed
-    * frontier iteration unchanged. */
+    * `driverMaxEdges` opts into the shared small-graph path
+    * ([[DriverPath]]): a deep traversal costs one sequential Spark job
+    * per round — pure scheduler latency when the graph is small — so
+    * within the budget (edges and distinct seeds alike) the edge list is
+    * collected once and the BFS runs driver-side, bit-identically
+    * (spec-asserted). Unlike the other graph operators the default is
+    * 0, never collect; callers whose pair graphs are bounded by
+    * construction (dup-population graphs, k-hop neighborhoods) pass an
+    * explicit budget or a negative value for [[DriverPath.maxEdges]],
+    * and anything over it falls back to the distributed frontier
+    * iteration unchanged. */
   def bfsHops(pairs: DataFrame, seeds: DataFrame, maxHops: Int,
               stride: Int = 1,
               broadcastFrontier: Boolean = true,
@@ -764,52 +929,47 @@ object GraphOps {
     // the hops map mixes seed values and pair values, and a mixed
     // (Integer, Long) map would fail at materialization where the
     // distributed path coerces through its unions/joins.
-    if (driverMaxEdges > 0 &&
-        seeds.schema("id").dataType == pairs.schema("id_a").dataType) {
-      val probe = pairs.select(col("id_a"), col("id_b"))
-        .limit(driverMaxEdges + 1).collect()
-      // Seeds share the edge budget: a corpus-sized seed frame with a
-      // small edge list must NOT be collected — over budget falls
-      // back to the distributed frontier loop like an over-budget
-      // edge list does.
-      val seedProbe =
-        if (probe.length <= driverMaxEdges)
-          seeds.select(col("id")).distinct()
-            .limit(driverMaxEdges + 1).collect()
-        else Array.empty[org.apache.spark.sql.Row]
-      if (probe.length <= driverMaxEdges &&
-          seedProbe.length <= driverMaxEdges) {
-        val spark = pairs.sparkSession
-        val adj = new scala.collection.mutable.HashMap[
-          Any, scala.collection.mutable.LinkedHashSet[Any]]
-        def link(a: Any, b: Any): Unit =
-          adj.getOrElseUpdate(a,
-            scala.collection.mutable.LinkedHashSet.empty[Any]) += b
-        probe.foreach { r => link(r.get(0), r.get(1)); link(r.get(1), r.get(0)) }
-        val hops = new scala.collection.mutable.LinkedHashMap[Any, Long]
-        seedProbe.foreach(r => hops.update(r.get(0), 0L))
-        var frontier: Seq[Any] = hops.keys.toSeq
-        var h = 1L
-        while (h <= maxHops && frontier.nonEmpty) {
-          val next = scala.collection.mutable.LinkedHashSet.empty[Any]
-          frontier.foreach(u => adj.get(u).foreach(_.foreach { v =>
-            if (!hops.contains(v)) { hops.update(v, h); next += v }
-          }))
-          frontier = next.toSeq
-          h += 1
+    val budget = DriverPath.budget(driverMaxEdges)
+    val onDriver =
+      if (seeds.schema("id").dataType != pairs.schema("id_a").dataType) None
+      else DriverPath.described(pairs.sparkSession, "GraphOps.bfsHops probe") {
+        for {
+          probe <- DriverPath.collectWithin(pairs.select(col("id_a"), col("id_b")),
+            budget)
+          // Seeds share the edge budget: a corpus-sized seed frame with
+          // a small edge list must NOT be collected — over budget falls
+          // back to the distributed frontier loop like an over-budget
+          // edge list does.
+          seedProbe <- DriverPath.collectWithin(
+            seeds.select(col("id")).distinct(), budget)
+        } yield {
+          val adj = new scala.collection.mutable.HashMap[
+            Any, scala.collection.mutable.LinkedHashSet[Any]]
+          def link(a: Any, b: Any): Unit =
+            adj.getOrElseUpdate(a,
+              scala.collection.mutable.LinkedHashSet.empty[Any]) += b
+          probe.foreach { r => link(r.get(0), r.get(1)); link(r.get(1), r.get(0)) }
+          val hops = new scala.collection.mutable.LinkedHashMap[Any, Long]
+          seedProbe.foreach(r => hops.update(r.get(0), 0L))
+          var frontier: Seq[Any] = hops.keys.toSeq
+          var h = 1L
+          while (h <= maxHops && frontier.nonEmpty) {
+            val next = scala.collection.mutable.LinkedHashSet.empty[Any]
+            frontier.foreach(u => adj.get(u).foreach(_.foreach { v =>
+              if (!hops.contains(v)) { hops.update(v, h); next += v }
+            }))
+            frontier = next.toSeq
+            h += 1
+          }
+          val schema = org.apache.spark.sql.types.StructType(Seq(
+            org.apache.spark.sql.types.StructField("id", seeds.schema("id").dataType),
+            org.apache.spark.sql.types.StructField("hop",
+              org.apache.spark.sql.types.LongType)))
+          DriverPath.localFrame(pairs.sparkSession, schema,
+            hops.iterator.map { case (v, d) => org.apache.spark.sql.Row(v, d) }.toSeq)
         }
-        val idType = seeds.schema("id").dataType
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id", idType),
-          org.apache.spark.sql.types.StructField("hop",
-            org.apache.spark.sql.types.LongType)))
-        return spark.createDataFrame(
-          spark.sparkContext.parallelize(
-            hops.iterator.map { case (v, d) =>
-              org.apache.spark.sql.Row(v, d) }.toSeq, 1),
-          schema)
       }
-    }
+    if (onDriver.isDefined) return onDriver.get
     val e = pairs
       .select(col("id_a").as("u"), col("id_b").as("v"))
       .unionAll(pairs.select(col("id_b").as("u"), col("id_a").as("v")))

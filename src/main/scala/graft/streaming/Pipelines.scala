@@ -133,6 +133,54 @@ object Pipelines {
     spark.read.schema(schema).parquet(path)
   }
 
+  /** The schema sidecar of a store data dir: a store whose first
+    * micro-batch is empty appends no row, so its data dir does not
+    * exist yet and a read-out has no footer to take a schema from. The
+    * writer then records the schema its appends will carry in
+    * `<data>.schema.json` ([[noteStoreSchema]]), and
+    * [[readStoreOrEmpty]] reads it back as an empty frame. */
+  private def schemaSidecar(data: String) =
+    new org.apache.hadoop.fs.Path(s"$data.schema.json")
+
+  /** Record `schema` as the row shape of the not-yet-written store
+    * data dir `data`: one small file through the Hadoop FS (no Spark
+    * job), written aside and renamed into place so a crash never
+    * leaves a torn sidecar; a no-op once the sidecar exists. */
+  private[graft] def noteStoreSchema(spark: org.apache.spark.sql.SparkSession,
+                                     data: String,
+                                     schema: org.apache.spark.sql.types.StructType): Unit = {
+    val p = schemaSidecar(data)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(p)) {
+      val tmp = new org.apache.hadoop.fs.Path(s"$p.tmp")
+      val out = fs.create(tmp, true)
+      try out.write(schema.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+      if (!fs.rename(tmp, p)) fs.delete(tmp, false)
+    }
+  }
+
+  /** [[readStore]] of `data`, or — when no row has been appended yet
+    * but an empty first micro-batch recorded the store's schema
+    * ([[noteStoreSchema]]) — an empty frame of that schema, so a
+    * read-out over it is empty instead of failing with PATH_NOT_FOUND.
+    * A store no writer ever opened still fails as [[readStore]] does. */
+  private[graft] def readStoreOrEmpty(spark: org.apache.spark.sql.SparkSession,
+                                      data: String): DataFrame = {
+    val p = schemaSidecar(data)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    if (openStore(spark, data) || !fs.exists(p)) readStore(spark, data)
+    else {
+      val in = fs.open(p)
+      val json =
+        try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+        finally in.close()
+      spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](),
+        org.apache.spark.sql.types.DataType.fromJson(json)
+          .asInstanceOf[org.apache.spark.sql.types.StructType])
+    }
+  }
+
   /** Heal a torn [[swapStore]] (crash windows documented there): if
     * the live dir is missing but a candidate copy is complete
     * (`_SUCCESS` present — every candidate was itself a fully-written
@@ -257,10 +305,14 @@ object Pipelines {
     * identical (hash-verified), so this is conf, not semantics.
     * Production tuning: size to state VOLUME (state bytes per
     * partition in the 64-256 MB band), not executor count — set the
-    * env for a cluster run. Default 8 keeps one store instance per
-    * core at the bench's lower core count and bounds commit fan-out. */
-  private def streamStatePartitions: Int =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8").toInt
+    * env for a cluster run. The default, min(8, the session's default
+    * parallelism), keeps one store instance per core and caps commit
+    * fan-out at 8: on fewer than 8 cores a drained stream never
+    * commits more instances per batch than there are cores to run
+    * them, and on 8 or more the count is the flat 8 it always was. */
+  private def streamStatePartitions(spark: org.apache.spark.sql.SparkSession): Int =
+    sys.env.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS").map(_.toInt)
+      .getOrElse(math.min(8, spark.sparkContext.defaultParallelism))
 
   def runToMemory(streamDf: DataFrame): DataFrame = {
     val spark = streamDf.sparkSession
@@ -271,7 +323,7 @@ object Pipelines {
     // stop so the stream thread never races a narrower window)
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions",
-      streamStatePartitions.toString)
+      streamStatePartitions(spark).toString)
     try {
       val q = streamDf.writeStream.format("memory").queryName(name)
         .outputMode("append").start()
@@ -1155,6 +1207,7 @@ object Pipelines {
       // next batch's read.
       if (DedupStore.hasData(spark, storePath) || !changes.isEmpty)
         DedupStore.append(changes, storePath)
+      else noteStoreSchema(spark, s"$storePath/data", changes.schema)
       sink(changes)
       changes.unpersist()
       ()
@@ -1188,7 +1241,7 @@ object Pipelines {
     // deterministic tie-break for them
     val wk = org.apache.spark.sql.expressions.Window
       .partitionBy(col("k")).orderBy(col("valid_from"), col("batch_id"))
-    readStore(spark, s"$storePath/data")
+    readStoreOrEmpty(spark, s"$storePath/data")
       .where(col("batch_id") <= asOfBatch)
       .select(col("k") +: col("snap_ts").as("valid_from") +:
         attrCols.map(col) :+ col("batch_id"): _*)
@@ -1376,12 +1429,30 @@ object Pipelines {
       val pbs = probe.map(_.getInt(0)).toSeq
       val emptyOut = ev.select(col("id"), lit(0L).as("n_subtree"),
         lit(0L).as("subtree_sum")).limit(0)
+      // the batch's log rows: both row families, null-padded to the
+      // union schema, in ONE frame (see the commit below)
+      def logRows(accNew: DataFrame): DataFrame = {
+        val pT = ev.schema("parent").dataType
+        val vT = ev.schema("value").dataType
+        val nodeRows = ev.select(col("id"), col("parent"), col("value"),
+          lit(null).cast("long").as("n_subtree"),
+          lit(null).cast("long").as("subtree_sum"),
+          lit("n").as("fam"), col("pb"))
+        val accRows = accNew.select(col("id"),
+          lit(null).cast(pT).as("parent"), lit(null).cast(vT).as("value"),
+          col("n_subtree"), col("subtree_sum"),
+          lit("a").as("fam"), col("pb"))
+        nodeRows.unionByName(accRows).withColumn("batch_id", lit(batchId))
+      }
       if (pbs.isEmpty) {
         // An EMPTY micro-batch (foreachBatch can deliver one) folds to
         // nothing and must APPEND nothing: appending a zero-row frame
         // to a FRESH store would create a schema-less data dir holding
         // only _SUCCESS, poisoning every later read with 'Unable to
-        // infer schema'.
+        // infer schema'. A fresh store records its row schema instead.
+        if (!DedupStore.hasData(spark, logP))
+          noteStoreSchema(spark, s"$logP/data",
+            logRows(emptyOut.withColumn("pb", lit(0))).schema)
         sink(emptyOut)
         return
       }
@@ -1569,18 +1640,7 @@ object Pipelines {
       // fresh store can never be poisoned by a schema-less dir and no
       // emptiness probe is needed. The write is the materializing
       // action for accNew; sink() below reads it from the persist cache.
-      val pT = ev.schema("parent").dataType
-      val vT = ev.schema("value").dataType
-      val nodeRows = ev.select(col("id"), col("parent"), col("value"),
-        lit(null).cast("long").as("n_subtree"),
-        lit(null).cast("long").as("subtree_sum"),
-        lit("n").as("fam"), col("pb"))
-      val accRows = accNew.select(col("id"),
-        lit(null).cast(pT).as("parent"), lit(null).cast(vT).as("value"),
-        col("n_subtree"), col("subtree_sum"),
-        lit("a").as("fam"), col("pb"))
-      nodeRows.unionByName(accRows)
-        .withColumn("batch_id", lit(batchId))
+      logRows(accNew)
         .repartition(col("pb"))
         .write.mode("append").partitionBy("fam", "pb")
         .parquet(s"$logP/data")
@@ -1598,7 +1658,7 @@ object Pipelines {
     * pointer forest (spec-asserted at every batch boundary). */
   def hierStoreAggregates(spark: org.apache.spark.sql.SparkSession,
                           storePath: String): DataFrame =
-    readStore(spark, s"$storePath/log/data")
+    readStoreOrEmpty(spark, s"$storePath/log/data")
       .where(col("fam") === "a")
       .groupBy(col("id"))
       .agg(max(struct(col("batch_id"), col("n_subtree"),
@@ -1732,37 +1792,31 @@ object Pipelines {
       // had to fit in a broadcast anyway). A larger batch falls back
       // to the distributed O(log n) edge-rewiring CC unchanged — the
       // 100 TB path never collects.
-      // `driverCcMaxEdges <= 0` means NEVER collect (the bfsHops
-      // guard): without it a zero budget still ran a limit(1) probe
-      // job every batch, and a fully-collapsed (replayed) batch's
-      // EMPTY supernode edge set satisfied `probe.length <= 0` and
-      // silently took the driver path the setting meant to disable.
-      val probe =
-        if (driverCcMaxEdges > 0)
-          sedges.limit(driverCcMaxEdges + 1).collect()
-        else Array.empty[org.apache.spark.sql.Row]
+      // `driverCcMaxEdges <= 0` means NEVER collect (the shared
+      // [[graft.operators.DriverPath.collectWithin]] probe runs no job
+      // then), and the fallback passes the CC a zero budget: the edge
+      // set is already known to be over this one, or the setting means
+      // to force the distributed rewiring loop.
+      val probe = graft.operators.DriverPath.collectWithin(sedges, driverCcMaxEdges)
       val comp: DataFrame =
-        if (driverCcMaxEdges > 0 && probe.length <= driverCcMaxEdges) {
+        if (probe.isDefined) {
           // min-rooted union-find (shared with [[graft.operators.Dedup
           // .dupClusters]]' bounded driver path): the smaller root
           // adopts the larger, so every tree's root is its component
           // minimum — exactly dupClusters' cluster_rep (spec-asserted
-          // equal on both paths); strings compare by UTF-8 bytes to
-          // match Spark's min()/binary ordering.
-          val (find, vs) = graft.operators.Dedup.driverMinForest(probe)
+          // equal on both paths), in Spark's id order.
+          val (find, vs) = graft.operators.Dedup.driverMinForest(probe.get)
           val idType = pairs.schema("id_a").dataType
           val schema = org.apache.spark.sql.types.StructType(Seq(
             org.apache.spark.sql.types.StructField("snode", idType),
             org.apache.spark.sql.types.StructField("winner", idType)))
-          broadcast(spark.createDataFrame(
-            spark.sparkContext.parallelize(
-              vs.iterator.map(v => org.apache.spark.sql.Row(v, find(v)))
-                .toSeq, 1),
-            schema))
+          broadcast(graft.operators.DriverPath.localFrame(spark, schema,
+            vs.iterator.map(v => org.apache.spark.sql.Row(v, find(v))).toSeq))
         } else {
           val snodes = sedges.select(col("id_a").as("id"))
             .unionByName(sedges.select(col("id_b").as("id"))).distinct()
-          graft.operators.Dedup.dupClusters(snodes, "id", sedges)
+          graft.operators.Dedup.dupClusters(snodes, "id", sedges,
+              driverMaxEdges = 0)
             .select(col("id").as("snode"), col("cluster_rep").as("winner"))
         }
       // ONE accumulator frame — (id, pb, kcid, rep) per batch vertex —
@@ -1803,6 +1857,7 @@ object Pipelines {
         .select(col("id"), col("rep").as("cid"), col("pb"))
       if (DedupStore.hasData(spark, members) || newAcc.value > 0L)
         DedupStore.append(newMembers, members)
+      else noteStoreSchema(spark, s"$members/data", newMembers.schema)
       // merge events: a KNOWN root that lost its minimum points at the
       // winner; roots that stayed minimal append nothing
       if (mergeAcc.value > 0L) {
@@ -1891,7 +1946,7 @@ object Pipelines {
   def clusterStoreReps(spark: org.apache.spark.sql.SparkSession,
                        storePath: String): DataFrame =
     resolveCids(spark,
-      readStore(spark, s"$storePath/members/data").select("id", "cid"),
+      readStoreOrEmpty(spark, s"$storePath/members/data").select("id", "cid"),
       storePath)
       .groupBy(col("id")).agg(min(col("cid")).as("cluster_rep"))
 

@@ -394,6 +394,20 @@ object Soak {
       }
       kcoreRun(30_000) // warm
       gate("kcore_ring", "10x edges", 30.0)(kcoreRun(30_000), kcoreRun(300_000))
+      // label propagation + its modularity census, driverMaxEdges = 0:
+      // the DISTRIBUTED rounds and census are the scale contract — the
+      // driver path would absorb the 30k ring and make the gate vacuous
+      def lpaModRun(n: Long): Long = {
+        val r = ring(n)
+        val edges = r.select(col("id_a").as("src"), col("id_b").as("dst"))
+          .unionAll(r.select(col("id_b").as("src"), col("id_a").as("dst")))
+        val labels = GraphOps.labelPropagation(spark.range(n).select(col("id")),
+          edges, iters = 3, driverMaxEdges = 0)
+        GraphOps.modularity(labels, edges, driverMaxEdges = 0).count()
+      }
+      lpaModRun(30_000) // warm
+      gate("lpa_modularity_ring", "10x edges", 30.0)(
+        lpaModRun(30_000), lpaModRun(300_000))
       // hub-heavy link prediction: an n-leaf star riding a small ring —
       // without the maxDegree cap the hub alone generates O(n²) wedges
       // (the boilerplate-hub cliff); with the cap the hub drops from

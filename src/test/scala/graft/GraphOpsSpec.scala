@@ -8,6 +8,11 @@ import org.apache.spark.sql.functions._
 class GraphOpsSpec extends SparkSpec {
   import spark.implicits._
 
+  /** The two paths of a graph operator with a driver branch, as its
+    * `driverMaxEdges`: the shared budget (driver), and 0 (forced
+    * distributed). */
+  private val Paths = Seq("driver" -> -1, "distributed" -> 0)
+
   // path 1—2—3 (symmetrized) plus isolated vertex 4
   private def fixture = {
     val vertices = Seq(1L, 2L, 3L, 4L).toDF("id")
@@ -55,20 +60,22 @@ class GraphOpsSpec extends SparkSpec {
       (4L, 5L), (4L, 6L), (5L, 6L), (3L, 4L))
     val edges = pairs.toDF("src", "dst")
       .unionAll(pairs.map(_.swap).toDF("src", "dst"))
-    def lp(iters: Int): Map[Long, Long] =
-      GraphOps.labelPropagation(vertices, edges, iters)
-        .as[(Long, Long)].collect().toMap
-    // round 1 from own-id labels (plurality of neighbor labels,
-    // ties → min): 1 sees {2,3}→2; 2 sees {1,3}→1; 3 sees {1,2,4}→1;
-    // 4 sees {3,5,6}→3; 5 sees {4,6}→4; 6 sees {4,5}→4; 7 isolated
-    assert(lp(1) === Map(1L -> 2L, 2L -> 1L, 3L -> 1L, 4L -> 3L,
-      5L -> 4L, 6L -> 4L, 7L -> 7L))
-    // after 3 synchronous rounds the triangles have settled on one
-    // label each — and the bridge did NOT merge them (CC would)
-    val got = lp(3)
-    assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 3L,
-      5L -> 3L, 6L -> 3L, 7L -> 7L))
-    assert(lp(3) === got, "label propagation must be deterministic")
+    for ((path, budget) <- Paths) withClue(s"$path path: ") {
+      def lp(iters: Int): Map[Long, Long] =
+        GraphOps.labelPropagation(vertices, edges, iters, driverMaxEdges = budget)
+          .as[(Long, Long)].collect().toMap
+      // round 1 from own-id labels (plurality of neighbor labels,
+      // ties → min): 1 sees {2,3}→2; 2 sees {1,3}→1; 3 sees {1,2,4}→1;
+      // 4 sees {3,5,6}→3; 5 sees {4,6}→4; 6 sees {4,5}→4; 7 isolated
+      assert(lp(1) === Map(1L -> 2L, 2L -> 1L, 3L -> 1L, 4L -> 3L,
+        5L -> 4L, 6L -> 4L, 7L -> 7L))
+      // after 3 synchronous rounds the triangles have settled on one
+      // label each — and the bridge did NOT merge them (CC would)
+      val got = lp(3)
+      assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 3L,
+        5L -> 3L, 6L -> 3L, 7L -> 7L))
+      assert(lp(3) === got, "label propagation must be deterministic")
+    }
   }
 
   test("modularity: hand-computed integer parts on the bridged triangles; isolated is a zero singleton") {
@@ -79,17 +86,19 @@ class GraphOpsSpec extends SparkSpec {
       .unionAll(pairs.map(_.swap).toDF("src", "dst"))
     val labels = Seq(1L -> 1L, 2L -> 1L, 3L -> 1L,
       4L -> 3L, 5L -> 3L, 6L -> 3L, 7L -> 7L).toDF("id", "community")
-    val got = GraphOps.modularity(labels, edges)
-      .as[(Long, Long, Long, Long, Long, Long)].collect().sortBy(_._1)
-    // c1: degrees 2+2+3 = 7, intra 3 undirected = 6 directed →
-    //   part = 14·6 − 7² = 35; c3 symmetric; c7 isolated → 0
-    assert(got.toSeq === Seq(
-      (1L, 3L, 7L, 6L, 35L, 14L),
-      (3L, 3L, 7L, 6L, 35L, 14L),
-      (7L, 1L, 0L, 0L, 0L, 14L)))
-    // Q = Σ parts / E2² = 70/196 ≈ 0.357 — denser than chance, as a
-    // two-community split of bridged triangles should be
-    assert(got.map(_._5).sum.toDouble / (14.0 * 14.0) > 0.3)
+    for ((path, budget) <- Paths) withClue(s"$path path: ") {
+      val got = GraphOps.modularity(labels, edges, driverMaxEdges = budget)
+        .as[(Long, Long, Long, Long, Long, Long)].collect().sortBy(_._1)
+      // c1: degrees 2+2+3 = 7, intra 3 undirected = 6 directed →
+      //   part = 14·6 − 7² = 35; c3 symmetric; c7 isolated → 0
+      assert(got.toSeq === Seq(
+        (1L, 3L, 7L, 6L, 35L, 14L),
+        (3L, 3L, 7L, 6L, 35L, 14L),
+        (7L, 1L, 0L, 0L, 0L, 14L)))
+      // Q = Σ parts / E2² = 70/196 ≈ 0.357 — denser than chance, as a
+      // two-community split of bridged triangles should be
+      assert(got.map(_._5).sum.toDouble / (14.0 * 14.0) > 0.3)
+    }
   }
 
   test("modularityRefineRound: hand-computed gain moves the mislabeled bridge vertex; gain adds exactly to the Q-part delta; settled partition is a fixpoint") {
@@ -239,18 +248,22 @@ class GraphOpsSpec extends SparkSpec {
     val wpairs = Seq((3L, 9L, 3L), (3L, 4L, 1L), (3L, 5L, 1L))
     val wedges = wpairs.toDF("src", "dst", "w")
       .unionAll(wpairs.map(t => (t._2, t._1, t._3)).toDF("src", "dst", "w"))
-    val wgot = GraphOps.labelPropagationWeighted(verts, wedges, iters = 1)
-      .as[(Long, Long)].collect().toMap
-    assert(wgot(3L) === 9L, "weight-sum plurality: 3 beats 1+1 ties")
-    val ugot = GraphOps.labelPropagation(verts,
-        wedges.select(col("src"), col("dst")), iters = 1)
-      .as[(Long, Long)].collect().toMap
-    assert(ugot(3L) === 4L, "unweighted three-way tie -> smallest label")
-    val onesGot = GraphOps.labelPropagationWeighted(verts,
-        wedges.select(col("src"), col("dst")).withColumn("w", lit(1L)),
-        iters = 1)
-      .as[(Long, Long)].collect().toMap
-    assert(onesGot === ugot)
+    for ((path, budget) <- Paths) withClue(s"$path path: ") {
+      val wgot = GraphOps.labelPropagationWeighted(verts, wedges, iters = 1,
+          driverMaxEdges = budget)
+        .as[(Long, Long)].collect().toMap
+      assert(wgot(3L) === 9L, "weight-sum plurality: 3 beats 1+1 ties")
+      val ugot = GraphOps.labelPropagation(verts,
+          wedges.select(col("src"), col("dst")), iters = 1,
+          driverMaxEdges = budget)
+        .as[(Long, Long)].collect().toMap
+      assert(ugot(3L) === 4L, "unweighted three-way tie -> smallest label")
+      val onesGot = GraphOps.labelPropagationWeighted(verts,
+          wedges.select(col("src"), col("dst")).withColumn("w", lit(1L)),
+          iters = 1, driverMaxEdges = budget)
+        .as[(Long, Long)].collect().toMap
+      assert(onesGot === ugot)
+    }
   }
 
   test("louvainWeighted: weight flips the partition vs unweighted on the same topology; exact weighted Q parts; w=1 degrades to unweighted; weighted coarsening preserves exact parts") {
@@ -277,10 +290,12 @@ class GraphOpsSpec extends SparkSpec {
     // c1: d_c = 42, intra_w = 40 → 46·40 − 42² = 76; c3: d_c = 4,
     // intra_w = 2 → 46·2 − 16 = 76
     val lwDf = lw.toSeq.toDF("id", "community")
-    val mw = GraphOps.modularityWeighted(lwDf, wedges)
-      .as[(Long, Long, Long, Long, Long, Long)].collect().sortBy(_._1)
-    assert(mw.toSeq === Seq((1L, 3L, 42L, 40L, 76L, 46L),
-      (3L, 2L, 4L, 2L, 76L, 46L)))
+    for ((path, budget) <- Paths) withClue(s"$path path: ") {
+      val mw = GraphOps.modularityWeighted(lwDf, wedges, driverMaxEdges = budget)
+        .as[(Long, Long, Long, Long, Long, Long)].collect().sortBy(_._1)
+      assert(mw.toSeq === Seq((1L, 3L, 42L, 40L, 76L, 46L),
+        (3L, 2L, 4L, 2L, 76L, 46L)))
+    }
     // a second level is a fixpoint (both coarse supervertices lose
     // −152 by merging)
     val lw2 = GraphOps.louvainWeighted(verts, wedges,
@@ -292,11 +307,13 @@ class GraphOpsSpec extends SparkSpec {
       levels = 1, sweepsPerLevel = 2).as[(Long, Long)].collect().toMap
     assert(lw1 === lu)
     val luDf = lu.toSeq.toDF("id", "community")
-    val uw = GraphOps.modularity(luDf, edges)
-      .as[(Long, Long, Long, Long, Long, Long)].collect().toSet
-    val w1 = GraphOps.modularityWeighted(luDf, ones)
-      .as[(Long, Long, Long, Long, Long, Long)].collect().toSet
-    assert(w1 === uw)
+    for ((path, budget) <- Paths) withClue(s"$path path: ") {
+      val uw = GraphOps.modularity(luDf, edges, driverMaxEdges = budget)
+        .as[(Long, Long, Long, Long, Long, Long)].collect().toSet
+      val w1 = GraphOps.modularityWeighted(luDf, ones, driverMaxEdges = budget)
+        .as[(Long, Long, Long, Long, Long, Long)].collect().toSet
+      assert(w1 === uw)
+    }
     // WEIGHTED COARSENING LAW: weight-summing coarsening preserves the
     // exact 4W² parts of the composed partition (n_members excluded —
     // supervertices are singletons)
@@ -632,5 +649,151 @@ class GraphOpsSpec extends SparkSpec {
       .select(col("id").cast("long"), col("hop"))
       .as[(Long, Long)].collect().toMap
     assert(coerced === Map(1L -> 0L, 2L -> 1L, 3L -> 0L, 4L -> 1L))
+  }
+
+  /** A parity case: vertices `(id)`, weighted edges `(src, dst, w)`,
+    * the budget of the driver run, and whether that run may take the
+    * driver path, per operator kind (weighted or not). */
+  private case class GraphCase(name: String,
+                               vertices: () => org.apache.spark.sql.DataFrame,
+                               edges: () => org.apache.spark.sql.DataFrame,
+                               budget: Int = -1,
+                               driver: Boolean => Boolean = _ => true)
+
+  private def sym[A](pairs: Seq[(A, A, Long)]): Seq[(A, A, Long)] =
+    pairs ++ pairs.map(t => (t._2, t._1, t._3))
+
+  private lazy val parityCases = Seq(
+    GraphCase("vote ties",
+      () => (1L to 5L).toDF("id"),
+      () => sym(Seq((1L, 2L, 2L), (1L, 3L, 2L), (2L, 3L, 1L), (3L, 4L, 1L),
+        (4L, 5L, 3L))).toDF("src", "dst", "w")),
+    GraphCase("isolated vertices",
+      () => Seq(1L, 2L, 3L, 7L, 8L).toDF("id"),
+      () => sym(Seq((1L, 2L, 1L), (2L, 3L, 1L))).toDF("src", "dst", "w")),
+    GraphCase("edges to non-vertices",
+      () => (1L to 3L).toDF("id"),
+      () => (sym(Seq((1L, 2L, 1L), (2L, 3L, 4L))) ++
+        Seq((1L, 99L, 5L), (98L, 1L, 5L), (3L, 97L, 9L), (96L, 95L, 1L)))
+        .toDF("src", "dst", "w")),
+    GraphCase("duplicate edges and self-loops",
+      () => (1L to 4L).toDF("id"),
+      () => (sym(Seq((1L, 2L, 1L), (1L, 2L, 1L), (2L, 3L, 2L))) ++
+        Seq((3L, 3L, 5L), (4L, 4L, 1L), (4L, 4L, 1L))).toDF("src", "dst", "w")),
+    GraphCase("empty edge list",
+      () => (1L to 3L).toDF("id"),
+      () => Seq.empty[(Long, Long, Long)].toDF("src", "dst", "w")),
+    // U+1D538 sorts BEFORE U+FF21 in UTF-16 code units (a surrogate
+    // pair) but AFTER it in UTF-8 bytes, Spark's order: x's tie between
+    // them must go to "Ａ"
+    GraphCase("non-ASCII string ids (UTF-8 order)",
+      () => Seq("x", "\uD835\uDD38", "\uFF21", "é", "e").toDF("id"),
+      () => sym(Seq(("x", "\uD835\uDD38", 1L), ("x", "\uFF21", 1L),
+        ("é", "e", 2L), ("e", "\uFF21", 1L))).toDF("src", "dst", "w")),
+    GraphCase("over budget falls back",
+      () => (1L to 6L).toDF("id"),
+      () => sym((1L to 5L).map(i => (i, i + 1, 1L))).toDF("src", "dst", "w"),
+      budget = 3, driver = _ => false),
+    GraphCase("null weight falls back (weighted only)",
+      () => (1L to 3L).toDF("id"),
+      () => Seq((1L, 2L, Option(1L)), (2L, 1L, None), (2L, 3L, Some(2L)),
+        (3L, 2L, Some(2L))).toDF("src", "dst", "w"),
+      driver = weighted => !weighted),
+    GraphCase("null endpoint falls back",
+      () => (1L to 3L).toDF("id"),
+      () => Seq((1L, Option(2L), 1L), (2L, Some(1L), 1L), (3L, None, 1L))
+        .toDF("src", "dst", "w"),
+      driver = _ => false),
+    GraphCase("duplicate vertex id falls back",
+      () => Seq(1L, 2L, 2L, 3L).toDF("id"),
+      () => sym(Seq((1L, 2L, 1L), (2L, 3L, 1L))).toDF("src", "dst", "w"),
+      driver = _ => false))
+
+  private def isLocal(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.analyzed.collectLeaves().forall(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+
+  test("driver path ≡ distributed path for LPA, weighted LPA, modularity and weighted modularity") {
+    for (c <- parityCases; weighted <- Seq(false, true)) {
+      val e = if (weighted) c.edges() else c.edges().select(col("src"), col("dst"))
+      // modularity scores the (distributed) two-round LPA partition
+      lazy val labels = (if (weighted)
+          GraphOps.labelPropagationWeighted(c.vertices(), e, 2, driverMaxEdges = 0)
+        else GraphOps.labelPropagation(c.vertices(), e, 2, driverMaxEdges = 0))
+        .select(col("id"), col("community"))
+      def lpa(iters: Int)(b: Int) =
+        if (weighted)
+          GraphOps.labelPropagationWeighted(c.vertices(), e, iters, driverMaxEdges = b)
+        else GraphOps.labelPropagation(c.vertices(), e, iters, driverMaxEdges = b)
+      val ops: Seq[(String, Int => org.apache.spark.sql.DataFrame)] = Seq(
+        "lpa 1 round" -> lpa(1), "lpa 3 rounds" -> lpa(3),
+        "modularity" -> (b => if (weighted)
+          GraphOps.modularityWeighted(labels, e, driverMaxEdges = b)
+          else GraphOps.modularity(labels, e, driverMaxEdges = b)))
+      for ((op, run) <- ops) withClue(s"${c.name}, $op, weighted=$weighted: ") {
+        val dist = run(0)
+        val drv = run(c.budget)
+        assert(!isLocal(dist))
+        assert(isLocal(drv) === c.driver(weighted), "path taken")
+        assert(drv.schema.map(f => f.name -> f.dataType) ===
+          dist.schema.map(f => f.name -> f.dataType))
+        assert(rowsOf(drv) === rowsOf(dist))
+      }
+    }
+  }
+
+  test("driver LPA breaks a vote tie by UTF-8 order, not UTF-16") {
+    val c = parityCases.find(_.name.startsWith("non-ASCII")).get
+    val got = GraphOps.labelPropagation(c.vertices(),
+        c.edges().select(col("src"), col("dst")), iters = 1)
+      .as[(String, String)].collect().toMap
+    assert(got("x") === "\uFF21")
+  }
+
+  test("driver modularity overflow fails loudly instead of wrapping") {
+    val labels = Seq(1L -> 1L, 2L -> 1L).toDF("id", "community")
+    val edges = Seq((1L, 2L, Long.MaxValue / 2), (2L, 1L, Long.MaxValue / 2))
+      .toDF("src", "dst", "w")
+    val err = intercept[ArithmeticException] {
+      GraphOps.modularityWeighted(labels, edges).collect()
+    }
+    assert(err.getMessage.contains("overflow"))
+  }
+
+  test("graph jobs carry a job description naming the operator phase, and the caller's is restored") {
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import scala.jdk.CollectionConverters._
+    val seen = new ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(seen.add)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobDescription("outer")
+      // range-backed frames: a probe of a local relation runs no job
+      val vertices = spark.range(1, 5).select(col("id"))
+      val path = spark.range(1, 3).select(col("id").as("src"),
+        (col("id") + 1L).as("dst"))
+      val edges = path.unionAll(path.select(col("dst").as("src"), col("src").as("dst")))
+      val onDriver = GraphOps.labelPropagation(vertices, edges, iters = 2)
+      GraphOps.modularity(onDriver, edges).collect()
+      GraphOps.labelPropagation(vertices, edges, iters = 2, driverMaxEdges = 0)
+      assert(sc.getLocalProperty("spark.job.description") === "outer")
+      val want = Seq("GraphOps.lpa probe", "GraphOps.modularity probe",
+        "GraphOps.lpa round=1", "GraphOps.lpa round=2")
+      val deadline = System.nanoTime() + 10000000000L
+      while (!want.forall(seen.contains) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(want.forall(seen.contains), seen.asScala.toSeq)
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
   }
 }

@@ -1720,6 +1720,72 @@ class StreamingPipelinesSpec extends SparkSpec {
     assert(canon(fresh.enrich(facts, "ck", "ts")) === batch)
   }
 
+  /** (name, type) of each column: the shape a read-out promises. */
+  private def shape(df: org.apache.spark.sql.DataFrame) =
+    df.schema.map(f => f.name -> f.dataType)
+
+  /** An scd2 store whose first micro-batch was empty, its ingest, and
+    * one non-empty dim batch for it. */
+  private def scd2AfterEmptyBatch() = {
+    val store = java.nio.file.Files.createTempDirectory("scdempty").toString
+    val ingest = Pipelines.scd2IngestStream("k", "snap_ts", Seq("seg"), store,
+      buckets = 8)()
+    val dim = Seq((1L, ts(0), "a"), (2L, ts(1), "b")).toDF("k", "snap_ts", "seg")
+    ingest(dim.limit(0), 0L)
+    (store, ingest, dim)
+  }
+
+  test("scd2StoreIntervals after an empty first micro-batch: empty, with the schema a non-empty store reads back") {
+    val (store, ingest, dim) = scd2AfterEmptyBatch()
+    val empty = Pipelines.scd2StoreIntervals(spark, store, Seq("seg"))
+    assert(empty.count() === 0L)
+    ingest(dim, 1L)
+    val full = Pipelines.scd2StoreIntervals(spark, store, Seq("seg"))
+    assert(full.count() === 2L)
+    assert(shape(empty) === shape(full))
+  }
+
+  test("scd2StoreIntervalsAsOf after an empty first micro-batch: empty, with the schema a non-empty store reads back") {
+    val (store, ingest, dim) = scd2AfterEmptyBatch()
+    val empty = Pipelines.scd2StoreIntervalsAsOf(spark, store, Seq("seg"), 0L)
+    assert(empty.count() === 0L)
+    ingest(dim, 1L)
+    assert(Pipelines.scd2StoreIntervalsAsOf(spark, store, Seq("seg"), 0L)
+      .count() === 0L, "batch 1's changes are invisible as of batch 0")
+    val full = Pipelines.scd2StoreIntervalsAsOf(spark, store, Seq("seg"), 1L)
+    assert(full.count() === 2L)
+    assert(shape(empty) === shape(full))
+  }
+
+  test("hierStoreAggregates after an empty first micro-batch: empty, with the schema a non-empty store reads back") {
+    val store = java.nio.file.Files.createTempDirectory("hierempty").toString
+    val ingest = Pipelines.hierarchyIngestStream(store, buckets = 8)()
+    val nodes = Seq((1L, Option.empty[Long], 5L), (2L, Some(1L), 7L))
+      .toDF("id", "parent", "value")
+    ingest(nodes.limit(0), 0L)
+    val empty = Pipelines.hierStoreAggregates(spark, store)
+    assert(empty.count() === 0L)
+    ingest(nodes, 1L)
+    val full = Pipelines.hierStoreAggregates(spark, store)
+    assert(full.as[(Long, Long, Long)].collect().toSet ===
+      Set((1L, 2L, 12L), (2L, 1L, 7L)))
+    assert(shape(empty) === shape(full))
+  }
+
+  test("clusterStoreReps after an empty first micro-batch: empty, with the schema a non-empty store reads back") {
+    val store = java.nio.file.Files.createTempDirectory("clstempty").toString
+    val ingest = Pipelines.clusterIngestStream(store, buckets = 8)()
+    val pairs = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
+    ingest(pairs.limit(0), 0L)
+    val empty = Pipelines.clusterStoreReps(spark, store)
+    assert(empty.count() === 0L)
+    ingest(pairs, 1L)
+    val full = Pipelines.clusterStoreReps(spark, store)
+    assert(full.as[(Long, Long)].collect().toSet ===
+      Set((1L, 1L), (2L, 1L), (3L, 1L)))
+    assert(shape(empty) === shape(full))
+  }
+
   test("splitAgainstStore: reads the store's pinned bucket count, not a default of its own") {
     import graft.operators.{Dedup, Sampling}
     val store = java.nio.file.Files.createTempDirectory("splpinned").toString
