@@ -85,14 +85,4 @@ object Tables {
   }
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
-
-  /** Register all tables as temp views for `spark.sql(...)` use.
-    * `events` registers through [[events]] (micros timestamp), not the
-    * raw nanos-long parquet, so the SQL surface sees the same `ts` type
-    * and values as every DataFrame query and the DuckDB oracle. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach {
-      case "events" => events(spark, dir).createOrReplaceTempView("events")
-      case n => load(spark, dir, n).createOrReplaceTempView(n)
-    }
 }

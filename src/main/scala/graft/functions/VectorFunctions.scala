@@ -39,23 +39,8 @@ object VectorFunctions {
       .otherwise(when(na === nb, lit(1.0)).otherwise(lit(0.0)))
   }
 
-  /** Explicit fully-unrolled dot product for a KNOWN dimension — the
-    * exact same expression (and therefore the exact same IEEE summation
-    * order) is generated for the DuckDB oracle by [[dotSql]], making
-    * cosine results bit-identical across engines. */
-  def dotUnrolled(a: Column, b: Column, dim: Int): Column =
-    (1 to dim).map(i => element_at(a, i).cast("double") * element_at(b, i).cast("double"))
-      .reduceLeft(_ + _)
-
-  def cosineUnrolled(a: Column, b: Column, dim: Int): Column = {
-    val na = dotUnrolled(a, a, dim); val nb = dotUnrolled(b, b, dim)
-    val denom = sqrt(na * nb)
-    when(denom > 0, dotUnrolled(a, b, dim) / denom)
-      .otherwise(when(na === nb, lit(1.0)).otherwise(lit(0.0)))
-  }
-
-  /** DuckDB SQL text for the same unrolled dot product (1-based list
-    * indexing there too). */
+  /** DuckDB SQL text for a fully-unrolled dot product over a KNOWN
+    * dimension (1-based list indexing), summed left to right. */
   def dotSql(a: String, b: String, dim: Int): String =
     (1 to dim).map(i =>
       s"CAST($a[$i] AS DOUBLE) * CAST($b[$i] AS DOUBLE)").mkString(" + ")

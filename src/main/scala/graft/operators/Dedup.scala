@@ -480,12 +480,10 @@ object Dedup {
         .getField("m").as("sig"))
   }
 
-  /** LSH candidate pairs: band the K-element signature into `bands`
-    * groups of K/bands rows, bucket = md5(concat(band rows)), join on
-    * (band, bucket). Probability a pair with Jaccard j becomes a
-    * candidate: 1 - (1 - j^(K/bands))^bands. */
   /** Band a (id, sig) frame into (id, sig, band, bucket) rows —
-    * bucket = md5 over the band's signature slice. */
+    * bucket = md5 over the band's signature slice, K/bands rows per
+    * band. A pair with Jaccard j shares some (band, bucket) with
+    * probability 1 - (1 - j^(K/bands))^bands. */
   def lshBuckets(sigs: DataFrame, k: Int, bands: Int): DataFrame = {
     require(k % bands == 0, "k must be divisible by bands")
     val rows = k / bands
@@ -497,17 +495,6 @@ object Dedup {
     sigs.select(col("id"), col("sig"), explode(array(bandCols: _*)).as("bb"))
       .select(col("id"), col("sig"),
         col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-  }
-
-  def lshCandidates(df: DataFrame, idCol: String, textCol: String,
-                    n: Int = 3, k: Int = 9, bands: Int = 3): DataFrame = {
-    val sigs = minhashSignatures(df, idCol, textCol, n, k)
-    val banded = lshBuckets(sigs, k, bands).drop("sig")
-    banded.select(col("id").as("id_a"), col("band"), col("bucket"))
-      .join(banded.select(col("id").as("id_b"), col("band"), col("bucket")),
-        Seq("band", "bucket"))
-      .where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
   }
 
   /** MinHash-LSH near-dedup: LSH candidates verified with true shingle
@@ -1528,9 +1515,10 @@ object Dedup {
     * each document, how many of its content-defined chunks (and what
     * fraction of its characters) appear in ≥ `minDocs` distinct
     * documents. The shift-robust sibling of
-    * [[graft.operators.TextStats.dupChunkStats]] — a near-copy with an
-    * inserted sentence still shows a high `dup_char_frac` here because
-    * the chunk boundaries re-synchronize after the edit.
+    * [[graft.operators.TextStats.dupChunkStatsFromTokens]] — a
+    * near-copy with an inserted sentence still shows a high
+    * `dup_char_frac` here because the chunk boundaries re-synchronize
+    * after the edit.
     *
     * Scale: one chunk-keyed census shuffle (count DISTINCT doc per
     * chunk — map-side partial), verdicts join back on the chunk key

@@ -68,13 +68,11 @@ object Itemsets {
     rules(freq, pairs, nB)
   }
 
-  /** The rule-arithmetic tail shared by [[pairAssociations]] and the
-    * streaming store reader ([[graft.streaming.Pipelines
-    * .basketRulesFromStore]]): attach item counts to each pair (an
-    * inner join, so pairs with an infrequent member drop — downward
-    * closure again), apply the pair threshold, and compute the grid
-    * measures. `freqItems` is vocabulary-sized → broadcast; `nB` is
-    * one row. */
+  /** The rule-arithmetic tail of [[pairAssociations]]: attach item
+    * counts to each pair (an inner join, so pairs with an infrequent
+    * member drop — downward closure again), apply the pair threshold,
+    * and compute the grid measures. `freqItems` is vocabulary-sized →
+    * broadcast; `nB` is one row. */
   private[graft] def rules(freqItems: DataFrame, pairCounts: DataFrame,
                            nB: DataFrame): DataFrame =
     pairCounts
@@ -146,10 +144,4 @@ object Itemsets {
       .select(col("item"), col("nbr"), col("n_item"), col("n_nbr"),
         col("co"), col("cosine6"), col("rk"))
   }
-
-  /** Threshold row for a known basket count — (\_\_nb, \_\_min). */
-  private[graft] def thresholdOf(nBaskets: DataFrame,
-                                 minSupportFrac: Double): DataFrame =
-    nBaskets.select(col("__nb"),
-      ceil(lit(minSupportFrac) * col("__nb")).cast("long").as("__min"))
 }

@@ -49,27 +49,7 @@ object Profiling {
         col("min4"), col("max4"), col("min_s"), col("max_s"))
   }
 
-  /** [[profile]] with the exact distinct count swapped for a
-    * mergeable HLL sketch column — the INCREMENTAL profile shape: a
-    * per-batch row set whose every field merges losslessly (counts
-    * sum, min/max fold, sketches union) into the whole-history
-    * profile, so a streaming ingest can append one profile per batch
-    * and report over the store without re-scanning data
-    * ([[graft.streaming.Pipelines]]' profileStream). */
-  def profileSketched(df: DataFrame, numericCols: Seq[String],
-                      stringCols: Seq[String]): DataFrame = {
-    val base = profileCore(df, numericCols, stringCols)
-    val melted = df.select(explode(array(
-      (numericCols ++ stringCols).map { c =>
-        struct(lit(c).as("c"), col(c).cast("string").as("v"))
-      }: _*)).as("p")).select("p.*")
-    val sketches = melted.where(col("v").isNotNull)
-      .groupBy("c").agg(hll_sketch_agg(col("v"), 12).as("sketch"))
-    base.join(sketches.withColumnRenamed("c", "column"), Seq("column"), "left")
-  }
-
-  /** The non-distinct per-column profile rows (shared by [[profile]]
-    * and [[profileSketched]]). */
+  /** The non-distinct per-column profile rows of [[profile]]. */
   private def profileCore(df: DataFrame, numericCols: Seq[String],
                           stringCols: Seq[String]): DataFrame = {
     require(numericCols.nonEmpty || stringCols.nonEmpty, "no columns")

@@ -314,17 +314,6 @@ object Similarity {
       .withColumn("cid", array_min(distStructs(col("cv"), centroids)).getField("cid"))
       .select(col("corpus_id"), col("cv"), col("cid"))
 
-  /** [[ivfAssign]] that also keeps the assignment distance — (corpus_id,
-    * cv, cid, d2). The d2 column is the raw material for centroid-drift
-    * monitoring: still a pure map, no shuffle. */
-  def ivfAssignDist(corpus: DataFrame, idCol: String, vecCol: String,
-                    centroids: Array[(Int, Array[Double])]): DataFrame =
-    FanOut(corpus.select(col(idCol).as("corpus_id"),
-      transform(col(vecCol), _.cast("double")).as("cv")))
-      .withColumn("a", array_min(distStructs(col("cv"), centroids)))
-      .select(col("corpus_id"), col("cv"),
-        col("a.cid").as("cid"), col("a.d2").as("d2"))
-
   /** Simplified-silhouette clustering-quality report (Hruschka et al.'s
     * centroid form of Rousseeuw '87): per vector, a = distance to its
     * OWN centroid and b = distance to the nearest OTHER centroid, and
@@ -357,37 +346,6 @@ object Similarity {
       .agg(count(lit(1)).as("n_vecs"),
         round(avg(col("s6"))).cast("long").as("mean_s6"),
         sum(when(col("s6") < 0L, 1L).otherwise(0L)).as("n_neg"))
-  }
-
-  /** Persist the build-time assignment-distance BASELINE for a trained
-    * index — 1 row (n, mean_d2) — beside the [[ivfSave]]d centroids.
-    * Incremental ingestion drifts silently as the data distribution
-    * shifts away from what the centroids were trained on (recall decays
-    * with no error anywhere); comparing each batch's mean assignment
-    * distance against this baseline ([[ivfDriftReport]]) is the
-    * standing alarm that triggers a rebuild. */
-  def ivfStatsSave(corpus: DataFrame, idCol: String, vecCol: String,
-                   centroids: Array[(Int, Array[Double])],
-                   path: String): Unit =
-    ivfAssignDist(corpus, idCol, vecCol, centroids)
-      .agg(count(lit(1)).as("n"), avg(col("d2")).as("mean_d2"))
-      .coalesce(1).write.mode("overwrite").parquet(path)
-
-  /** Per-batch drift ratios over an ingest-metrics store (rows
-    * (batch_id, n, mean_d2) written by
-    * [[graft.streaming.Pipelines.ivfIngestStream]]) against the
-    * [[ivfStatsSave]] baseline: drift_ratio = batch mean_d2 ÷ build
-    * mean_d2. A sustained ratio ≫ 1 means the centroids no longer
-    * describe the incoming distribution — rebuild
-    * ([[graft.streaming.Pipelines.ivfRebuild]]). */
-  def ivfDriftReport(spark: org.apache.spark.sql.SparkSession,
-                     metricsPath: String, statsPath: String): DataFrame = {
-    val base = spark.read.parquet(statsPath)
-      .select(col("mean_d2").as("__base"))
-    spark.read.parquet(metricsPath)
-      .crossJoin(broadcast(base))
-      .select(col("batch_id"), col("n"), col("mean_d2"),
-        round(col("mean_d2") / col("__base"), 4).as("drift_ratio"))
   }
 
   /** Probe a built IVF index: each query scores only the inverted lists

@@ -171,20 +171,16 @@ object TextStats {
   }
 
   /** Cross-document duplicated-span fraction (the corpus-level cousin of
-    * the Gopher duplicate-n-gram signals, which are within-document):
-    * per document, the fraction of its `w`-word chunks that occur more
-    * than once ANYWHERE in the corpus. High fractions flag boilerplate
-    * and template families that per-doc repetition stats cannot see.
+    * the Gopher duplicate-n-gram signals, which are within-document),
+    * over a [[tokenized]] frame: per document, the fraction of its
+    * `w`-word chunks that occur more than once ANYWHERE in the corpus.
+    * High fractions flag boilerplate and template families that per-doc
+    * repetition stats cannot see.
     *
     * The census is a map-side-partial count joined back on the chunk
     * string (a per-chunk window would pile every occurrence of a
     * boilerplate heavy-hitter chunk onto one task); the re-aggregation
     * shuffles on doc id — both keyed shuffles even, never pairwise. */
-  def dupChunkStats(df: DataFrame, idCol: String, textCol: String,
-                    w: Int = 5): DataFrame =
-    dupChunkStatsFromTokens(tokenized(df, idCol, textCol), w)
-
-  /** [[dupChunkStats]] over a pre-built [[tokenized]] frame. */
   def dupChunkStatsFromTokens(toks: DataFrame, w: Int = 5): DataFrame = {
     val chunks = posChunksFromTokens(toks, w)
     val census = chunks.groupBy(col("s")).agg(count(lit(1)).as("c"))
@@ -1003,10 +999,9 @@ object TextStats {
   /** [[groupScoreDrift]] from a pre-aggregated grid-cell histogram
     * `(grp, s4, n)` — the drift face of the mergeable-histogram
     * contract ([[groupQuantilesFromCells]]): the corpus side is
-    * derived by summing the per-group cells, so an incremental store
-    * of per-batch histograms can answer "which batch shifted the
-    * distribution" without re-scanning ingested rows
-    * ([[graft.streaming.Pipelines]]' histDriftReport). */
+    * derived by summing the per-group cells, so per-batch histograms
+    * can answer "which batch shifted the distribution" without
+    * re-scanning ingested rows. */
   def groupScoreDriftFromCells(cellsIn: DataFrame): DataFrame = {
     val gCells = cellsIn.select(col("grp"), col("s4"), col("n").as("n_g"))
     val aCells = gCells.groupBy("s4").agg(sum(col("n_g")).as("n_all"))
@@ -1097,12 +1092,10 @@ object TextStats {
   /** [[groupQuantiles]] from a pre-aggregated grid-cell histogram
     * `(grp, s4, n)`. The cells are EXACT and MERGEABLE (merging two
     * histograms = summing cell counts), so this is the report side of
-    * any incremental path that accumulates per-batch histograms
-    * ([[graft.streaming.Pipelines]]' histogram store): quantiles come
-    * from the cell table alone — the ingested rows are never
-    * re-scanned, and the answer is identical to a single whole-corpus
-    * pass (the merge law `SketchSpec` asserts for the streaming
-    * store). */
+    * any incremental path that accumulates per-batch histograms:
+    * quantiles come from the cell table alone — the ingested rows are
+    * never re-scanned, and the answer is identical to a single
+    * whole-corpus pass (the merge law q177 hash-matches). */
   def groupQuantilesFromCells(cells: DataFrame, qs: Seq[Int]): DataFrame = {
     require(qs.nonEmpty && qs.forall(q => q >= 1 && q <= 10000),
       "quantile points are per-10000 in [1, 10000]")

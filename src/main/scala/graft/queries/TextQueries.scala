@@ -268,8 +268,7 @@ object TextQueries {
     * ingestion batches), SUMMING the cells, and reading quantiles off
     * the merged histogram. The oracle computes the same quantiles in
     * one direct pass over all rows — histogram merge is lossless, so
-    * the incremental path must hash-match the single-pass answer
-    * (the batch face of the streaming histogram store's merge law). */
+    * the incremental path must hash-match the single-pass answer. */
   val q177 = GQuery("q177_hist_merge_quantiles",
     s"""WITH $tokCte,
        |rws AS (
@@ -379,7 +378,7 @@ object TextQueries {
   }
 
   /** Cross-document duplicated-span fraction (see
-    * [[graft.operators.TextStats.dupChunkStats]]): 5-word chunks. */
+    * [[graft.operators.TextStats.dupChunkStatsFromTokens]]): 5-word chunks. */
   val q67 = GQuery("q67_dup_chunks",
     s"""WITH $tokCte,
        |ch AS (
@@ -2488,8 +2487,7 @@ object TextQueries {
     * [[graft.operators.TextStats.groupPsiFromCells]]) — q161's KS
     * reports the worst CDF gap, this integrates the mismatch with the
     * deployed-model 0.1/0.25 thresholds; both run off the same grid
-    * cells (and the same machinery serves the streaming histogram
-    * store's `histPsiReport`). */
+    * cells. */
   val q225 = GQuery("q225_source_quality_psi",
     s"""WITH $qualityCte,
        |srcm AS (SELECT doc_id, source FROM documents),

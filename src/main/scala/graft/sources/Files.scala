@@ -25,10 +25,6 @@ object Files {
           header: Boolean = true): DataFrame =
     spark.read.schema(schema).option("header", header.toString).csv(path)
 
-  /** Streaming file source (micro-batches over newly arriving files). */
-  def jsonStream(spark: SparkSession, dir: String, schema: StructType): DataFrame =
-    spark.readStream.schema(schema).json(dir)
-
   /** Hive-style partitioned parquet write: the layout that makes
     * partition pruning (`WHERE part_col = x` skipping whole directories)
     * work on the read side. Partition columns should be low-cardinality. */

@@ -1,16 +1,22 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Event-time streaming analytics over the engine's event schema
-  * (SURVEY.md §2.2 "Streaming" rows): watermarks, tumbling/sliding/
-  * session windows, stateful sessionization, streaming dedup.
-  *
-  * All operators work identically on batch frames (Spark's unified
-  * model), which is how their DuckDB-checkable batch twins in
-  * graft.queries verify the same logic.
+/** The streaming layer every registry query, main and benchmark runs:
+  *  - event-time operators (watermarked tumbling/sliding/session
+  *    windows, the stream-stream interval join) and [[runToMemory]],
+  *    which drains a streaming plan for the oracle-gated queries
+  *    (q331, q333–q335); the operators work identically on batch
+  *    frames (Spark's unified model), which is how their
+  *    DuckDB-checkable batch twins in graft.queries verify the logic;
+  *  - the persistent micro-batch stores — cross-run exact and CDC
+  *    dedup, the weighted reservoir, the SCD2 change store with its
+  *    point-in-time enricher, the hierarchy log and the near-dup
+  *    cluster store — sharing one bucketed layout ([[DedupStore]]), one
+  *    open ([[openStore]]), one swap ([[swapStore]]) and one compaction
+  *    trigger ([[compactStoreIfNeeded]]);
+  *  - [[manifestSink]], the exactly-once file sink of the duplex bus.
   */
 object Pipelines {
 
@@ -62,8 +68,8 @@ object Pipelines {
     * Single-writer: run a swap with no concurrent batch or swap on the
     * same store (the discipline any streaming-append table's compaction
     * needs). Returns what `rewrite` returns. */
-  private def swapStore[A](spark: org.apache.spark.sql.SparkSession,
-                           live: String, aside: String = "_compacting")(
+  private[graft] def swapStore[A](spark: org.apache.spark.sql.SparkSession,
+                                  live: String, aside: String = "_compacting")(
       rewrite: String => A): A = {
     val livePath = new org.apache.hadoop.fs.Path(live)
     val fs = livePath.getFileSystem(spark.sessionState.newHadoopConf())
@@ -282,13 +288,7 @@ object Pipelines {
           col(rightTs) <= col(leftTs) + expr(s"INTERVAL $within"),
         joinType)
 
-  /** Drive a streaming frame to completion through a memory sink and
-    * hand back the materialized result — the query-harness driver for
-    * append-mode streaming plans (the fixture file arrives through
-    * the real file-stream source, so the plan under test is the
-    * streaming one, e.g. StreamingSymmetricHashJoin — not a batch
-    * rewrite). The memory sink is driver-resident by design, so this
-    * is for oracle-gated result sets, not corpus-sized output. */
+  /** Memory-sink name sequence of [[runToMemory]]. */
   private val memSinkSeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** State-store partition count for streaming plans driven through
@@ -303,17 +303,22 @@ object Pipelines {
     * (25x — concurrent tiny fsyncs contend), 6.9 s → 2.8 s wall.
     * State partitioning is a pure physical choice: outputs are
     * identical (hash-verified), so this is conf, not semantics.
-    * Production tuning: size to state VOLUME (state bytes per
-    * partition in the 64-256 MB band), not executor count — set the
-    * env for a cluster run. The default, min(8, the session's default
-    * parallelism), keeps one store instance per core and caps commit
-    * fan-out at 8: on fewer than 8 cores a drained stream never
-    * commits more instances per batch than there are cores to run
-    * them, and on 8 or more the count is the flat 8 it always was. */
+    * The count is min(8, the session's default parallelism): one store
+    * instance per core, commit fan-out capped at 8. On fewer than 8
+    * cores a drained stream never commits more instances per batch
+    * than there are cores to run them; on 8 or more it is a flat 8.
+    * (A production deployment sizes state partitions to state VOLUME —
+    * 64-256 MB of state per partition — not to the executor count.) */
   private def streamStatePartitions(spark: org.apache.spark.sql.SparkSession): Int =
-    sys.env.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS").map(_.toInt)
-      .getOrElse(math.min(8, spark.sparkContext.defaultParallelism))
+    math.min(8, spark.sparkContext.defaultParallelism)
 
+  /** Drive a streaming frame to completion through a memory sink and
+    * hand back the materialized result — the query-harness driver for
+    * append-mode streaming plans (the fixture file arrives through
+    * the real file-stream source, so the plan under test is the
+    * streaming one, e.g. StreamingSymmetricHashJoin — not a batch
+    * rewrite). The memory sink is driver-resident by design, so this
+    * is for oracle-gated result sets, not corpus-sized output. */
   def runToMemory(streamDf: DataFrame): DataFrame = {
     val spark = streamDf.sparkSession
     val name = s"graft_mem_sink_${memSinkSeq.incrementAndGet()}"
@@ -345,135 +350,10 @@ object Pipelines {
         col("session_window.end").as("session_end"),
         col("n_events"))
 
-  /** Streaming exact dedup: state bounded by the watermark horizon —
-    * the 100 TB-safe form of `dropDuplicates`. */
-  def streamingDedup(df: DataFrame, tsCol: String, delay: String,
-                     keys: Seq[String]): DataFrame =
-    df.withWatermark(tsCol, delay)
-      .dropDuplicatesWithinWatermark(keys.head, keys.tail: _*)
-
-  /** Streaming ingestion curation — the per-row subset of the batch
-    * curation stack, composed streaming-safe: PII redaction (pure map),
-    * row-computable quality rules (token count and distinct-token
-    * fraction via array expressions — no aggregation), then
-    * watermark-bounded exact dedup on the post-redaction fingerprint.
-    * The only state is the dedup store, bounded by the watermark
-    * horizon. Rules that need corpus aggregation (top-bigram fraction,
-    * cross-doc spans, LM scores) stay in the batch cascade —
-    * [[graft.operators.TextStats.qualityCascade]]. Works identically
-    * on batch frames (unified model). */
-  def curateStream(df: DataFrame, tsCol: String, delay: String,
-                   textCol: String, minTokens: Int = 15,
-                   minFracDistinct: Double = 0.35): DataFrame = {
-    import graft.functions.TextFunctions
-    val toks = TextFunctions.tokens(col(textCol))
-    // REPLACE the text column with its redacted form — emitting the
-    // scrubbed value beside the raw one would defeat the scrub (any
-    // consumer reading the natural column would get the PII back)
-    df.withColumn(textCol, TextFunctions.redact(col(textCol)))
-      .withColumn("__nt", size(toks))
-      .withColumn("__fd",
-        when(col("__nt") > 0,
-          size(array_distinct(toks)).cast("double") / col("__nt"))
-          .otherwise(lit(0.0)))
-      .where(col("__nt") >= minTokens && col("__fd") >= minFracDistinct)
-      .withColumn("__fp", TextFunctions.fingerprint(col(textCol)))
-      .withWatermark(tsCol, delay)
-      .dropDuplicatesWithinWatermark("__fp")
-      .drop("__nt", "__fd", "__fp")
-  }
-
-  /** Sliding-window corpus-quality monitor — the observability twin of
-    * [[curateStream]] (ingest → curate → MONITOR closes the streaming
-    * curation loop): per (event-time window, source), document count,
-    * mean composite quality, mean token count, and an approximate
-    * distinct-fingerprint count giving the in-window exact-dup rate
-    * (`1 − distinct/n`). A quality or dup-rate step change per source
-    * is the standard alarm for a broken upstream feed.
-    *
-    * Scale/state: every aggregate is map-side partial;
-    * `approx_count_distinct` keeps constant HLL state per (window,
-    * source) where exact distinct would buffer every fingerprint; total
-    * state is bounded by the watermark horizon × source count. Works
-    * identically on batch frames (unified model), which is how the spec
-    * asserts exact window contents. */
-  def qualityMonitorStream(df: DataFrame, tsCol: String, delay: String,
-                           textCol: String, sourceCol: String,
-                           windowDur: String = "5 minutes",
-                           slide: Option[String] = None): DataFrame = {
-    import graft.functions.TextFunctions
-    val win = slide match {
-      case Some(sl) => window(col(tsCol), windowDur, sl)
-      case None => window(col(tsCol), windowDur)
-    }
-    df.withColumn("__q",
-        TextFunctions.qualityScore(col(textCol), length(col(textCol))))
-      .withColumn("__nt", TextFunctions.tokenCount(col(textCol)))
-      .withColumn("__fp", TextFunctions.fingerprint(col(textCol)))
-      .withWatermark(tsCol, delay)
-      .groupBy(win, col(sourceCol))
-      .agg(count(lit(1)).as("n_docs"),
-        round(avg(col("__q")), 4).as("avg_quality"),
-        round(avg(col("__nt")), 2).as("avg_tokens"),
-        approx_count_distinct(col("__fp")).as("approx_distinct"))
-      .select(col("window.start").as("window_start"),
-        col("window.end").as("window_end"), col(sourceCol),
-        col("n_docs"), col("avg_quality"), col("avg_tokens"),
-        col("approx_distinct"),
-        round(lit(1.0) - col("approx_distinct") / col("n_docs"), 4)
-          .as("dup_rate_est"))
-  }
-
-  /** Sliding-window MEDIA-ingest monitor — the multimodal twin of
-    * [[qualityMonitorStream]], closing the loop for blob feeds: per
-    * (event-time window, modality), blob count, corrupt count and
-    * fraction (each blob probed by the REAL kernel for its modality —
-    * ImageIO header / RIFF chunk walk / ISO-BMFF box walk), and total
-    * payload bytes. A corrupt-rate step change is the standard alarm
-    * for a broken upstream encoder or a truncating transport.
-    *
-    * The probe rides in a scalar UDF rather than `mapPartitions`:
-    * streaming frames cannot detour through the RDD API, and the
-    * kernel is an opaque JVM byte walk either way — this is the same
-    * narrow UDF seam as the Bloom `mightContain` prefilter (documented
-    * exceptions to the functions-first rule). State per (window,
-    * modality) is three counters — bounded by the watermark horizon ×
-    * modality count. Works identically on batch frames (unified
-    * model), which is how the spec pins exact window contents. */
-  def mediaMonitorStream(df: DataFrame, tsCol: String, delay: String,
-                         blobCol: String, modalityCol: String,
-                         windowDur: String = "5 minutes"): DataFrame = {
-    import graft.operators.Multimodal
-    // null-guard first: the kernels are fuzz-proven total on non-null
-    // bytes only — a null blob (or modality) must degrade to a corrupt
-    // count, not NPE inside the probe and kill the streaming query
-    val probeFormat = udf((modality: String, bytes: Array[Byte]) =>
-      if (bytes == null) "corrupt"
-      else modality match {
-        case "image" => Multimodal.ImageIoCodec.probe(bytes, "img")._1
-        case "audio" => Multimodal.WavCodec.probe(bytes, "wav")._1
-        case "video" => Multimodal.Mp4Codec.probe(bytes, "mp4")._1
-        case _       => "corrupt"
-      })
-    df.withColumn("__fmt", probeFormat(col(modalityCol), col(blobCol)))
-      .withWatermark(tsCol, delay)
-      .groupBy(window(col(tsCol), windowDur), col(modalityCol))
-      .agg(count(lit(1)).as("n_blobs"),
-        sum(when(col("__fmt") === "corrupt", 1L).otherwise(0L))
-          .as("n_corrupt"),
-        sum(length(col(blobCol)).cast("long")).as("total_bytes"))
-      .select(col("window.start").as("window_start"),
-        col("window.end").as("window_end"), col(modalityCol),
-        col("n_blobs"), col("n_corrupt"),
-        round(col("n_corrupt").cast("double") / col("n_blobs"), 4)
-          .as("frac_corrupt"),
-        col("total_bytes"))
-  }
-
   /** Bucketed layout shared by every store that keeps its history and
-    * absorbs replays against it: the cross-run dedup stores, the score
-    * cache, the SCD2 change store (and [[PitEnricher]] over it), the
-    * cluster members, and — on `id` — the hierarchy log.
+    * absorbs replays against it: the cross-run dedup stores, the SCD2
+    * change store (and [[PitEnricher]] over it), the cluster members,
+    * and — on `id` — the hierarchy log.
     *
     *   - `path/data` — rows parquet-PARTITIONED BY `pb`, a stable
     *     xxhash64 bucket of the family's join key. Appends repartition
@@ -610,8 +490,11 @@ object Pipelines {
     }
   }
 
-  /** Offline compaction for a [[DedupStore]] (any of the three
-    * cross-run stores — they share the layout). Every streaming append
+  /** Offline compaction for a [[DedupStore]] (the exact and CDC dedup
+    * stores share the layout). Kept with no caller in a query or main:
+    * it is the only compaction of the dedup and CDC stores that Soak
+    * gates, and it backs the dedup row of the torn-swap spec. Every
+    * streaming append
     * leaves one file per touched `pb` dir per micro-batch, so a
     * long-lived deployment accumulates O(batches) small files per
     * partition; this rewrites `path/data` to ONE file per `pb` dir
@@ -689,9 +572,9 @@ object Pipelines {
     * store (docs already ingested in ANY earlier batch or run), handed
     * to `sink`, and its new fingerprints appended to the store.
     *
-    * This is the cross-run complement of [[streamingDedup]]:
-    * `dropDuplicatesWithinWatermark` bounds state to the watermark
-    * horizon, while the store carries the full ingestion history as a
+    * This is the cross-run complement of Spark's
+    * `dropDuplicatesWithinWatermark`, which bounds state to the
+    * watermark horizon: the store carries the full ingestion history as a
     * TABLE in the [[DedupStore]] bucketed layout, so per-batch cost
     * tracks the batch, not the deployment lifetime. Delivery is
     * at-least-once: a crash between `sink` and the store append can
@@ -712,179 +595,6 @@ object Pipelines {
     }
   }
 
-  /** Incremental NEAR-dup ingestion: the approximate sibling of
-    * [[dedupAgainstStore]]. Each micro-batch is MinHash-signed and
-    * banded; a batch document is dropped when any band bucket collides
-    * with the store (or an earlier in-batch doc) AND the signature
-    * agreement — the standard MinHash Jaccard estimate, here exact
-    * agreement fraction over k components — reaches `minEstJaccard`.
-    * Survivors go to `sink` and their banded signatures append to the
-    * store: only (id, sig, band, bucket) rows persist, never text, so
-    * the store is ~k longs per document regardless of doc size.
-    *
-    * Documents shorter than `n` tokens have no signature and always
-    * pass (nothing to estimate against). At-least-once like
-    * [[dedupAgainstStore]]; the [[DedupStore]] key is (band, bucket).
-    * `n`/`k`/`bands` shape the stored signatures, so they are pinned in
-    * the store config and validated on every open; `minEstJaccard` is a
-    * read-time threshold, free to vary per run. */
-  def nearDupAgainstStore(idCol: String, textCol: String, storePath: String,
-                          n: Int = 3, k: Int = 9, bands: Int = 3,
-                          minEstJaccard: Double = 0.8, buckets: Int = 256)(
-      sink: DataFrame => Unit): (DataFrame, Long) => Unit = {
-    import graft.operators.Dedup
-    bandedDedupAgainstStore(idCol, storePath,
-      Seq("n" -> n, "k" -> k, "bands" -> bands, "buckets" -> buckets),
-      Seq("band", "bucket"), "sig", minhashClose(k, minEstJaccard))(batch =>
-      Dedup.lshBuckets(Dedup.minhashSignatures(batch, idCol, textCol, n, k),
-        k, bands))(sink)
-  }
-
-  /** MinHash closeness: the exact agreement fraction over the `k`
-    * signature components — the Jaccard estimate — reaches
-    * `minEstJaccard`. */
-  private[graft] def minhashClose(k: Int, minEstJaccard: Double)(
-      a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => when(x === y, 1).otherwise(0)),
-      lit(0), (acc, x) => acc + x).cast("double") / k >= minEstJaccard
-
-  /** Perceptual closeness: the Hamming distance of two 64-bit signature
-    * strings is at most `maxHamming`. */
-  private[graft] def hammingClose(maxHamming: Int)(a: Column, b: Column): Column =
-    call_function(graft.plans.HammingDist.fnName, a, b) <= maxHamming
-
-  /** The one per-batch body of the banded signature stores
-    * ([[nearDupAgainstStore]], [[imageDedupAgainstStore]],
-    * [[videoDedupAgainstStore]]): open the store, band the batch
-    * (`band` → id, `sig`, `keys`…), census it on its band key, sink the
-    * [[bandedFresh]] rows and append the survivors' bands. */
-  private def bandedDedupAgainstStore(idCol: String, storePath: String,
-                                      params: Seq[(String, Int)],
-                                      keys: Seq[String], sig: String,
-                                      close: (Column, Column) => Column)(
-      band: DataFrame => DataFrame)(
-      sink: DataFrame => Unit): (DataFrame, Long) => Unit =
-    (batch: DataFrame, _: Long) => {
-      DedupStore.openOrInit(batch.sparkSession, storePath, params)
-      val (banded, pbs) = DedupStore.census(storePath, band(batch),
-        concat_ws(":", keys.map(col): _*))
-      val fresh = bandedFresh(batch, banded, pbs, idCol, storePath, keys,
-        sig, close).persist()
-      sink(fresh)
-      DedupStore.append(
-        banded.join(fresh.select(col(idCol).as("id")), Seq("id"), "left_semi"),
-        storePath)
-      fresh.unpersist()
-      ()
-    }
-
-  /** Per-batch core of the banded signature stores (factored for the
-    * spec's plan assertions): `banded` is the batch's censused band
-    * frame (id, `sig`, `keys`…, pb) and `pbs` its bucket set. Returns
-    * the batch rows that are `close` to no row sharing a band key —
-    * neither in the store nor earlier (smaller id) in the batch. */
-  private[graft] def bandedFresh(batch: DataFrame, banded: DataFrame,
-                                 pbs: Seq[Int], idCol: String,
-                                 storePath: String, keys: Seq[String],
-                                 sig: String,
-                                 close: (Column, Column) => Column): DataFrame = {
-    def side(s: String) = banded.select(
-      col("id").as(s"id_$s") +: col(sig).as(s"sig_$s") +: keys.map(col): _*)
-    // within the batch: keep the smaller id of a close pair (one side
-    // broadcast — a micro-batch is broadcastable by contract)
-    val dupInBatch = side("b").join(broadcast(side("a")), keys)
-      .where(col("id_a") < col("id_b") && close(col("sig_a"), col("sig_b")))
-      .select(col("id_b").as("id"))
-    // the store slice's output is collision-bounded (≤ batch × bands)
-    val dups = DedupStore.slice(storePath, pbs, side("b"), keys, "inner")
-      .fold(dupInBatch)(_.where(close(col(sig), col("sig_b")))
-        .select(col("id_b").as("id")).unionByName(dupInBatch))
-    batch.join(broadcast(dups.withColumnRenamed("id", idCol).distinct()),
-      Seq(idCol), "left_anti")
-  }
-
-  /** Cross-run IMAGE ingestion dedup — [[nearDupAgainstStore]]'s
-    * perceptual sibling: each micro-batch of (id, blob) rows is REALLY
-    * pixel-decoded and dHashed
-    * ([[graft.operators.Multimodal.DHashCodec]]), banded with the
-    * pigeonhole split, and checked against a persistent banded
-    * signature store + within the batch; only FIRST-seen images reach
-    * the sink, and only their signatures append to the store. A
-    * re-encoded copy (PNG↔BMP, recompressed) hashes identically and a
-    * lightly edited one lands within `maxHamming`, so both are
-    * suppressed where byte-level dedup would pass them. Corrupt blobs
-    * bypass dedup and flow to the sink (quarantine is the monitor's
-    * job — [[mediaMonitorStream]]). At-least-once redelivery is
-    * absorbed BY CONSTRUCTION: a replayed image collides with its own
-    * stored signature at distance 0, so nothing re-emits and nothing
-    * re-appends (spec-asserted). Store joins are (band, key) equi-joins
-    * over the [[DedupStore]] slice — never a full-store Hamming scan.
-    * `maxHamming` fixes the pigeonhole band split that shaped the
-    * stored keys, so it is pinned in the store config and a later run
-    * with a different value is a hard error instead of silently missed
-    * duplicates. */
-  def imageDedupAgainstStore(idCol: String, blobCol: String,
-                             storePath: String, maxHamming: Int = 3,
-                             buckets: Int = 256)(
-      sink: DataFrame => Unit): (DataFrame, Long) => Unit =
-    bandedDedupAgainstStore(idCol, storePath,
-      Seq("maxHamming" -> maxHamming, "buckets" -> buckets),
-      Seq("band", "key"), "dhash", hammingClose(maxHamming))(
-      imageBanded(_, blobCol, idCol, maxHamming))(sink)
-
-  /** Pigeonhole band split over ANY (id, dhash) 64-bit-string signature
-    * frame → (id, dhash, band, key) — signature-agnostic, shared by the
-    * image (dHash) and video (frame-size profile) stores, whose
-    * closeness test ([[hammingClose]]) it registers. */
-  private[graft] def sigBanded(sigs: DataFrame, maxHamming: Int): DataFrame = {
-    graft.plans.HammingDist.register(sigs.sparkSession)
-    val b = maxHamming + 1
-    val bounds = (0 to b).map(i => 1 + i * 64 / b)
-    val bandCols = (0 until b).map { i =>
-      struct(lit(i).as("band"),
-        substring(col("dhash"), bounds(i), bounds(i + 1) - bounds(i)).as("key"))
-    }
-    sigs
-      .select(col("id"), col("dhash"), explode(array(bandCols: _*)).as("bb"))
-      .select(col("id"), col("dhash"),
-        col("bb.band").as("band"), col("bb.key").as("key"))
-  }
-
-  /** A batch's banded dHash frame (id, dhash, band, key): REAL pixel
-    * decode → dHash → [[sigBanded]]. */
-  private[graft] def imageBanded(batch: DataFrame, blobCol: String,
-                                 idCol: String, maxHamming: Int): DataFrame = {
-    import graft.operators.Multimodal
-    sigBanded(
-      Multimodal.decodeImageHashPartitions(batch, blobCol, idCol)
-        .where(col("format") =!= "corrupt")
-        .select(col("id"), col("dhash")),
-      maxHamming)
-  }
-
-  /** Cross-run VIDEO ingestion dedup — [[imageDedupAgainstStore]]'s
-    * video sibling over [[graft.operators.Multimodal.VideoSigCodec]]
-    * frame-size-profile fingerprints: a re-muxed copy of a stream
-    * (same samples, different container bytes/branding/keyframe
-    * settings) fingerprints identically and is suppressed where
-    * byte-level dedup would pass it; a lightly re-encoded one lands
-    * within `maxHamming`. Same store, config pinning, at-least-once
-    * absorption, and corrupt-bypass contract as the image store. */
-  def videoDedupAgainstStore(idCol: String, blobCol: String,
-                             storePath: String, maxHamming: Int = 3,
-                             buckets: Int = 256)(
-      sink: DataFrame => Unit): (DataFrame, Long) => Unit = {
-    import graft.operators.Multimodal
-    bandedDedupAgainstStore(idCol, storePath,
-      Seq("maxHamming" -> maxHamming, "buckets" -> buckets),
-      Seq("band", "key"), "dhash", hammingClose(maxHamming))(batch =>
-      sigBanded(
-        Multimodal.decodeVideoSigPartitions(batch, blobCol, idCol)
-          .where(col("format") =!= "corrupt")
-          .select(col("id"), col("vsig").as("dhash")),
-        maxHamming))(sink)
-  }
-
   /** Cross-run SHIFTED-CONTENT ingestion dedup — the content-defined-
     * chunking member of the store family. The exact store
     * ([[dedupAgainstStore]]) misses a redelivered document the moment
@@ -901,7 +611,7 @@ object Pipelines {
     * chunk is appended once: fresh documents' chunks are anti-joined
     * against the already-known set before the append, so a viral
     * boilerplate chunk occupies ONE store row no matter how many
-    * documents carry it. Same [[DedupStore]] layout as the siblings,
+    * documents carry it. Same [[DedupStore]] layout as the exact store,
     * batch side broadcast everywhere, `w`/`mask` pinned in the config,
     * at-least-once replays absorbed by construction (a redelivered
     * doc's chunks all hit → overlap 1). `minOverlap` is a read-time
@@ -970,76 +680,6 @@ object Pipelines {
       Seq(idCol), "left_anti")
   }
 
-  /** Content-addressed score cache — the streaming form of
-    * `Dedup.incrementalRecompute`. `compute` (typically the EXPENSIVE
-    * per-document stage: model scoring, feature extraction) runs only
-    * over content the deployment has never seen: results are cached in
-    * a persistent store KEYED BY NORMALIZED FINGERPRINT, so a
-    * redelivered batch, a re-crawl under new ids, or a
-    * whitespace-drifted copy all reuse the cached row instead of
-    * recomputing. Each emitted row carries `from_cache: boolean`.
-    *
-    * Contract for `compute`: input is one representative row per new
-    * fingerprint (all batch columns plus `fingerprint`); output must
-    * carry `fingerprint` plus the result columns, one row per input
-    * fingerprint, and be a pure function of the (normalized) content —
-    * the same purity `incrementalRecompute` requires. Result columns
-    * must keep a stable schema across batches (they are the store's
-    * schema).
-    *
-    * The store is a [[DedupStore]] keyed on the fingerprint, so
-    * per-batch cost tracks the batch, not the deployment lifetime.
-    * At-least-once: a crash between `sink` and the append recomputes
-    * (not corrupts) on replay; the append is anti-joined against the
-    * cache so each fingerprint is stored once. */
-  def scoreAgainstStore(idCol: String, textCol: String, storePath: String,
-                        buckets: Int = 256)(
-      compute: DataFrame => DataFrame)(
-      sink: DataFrame => Unit): (DataFrame, Long) => Unit = {
-    (batch: DataFrame, _: Long) => {
-      val spark = batch.sparkSession
-      DedupStore.openOrInit(spark, storePath, Seq("buckets" -> buckets))
-      val (fp, pbs) = DedupStore.census(storePath, batch
-        .withColumn("fingerprint",
-          graft.functions.TextFunctions.fingerprint(col(textCol))),
-        col("fingerprint"))
-      val cached = scoreCacheLookup(fp, pbs, storePath).map(_.persist())
-      val knownFps = cached.map(_.select("fingerprint"))
-        .getOrElse(fp.select("fingerprint").limit(0))
-      // one representative row per fingerprint the cache has never seen
-      val reps = fp
-        .withColumn("__rn", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("fingerprint")).orderBy(col(idCol))))
-        .where(col("__rn") === 1).drop("__rn")
-        .join(broadcast(knownFps), Seq("fingerprint"), "left_anti")
-      val computed = compute(reps.drop("pb")).persist()
-      val results = cached match {
-        case Some(c) => c.drop("pb").withColumn("from_cache", lit(true))
-          .unionByName(computed.withColumn("from_cache", lit(false)))
-        case None => computed.withColumn("from_cache", lit(false))
-      }
-      sink(fp.select(col(idCol), col("fingerprint"))
-        .join(broadcast(results), Seq("fingerprint")))
-      DedupStore.append(
-        computed.withColumn("pb",
-          DedupStore.bucketOf(col("fingerprint"), buckets)),
-        storePath)
-      cached.foreach(_.unpersist()); computed.unpersist()
-      ()
-    }
-  }
-
-  /** The batch's cached result rows: the store slice of the censused
-    * batch `fp` (bucket set `pbs`), semi-joined on its fingerprints.
-    * None when the cache has no data or the batch no fingerprints
-    * (first batch — the result schema is not knowable until `compute`
-    * defines it). */
-  private[graft] def scoreCacheLookup(fp: DataFrame, pbs: Seq[Int],
-                                      storePath: String): Option[DataFrame] =
-    DedupStore.slice(storePath, pbs, fp.select("fingerprint").distinct(),
-      Seq("fingerprint"))
-
   /** Streaming weighted reservoir: maintain, across micro-batches and
     * restarts, the per-stratum k-sample a batch A-ES pass
     * ([[graft.operators.Sampling.weightedTopKSample]]) would draw over
@@ -1106,7 +746,7 @@ object Pipelines {
     * size, not dimension history. Intervals are derived at read time by
     * [[scd2StoreIntervals]].
     *
-    * Delivery contract (same as `transitionStream`): per-key
+    * Delivery contract: per-key
     * non-decreasing snapshot timestamps across batches; a snapshot
     * older than the key's current state is DROPPED (late data), and
     * within a batch rows fold in `(snapTs)` order. Attribute
@@ -1217,7 +857,9 @@ object Pipelines {
   /** Validity intervals from a [[scd2IngestStream]] store — equals
     * [[graft.operators.Scd.scd2Build]] over the full snapshot history
     * (spec-asserted): the store holds exactly the change rows, so
-    * intervals are one keyed `lead` away. */
+    * intervals are one keyed `lead` away. Kept with no caller in a
+    * query or main: with [[scd2StoreIntervalsAsOf]] it is the only
+    * read-out of the SCD2 store that Soak writes. */
   def scd2StoreIntervals(spark: org.apache.spark.sql.SparkSession,
                          storePath: String,
                          attrCols: Seq[String]): DataFrame =
@@ -1231,7 +873,8 @@ object Pipelines {
     * time = batch_id; the two-axis contract every audited warehouse
     * restatement needs). Equals a from-scratch [[graft.operators.Scd
     * .scd2Build]] over the history ingested up to that batch
-    * (spec-asserted). */
+    * (spec-asserted). Kept with no caller in a query or main, for the
+    * reason [[scd2StoreIntervals]] gives. */
   def scd2StoreIntervalsAsOf(spark: org.apache.spark.sql.SparkSession,
                              storePath: String, attrCols: Seq[String],
                              asOfBatch: Long): DataFrame = {
@@ -1707,10 +1350,9 @@ object Pipelines {
     * `(id_a, id_b)` arrive in micro-batches and fold into a persistent
     * cluster store whose read-out ([[clusterStoreReps]]) is bit-equal
     * to a from-scratch batch CC over every edge ingested so far
-    * (spec- and oracle-asserted). This completes the incremental-
-    * corpus story the signature stores started: they answer "is this
-    * content a dup of ANYTHING seen", this maintains "which cluster
-    * is it in" without ever re-clustering history.
+    * (spec- and oracle-asserted). The dedup stores answer "is this
+    * content a dup of ANYTHING seen"; this maintains "which cluster is
+    * it in" without ever re-clustering history.
     *
     * Layout (two row families):
     *  - `members/data` — a [[DedupStore]]: `(id, cid, pb)` with
@@ -1724,9 +1366,11 @@ object Pipelines {
     *    minima.
     *
     * Per-batch cost is batch-bounded: the member read is the batch's
-    * [[DedupStore]] slice ([[memberCids]]); the CC runs over SUPERNODES (known vertices collapse to their
-    * resolved cid), so its input is edges-in-batch-sized — and below
-    * `driverCcMaxEdges` it is solved by a driver union-find off one
+    * [[DedupStore]] slice ([[memberCids]]); the CC runs over
+    * SUPERNODES (known vertices collapse to their resolved cid), so its
+    * input is edges-in-batch-sized — and below `driverCcMaxEdges` (by
+    * default the shared [[graft.operators.DriverPath.budget]]; 0 never
+    * collects) it is solved by a driver union-find off one
     * bounded collect (micro-batch latency is job-count-bound, and the
     * result is broadcast back anyway), with the distributed O(log n)
     * rewiring CC taking over beyond the cutoff; the merges
@@ -1747,7 +1391,7 @@ object Pipelines {
     * it appends no members and no merges. `sink` receives the batch's
     * vertices with their post-merge cluster_rep. */
   def clusterIngestStream(storePath: String, buckets: Int = 256,
-                          driverCcMaxEdges: Int = 100000,
+                          driverCcMaxEdges: Int = -1,
                           autoCompactMergeFiles: Int = 64)(
       sink: DataFrame => Unit = _ => ()): (DataFrame, Long) => Unit = {
     (batch0: DataFrame, _: Long) => {
@@ -1792,12 +1436,15 @@ object Pipelines {
       // had to fit in a broadcast anyway). A larger batch falls back
       // to the distributed O(log n) edge-rewiring CC unchanged — the
       // 100 TB path never collects.
-      // `driverCcMaxEdges <= 0` means NEVER collect (the shared
+      // `driverCcMaxEdges` resolves through the one driver-path budget
+      // ([[graft.operators.DriverPath.budget]]: negative → the env
+      // budget). `0` means NEVER collect (the shared
       // [[graft.operators.DriverPath.collectWithin]] probe runs no job
       // then), and the fallback passes the CC a zero budget: the edge
       // set is already known to be over this one, or the setting means
       // to force the distributed rewiring loop.
-      val probe = graft.operators.DriverPath.collectWithin(sedges, driverCcMaxEdges)
+      val probe = graft.operators.DriverPath.collectWithin(sedges,
+        graft.operators.DriverPath.budget(driverCcMaxEdges))
       val comp: DataFrame =
         if (probe.isDefined) {
           // min-rooted union-find (shared with [[graft.operators.Dedup
@@ -1916,8 +1563,7 @@ object Pipelines {
           org.apache.spark.sql.types.StructField("parent", cidType)))
         val resolved = parent.keysIterator
           .map(k => org.apache.spark.sql.Row(k, root(k))).toSeq
-        val mdf = spark.createDataFrame(
-          spark.sparkContext.parallelize(resolved, 1), schema)
+        val mdf = graft.operators.DriverPath.localFrame(spark, schema, resolved)
         rows.join(broadcast(mdf), Seq("cid"), "left")
           .select(col("id"), coalesce(col("parent"), col("cid")).as("cid"))
       }
@@ -2023,153 +1669,6 @@ object Pipelines {
     (after, nMerges)
   }
 
-  /** Stream-static join: enrich a stream against a (broadcastable) batch
-    * dimension — the streaming analog of the q03 star join. The static
-    * side is re-read per micro-batch, so dimension updates are picked up
-    * without restarting the query. */
-  def enrichWithStatic(stream: DataFrame, dim: DataFrame,
-                       streamKey: String, dimKey: String): DataFrame =
-    stream.join(broadcast(dim), col(streamKey) === col(dimKey), "left")
-
-  // ---- arbitrary-state sessionization (flatMapGroupsWithState) ----
-
-  final case class SessionEvent(user_id: Long, ts_ms: Long, value: Double)
-  final case class SessionState(start: Long, last: Long, n: Int, sum: Double)
-  final case class SessionOut(user_id: Long, start_ms: Long, end_ms: Long,
-                              n_events: Int, value_sum: Double)
-
-  /** Custom stateful sessionization: emits a session when `gapMs` of
-    * event-time silence passes (enforced via event-time timeout, so state
-    * size is bounded by watermark + gap, not by history). The reference's
-    * only state is a pair of counters (SURVEY.md §2.2); this is the
-    * general replacement. */
-  def sessionize(events: Dataset[SessionEvent], gapMs: Long,
-                 watermarkDelay: String): Dataset[SessionOut] = {
-    import events.sparkSession.implicits._
-
-    def flush(uid: Long, st: SessionState): SessionOut =
-      SessionOut(uid, st.start, st.last, st.n, st.sum)
-
-    events
-      .withColumn("ts", timestamp_millis(col("ts_ms")))
-      .withWatermark("ts", watermarkDelay)
-      .as[(Long, Long, Double, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[SessionState, SessionOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, rows: Iterator[(Long, Long, Double, java.sql.Timestamp)],
-         state: GroupState[SessionState]) =>
-          if (rows.isEmpty && state.hasTimedOut) {
-            val out = state.getOption.map(flush(uid, _)).iterator
-            state.remove()
-            out
-          } else {
-            val sorted = rows.map(r => (r._2, r._3)).toSeq.sortBy(_._1)
-            var st = state.getOption.orNull
-            val closed = Seq.newBuilder[SessionOut]
-            for ((ts, v) <- sorted) {
-              if (st == null) st = SessionState(ts, ts, 1, v)
-              else if (ts - st.last > gapMs) {
-                closed += flush(uid, st)
-                st = SessionState(ts, ts, 1, v)
-              } else st = SessionState(st.start, ts, st.n + 1, st.sum + v)
-            }
-            state.update(st)
-            state.setTimeoutTimestamp(st.last + gapMs)
-            closed.result().iterator
-          }
-      }
-  }
-
-  final case class TransEvent(user_id: Long, ts_ms: Long, event_id: Long,
-                              event_type: String)
-  final case class TransState(ts_ms: Long, event_id: Long, event_type: String)
-  final case class Transition(user_id: Long, from_type: String,
-                              to_type: String, ts_ms: Long)
-
-  /** Streaming event-type transitions — the incremental form of
-    * [[graft.operators.EventOps.transitionCounts]]: per user, emit one
-    * (from, to) row per consecutive event pair as events arrive. State
-    * is exactly ONE row per user (the last event seen — ts, id, type),
-    * bounded forever; each batch's rows are processed in (ts, event_id)
-    * order, so any delivery that preserves per-user order across
-    * batches yields transitions bit-equal to the batch census over the
-    * same history (spec-asserted), regardless of how the stream is cut
-    * into batches.
-    *
-    * Delivery caveat (documented, same as the ingestion stores): a
-    * cross-batch REORDER (an event older than the user's stored last
-    * event) would register under the arrival order; redelivered
-    * duplicates register as self-transitions. Run the stream through
-    * [[streamingDedup]] (event_id key) and a watermark upstream for
-    * at-least-once sources. Downstream, count transitions per window
-    * or feed [[withTrendLift]]-style baselines — the emission here is
-    * append-only and composes with either. */
-  def transitionStream(events: Dataset[TransEvent]): Dataset[Transition] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[TransState, Transition](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[TransEvent],
-         state: GroupState[TransState]) =>
-          val sorted = rows.toSeq.sortBy(e => (e.ts_ms, e.event_id))
-          var st = state.getOption.orNull
-          val out = Seq.newBuilder[Transition]
-          for (e <- sorted) {
-            if (st != null)
-              out += Transition(uid, st.event_type, e.event_type, e.ts_ms)
-            st = TransState(e.ts_ms, e.event_id, e.event_type)
-          }
-          if (st != null) state.update(st)
-          out.result().iterator
-      }
-  }
-
-  final case class FunnelProgress(user_id: Long, stage: Int, ts_ms: Long)
-
-  /** Streaming ordered funnel — the incremental form of
-    * [[graft.operators.EventOps.funnelTimes]]: per user, track the
-    * earliest strictly-ordered completion time of each step and emit a
-    * [[FunnelProgress]] row whenever a user ADVANCES a stage. State is
-    * exactly `steps.length` timestamps per user, bounded forever.
-    *
-    * Exactness contract (same as [[transitionStream]]): under
-    * per-user order-preserving delivery, a step-i event can improve
-    * t_i only when t_{i-1} is set and t_i is not — once set, an
-    * earlier qualifying event cannot arrive — so the stored vector
-    * equals the batch funnel over the full history at every batch
-    * boundary regardless of how the stream is cut (spec-asserted).
-    * Out-of-order or duplicate delivery follows arrival order; route
-    * at-least-once sources through [[streamingDedup]] upstream. */
-  def funnelStream(events: Dataset[TransEvent],
-                   steps: Seq[String]): Dataset[FunnelProgress] = {
-    require(steps.nonEmpty, "funnel needs at least one step")
-    import events.sparkSession.implicits._
-    val stepIdx = steps.zipWithIndex.toMap
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[Array[Long], FunnelProgress](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[TransEvent],
-         state: GroupState[Array[Long]]) =>
-          val sorted = rows.toSeq.sortBy(e => (e.ts_ms, e.event_id))
-          val t = state.getOption.getOrElse(Array.fill(steps.length)(-1L))
-          val out = Seq.newBuilder[FunnelProgress]
-          for (e <- sorted; i <- stepIdx.get(e.event_type)) {
-            val prevDone = i == 0 || t(i - 1) >= 0
-            val qualifies = prevDone && t(i) < 0 &&
-              (i == 0 || e.ts_ms > t(i - 1))
-            if (qualifies) {
-              t(i) = e.ts_ms
-              out += FunnelProgress(uid, i, e.ts_ms)
-            }
-          }
-          state.update(t)
-          out.result().iterator
-      }
-  }
-
   /** Exactly-once file publication for at-least-once foreachBatch. A
     * batch's rows land as parquet files under `data/batch=<id>/`, and the
     * batch becomes visible only when its manifest entry commits: written
@@ -2250,856 +1749,4 @@ object Pipelines {
     }
     spark.read.parquet(paths.toIndexedSeq: _*)
   }
-
-  final case class DayCount(key: String, day: Long, n: Long)
-  final case class EwmaOut(key: String, day: Long, n: Long,
-                           ewma4: Long, dev4: Long)
-  final case class EwmaState(last_day: Long, ewma4: Long)
-
-  /** Streaming EWMA anomaly baseline — the incremental form of
-    * [[graft.operators.EventOps.ewmaBaseline]]: input is FINALIZED
-    * per-day counts (the append-mode output of an upstream
-    * watermark-closed windowed count — a day must not span emissions),
-    * state per key is TWO longs (last folded day + current baseline),
-    * and each emitted row carries the day's count, the folded baseline,
-    * and the deviation. Days absent between a key's observations fold
-    * as ZEROS (the die-off alarm), exactly like the batch spine;
-    * the one contract difference (documented): state starts at the
-    * key's FIRST observed day, where the batch op folds the global
-    * spine from the corpus's first day — feed keys present from day
-    * one (or pre-seed) when bit-parity with the batch report matters
-    * (the spec does). Same integer fold, floor at every step. */
-  def ewmaStream(counts: Dataset[DayCount], alphaNum: Int = 1,
-                 alphaDen: Int = 4): Dataset[EwmaOut] = {
-    require(alphaNum >= 1 && alphaDen > alphaNum, "need 0 < α < 1 rational")
-    import counts.sparkSession.implicits._
-    val keep = (alphaDen - alphaNum).toLong
-    counts
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[EwmaState, EwmaOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (k: String, rows: Iterator[DayCount],
-         state: GroupState[EwmaState]) =>
-          val sorted = rows.toSeq.sortBy(_.day)
-          var st = state.getOption.getOrElse(EwmaState(Long.MinValue, 0L))
-          val out = Seq.newBuilder[EwmaOut]
-          for (r <- sorted if st.last_day == Long.MinValue
-              || r.day > st.last_day) {
-            if (st.last_day != Long.MinValue) {
-              var d = st.last_day + 1
-              while (d < r.day) {   // gap days fold as zeros
-                st = EwmaState(d,
-                  Math.floorDiv(st.ewma4 * keep, alphaDen.toLong))
-                d += 1
-              }
-            }
-            val e = Math.floorDiv(
-              st.ewma4 * keep + r.n * 10000L * alphaNum, alphaDen.toLong)
-            st = EwmaState(r.day, e)
-            out += EwmaOut(k, r.day, r.n, e, r.n * 10000L - e)
-          }
-          state.update(st)
-          out.result().iterator
-      }
-  }
-
-  final case class CusumOut(key: String, day: Long, n: Long, c4: Long,
-                            alarmed: Boolean)
-  final case class CusumState(last_day: Long, c4: Long)
-
-  /** Streaming one-sided CUSUM — the incremental form of
-    * [[graft.operators.EventOps.cusum]] with an EXPLICIT target
-    * (streaming can't self-baseline over a horizon it hasn't seen;
-    * feed the build-time mean, e.g. from the histogram store): per
-    * key, two longs of state, gap days accumulate as zero-count days
-    * (which DRIVE the statistic when the target is positive — a feed
-    * going quiet alarms), and each emission carries the folded
-    * statistic and whether it crossed `threshold4`. Input contract as
-    * [[ewmaStream]]: finalized per-day counts. */
-  def cusumStream(counts: Dataset[DayCount], target4: Long,
-                  slack4: Long, threshold4: Long): Dataset[CusumOut] = {
-    import counts.sparkSession.implicits._
-    def step(c4: Long, n: Long): Long =
-      math.max(0L, c4 + n * 10000L - target4 - slack4)
-    counts
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[CusumState, CusumOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (k: String, rows: Iterator[DayCount],
-         state: GroupState[CusumState]) =>
-          val sorted = rows.toSeq.sortBy(_.day)
-          var st = state.getOption.getOrElse(CusumState(Long.MinValue, 0L))
-          val out = Seq.newBuilder[CusumOut]
-          for (r <- sorted if st.last_day == Long.MinValue
-              || r.day > st.last_day) {
-            if (st.last_day != Long.MinValue) {
-              var d = st.last_day + 1
-              while (d < r.day) {   // gap days fold as zero counts
-                st = CusumState(d, step(st.c4, 0L))
-                d += 1
-              }
-            }
-            val c = step(st.c4, r.n)
-            st = CusumState(r.day, c)
-            out += CusumOut(k, r.day, r.n, c, c >= threshold4)
-          }
-          state.update(st)
-          out.result().iterator
-      }
-  }
-
-  final case class RateState(window: Long, n: Long)
-
-  /** Per-key rate limiter — ingestion protection: at most `k` events
-    * per key per tumbling `windowMs` window pass through, the rest are
-    * dropped; kept events are the FIRST k in (ts, tie id) order, so
-    * the policy is deterministic and equals the batch rewrite
-    * `row_number() OVER (PARTITION BY key, window ORDER BY ts, id) ≤ k`
-    * (spec-asserted, batch-cut invariant). State per key is TWO longs
-    * (current window + its count) — bounded forever, reset on window
-    * roll; a hot key costs the same state as a quiet one. Delivery
-    * contract as [[transitionStream]]: per-key order-preserving
-    * delivery; a cross-batch reorder follows arrival order. */
-  def rateLimitStream(events: Dataset[TransEvent], windowMs: Long,
-                      k: Int): Dataset[TransEvent] = {
-    require(windowMs > 0 && k >= 1, "bad rate limit parameters")
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[RateState, TransEvent](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[TransEvent],
-         state: GroupState[RateState]) =>
-          val sorted = rows.toSeq.sortBy(e => (e.ts_ms, e.event_id))
-          var st = state.getOption.getOrElse(RateState(Long.MinValue, 0L))
-          val out = Seq.newBuilder[TransEvent]
-          for (e <- sorted) {
-            val w = Math.floorDiv(e.ts_ms, windowMs)
-            if (w != st.window) st = RateState(w, 0L)
-            if (st.n < k) {
-              out += e
-              st = st.copy(n = st.n + 1)
-            }
-          }
-          state.update(st)
-          out.result().iterator
-      }
-  }
-
-  final case class TouchEvent(user_id: Long, ts_ms: Long, event_id: Long,
-                              event_type: String, value: Double)
-  final case class Attribution(user_id: Long, conv_ts_ms: Long,
-                               event_id: Long, first_touch: String,
-                               last_touch: String, v2: Long)
-
-  /** Streaming first/last-touch attribution — the incremental form of
-    * [[graft.operators.EventOps.touchAttribution]]: per user, keep the
-    * touches inside the lookback horizon and emit one [[Attribution]]
-    * row per conversion as it arrives (same contracts as the batch op:
-    * touches strictly BEFORE the conversion instant; same-instant
-    * ties broken by touch-type index; `(none)` when the window is
-    * empty; value on the 1e-2 grid).
-    *
-    * State: the encoded `ts·K+idx` touches within `lookbackMs` of the
-    * user's latest event — pruned on EVERY event, so state is bounded
-    * by touch-rate × lookback per user regardless of stream length
-    * (the streaming analog of the batch RANGE frame's working set),
-    * never by history. Delivery contract as [[transitionStream]]:
-    * per-user order-preserving delivery makes emissions batch-cut
-    * invariant and equal to the batch model over the same history
-    * (spec-asserted); route at-least-once sources through
-    * [[streamingDedup]] upstream. */
-  def attributionStream(events: Dataset[TouchEvent],
-                        touchTypes: Seq[String], convType: String,
-                        lookbackMs: Long): Dataset[Attribution] = {
-    require(touchTypes.nonEmpty, "need at least one touch type")
-    import events.sparkSession.implicits._
-    val k = touchTypes.size + 1
-    val idxOf = touchTypes.zipWithIndex.toMap
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[List[Long], Attribution](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[TouchEvent],
-         state: GroupState[List[Long]]) =>
-          val sorted = rows.toSeq.sortBy(e => (e.ts_ms, e.event_id))
-          var st = state.getOption.getOrElse(List.empty[Long])
-          val out = Seq.newBuilder[Attribution]
-          for (e <- sorted) {
-            st = st.filter(enc => enc / k >= e.ts_ms - lookbackMs)
-            idxOf.get(e.event_type) match {
-              case Some(i) =>
-                st = (e.ts_ms * k + (i + 1)) :: st
-              case None if e.event_type == convType =>
-                val valid = st.filter(enc => enc / k < e.ts_ms)
-                val (ft, lt) =
-                  if (valid.isEmpty) ("(none)", "(none)")
-                  else (touchTypes((valid.min % k).toInt - 1),
-                    touchTypes((valid.max % k).toInt - 1))
-                out += Attribution(uid, e.ts_ms, e.event_id, ft, lt,
-                  math.round(e.value * 100))
-              case _ => ()
-            }
-          }
-          if (st.isEmpty) state.remove() else state.update(st)
-          out.result().iterator
-      }
-  }
-
-  /** Trending-term detection, stage 1 (streaming-safe): per event-time
-    * window, each term's in-window count joined against a static
-    * baseline census — the raw material for "what is spiking right
-    * now" (a boilerplate burst, a crawler loop, a new domain).
-    * Tokenize + explode is stateless, the windowed count is a standard
-    * watermark-bounded aggregate, and the baseline joins in as a
-    * static vocabulary-sized broadcast — the stream never shuffles
-    * against anything unbounded. Baseline = a stored
-    * [[graft.operators.TextStats.topNgrams]]-style census (s,
-    * n_occurrences), refreshed offline at 100 TB.
-    *
-    * Lift needs the per-window token TOTAL — a second aggregate over
-    * the same stream, which one streaming query cannot chain — so lift
-    * is [[withTrendLift]], applied per materialized window in
-    * `foreachBatch` (or directly in batch mode, which is how the spec
-    * asserts exact values).
-    *
-    * `minCount` trims the per-window long tail at the source (smaller
-    * state/output); note that raising it above 1 makes stage 2's
-    * win_total — and so the lift denominator — a truncated-tail
-    * approximation. Default 1 = exact. */
-  def trendingTermCounts(df: DataFrame, tsCol: String, delay: String,
-                         textCol: String, baseline: DataFrame,
-                         windowDur: String = "5 minutes",
-                         minCount: Long = 1): DataFrame = {
-    val baseTot = baseline.agg(sum(col("n_occurrences")).as("base_total"))
-    df.withWatermark(tsCol, delay)
-      .select(col(tsCol), explode(
-        graft.functions.TextFunctions.tokens(col(textCol))).as("term"))
-      .groupBy(window(col(tsCol), windowDur), col("term"))
-      .agg(count(lit(1)).as("n"))
-      .where(col("n") >= minCount)
-      .join(broadcast(baseline.select(col("s").as("term"),
-        col("n_occurrences").as("base_n"))), Seq("term"), "left_outer")
-      .crossJoin(broadcast(baseTot))
-      .select(col("window.start").as("window_start"),
-        col("window.end").as("window_end"), col("term"), col("n"),
-        col("base_n"), col("base_total"))
-  }
-
-  /** Trending-term detection, stage 2 (batch / per-foreachBatch): adds
-    * the per-window token total and the exact lift
-    * (n / win_total) / (base_n / base_total). Terms absent from the
-    * baseline get a null lift — the "brand new term" signal consumers
-    * alert on separately. One window-keyed aggregate + broadcast back. */
-  def withTrendLift(counts: DataFrame): DataFrame = {
-    val totals = counts.groupBy(col("window_start"))
-      .agg(sum(col("n")).as("win_total"))
-    counts.join(broadcast(totals), "window_start")
-      .withColumn("lift",
-        when(col("base_n").isNotNull, round(
-          (col("n") / col("win_total").cast("double")) /
-            (col("base_n") / col("base_total").cast("double")), 4)))
-  }
-
-  /** Incremental distinct-count sketching: each micro-batch appends one
-    * HLL sketch row per key ([[graft.operators.Sketches.distinctSketch]])
-    * to a persistent store; any later report — per key or corpus-wide —
-    * is a lossless sketch UNION over the KB-sized store, never a
-    * re-scan of ingested data. The streaming face of the
-    * [[graft.operators.Sketches]] pattern.
-    *
-    * Delivery: at-least-once batch REPLAYS are harmless BY CONSTRUCTION
-    * — HLL union is idempotent (A ∪ A = A), so a re-appended batch
-    * sketch cannot change any report (asserted in `SketchSpec`). This
-    * is stronger than [[dedupAgainstStore]]'s contract, which needs an
-    * idempotent sink; here the store itself absorbs replays. */
-  def sketchStream(keyCol: String, valueCol: String, storePath: String)
-      : (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) => {
-      graft.operators.Sketches.distinctSketch(batch, keyCol, valueCol)
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("append").parquet(storePath)
-      ()
-    }
-
-  /** Incremental ANN index ingestion — the streaming half of the IVF
-    * build/query split: each micro-batch of (id, vector) rows is
-    * assigned to its nearest centroid (broadcast centroid literals,
-    * pure map — [[graft.operators.Similarity.ivfAssign]]) and APPENDED
-    * to the persisted inverted-list store, partitioned by `cid` so
-    * probe-side readers partition-prune to their nprobe lists. The
-    * centroids are FIXED at ingest time (trained once on a seed
-    * corpus, [[graft.operators.Similarity.ivfTrain]]/`ivfLoad`) — the
-    * production pattern: re-training moves assignments, so a centroid
-    * refresh is a rebuild, not an append — [[ivfRebuild]]. Use as
-    * `writeStream.foreachBatch(ivfIngestStream(...))`.
-    *
-    * `metricsPath` (optional) appends one (batch_id, n, mean_d2) row
-    * per batch — the batch's mean assignment distance. Compared against
-    * the [[graft.operators.Similarity.ivfStatsSave]] build baseline
-    * ([[graft.operators.Similarity.ivfDriftReport]]) this is the
-    * DRIFT alarm: fixed centroids degrade recall silently as the
-    * ingested distribution shifts, and a sustained mean-distance spike
-    * is the signal to rebuild. One extra aggregate row per batch. */
-  def ivfIngestStream(idCol: String, vecCol: String,
-                      centroids: Array[(Int, Array[Double])],
-                      storePath: String,
-                      metricsPath: Option[String] = None)
-      : (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) => {
-      val assigned = graft.operators.Similarity
-        .ivfAssignDist(batch, idCol, vecCol, centroids)
-        .persist()
-      assigned.drop("d2").withColumn("batch_id", lit(batchId))
-        .write.mode("append").partitionBy("cid").parquet(storePath)
-      metricsPath.foreach { mp =>
-        assigned.agg(count(lit(1)).as("n"), avg(col("d2")).as("mean_d2"))
-          .withColumn("batch_id", lit(batchId))
-          .coalesce(1).write.mode("append").parquet(mp)
-      }
-      assigned.unpersist()
-      ()
-    }
-
-  /** Centroid refresh for an [[ivfIngestStream]] store — the rebuild
-    * the drift alarm triggers: re-train on the store's LATEST vector
-    * per id (the same upsert view [[ivfStoreRead]] serves), re-assign,
-    * and write a fresh single-generation store to `newStorePath`
-    * (NEVER in place — readers keep the old store until the pointer
-    * swaps, the standard blue/green index cutover). Returns the new
-    * centroid matrix; persist it with `ivfSave` + `ivfStatsSave` to
-    * re-arm the drift baseline. Deterministic: same stored vectors →
-    * bit-identical centroids, assignments, and probe results as a
-    * from-scratch build (spec-asserted). */
-  def ivfRebuild(spark: org.apache.spark.sql.SparkSession,
-                 storePath: String, newStorePath: String,
-                 nlist: Int, iters: Int = 5): Array[(Int, Array[Double])] = {
-    import graft.operators.Similarity
-    require(newStorePath != storePath,
-      "rebuild must write a NEW store generation (blue/green), not overwrite in place")
-    val vecs = ivfStoreRead(spark, storePath)
-      .select(col("corpus_id"), col("cv"))
-      .persist()
-    val cents = Similarity.ivfTrain(vecs, "corpus_id", "cv", nlist, iters)
-    Similarity.ivfAssign(vecs, "corpus_id", "cv", cents)
-      .withColumn("batch_id", lit(0L))
-      .write.mode("overwrite").partitionBy("cid").parquet(newStorePath)
-    vecs.unpersist()
-    cents
-  }
-
-  /** Probe-ready reader over an [[ivfIngestStream]] store: one row per
-    * corpus id, LATEST batch wins (`max_by` on batch_id) — which both
-    * absorbs at-least-once redelivery (replayed rows lose the tie to
-    * themselves harmlessly) and gives re-ingested ids upsert
-    * semantics. One corpus_id-keyed aggregate; the result feeds
-    * [[graft.operators.Similarity.ivfProbe]] unchanged. */
-  def ivfStoreRead(spark: org.apache.spark.sql.SparkSession,
-                   storePath: String): DataFrame =
-    spark.read.parquet(storePath)
-      .groupBy(col("corpus_id"))
-      .agg(max_by(struct(col("cv"), col("cid")), col("batch_id")).as("r"))
-      .select(col("corpus_id"), col("r.cv").as("cv"), col("r.cid").as("cid"))
-
-  /** Incremental SEARCH-index ingestion — the postings sibling of
-    * [[ivfIngestStream]]: each micro-batch tokenizes its documents and
-    * APPENDS (id, pos, term, batch_id) rows to a term-bucket-partitioned
-    * postings store plus (id, len, batch_id) doc lengths — the
-    * [[graft.operators.Search.writePostings]] layout made appendable.
-    * No stats row is frozen at build time; readers derive exact corpus
-    * totals from the latest-version doc lengths, so BM25 stays correct
-    * as the index grows.
-    *
-    * Versioning: `batch_id` (monotone under a checkpointed query —
-    * Structured Streaming continues epochs across restarts) makes every
-    * ingest of a doc a new VERSION. Readers keep only each doc's
-    * latest-version rows, which gives (a) replay absorption — a
-    * redelivered batch rewrites identical rows of the same version, and
-    * the slice dedup collapses them — and (b) upsert — re-ingesting a
-    * changed doc supersedes ALL its old postings, including ones in
-    * buckets the query never touches, because the version map comes
-    * from the doclens table, not the probed slice.
-    *
-    * Scale: the append repartitions by `tb` (one file per touched
-    * bucket dir per batch — compact offline like any streaming-append
-    * table); a query reads only its terms' bucket dirs (partition
-    * pruning, same as the batch index); the version map is one keyed
-    * aggregate over the THIN doclens table, semi-joined down to the
-    * slice's docs before broadcasting back. */
-  def postingsIngestStream(idCol: String, textCol: String, indexPath: String,
-                           buckets: Int = 64): (DataFrame, Long) => Unit = {
-    require(buckets >= 1 && buckets <= 65536,
-      s"buckets must be in [1, 65536] (16 md5 bits), got $buckets")
-    (batch: DataFrame, batchId: Long) => {
-      val spark = batch.sparkSession
-      DedupStore.openOrInit(spark, indexPath, Seq("buckets" -> buckets))
-      val toks = graft.operators.TextStats
-        .tokenized(batch, idCol, textCol).persist()
-      graft.operators.Search.positionalPostings(toks)
-        .withColumn("tb",
-          (conv(substring(md5(col("term")), 1, 4), 16, 10)
-            .cast("int") % buckets))
-        .withColumn("batch_id", lit(batchId))
-        .repartition(col("tb"))
-        .write.mode("append").partitionBy("tb").parquet(s"$indexPath/postings")
-      toks.select(col("id"), size(col("ws")).cast("long").as("len"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("append").parquet(s"$indexPath/doclens")
-      toks.unpersist()
-      ()
-    }
-  }
-
-  /** Latest ingested version per doc from a [[postingsIngestStream]]
-    * store: (id, len, vb) — one keyed max_by over the thin doclens
-    * table, the postings-store analog of [[ivfStoreRead]].
-    *
-    * Scale note: this pass is linear in CORPUS COUNT (thin rows — two
-    * longs per ingested version), not in postings. A deployment running
-    * many queries against one store state should materialize this view
-    * once per analysis session (or per compaction) and hand it to the
-    * readers — the same amortization `ivfRebuild` applies to the
-    * vector store; per-query work is then slice-sized only. */
-  private def postingsStoreVersions(
-      spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/doclens")
-      .groupBy(col("id"))
-      .agg(max_by(col("len"), col("batch_id")).as("len"),
-        max(col("batch_id")).as("vb"))
-
-  /** The query terms' CURRENT posting lists from a streamed index:
-    * partition-pruned to the terms' buckets, replay-deduped, and
-    * version-filtered to each doc's latest ingest. */
-  private[graft] def postingsStoreFor(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      terms: Seq[String]): DataFrame = {
-    require(terms.nonEmpty, "need at least one term")
-    val buckets = spark.read.parquet(s"$path/config").head().getInt(0)
-    val tbs = terms.map(graft.operators.Search.termBucket(_, buckets)).distinct
-    val slice = spark.read.parquet(s"$path/postings")
-      .where(col("tb").isin(tbs: _*) && col("term").isin(terms: _*))
-      .dropDuplicates("id", "pos", "term", "batch_id")
-    val ver = postingsStoreVersions(spark, path)
-      .join(broadcast(slice.select("id").distinct()), Seq("id"), "left_semi")
-    slice.join(broadcast(ver.select(col("id"), col("vb"))), Seq("id"))
-      .where(col("batch_id") === col("vb"))
-      .select(col("id"), col("pos"), col("term"))
-  }
-
-  /** [[graft.operators.Search.phraseOccurrences]] over a streamed
-    * index — ≡ the batch-built index over the same (latest) corpus. */
-  def phraseFromPostingsStore(spark: org.apache.spark.sql.SparkSession,
-                              path: String, phrase: Seq[String]): DataFrame =
-    graft.operators.Search.phraseOccurrences(
-      postingsStoreFor(spark, path, phrase.distinct), phrase)
-
-  /** BM25 over a streamed index: tf from the pruned current slice,
-    * lengths and exact corpus totals from the latest-version doclens —
-    * scores bit-identical to a batch index built on the same corpus
-    * state (spec-asserted). */
-  def bm25FromPostingsStore(spark: org.apache.spark.sql.SparkSession,
-                            path: String, query: Seq[String],
-                            k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    require(query.nonEmpty, "query must have at least one term")
-    val tf = postingsStoreFor(spark, path, query.distinct)
-      .groupBy(col("id"), col("term")).agg(count(lit(1)).as("tf"))
-    val lens = postingsStoreVersions(spark, path).select(col("id"), col("len"))
-    val tot = lens.agg(count(lit(1)).as("n"), sum(col("len")).as("sl"))
-    graft.operators.Search.bm25Score(tf, lens, tot, k1, b)
-  }
-
-  /** Rolling w-day distinct-reach estimates from a [[sketchStream]]
-    * store keyed by DAY — the 100 TB face of
-    * [[graft.operators.EventOps.rollingReach]]: the exact form must
-    * revisit w× the (user, day) frame per report, while here each
-    * day's users are absorbed into a 4 KB HLL once and every rolling
-    * window is a w-way sketch union (mergeability is the whole
-    * point — the same store answers any window length after the
-    * fact). Estimates carry HLL error (±~1.6% at lgK 12; accuracy vs
-    * the exact operator is spec-asserted), and batch replays are
-    * absorbed by union idempotence like every sketch-store reader.
-    * Returns (day, reach_est). */
-  def sketchRollingReach(spark: org.apache.spark.sql.SparkSession,
-                         storePath: String,
-                         windowDays: Int): DataFrame = {
-    require(windowDays >= 1, "windowDays must be positive")
-    val daily = spark.read.parquet(storePath)
-      .groupBy(col("key").cast("long").as("day"))
-      .agg(hll_union_agg(col("sketch"), false).as("sk"))
-    val days = daily.select(col("day").as("wday"))
-    val offs = spark.range(0, windowDays).select(col("id").as("o"))
-    daily.crossJoin(broadcast(offs))
-      .withColumn("wday", col("day") + col("o"))
-      .join(days, "wday")
-      .groupBy("wday")
-      .agg(hll_union_agg(col("sk"), false).as("m"))
-      .select(col("wday").as("day"),
-        hll_sketch_estimate(col("m")).cast("long").as("reach_est"))
-  }
-
-  /** Report over a [[sketchStream]] store: per-key distinct estimates
-    * (sketches unioned across batches) plus the corpus-wide
-    * `__all__` row. */
-  def sketchReport(spark: org.apache.spark.sql.SparkSession,
-                   storePath: String): DataFrame = {
-    val store = spark.read.parquet(storePath)
-    val perKey = store.groupBy(col("key"))
-      .agg(hll_union_agg(col("sketch"), false).as("merged"))
-      .select(col("key"), hll_sketch_estimate(col("merged")).as("estimate"))
-    perKey.unionAll(
-      graft.operators.Sketches.unionEstimate(
-          store.select(col("sketch")))
-        .select(lit("__all__").as("key"), col("estimate")))
-  }
-
-  /** Incremental EXACT quantiles: each micro-batch appends its
-    * grid-cell histogram — one `(batch_id, grp, s4, n)` row per
-    * occupied 1e-4 cell — to a persistent store; any later quantile
-    * report ([[histReport]]) is a cell-sum over the store, never a
-    * re-scan of ingested data. The exact sibling of [[sketchStream]]:
-    * grid histograms are mergeable like sketches (merge = summing cell
-    * counts) but LOSSLESS, so the incremental report is bit-equal to a
-    * single whole-history [[graft.operators.TextStats.groupQuantiles]]
-    * pass (asserted in `SketchSpec`).
-    *
-    * Delivery: at-least-once replays are absorbed at READ time —
-    * a replayed batch re-appends identical cells under the same
-    * batch_id, and [[histCells]] collapses to one row per
-    * (batch_id, grp, s4) before summing. Store size is bounded by
-    * (batches × groups × occupied cells), KB-scale rows — per-batch
-    * work never touches the store at all (append-only). */
-  def histStream(keyCol: String, scoreCol: String, storePath: String)
-      : (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) => {
-      // writers open (heal) first: an append into a torn store's
-      // missing live dir would recreate it fresh and strand the full
-      // history under the swap's aside names
-      openStore(batch.sparkSession, storePath)
-      batch.select(col(keyCol).as("grp"),
-          round(col(scoreCol) * 1e4).cast("long").as("s4"))
-        .groupBy("grp", "s4").agg(count(lit(1)).as("n"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("append").parquet(storePath)
-      ()
-    }
-
-  /** The merged histogram of a [[histStream]] store: the
-    * [[absorbedCounts]] read over the grid cells, then cell counts
-    * summed across batches → `(grp, s4, n)`. */
-  def histCells(spark: org.apache.spark.sql.SparkSession,
-                storePath: String): DataFrame =
-    absorbedCounts(spark, storePath, Seq("grp", "s4"))
-      .groupBy("grp", "s4").agg(sum(col("n")).as("n"))
-
-  /** The replay-absorbed rows of a watermark-compacted count dir (a
-    * [[histStream]] store or one [[basketStream]] family): rows below
-    * the compaction watermark are dropped (their mass lives in the
-    * baseline row set, batch_id −1 — see [[baselineCompact]]), and one
-    * row per (batch_id, keys) survives, since a replayed batch
-    * re-appends identical counts under the same batch_id →
-    * `(batch_id, keys…, n)`. */
-  private def absorbedCounts(spark: org.apache.spark.sql.SparkSession,
-                             dir: String, keys: Seq[String]): DataFrame = {
-    val wm = histWatermark(spark, dir)
-    spark.read.parquet(dir)
-      .where(col("batch_id") === -1L || col("batch_id") > wm)
-      .groupBy(("batch_id" +: keys).map(col): _*).agg(max(col("n")).as("n"))
-  }
-
-  /** The store's compaction watermark: batches ≤ this id have been
-    * merged into the baseline rows (batch_id −1) and their raw rows —
-    * including any at-least-once REPLAY that arrives after the
-    * compaction — are ignored by every reader. Carried as an
-    * underscore-prefixed file INSIDE the parquet dir (parquet readers
-    * skip `_`-files), so the compaction's rename swap moves data and
-    * watermark atomically — no window where they disagree. Every
-    * reader resolves the watermark first, so it opens (heals) the
-    * store here. */
-  private[graft] def histWatermark(spark: org.apache.spark.sql.SparkSession,
-                                   storePath: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(s"$storePath/_graft_wm")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    openStore(spark, storePath)
-    if (!fs.exists(p)) Long.MinValue
-    else {
-      val in = fs.open(p)
-      try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-      finally in.close()
-    }
-  }
-
-  /** Compact a [[histStream]] store: merge every batch with id ≤
-    * `upToBatchId` (plus any prior baseline) into ONE baseline cell
-    * set (batch_id −1) and keep later batches raw — the
-    * [[baselineCompact]] over the grid-cell keys. The store stays
-    * bounded over an unbounded ingest life while every report stays
-    * bit-identical (spec-asserted), and a pre-watermark batch REPLAYED
-    * after compaction is ignored by readers instead of double-counting.
-    * Returns (cell rows after, total mass). */
-  def histCompact(spark: org.apache.spark.sql.SparkSession,
-                  storePath: String, upToBatchId: Long): (Long, Long) =
-    baselineCompact(spark, storePath, Seq("grp", "s4"), upToBatchId)
-
-  /** Watermark-baseline compaction of one count dir (a [[histStream]]
-    * store, one [[basketStream]] family) over its key columns: the
-    * [[absorbedCounts]] rows with batch_id ≤ `upToBatchId` sum into ONE
-    * baseline row per key (batch_id −1), later batches stay raw, and
-    * the new watermark rides inside the rewritten dir. A mass-checked
-    * [[swapStore]] (crash contract there). Returns (rows after,
-    * mass). */
-  private def baselineCompact(spark: org.apache.spark.sql.SparkSession,
-                              dir: String, keys: Seq[String],
-                              upToBatchId: Long): (Long, Long) = {
-    require(upToBatchId >= 0L, s"bad watermark: $upToBatchId")
-    def mass(df: DataFrame): Long =
-      df.agg(coalesce(sum(col("n")), lit(0L))).head().getLong(0)
-    swapStore(spark, dir) { aside =>
-      val valid = absorbedCounts(spark, dir, keys)
-      val massBefore = mass(valid)
-      val baseline = valid.where(col("batch_id") <= upToBatchId)
-        .groupBy(keys.map(col): _*).agg(sum(col("n")).as("n"))
-        .where(col("n").isNotNull)   // keyless, no pre-watermark batch → no row
-        .select((keys.map(col) :+ col("n")) :+ lit(-1L).as("batch_id"): _*)
-      val rest = valid.where(col("batch_id") > upToBatchId)
-        .select((keys.map(col) :+ col("n")) :+ col("batch_id"): _*)
-      baseline.unionByName(rest).coalesce(2)
-        .write.mode("overwrite").parquet(aside)
-      val wm = new org.apache.hadoop.fs.Path(s"$aside/_graft_wm")
-      val outWm = wm.getFileSystem(spark.sessionState.newHadoopConf())
-        .create(wm, true)
-      try outWm.write(upToBatchId.toString
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally outWm.close()
-      val after = spark.read.parquet(aside)
-      val massAfter = mass(after)
-      require(massAfter == massBefore,
-        s"$dir compaction mass drift: $massBefore -> $massAfter — aborting")
-      (after.count(), massAfter)
-    }
-  }
-
-  /** Streaming market-basket census — the incremental face of
-    * [[graft.operators.Itemsets.pairAssociations]]: each micro-batch
-    * (basket-complete by contract — a basket's rows arrive in ONE
-    * batch, the shape an upstream emitting finished orders produces)
-    * appends three row families under its batch_id: distinct item
-    * counts, within-basket pair counts, and the basket count. Raw
-    * counts only — NO threshold is applied at write time, so the
-    * support fraction is a READ-time policy knob: yesterday's store
-    * answers today's tighter threshold without re-ingesting anything.
-    * At-least-once replays are absorbed at read like [[histStream]]
-    * (max per (batch_id, key) before summing). Per-batch pair work is
-    * Σ|basket|² within the batch only — the store is never read.
-    *
-    * Store size is (batches × occupied cells), vocabulary²-bounded
-    * per batch family; [[basketCompact]] bounds it if batch count ever
-    * dominates. */
-  def basketStream(basketCol: String, itemCol: String, storePath: String)
-      : (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) => {
-      // open (heal) every family before appending, as histStream does
-      basketFamilies.foreach { case (fam, _) =>
-        openStore(batch.sparkSession, s"$storePath/$fam") }
-      val d = batch.select(col(basketCol).as("__b"), col(itemCol).as("__i"))
-        .where(col("__b").isNotNull && col("__i").isNotNull)
-        .distinct()
-        .persist()
-      try {
-        d.groupBy(col("__i").as("item")).agg(count(lit(1)).as("n"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(s"$storePath/items")
-        d.as("a").join(d.as("b"),
-            col("a.__b") === col("b.__b") && col("a.__i") < col("b.__i"))
-          .groupBy(col("a.__i").as("item_a"), col("b.__i").as("item_b"))
-          .agg(count(lit(1)).as("n"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(s"$storePath/pairs")
-        d.agg(countDistinct(col("__b")).as("n"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(s"$storePath/baskets")
-      } finally { d.unpersist(); () }
-    }
-
-  /** Association rules over everything a [[basketStream]] store has
-    * ingested, at a caller-chosen support fraction — bit-identical to
-    * running [[graft.operators.Itemsets.pairAssociations]] on the
-    * union of all ingested batches (spec-asserted), because both paths
-    * end in the same [[graft.operators.Itemsets.rules]] arithmetic.
-    * Reads are census-sized (items + pair cells + one basket row per
-    * batch — and per-family compaction watermarks keep "per batch"
-    * from growing without bound over the store's life, see
-    * [[basketCompact]]), never data-sized. */
-  def basketRulesFromStore(spark: org.apache.spark.sql.SparkSession,
-                           storePath: String,
-                           minSupportFrac: Double): DataFrame = {
-    import graft.operators.Itemsets
-    def absorbed(fam: String, keys: Seq[String]): DataFrame =
-      absorbedCounts(spark, s"$storePath/$fam", keys)
-    val nB = Itemsets.thresholdOf(
-      absorbed("baskets", Nil).agg(sum(col("n")).as("__nb")),
-      minSupportFrac)
-    val items = absorbed("items", Seq("item"))
-      .groupBy(col("item").as("__i")).agg(sum(col("n")).as("__n"))
-    val freq = items.crossJoin(broadcast(nB))
-      .where(col("__n") >= col("__min"))
-      .select(col("__i"), col("__n"))
-    val pairs = absorbed("pairs", Seq("item_a", "item_b"))
-      .groupBy("item_a", "item_b").agg(sum(col("n")).as("pair_n"))
-    Itemsets.rules(freq, pairs, nB)
-  }
-
-  /** A [[basketStream]] store's count families and their key columns. */
-  private val basketFamilies = Seq("items" -> Seq("item"),
-    "pairs" -> Seq("item_a", "item_b"), "baskets" -> Seq.empty[String])
-
-  /** Compact a [[basketStream]] store: each count family (items /
-    * pairs / baskets) gets the [[baselineCompact]] treatment — batches
-    * ≤ `upToBatchId` merge into ONE baseline row set (batch_id −1) and
-    * the family's watermark rides inside its parquet dir. Bounds the
-    * store (and every [[basketRulesFromStore]] read) over an unbounded
-    * ingest life; a pre-watermark batch replayed after compaction is
-    * ignored by readers. Returns (family, rows, mass) per family. */
-  def basketCompact(spark: org.apache.spark.sql.SparkSession,
-                    storePath: String,
-                    upToBatchId: Long): Seq[(String, Long, Long)] =
-    basketFamilies.map { case (fam, keys) =>
-      val (rows, mass) =
-        baselineCompact(spark, s"$storePath/$fam", keys, upToBatchId)
-      (fam, rows, mass)
-    }
-
-  /** Incremental data profiling: each micro-batch appends its
-    * [[graft.operators.Profiling.profileSketched]] rows (one per
-    * profiled column — counts, grid/string min-max, HLL value sketch)
-    * to a persistent store; [[profileReport]] merges them losslessly
-    * (counts sum, min/max fold, sketches union) into the whole-history
-    * profile. Exact fields are bit-equal to a single
-    * whole-data [[graft.operators.Profiling.profile]] pass; distincts
-    * carry HLL error (±1.6% at lgK 12) — both spec-asserted. Replays
-    * are absorbed at read like [[histCells]]; per-batch work never
-    * reads the store. */
-  def profileStream(numericCols: Seq[String], stringCols: Seq[String],
-                    storePath: String): (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) => {
-      graft.operators.Profiling
-        .profileSketched(batch, numericCols, stringCols)
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("append").parquet(storePath)
-      ()
-    }
-
-  /** Merged whole-history profile over a [[profileStream]] store. */
-  def profileReport(spark: org.apache.spark.sql.SparkSession,
-                    storePath: String): DataFrame =
-    spark.read.parquet(storePath)
-      // replay absorption: one row per (batch_id, column) — duplicates
-      // are bit-identical, so min/max/union pick the same row back
-      .groupBy("batch_id", "column")
-      .agg(max(col("n_rows")).as("n_rows"), max(col("n_null")).as("n_null"),
-        min(col("min4")).as("min4"), max(col("max4")).as("max4"),
-        min(col("min_s")).as("min_s"), max(col("max_s")).as("max_s"),
-        hll_union_agg(col("sketch"), true).as("sketch"))
-      .groupBy("column")
-      .agg(sum(col("n_rows")).as("n_rows"), sum(col("n_null")).as("n_null"),
-        min(col("min4")).as("min4"), max(col("max4")).as("max4"),
-        min(col("min_s")).as("min_s"), max(col("max_s")).as("max_s"),
-        hll_union_agg(col("sketch"), true).as("merged"))
-      .select(col("column"), col("n_rows"), col("n_null"),
-        hll_sketch_estimate(col("merged")).cast("long").as("n_distinct_est"),
-        col("min4"), col("max4"), col("min_s"), col("max_s"))
-
-  /** Drift report over a [[histStream]] store: per-BATCH exact KS
-    * distance against the whole-store distribution (every batch's CDF
-    * vs the merged CDF, both on the grid) — the "which ingest batch
-    * shifted the score distribution" alarm, the histogram-store analog
-    * of [[graft.operators.Similarity.ivfDriftReport]]. All from the
-    * persisted cells; ingested rows are never re-scanned. */
-  def histDriftReport(spark: org.apache.spark.sql.SparkSession,
-                      storePath: String): DataFrame =
-    graft.operators.TextStats.groupScoreDriftFromCells(
-      absorbedCounts(spark, storePath, Seq("grp", "s4"))
-        .groupBy(col("batch_id").as("grp"), col("s4"))
-        .agg(sum(col("n")).as("n")))
-      .select(col("grp").as("batch_id"), col("n_rows"), col("ks4"))
-
-  /** Per-batch PSI against the merged store (see
-    * [[graft.operators.TextStats.groupPsiFromCells]]) — the
-    * whole-distribution companion of [[histDriftReport]]'s KS over the
-    * same persisted cells: KS flags the worst CDF gap, PSI the
-    * integrated mismatch with its standard 0.1/0.25 action
-    * thresholds. Same replay-absorption and watermark discipline. */
-  def histPsiReport(spark: org.apache.spark.sql.SparkSession,
-                    storePath: String): DataFrame =
-    graft.operators.TextStats.groupPsiFromCells(
-      absorbedCounts(spark, storePath, Seq("grp", "s4"))
-        .groupBy(col("batch_id").as("grp"), col("s4"))
-        .agg(sum(col("n")).as("n")))
-      .select(col("grp").as("batch_id"), col("n_rows"), col("psi8"))
-
-  /** Quantile report over a [[histStream]] store: per-key exact
-    * quantiles at the requested per-10000 points, plus the corpus-wide
-    * `__all__` row — all from the persisted cells. */
-  def histReport(spark: org.apache.spark.sql.SparkSession,
-                 storePath: String, qs: Seq[Int]): DataFrame = {
-    // cells are (groups × occupied grid cells) rows — KB-scale; the
-    // two branches below recompute them rather than pin a cache for a
-    // one-shot report
-    val cells = histCells(spark, storePath)
-    val perKey = graft.operators.TextStats.groupQuantilesFromCells(cells, qs)
-    val overall = graft.operators.TextStats.groupQuantilesFromCells(
-      cells.groupBy("s4").agg(sum(col("n")).as("n"))
-        .select(lit("__all__").as("grp"), col("s4"), col("n")), qs)
-    perKey.unionAll(overall)
-  }
-
-  /** Streaming 2-D skyline (Pareto-front) store: each micro-batch is
-    * reduced to (u, t) cells, every cell STRICTLY dominated by the
-    * already-stored front is dropped — dominance is monotone under
-    * inserts (cells are only ever added), so a dominated cell can
-    * never re-enter any future front and the drop is safe forever —
-    * and the survivors append batch-stamped. Equal cells are NOT
-    * dominated (strictness on one axis), so a front cell recurring in
-    * a later batch appends again and its counts accumulate at read.
-    *
-    * Scale: per-batch work is one batch census + one anti-join
-    * against the broadcast stored front; the store grows with front
-    * CANDIDATES (cells undominated at append time), not with distinct
-    * cells ingested. Redelivered batches re-append identical rows;
-    * [[skylineReport]] absorbs them. */
-  def skylineIngestStream(maxCol: String, minCol: String,
-                          storePath: String): (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) => {
-      val spark = batch.sparkSession
-      val cells = batch.select(col(maxCol).as("u"), col(minCol).as("t"))
-        .groupBy("u", "t").agg(count(lit(1)).as("n"))
-      val pruned =
-        if (!openStore(spark, storePath)) cells
-        else {
-          val front = graft.operators.Profiling.skylineOfCells(
-            spark.read.parquet(storePath)
-              .groupBy("u", "t").agg(count(lit(1)).as("n_rows")))
-          cells.join(
-            broadcast(front.select(col("u").as("fu"), col("t").as("ft"))),
-            col("fu") >= col("u") && col("ft") <= col("t")
-              && (col("fu") > col("u") || col("ft") < col("t")),
-            "left_anti")
-        }
-      pruned.withColumn("batch_id", lit(batchId))
-        .write.mode("append").parquet(storePath)
-      ()
-    }
-
-  /** The live Pareto front of a [[skylineIngestStream]] store:
-    * replay-absorb (one row per (batch_id, u, t) survives — a
-    * redelivered batch wrote bit-identical rows), sum each cell's
-    * count across batches, then the q285 sweep. Equals the batch
-    * [[graft.operators.Profiling.skyline2d]] over everything ever
-    * ingested (spec-asserted). */
-  def skylineReport(spark: org.apache.spark.sql.SparkSession,
-                    storePath: String): DataFrame =
-    graft.operators.Profiling.skylineOfCells(
-      spark.read.parquet(storePath)
-        .groupBy("batch_id", "u", "t").agg(max(col("n")).as("n"))
-        .groupBy("u", "t").agg(sum(col("n")).as("n_rows")))
 }

@@ -36,63 +36,25 @@ object syntax {
                      maxDocFreq: Option[Int] = Some(10000)): DataFrame =
       Dedup.jaccardPairs(df, idCol, textCol, n, minJaccard, maxDocFreq)
 
-    def nearDupClusters(idCol: String, textCol: String, n: Int = 3,
-                        minJaccard: Double = 0.8): DataFrame =
-      Dedup.dupClusters(df, idCol,
-        Dedup.jaccardPairs(df, idCol, textCol, n, minJaccard))
-
-    def minhashNearDups(idCol: String, textCol: String, n: Int = 3,
-                        k: Int = 9, bands: Int = 3,
-                        minJaccard: Double = 0.8): DataFrame =
-      Dedup.minhashDedup(df, idCol, textCol, n, k, bands, minJaccard)
-
-    def simhashSignatures(idCol: String, textCol: String): DataFrame =
-      Dedup.simhash(df, idCol, textCol)
-
     // ---- similarity ----
     def cosineTopK(queries: DataFrame, idCol: String, vecCol: String,
                    k: Int, dim: Int = 64): DataFrame =
       Similarity.bruteForceTopK(df, queries, idCol, vecCol, k, dim)
 
-    def cosineTopKLsh(queries: DataFrame, idCol: String, vecCol: String,
-                      k: Int, dim: Int = 64, bits: Int = 8): DataFrame =
-      Similarity.signLshTopK(df, queries, idCol, vecCol, k, dim, bits)
-
-    def cosineTopKIvf(queries: DataFrame, idCol: String, vecCol: String,
-                      k: Int, dim: Int = 64, nlist: Int = 16,
-                      nprobe: Int = 4): DataFrame =
-      Similarity.ivfTopK(df, queries, idCol, vecCol, k, dim, nlist, nprobe)
-
     // ---- text analysis ----
-    def withTextQuality(textCol: String, nCharsCol: String): DataFrame =
-      df.withColumn("quality",
-        TextFunctions.qualityScore(col(textCol), col(nCharsCol)))
-
     def withLangId(textCol: String): DataFrame =
       df.withColumn("lang_pred", TextFunctions.langId(col(textCol)))
-
-    def withFingerprint(textCol: String): DataFrame =
-      df.withColumn("fingerprint", TextFunctions.fingerprint(col(textCol)))
 
     def withTokenCount(textCol: String): DataFrame =
       df.withColumn("n_tokens", TextFunctions.tokenCount(col(textCol)))
 
-    // ---- round-3 corpus statistics & decontamination ----
+    // ---- corpus statistics ----
     def repetitionStats(idCol: String, textCol: String): DataFrame =
       TextStats.repetitionStats(df, idCol, textCol)
 
     def winnowingFingerprints(idCol: String, textCol: String,
                               n: Int = 3, w: Int = 4): DataFrame =
       TextStats.winnowingFingerprints(df, idCol, textCol, n, w)
-
-    def decontaminateNgrams(idCol: String, textCol: String,
-                            bench: DataFrame, benchIdCol: String,
-                            benchTextCol: String, n: Int = 3): DataFrame =
-      Dedup.contaminationFlags(df, idCol, textCol, bench, benchIdCol, benchTextCol, n)
-
-    def decontaminateSubstrings(idCol: String, textCol: String,
-                                probes: DataFrame, probeCol: String): DataFrame =
-      Dedup.substringContamination(df, idCol, textCol, probes, probeCol)
 
     def quantizeInt8(idCol: String, vecCol: String): DataFrame =
       Embeddings.quantizeInt8(df, idCol, vecCol)

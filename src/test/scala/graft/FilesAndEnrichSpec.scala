@@ -1,8 +1,6 @@
 package graft
 
 import graft.sources.{Files, JsonSerde}
-import graft.streaming.Pipelines
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import java.nio.file.{Files => JFiles}
@@ -47,23 +45,5 @@ class FilesAndEnrichSpec extends SparkSpec {
     // pruning: only the k=a directory's files appear in the scan
     val scanned = read.queryExecution.executedPlan.collectLeaves().head.toString
     assert(!scanned.contains("k=b"))
-  }
-
-  test("stream-static join enriches events with a dimension") {
-    implicit val sc = spark.sqlContext
-    val dim = Seq((1L, "gold"), (2L, "silver")).toDF("uid", "tier")
-    val in = MemoryStream[(Long, Double)]
-    val out = Pipelines.enrichWithStatic(
-      in.toDF().toDF("user", "amount"), dim, "user", "uid")
-      .select("user", "tier", "amount")
-    val q = out.writeStream.format("memory").queryName("enriched")
-      .outputMode("append").start()
-    try {
-      in.addData((1L, 10.0), (3L, 5.0))
-      q.processAllAvailable()
-      val rows = spark.sql("SELECT user, tier FROM enriched ORDER BY user")
-        .as[(Long, Option[String])].collect().toSeq
-      assert(rows === Seq((1L, Some("gold")), (3L, None)))
-    } finally q.stop()
   }
 }

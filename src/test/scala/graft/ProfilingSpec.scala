@@ -46,55 +46,6 @@ class ProfilingSpec extends SparkSpec {
       .head().getAs[Long]("n_violations") === 1L)   // only -1.25; nulls skip
   }
 
-  test("profileStream: merged per-batch profiles equal a whole-data pass; replays absorbed") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sc = spark.sqlContext
-    val store = java.nio.file.Files.createTempDirectory("profstore").toFile
-    store.delete()
-    val in = MemoryStream[(java.lang.Long, String)]
-    val q = in.toDF().toDF("k", "s").writeStream
-      .foreachBatch(graft.streaming.Pipelines.profileStream(
-        Seq("k"), Seq("s"), store.getAbsolutePath))
-      .start()
-    val b1: Seq[(java.lang.Long, String)] =
-      Seq((1L: java.lang.Long, "b"), (3L: java.lang.Long, "a"), (null, "c"))
-    val b2: Seq[(java.lang.Long, String)] =
-      Seq((7L: java.lang.Long, null), (1L: java.lang.Long, "d"))
-    try {
-      in.addData(b1: _*)
-      q.processAllAvailable()
-      in.addData(b2: _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    def report() = graft.streaming.Pipelines
-      .profileReport(spark, store.getAbsolutePath)
-      .collect().map(r => r.getAs[String]("column") -> r).toMap
-    val rep = report()
-    val whole = graft.operators.Profiling.profile(
-        (b1 ++ b2).toDF("k", "s"), Seq("k"), Seq("s"))
-      .collect().map(r => r.getAs[String]("column") -> r).toMap
-    for (c <- Seq("k", "s")) {
-      assert(rep(c).getAs[Long]("n_rows") === whole(c).getAs[Long]("n_rows"))
-      assert(rep(c).getAs[Long]("n_null") === whole(c).getAs[Long]("n_null"))
-      // small cardinality → HLL estimate is exact
-      assert(rep(c).getAs[Long]("n_distinct_est")
-        === whole(c).getAs[Long]("n_distinct"))
-    }
-    assert(rep("k").getAs[Long]("min4") === 10000L)
-    assert(rep("k").getAs[Long]("max4") === 70000L)
-    assert(rep("s").getAs[String]("min_s") === "a")
-    assert(rep("s").getAs[String]("max_s") === "d")
-    // replay batch 1 under the same batch_id → report unchanged
-    graft.operators.Profiling.profileSketched(
-        b1.toDF("k", "s"), Seq("k"), Seq("s"))
-      .withColumn("batch_id", lit(0L))
-      .write.mode("append").parquet(store.getAbsolutePath)
-    val rep2 = report()
-    for (c <- Seq("k", "s"); f <- Seq("n_rows", "n_null", "n_distinct_est"))
-      assert(rep2(c).getAs[Long](f) === rep(c).getAs[Long](f),
-        s"replay changed $c.$f")
-  }
-
   test("groupLinFit: perfect line recovered exactly; zero-variance group dropped") {
     val rows = Seq(
       // group a: y = 2x + 3 exactly

@@ -40,126 +40,6 @@ class SketchSpec extends SparkSpec {
     assert(merged == whole)
   }
 
-  test("sketchStream: batch-appended sketches report like one scan, and replays are absorbed") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sc = spark.sqlContext
-    val store = java.nio.file.Files.createTempDirectory("skstore").toFile
-    store.delete()
-    val in = MemoryStream[(String, String)]
-    val q = in.toDF().toDF("src", "tok").writeStream
-      .foreachBatch(graft.streaming.Pipelines.sketchStream(
-        "src", "tok", store.getAbsolutePath))
-      .start()
-    val batch1 = Seq(("a", "x"), ("a", "y"), ("b", "x"))
-    val batch2 = Seq(("a", "y"), ("a", "z"), ("b", "w"))
-    try {
-      in.addData(batch1: _*)
-      q.processAllAvailable()
-      in.addData(batch2: _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    def report() = graft.streaming.Pipelines
-      .sketchReport(spark, store.getAbsolutePath)
-      .as[(String, Double)].collect().toMap
-    val fromStore = report()
-    // the incremental report equals a single whole-data sketch pass
-    val whole = graft.operators.Sketches.distinctSketch(
-        (batch1 ++ batch2).toDF("src", "tok"), "src", "tok")
-      .select(col("key"), col("estimate")).as[(String, Double)].collect().toMap
-    assert(fromStore("a") == whole("a") && fromStore("b") == whole("b"))
-    assert(fromStore("a") == 3.0 && fromStore("b") == 2.0,
-      s"small-cardinality HLL is exact: $fromStore")
-    assert(fromStore("__all__") == 4.0)
-    // at-least-once replay: re-append batch 2's sketch rows — every
-    // estimate must be unchanged (HLL union is idempotent)
-    graft.operators.Sketches.distinctSketch(
-        batch2.toDF("src", "tok"), "src", "tok")
-      .withColumn("batch_id", lit(99L))
-      .write.mode("append").parquet(store.getAbsolutePath)
-    assert(report() == fromStore, "duplicate batch sketch changed a report")
-  }
-
-  test("histStream: incremental exact quantiles equal one whole-history pass; replays absorbed") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sc = spark.sqlContext
-    val store = java.nio.file.Files.createTempDirectory("histstore").toFile
-    store.delete()
-    val in = MemoryStream[(String, Double)]
-    val q = in.toDF().toDF("src", "score").writeStream
-      .foreachBatch(graft.streaming.Pipelines.histStream(
-        "src", "score", store.getAbsolutePath))
-      .start()
-    val batch1 = Seq(("a", 0.11), ("a", 0.52), ("a", 0.52), ("b", 0.90))
-    val batch2 = Seq(("a", 0.73), ("b", 0.10), ("b", 0.30))
-    try {
-      in.addData(batch1: _*)
-      q.processAllAvailable()
-      in.addData(batch2: _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    val qs = Seq(5000, 9000)
-    def report() = graft.streaming.Pipelines
-      .histReport(spark, store.getAbsolutePath, qs)
-      .as[(String, Long, Long, Long)].collect()
-      .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
-    val fromStore = report()
-    // LOSSLESS merge law: the incremental report is bit-equal to a
-    // single groupQuantiles pass over all ingested rows
-    val whole = graft.operators.TextStats.groupQuantiles(
-        (batch1 ++ batch2).toDF("src", "score"), "src", "score", qs)
-      .as[(String, Long, Long, Long)].collect()
-      .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
-    assert(fromStore("a") === whole("a") && fromStore("b") === whole("b"))
-    // hand-check: a = {1100, 5200, 5200, 7300} → p50 = 5200, p90 = 7300
-    assert(fromStore("a") === ((4L, 5200L, 7300L)))
-    assert(fromStore("__all__")._1 === 7L)
-    // at-least-once replay: re-append batch 1's cells under the SAME
-    // batch_id (the foreachBatch replay contract) — reports unchanged
-    batch1.toDF("src", "score")
-      .select(col("src").as("grp"),
-        round(col("score") * 1e4).cast("long").as("s4"))
-      .groupBy("grp", "s4").agg(count(lit(1)).as("n"))
-      .withColumn("batch_id", lit(0L))
-      .write.mode("append").parquet(store.getAbsolutePath)
-    assert(report() === fromStore, "replayed batch cells changed a report")
-    // drift: an in-distribution batch sits low; a shifted batch spikes
-    Seq(("a", 9.0), ("a", 9.1), ("b", 9.2), ("b", 9.3))
-      .toDF("src", "score")
-      .select(col("src").as("grp"),
-        round(col("score") * 1e4).cast("long").as("s4"))
-      .groupBy("grp", "s4").agg(count(lit(1)).as("n"))
-      .withColumn("batch_id", lit(7L))
-      .write.mode("append").parquet(store.getAbsolutePath)
-    val drift = graft.streaming.Pipelines
-      .histDriftReport(spark, store.getAbsolutePath)
-      .as[(Long, Long, Long)].collect()
-      .map(r => r._1 -> r._3).toMap
-    assert(drift(7L) > drift(0L) && drift(7L) > drift(1L),
-      s"shifted batch must dominate the KS report: $drift")
-    assert(drift(7L) >= 6000L, s"4-of-11 rows at a new mode: $drift")
-    // COMPACTION: merge batches ≤ 1 into the baseline — every report
-    // bit-identical, store rows shrink, and a pre-watermark REPLAY
-    // after compaction is ignored instead of double-counting
-    val preCompact = report()
-    val (nRows, mass) = graft.streaming.Pipelines
-      .histCompact(spark, store.getAbsolutePath, upToBatchId = 1L)
-    assert(mass === 11L, s"7 ingested + replay absorbed + 4 shifted: $mass")
-    assert(report() === preCompact, "compaction changed a quantile report")
-    val drift2 = graft.streaming.Pipelines
-      .histDriftReport(spark, store.getAbsolutePath)
-      .as[(Long, Long, Long)].collect().map(r => r._1 -> r._3).toMap
-    assert(drift2.keySet === Set(-1L, 7L), s"batches 0/1 merged: $drift2")
-    assert(nRows < 20L)
-    batch1.toDF("src", "score")
-      .select(col("src").as("grp"),
-        round(col("score") * 1e4).cast("long").as("s4"))
-      .groupBy("grp", "s4").agg(count(lit(1)).as("n"))
-      .withColumn("batch_id", lit(0L))
-      .write.mode("append").parquet(store.getAbsolutePath)
-    assert(report() === preCompact,
-      "pre-watermark replay after compaction changed a report")
-  }
-
   test("estimates are within ±5% of exact distinct counts per source") {
     val srcs = Tables.documents(spark, dir)
       .select(col("doc_id").as("id"), col("source"))
@@ -174,42 +54,5 @@ class SketchSpec extends SparkSpec {
       assert(math.abs(e - d) <= 0.05 * d + 1,
         s"$src: estimate $e vs exact $d out of tolerance")
     }
-  }
-
-  test("sketchRollingReach: rolling union estimates track the exact operator; replay absorbed") {
-    import org.apache.spark.sql.functions.{floor, unix_timestamp}
-    val store = java.nio.file.Files.createTempDirectory("reach").toString
-    val ev = Tables.events(spark, dir)
-      .select(floor(unix_timestamp(col("ts")) / 86400L).as("day"),
-        col("user_id"))
-    val ingest = graft.streaming.Pipelines.sketchStream("day", "user_id", store)
-    ingest(ev.where(col("day") % 2 === 0), 0L)
-    ingest(ev.where(col("day") % 2 === 1), 1L)
-    ingest(ev.where(col("day") % 2 === 0), 0L) // at-least-once replay
-    val est = graft.streaming.Pipelines.sketchRollingReach(spark, store, 7)
-      .as[(Long, Long)].collect().toMap
-    val exact = graft.operators.EventOps
-      .rollingReach(Tables.events(spark, dir), "user_id", "ts", 7)
-      .select("day", "reach").as[(Long, Long)].collect().toMap
-    assert(est.keySet === exact.keySet)
-    exact.foreach { case (d, r) =>
-      assert(math.abs(est(d) - r) <= 0.05 * r + 1,
-        s"day $d: est ${est(d)} vs exact $r") }
-  }
-
-  test("histPsiReport: shifted batch dominates; in-distribution batches sit low") {
-    val store = java.nio.file.Files.createTempDirectory("histpsi").toString
-    val ingest = graft.streaming.Pipelines.histStream("src", "score", store)
-    def df(rows: Seq[(String, Double)]) = rows.toDF("src", "score")
-    val base = Seq(("a", 0.10), ("a", 0.11), ("a", 0.12), ("a", 0.10))
-    ingest(df(base), 0L)
-    ingest(df(base.map { case (s, v) => (s, v + 0.01) }), 1L)
-    ingest(df(Seq(("a", 0.90), ("a", 0.91), ("a", 0.92), ("a", 0.93))), 7L)
-    val psi = graft.streaming.Pipelines.histPsiReport(spark, store)
-      .as[(Long, Long, Long)].collect().map(r => r._1 -> r._3).toMap
-    assert(psi.keySet === Set(0L, 1L, 7L))
-    assert(psi(7L) > psi(0L) && psi(7L) > psi(1L),
-      s"shifted batch must dominate the PSI report: $psi")
-    assert(psi(7L) > 2500000L, s"PSI8 of a fully-shifted batch: $psi")
   }
 }

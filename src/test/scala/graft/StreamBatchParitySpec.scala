@@ -44,69 +44,4 @@ class StreamBatchParitySpec extends SparkSpec {
       assert(batch.nonEmpty)
     } finally q.stop()
   }
-
-  test("basketStream: store rules == batch pairAssociations; replays absorbed; threshold is read-time") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    implicit val sc = spark.sqlContext
-    val store = java.nio.file.Files.createTempDirectory("basketstore").toFile
-    store.delete()
-    val in = MemoryStream[(Long, String)]
-    val q = in.toDF().toDF("b", "i").writeStream
-      .foreachBatch(Pipelines.basketStream("b", "i", store.getAbsolutePath))
-      .start()
-    // basket-complete batches; basket 1 repeats item x (distinct pass)
-    val batch1 = Seq((1L, "x"), (1L, "x"), (1L, "y"), (2L, "x"), (2L, "y"))
-    val batch2 = Seq((3L, "x"), (3L, "z"), (4L, "y"), (4L, "z"), (4L, "x"))
-    try {
-      in.addData(batch1: _*)
-      q.processAllAvailable()
-      in.addData(batch2: _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    def fromStore(frac: Double) = Pipelines
-      .basketRulesFromStore(spark, store.getAbsolutePath, frac)
-      .orderBy("item_a", "item_b")
-      .as[(String, String, Long, Long, Long, Long, Long, Long)]
-      .collect().toSeq
-    def batchRules(frac: Double) = graft.operators.Itemsets
-      .pairAssociations((batch1 ++ batch2).toDF("b", "i"), "b", "i", frac)
-      .orderBy("item_a", "item_b")
-      .as[(String, String, Long, Long, Long, Long, Long, Long)]
-      .collect().toSeq
-    assert(fromStore(0.5) === batchRules(0.5))
-    assert(fromStore(0.5).nonEmpty)
-    // the same store answers a TIGHTER threshold without re-ingest
-    assert(fromStore(0.75) === batchRules(0.75))
-    assert(fromStore(0.75).size < fromStore(0.5).size)
-    // at-least-once replay: re-append batch 0's rows under batch_id 0
-    val d = batch1.toDF("b", "i").distinct()
-    d.groupBy(col("i").as("item")).agg(count(lit(1)).as("n"))
-      .withColumn("batch_id", lit(0L))
-      .write.mode("append").parquet(store.getAbsolutePath + "/items")
-    d.as("a").join(d.as("b"),
-        col("a.b") === col("b.b") && col("a.i") < col("b.i"))
-      .groupBy(col("a.i").as("item_a"), col("b.i").as("item_b"))
-      .agg(count(lit(1)).as("n"))
-      .withColumn("batch_id", lit(0L))
-      .write.mode("append").parquet(store.getAbsolutePath + "/pairs")
-    d.agg(countDistinct(col("b")).as("n"))
-      .withColumn("batch_id", lit(0L))
-      .write.mode("append").parquet(store.getAbsolutePath + "/baskets")
-    assert(fromStore(0.5) === batchRules(0.5),
-      "replayed batch rows changed the rule table")
-    // compaction: merge batch 0 into the baseline — rules bit-identical,
-    // and a PRE-watermark replay arriving afterwards is ignored
-    val before = fromStore(0.5)
-    val report = Pipelines.basketCompact(spark, store.getAbsolutePath,
-      upToBatchId = 0L)
-    assert(report.map(_._1).toSet === Set("items", "pairs", "baskets"))
-    assert(fromStore(0.5) === before, "compaction changed the rule table")
-    d.groupBy(col("i").as("item")).agg(count(lit(1)).as("n"))
-      .withColumn("batch_id", lit(0L))
-      .write.mode("append").parquet(store.getAbsolutePath + "/items")
-    assert(fromStore(0.5) === before,
-      "post-compaction replay of a merged batch double-counted")
-  }
 }

@@ -1,13 +1,12 @@
 package graft
 
 import graft.streaming.Pipelines
-import graft.streaming.Pipelines.{SessionEvent, SessionOut}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions.{col, floor, row_number, sum}
+import org.apache.spark.sql.functions.col
 import java.sql.Timestamp
 
-/** Event-time streaming semantics: watermark late-data drop, tumbling
-  * windows, stateful sessionization, bounded-state dedup. */
+/** Event-time streaming semantics (watermark late-data drop, tumbling,
+  * sliding and session windows) and the persistent micro-batch stores. */
 class StreamingPipelinesSpec extends SparkSpec {
   import spark.implicits._
 
@@ -60,47 +59,6 @@ class StreamingPipelinesSpec extends SparkSpec {
     assert(out === Seq((7L, 3L), (7L, 2L), (8L, 1L)))
   }
 
-  test("flatMapGroupsWithState sessionization closes sessions after the gap") {
-    implicit val sc = spark.sqlContext
-    val in = MemoryStream[SessionEvent]
-    val sessions = Pipelines.sessionize(in.toDS(), gapMs = 60000L, watermarkDelay = "0 seconds")
-
-    val q = sessions.writeStream.format("memory").queryName("sess_out")
-      .outputMode("append").start()
-    try {
-      val base = ts(0).getTime
-      in.addData(SessionEvent(1L, base, 1.0), SessionEvent(1L, base + 10000, 2.0))
-      q.processAllAvailable()
-      // 10 minutes later: closes user 1's first session via timeout/new data
-      in.addData(SessionEvent(1L, base + 600000, 5.0))
-      q.processAllAvailable()
-      in.addData(SessionEvent(1L, base + 1800000, 7.0))
-      q.processAllAvailable()
-      val out = spark.sql("SELECT user_id, n_events, value_sum FROM sess_out ORDER BY start_ms")
-        .as[(Long, Int, Double)].collect().toSeq
-      assert(out.nonEmpty)
-      assert(out.head === ((1L, 2, 3.0)))
-    } finally q.stop()
-  }
-
-  test("streaming dedup within watermark emits each key once") {
-    implicit val sc = spark.sqlContext
-    val in = MemoryStream[(Timestamp, Long)]
-    val deduped = Pipelines.streamingDedup(
-      in.toDF().toDF("ts", "uid"), "ts", "10 minutes", Seq("uid"))
-
-    val q = deduped.writeStream.format("memory").queryName("dedup_out")
-      .outputMode("append").start()
-    try {
-      in.addData((ts(0), 1L), (ts(1), 1L), (ts(2), 2L))
-      q.processAllAvailable()
-      in.addData((ts(3), 1L), (ts(3), 3L))
-      q.processAllAvailable()
-      val n = spark.sql("SELECT uid FROM dedup_out").as[Long].collect().toSeq
-      assert(n.sorted === Seq(1L, 2L, 3L))
-    } finally q.stop()
-  }
-
   test("dedupAgainstStore drops repeats within a batch, across batches, and across restarts") {
     implicit val sc = spark.sqlContext
     val store = java.nio.file.Files.createTempDirectory("fpstore").toFile
@@ -131,249 +89,6 @@ class StreamingPipelinesSpec extends SparkSpec {
       q2.processAllAvailable()
       assert(seen.sorted === Seq(1L, 2L, 5L, 7L))
     } finally q2.stop()
-  }
-
-  test("nearDupAgainstStore drops near-duplicates across batches, keeps novel docs") {
-    implicit val sc = spark.sqlContext
-    val store = java.nio.file.Files.createTempDirectory("lshstore").toFile
-    store.delete()
-    val base = "the quick brown fox jumps over the lazy dog every single day"
-    val nearDup = base + " indeed"              // shingle jaccard 10/11 vs base
-    val novel = "completely different material about entirely other topics here now"
-    val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
-    def body = Pipelines.nearDupAgainstStore("doc_id", "text",
-        "file:" + store.getAbsolutePath, minEstJaccard = 0.5) { fresh =>
-      seen ++= fresh.select("doc_id").as[Long].collect()
-    }
-
-    val in = MemoryStream[(Long, String)]
-    val q = in.toDF().toDF("doc_id", "text").writeStream.foreachBatch(body).start()
-    try {
-      in.addData((1L, base), (2L, base))        // in-batch exact dup → keep 1
-      q.processAllAvailable()
-      assert(seen.sorted === Seq(1L))
-      in.addData((3L, nearDup), (4L, novel))    // 3 near-dups stored 1; 4 is new
-      q.processAllAvailable()
-      assert(seen.sorted === Seq(1L, 4L))
-    } finally q.stop()
-  }
-
-  test("curateStream redacts, drops low-quality rows, and dedups post-redaction copies") {
-    implicit val sc = spark.sqlContext
-    val in = MemoryStream[(Timestamp, Long, String)]
-    val good = "the quick brown fox jumps over one lazy dog near the old stone bridge today"
-    val curated = Pipelines.curateStream(
-      in.toDF().toDF("ts", "id", "text"), "ts", "10 minutes", "text",
-      minTokens = 10, minFracDistinct = 0.5)
-
-    val q = curated.writeStream.format("memory").queryName("curate_out")
-      .outputMode("append").start()
-    try {
-      in.addData(
-        (ts(0), 1L, s"ping 10.0.0.1 about $good"),
-        (ts(1), 2L, "too short"),                      // fails minTokens
-        (ts(2), 3L, ("spam " * 20).trim),              // fails distinct fraction
-        (ts(3), 4L, s"ping 10.99.4.7 about $good"))    // same text after redaction
-      q.processAllAvailable()
-      val rows = spark.sql("SELECT id, text FROM curate_out ORDER BY id")
-        .as[(Long, String)].collect()
-      // low-quality rows gone; the two address-variant copies collapse
-      // to one because dedup keys on the POST-redaction fingerprint —
-      // and the output's text column IS the redacted form (the raw
-      // column must not survive curation)
-      assert(rows.map(_._1).toSeq === Seq(1L))
-      assert(rows.head._2 === s"ping <ip> about $good")
-      assert(spark.table("curate_out").columns.count(_ == "text") === 1)
-    } finally q.stop()
-  }
-
-  test("qualityMonitorStream: per-(window, source) stats with in-window dup-rate; late rows dropped") {
-    implicit val sc = spark.sqlContext
-    val in = MemoryStream[(Timestamp, String, String)]
-    val textA = "the quick brown fox jumps over the lazy dog near a stone bridge"
-    val textB = "a completely different document with many unique and varied words inside"
-    val mon = Pipelines.qualityMonitorStream(
-      in.toDF().toDF("ts", "source", "text"), "ts", delay = "10 minutes",
-      textCol = "text", sourceCol = "source", windowDur = "5 minutes")
-
-    val q = mon.writeStream.format("memory").queryName("mon_out")
-      .outputMode("append").start()
-    try {
-      in.addData(
-        (ts(0), "web", textA),
-        (ts(1), "web", textA),     // exact dup within the window
-        (ts(2), "web", textB),
-        (ts(3), "books", textB))
-      q.processAllAvailable()
-      in.addData((ts(40), "web", textA))   // advance watermark, finalize
-      q.processAllAvailable()
-      in.addData((ts(2), "web", textB))    // late: must NOT change the closed window
-      q.processAllAvailable()
-      val rows = spark.sql(
-          """SELECT source, n_docs, approx_distinct, dup_rate_est
-            |FROM mon_out WHERE window_start = '2024-01-01 10:00:00'
-            |ORDER BY source""".stripMargin)
-        .as[(String, Long, Long, Double)].collect().toSeq
-      assert(rows === Seq(
-        ("books", 1L, 1L, 0.0),
-        ("web", 3L, 2L, round4(1.0 - 2.0 / 3))))
-      // quality/token stats exist and are sane
-      val stats = spark.sql(
-          "SELECT avg_quality, avg_tokens FROM mon_out WHERE source = 'books'")
-        .as[(Double, Double)].head()
-      assert(stats._1 > 0.0 && stats._1 <= 1.0)
-      assert(stats._2 === 11.0)
-    } finally q.stop()
-  }
-
-  private def round4(d: Double): Double = math.rint(d * 10000) / 10000
-
-  test("ivfIngestStream: streamed index ≡ batch assign; replay absorbed; upsert wins") {
-    import graft.operators.Similarity
-    implicit val sc = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("ivf_ingest").toString
-    val store = s"$dir/index"
-    def vec(xs: Double*) = xs.map(_.toFloat)
-    val seed = Seq(
-      (100L, vec(1, 0, 0)), (101L, vec(0.9, 0.1, 0)),
-      (102L, vec(0, 1, 0)), (103L, vec(0, 0.9, 0.1)),
-      (104L, vec(0, 0, 1)), (105L, vec(0.1, 0, 0.9))).toDF("vec_id", "embedding")
-    val centroids = Similarity.ivfTrain(seed, "vec_id", "embedding",
-      nlist = 3, iters = 3)
-    val ingest = Pipelines.ivfIngestStream("vec_id", "embedding",
-      centroids, store)
-    val in = MemoryStream[(Long, Seq[Float])]
-    val q = in.toDF().toDF("vec_id", "embedding").writeStream
-      .foreachBatch(ingest).start()
-    try {
-      in.addData((1L, vec(1, 0.1, 0)), (2L, vec(0, 1, 0.1)))
-      q.processAllAvailable()
-      in.addData((3L, vec(0.1, 0, 1)))
-      q.processAllAvailable()
-    } finally q.stop()
-    val streamed = Pipelines.ivfStoreRead(spark, store)
-      .select("corpus_id", "cid").as[(Long, Int)].collect().toSet
-    val direct = Similarity.ivfAssign(
-        Seq((1L, vec(1, 0.1, 0)), (2L, vec(0, 1, 0.1)), (3L, vec(0.1, 0, 1)))
-          .toDF("vec_id", "embedding"), "vec_id", "embedding", centroids)
-      .select("corpus_id", "cid").as[(Long, Int)].collect().toSet
-    assert(streamed === direct)
-    // at-least-once redelivery: the same rows appended again under a new
-    // batch id must not change the reader's output
-    ingest(Seq((1L, vec(1, 0.1, 0))).toDF("vec_id", "embedding"), 99L)
-    assert(Pipelines.ivfStoreRead(spark, store)
-      .select("corpus_id", "cid").as[(Long, Int)].collect().toSet === direct)
-    // upsert: a re-ingested id with a NEW vector takes the latest row
-    ingest(Seq((1L, vec(0, 1, 0))).toDF("vec_id", "embedding"), 100L)
-    val after = Pipelines.ivfStoreRead(spark, store)
-    assert(after.count() === 3L)
-    val cid1 = after.where(org.apache.spark.sql.functions.col("corpus_id") === 1L)
-      .select("cid").as[Int].head()
-    val cid2 = after.where(org.apache.spark.sql.functions.col("corpus_id") === 2L)
-      .select("cid").as[Int].head()
-    assert(cid1 === cid2)  // id 1 now lives in id 2's inverted list
-    // the store feeds the standard probe unchanged
-    val topk = Similarity.ivfProbe(Pipelines.ivfStoreRead(spark, store),
-      centroids, Seq((50L, vec(0, 1, 0))).toDF("vec_id", "embedding"),
-      "vec_id", "embedding", k = 2, nprobe = 2, excludeSelf = false)
-    assert(topk.count() === 2L)
-  }
-
-  test("ivf drift metric spikes on a shifted batch; rebuild ≡ from-scratch build bit-identically") {
-    import graft.operators.Similarity
-    val dir = java.nio.file.Files.createTempDirectory("ivf_drift").toString
-    val store = s"$dir/index"; val metrics = s"$dir/metrics"
-    val stats = s"$dir/stats"; val store2 = s"$dir/index_v2"
-    def vec(xs: Double*) = xs.map(_.toFloat)
-    val seed = Seq(
-      (100L, vec(1, 0, 0)), (101L, vec(0.9, 0.1, 0)),
-      (102L, vec(0, 1, 0)), (103L, vec(0, 0.9, 0.1)),
-      (104L, vec(0, 0, 1)), (105L, vec(0.1, 0, 0.9))).toDF("vec_id", "embedding")
-    val cents = Similarity.ivfTrain(seed, "vec_id", "embedding",
-      nlist = 3, iters = 3)
-    Similarity.ivfStatsSave(seed, "vec_id", "embedding", cents, stats)
-    val ingest = Pipelines.ivfIngestStream("vec_id", "embedding", cents,
-      store, metricsPath = Some(metrics))
-    // batch 0 draws from the trained distribution; batch 1 is SHIFTED
-    // far off every centroid — the silent-recall-decay scenario
-    ingest(Seq((1L, vec(0.95, 0.05, 0)), (2L, vec(0, 1, 0.05)))
-      .toDF("vec_id", "embedding"), 0L)
-    ingest(Seq((3L, vec(8, 8, 8)), (4L, vec(9, 7, 8)))
-      .toDF("vec_id", "embedding"), 1L)
-    import org.apache.spark.sql.functions.col
-    val drift = Similarity.ivfDriftReport(spark, metrics, stats)
-      .select(col("batch_id"), col("drift_ratio"))
-      .as[(Long, Double)].collect().toMap
-    assert(drift(0L) < 5.0, s"in-distribution batch must not alarm: $drift")
-    assert(drift(1L) > 100.0, s"shifted batch must spike the ratio: $drift")
-    // rebuild: a NEW store generation trained on the store's latest
-    // vectors must equal a from-scratch build bit-identically
-    val cents2 = Pipelines.ivfRebuild(spark, store, store2, nlist = 3, iters = 3)
-    val vecs = Pipelines.ivfStoreRead(spark, store)
-      .select(col("corpus_id"), col("cv"))
-    val refCents = Similarity.ivfTrain(vecs, "corpus_id", "cv", nlist = 3, iters = 3)
-    assert(cents2.map { case (c, v) => (c, v.toSeq) }.toSeq ===
-      refCents.map { case (c, v) => (c, v.toSeq) }.toSeq)
-    val qs = Seq((50L, vec(7.5, 8.2, 8.0))).toDF("vec_id", "embedding")
-    def probe(idx: org.apache.spark.sql.DataFrame,
-              cs: Array[(Int, Array[Double])]) =
-      Similarity.ivfProbe(idx, cs, qs, "vec_id", "embedding",
-          k = 2, nprobe = 2, excludeSelf = false)
-        .orderBy("rn").collect().toSeq
-    assert(probe(Pipelines.ivfStoreRead(spark, store2), cents2) ===
-      probe(Similarity.ivfAssign(vecs, "corpus_id", "cv", refCents), refCents))
-    // in-place rebuild is refused — readers hold the old generation
-    intercept[IllegalArgumentException] {
-      Pipelines.ivfRebuild(spark, store, store, nlist = 3)
-    }
-  }
-
-  test("imageDedupAgainstStore: re-encoded copies suppressed cross-batch; replay absorbed; corrupt passes") {
-    import graft.operators.Multimodal
-    val dir = java.nio.file.Files.createTempDirectory("img_dedup").toString
-    val store = s"$dir/sig_store"
-    var emitted = Vector.empty[Long]
-    val ingest = Pipelines.imageDedupAgainstStore("id", "blob", store,
-      maxHamming = 0) { fresh =>
-      emitted ++= fresh.select("id").as[Long].collect().sorted
-    }
-    def png(seed: Long) = Multimodal.encodePng(20, 16, seed = seed)
-    def bmp(seed: Long): Array[Byte] = {
-      // same raster as png(seed), different container/bytes
-      val img = new java.awt.image.BufferedImage(
-        20, 16, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      for (y <- 0 until 16; x <- 0 until 20)
-        img.setRGB(x, y, ((seed + x * 31L + y * 131L) & 0xffffff).toInt)
-      val bos = new java.io.ByteArrayOutputStream()
-      val ios = new javax.imageio.stream.MemoryCacheImageOutputStream(bos)
-      try javax.imageio.ImageIO.write(img, "bmp", ios) finally ios.close()
-      bos.toByteArray
-    }
-    ingest(Seq((1L, png(1L)), (2L, png(2L))).toDF("id", "blob"), 0L)
-    assert(emitted === Vector(1L, 2L))
-    // batch 2: id 3 is image 1 RE-ENCODED as BMP (byte-different,
-    // pixel-identical → dup), id 4 is new, id 5 is corrupt (passes)
-    ingest(Seq((3L, bmp(1L)), (4L, png(4L)),
-      (5L, "garbage".getBytes("UTF-8"))).toDF("id", "blob"), 1L)
-    assert(emitted === Vector(1L, 2L, 4L, 5L))
-    // redelivery of batch 2: every image collides with its own stored
-    // signature; the corrupt blob has no signature and passes again
-    // (dedup of undecodable bytes is the exact-hash store's job)
-    ingest(Seq((3L, bmp(1L)), (4L, png(4L)),
-      (5L, "garbage".getBytes("UTF-8"))).toDF("id", "blob"), 2L)
-    assert(emitted === Vector(1L, 2L, 4L, 5L, 5L))
-    // the store holds signatures only for first-seen DECODABLE images
-    val stored = spark.read.parquet(s"$store/data").select("id").distinct()
-      .as[Long].collect().sorted.toSeq
-    assert(stored === Seq(1L, 2L, 4L))
-    // the banding params that shaped the stored keys are pinned: a
-    // later run with a different maxHamming would join mismatched band
-    // keys and silently miss duplicates, so it must be a hard error
-    val err = intercept[IllegalArgumentException] {
-      Pipelines.imageDedupAgainstStore("id", "blob", store,
-        maxHamming = 2) { _ => () }(Seq((9L, png(9L))).toDF("id", "blob"), 3L)
-    }
-    assert(err.getMessage.contains("maxHamming"))
   }
 
   test("dedup stores: per-batch read partition-prunes to the batch's buckets; no store-side shuffle") {
@@ -410,9 +125,7 @@ class StreamingPipelinesSpec extends SparkSpec {
     // semantics unchanged: both docs are new → both fresh
     assert(fresh.count() === 2L)
 
-    // same laws for the OTHER two stores
-    import org.apache.spark.sql.functions.{col, concat_ws}
-    import graft.operators.{Dedup, Multimodal}
+    // same laws for the CDC chunk store
     def checkPlan(df: org.apache.spark.sql.DataFrame, marker: String,
                   maxParts: Int): Unit = {
       val p = df.queryExecution.sparkPlan
@@ -429,36 +142,6 @@ class StreamingPipelinesSpec extends SparkSpec {
       assert(p.collect { case j: SortMergeJoinExec => j }.isEmpty,
         s"store join must broadcast:\n$p")
     }
-    // MinHash band store: 1-doc batch → ≤ 3 band buckets
-    val lshStore = java.nio.file.Files.createTempDirectory("prunelsh").toString
-    val lshSeed = (1L to 300L).map(i =>
-      (i, s"document number $i carries its own words entirely"))
-      .toDF("doc_id", "text")
-    Pipelines.nearDupAgainstStore("doc_id", "text", lshStore,
-      buckets = buckets) { _ => () }(lshSeed, 0L)
-    val probe = Seq((900L, "a wholly novel probe sentence about nothing else"))
-      .toDF("doc_id", "text")
-    val (probeBanded, probePbs) = Pipelines.DedupStore.census(lshStore,
-      Dedup.lshBuckets(
-        Dedup.minhashSignatures(probe, "doc_id", "text", 3, 9), 9, 3),
-      concat_ws(":", col("band"), col("bucket")))
-    checkPlan(Pipelines.bandedFresh(probe, probeBanded, probePbs, "doc_id",
-      lshStore, Seq("band", "bucket"), "sig", Pipelines.minhashClose(9, 0.8)),
-      "prunelsh", maxParts = 3)
-    // image dHash store: 1-image batch at maxHamming=0 → exactly 1 bucket
-    val imgStore = java.nio.file.Files.createTempDirectory("pruneimg").toString
-    val imgSeed = (1L to 120L).map(i =>
-      (i, Multimodal.encodePng(12, 10, seed = i))).toDF("id", "blob")
-    Pipelines.imageDedupAgainstStore("id", "blob", imgStore,
-      maxHamming = 0, buckets = buckets) { _ => () }(imgSeed, 0L)
-    val imgProbe = Seq((900L, Multimodal.encodePng(12, 10, seed = 900L)))
-      .toDF("id", "blob")
-    val (imgBanded, imgPbs) = Pipelines.DedupStore.census(imgStore,
-      Pipelines.imageBanded(imgProbe, "blob", "id", maxHamming = 0),
-      concat_ws(":", col("band"), col("key")))
-    checkPlan(Pipelines.bandedFresh(imgProbe, imgBanded, imgPbs, "id",
-      imgStore, Seq("band", "key"), "dhash", Pipelines.hammingClose(0)),
-      "pruneimg", maxParts = 1)
     // CDC chunk store: a short 1-doc probe touches few chunk buckets
     val cdcStore = java.nio.file.Files.createTempDirectory("prunecdc").toString
     val cdcSeed = (1L to 200L).map(i =>
@@ -480,22 +163,6 @@ class StreamingPipelinesSpec extends SparkSpec {
     assert(cdcPlan.collect {
       case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => j
     }.isEmpty, s"cdcFresh must broadcast every join:\n$cdcPlan")
-    // content-addressed score cache: lookup prunes to the batch's buckets
-    import org.apache.spark.sql.functions.length
-    val scStore = java.nio.file.Files.createTempDirectory("prunescore").toString
-    val scSeed = (1L to 300L).map(i => (i, s"cached corpus doc $i distinct body"))
-      .toDF("doc_id", "text")
-    Pipelines.scoreAgainstStore("doc_id", "text", scStore, buckets) { reps =>
-      reps.select(col("fingerprint"), length(col("text")).as("score"))
-    } { _ => () }(scSeed, 0L)
-    val (scProbe, scPbs) = Pipelines.DedupStore.census(scStore,
-      Seq((900L, "cached corpus doc 7 distinct body"),
-        (901L, "unseen probe body")).toDF("doc_id", "text")
-        .withColumn("fingerprint",
-          graft.functions.TextFunctions.fingerprint(col("text"))),
-      col("fingerprint"))
-    checkPlan(Pipelines.scoreCacheLookup(scProbe, scPbs, scStore).get,
-      "prunescore", maxParts = 2)
   }
 
   test("cdcDedupAgainstStore: shifted-content redeliveries suppressed where exact fingerprints differ") {
@@ -559,226 +226,6 @@ class StreamingPipelinesSpec extends SparkSpec {
     ingest(Seq((2L, reWrapped), (3L, other)).toDF("id", "blob"), 1L)
     assert(emitted === Vector(1L, 3L),
       "the re-containered blob must be suppressed, the novel one kept")
-  }
-
-  test("videoDedupAgainstStore: re-muxed streams suppressed cross-batch; replay absorbed; corrupt passes") {
-    import graft.operators.Multimodal
-    val dir = java.nio.file.Files.createTempDirectory("vid_dedup").toString
-    val store = s"$dir/sig_store"
-    var emitted = Vector.empty[Long]
-    val ingest = Pipelines.videoDedupAgainstStore("id", "blob", store,
-      maxHamming = 0) { fresh =>
-      emitted ++= fresh.select("id").as[Long].collect().sorted
-    }
-    def mp4(seed: Long, keyEvery: Int = 3, w: Int = 320) =
-      Multimodal.encodeMp4Sampled(w, 240, nFrames = 100, keyEvery = keyEvery,
-        trackTimescale = 12000, delta1 = 300, delta2 = 364,
-        uniformSize = 0, seed = seed)
-    ingest(Seq((1L, mp4(1L)), (2L, mp4(20L))).toDF("id", "blob"), 0L)
-    assert(emitted === Vector(1L, 2L))
-    // batch 2: id 3 is stream 1 RE-MUXED (different keyframe cadence
-    // and display size — same samples → same fingerprint → dup), id 4
-    // is a new stream, id 5 is corrupt (bypasses to the sink)
-    ingest(Seq((3L, mp4(1L, keyEvery = 7, w = 640)), (4L, mp4(90L)),
-      (5L, "garbage".getBytes("UTF-8"))).toDF("id", "blob"), 1L)
-    assert(emitted === Vector(1L, 2L, 4L, 5L))
-    // redelivery: every stream collides with its own stored signature;
-    // the corrupt blob has no signature and passes again
-    ingest(Seq((3L, mp4(1L, keyEvery = 7, w = 640)), (4L, mp4(90L)),
-      (5L, "garbage".getBytes("UTF-8"))).toDF("id", "blob"), 2L)
-    assert(emitted === Vector(1L, 2L, 4L, 5L, 5L))
-    val stored = spark.read.parquet(s"$store/data").select("id").distinct()
-      .as[Long].collect().sorted.toSeq
-    assert(stored === Seq(1L, 2L, 4L))
-  }
-
-  test("mediaMonitorStream: per-(window, modality) corrupt rates from real kernels") {
-    import graft.operators.Multimodal
-    implicit val sc = spark.sqlContext
-    val png = Multimodal.encodePng(16, 12, seed = 1L)
-    val wav = Multimodal.encodeWav(8000, 1, 100, seed = 2L)
-    val mp4 = Multimodal.encodeMp4(600, 1200L, 320, 240, nTracks = 1)
-    val junk = "truncated".getBytes("UTF-8")
-    val in = MemoryStream[(Timestamp, String, Array[Byte])]
-    val mon = Pipelines.mediaMonitorStream(
-      in.toDF().toDF("ts", "modality", "blob"), "ts", delay = "10 minutes",
-      blobCol = "blob", modalityCol = "modality", windowDur = "5 minutes")
-    val q = mon.writeStream.format("memory").queryName("media_mon")
-      .outputMode("append").start()
-    try {
-      in.addData(
-        (ts(0), "image", png),
-        (ts(1), "image", junk),      // ImageIO: no reader → corrupt
-        (ts(2), "audio", wav),
-        (ts(2), "audio", wav),
-        (ts(3), "video", mp4),
-        (ts(3), "video", junk),      // box walk finds no brand → corrupt
-        (ts(4), "image", null))      // null blob → corrupt count, NOT an NPE
-      q.processAllAvailable()
-      in.addData((ts(40), "image", png))   // advance watermark, close window
-      q.processAllAvailable()
-      val rows = spark.sql(
-          """SELECT modality, n_blobs, n_corrupt, frac_corrupt
-            |FROM media_mon WHERE window_start = '2024-01-01 10:00:00'
-            |ORDER BY modality""".stripMargin)
-        .as[(String, Long, Long, Double)].collect().toSeq
-      assert(rows === Seq(
-        ("audio", 2L, 0L, 0.0),
-        ("image", 3L, 2L, round4(2.0 / 3)),
-        ("video", 2L, 1L, 0.5)))
-      // total_bytes is the exact payload sum for the clean audio window
-      val tb = spark.sql(
-          "SELECT total_bytes FROM media_mon WHERE modality = 'audio'")
-        .as[Long].head()
-      assert(tb === 2L * wav.length)
-    } finally q.stop()
-  }
-
-  test("trending terms: exact lift vs baseline in batch; streaming windowed counts match") {
-    import org.apache.spark.sql.functions._
-    // baseline census: 'common' 80 of 100, 'rare' 20 of 100
-    val baseline = Seq(("common", 80L), ("rare", 20L)).toDF("s", "n_occurrences")
-    // one 5-min window where 'rare' spikes: 6 of 10 tokens vs 2/10 baseline share
-    val batch = Seq(
-      (ts(1), "rare rare rare common"),
-      (ts(2), "rare rare rare common common common")).toDF("ts", "text")
-    val counts = Pipelines.trendingTermCounts(batch, "ts", "10 minutes",
-      "text", baseline)
-    val lifted = Pipelines.withTrendLift(counts)
-      .select(col("term"), col("n"), col("lift"))
-      .as[(String, Long, java.lang.Double)].collect()
-      .map { case (t, n, l) => t -> ((n, Option(l).map(_.toDouble))) }.toMap
-    // rare: share 6/10 vs 20/100 -> lift 3.0; common: 4/10 vs 80/100 -> 0.5
-    assert(lifted("rare") == ((6L, Some(3.0))))
-    assert(lifted("common") == ((4L, Some(0.5))))
-    // a term with no baseline row gets a null lift (the new-term signal)
-    val withNew = Pipelines.withTrendLift(Pipelines.trendingTermCounts(
-      Seq((ts(1), "brandnew common")).toDF("ts", "text"),
-      "ts", "10 minutes", "text", baseline))
-      .select(col("term"), col("lift")).as[(String, java.lang.Double)]
-      .collect().toMap
-    assert(withNew("brandnew") == null)
-    // streaming: the same counts arrive through a MemoryStream query
-    implicit val sc = spark.sqlContext
-    val in = MemoryStream[(Timestamp, String)]
-    val q = Pipelines.trendingTermCounts(in.toDF().toDF("ts", "text"),
-        "ts", "10 minutes", "text", baseline)
-      .writeStream.format("memory").queryName("trend_out")
-      .outputMode("append").start()
-    try {
-      in.addData((ts(1), "rare rare rare common"),
-        (ts(2), "rare rare rare common common common"))
-      q.processAllAvailable()
-      in.addData((ts(40), "common"))   // advances the watermark past window 1
-      q.processAllAvailable()
-      val rows = spark.sql("SELECT term, n FROM trend_out")
-        .as[(String, Long)].collect().toMap
-      assert(rows("rare") == 6L && rows("common") == 4L)
-    } finally q.stop()
-  }
-
-  test("postingsIngestStream: streamed ≡ batch index; replay absorbed; upsert supersedes everywhere") {
-    import graft.operators.{Search, TextStats}
-    import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("pidx").toString
-    val store = s"$dir/streamed"
-    val ingest = Pipelines.postingsIngestStream("doc_id", "text", store, buckets = 16)
-    val b0 = Seq((1L, "the quick brown fox jumps"),
-      (2L, "lazy dog sleeps all day"),
-      (3L, "quick brown dog barks")).toDF("doc_id", "text")
-    val b1 = Seq((4L, "another quick brown fox appears"),
-      (5L, "dogs and foxes differ")).toDF("doc_id", "text")
-    ingest(b0, 0L); ingest(b1, 1L)
-    def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
-      df.collect().map(_.toString).toSet
-    def batchTwin(corpus: org.apache.spark.sql.DataFrame, p: String): String = {
-      Search.writePostings(TextStats.tokenized(corpus, "doc_id", "text"), p, 16)
-      p
-    }
-    val twin1 = batchTwin(b0.unionByName(b1), s"$dir/batch1")
-    assert(rows(Pipelines.phraseFromPostingsStore(spark, store, Seq("quick", "brown")))
-      === rows(Search.phraseFromPostings(spark, twin1, Seq("quick", "brown"))))
-    assert(rows(Pipelines.bm25FromPostingsStore(spark, store, Seq("quick", "dog")))
-      === rows(Search.bm25FromPostings(spark, twin1, Seq("quick", "dog"))))
-    // replay of batch 1: identical rows of the same version — absorbed
-    ingest(b1, 1L)
-    assert(rows(Pipelines.bm25FromPostingsStore(spark, store, Seq("quick", "dog")))
-      === rows(Search.bm25FromPostings(spark, twin1, Seq("quick", "dog"))))
-    // upsert: doc 2 is re-ingested WITHOUT its animal and with a new
-    // length — all its old postings must be superseded, even the ones
-    // in buckets a given query never reads
-    val d2v2 = "rewritten second document mentioning nothing relevant"
-    ingest(Seq((2L, d2v2)).toDF("doc_id", "text"), 2L)
-    val updated = Seq((1L, "the quick brown fox jumps"), (2L, d2v2),
-      (3L, "quick brown dog barks"),
-      (4L, "another quick brown fox appears"),
-      (5L, "dogs and foxes differ")).toDF("doc_id", "text")
-    val twin2 = batchTwin(updated, s"$dir/batch2")
-    assert(rows(Pipelines.phraseFromPostingsStore(spark, store, Seq("lazy", "dog")))
-      === rows(Search.phraseFromPostings(spark, twin2, Seq("lazy", "dog"))))
-    assert(rows(Pipelines.bm25FromPostingsStore(spark, store, Seq("quick", "dog")))
-      === rows(Search.bm25FromPostings(spark, twin2, Seq("quick", "dog"))))
-    assert(!Pipelines.phraseFromPostingsStore(spark, store, Seq("dog"))
-      .select("id").as[Long].collect().contains(2L),
-      "superseded postings must not match")
-    // the streamed read partition-prunes to the query terms' buckets
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    val plan = Pipelines.postingsStoreFor(spark, store, Seq("quick"))
-      .queryExecution.sparkPlan
-    val scans = plan.collect {
-      case f: FileSourceScanExec if f.relation.location.rootPaths
-        .exists(_.toString.contains("streamed/postings")) => f
-    }
-    assert(scans.nonEmpty && scans.forall(_.partitionFilters.exists(
-      _.references.exists(_.name == "tb"))), s"no tb partition filter:\n$plan")
-    assert(scans.forall(_.selectedPartitions.partitionCount <= 1))
-  }
-
-  test("scoreAgainstStore: compute runs once per content; redelivery, re-ingest, and drift hit the cache") {
-    import org.apache.spark.sql.functions.{col, length, lit}
-    val store = java.nio.file.Files.createTempDirectory("scorecache").toString
-    var computeSaw = 0L
-    var emitted = Vector.empty[(Long, Int, Boolean)]
-    val ingest = Pipelines.scoreAgainstStore("doc_id", "text", store) { reps =>
-      computeSaw += reps.count()
-      reps.select(col("fingerprint"), length(col("text")).as("score"))
-    } { out =>
-      emitted ++= out.select("doc_id", "score", "from_cache")
-        .as[(Long, Int, Boolean)].collect().sortBy(_._1)
-    }
-    // batch 1: three docs, two distinct contents → compute sees 2
-    ingest(Seq((1L, "alpha body"), (2L, "beta body"), (3L, "alpha body"))
-      .toDF("doc_id", "text"), 0L)
-    assert(computeSaw === 2L)
-    assert(emitted === Vector((1L, 10, false), (2L, 9, false), (3L, 10, false)))
-    emitted = Vector.empty
-    // batch 2: redelivered content under a NEW id, whitespace-drifted
-    // copy, and one genuinely new doc → compute sees only the new one
-    ingest(Seq((4L, "beta body"), (5L, "  Alpha   BODY "), (6L, "gamma body"))
-      .toDF("doc_id", "text"), 1L)
-    assert(computeSaw === 3L, "only the new content may be recomputed")
-    assert(emitted.map(r => (r._1, r._3)) ===
-      Vector((4L, true), (5L, true), (6L, false)))
-    // NOTE: the drifted copy reuses the ORIGINAL's cached score (score
-    // is a function of normalized content by the compute contract)
-    assert(emitted(0)._2 === 9 && emitted(1)._2 === 10)
-    emitted = Vector.empty
-    // restart (fresh closure state): everything cached, compute never runs
-    var computeSaw2 = 0L
-    val ingest2 = Pipelines.scoreAgainstStore("doc_id", "text", store) { reps =>
-      computeSaw2 += reps.count()
-      reps.select(col("fingerprint"), length(col("text")).as("score"))
-    } { out =>
-      emitted ++= out.select("doc_id", "score", "from_cache")
-        .as[(Long, Int, Boolean)].collect().sortBy(_._1)
-    }
-    ingest2(Seq((7L, "alpha body"), (8L, "gamma body")).toDF("doc_id", "text"), 0L)
-    assert(computeSaw2 === 0L)
-    assert(emitted === Vector((7L, 10, true), (8L, 10, true)))
-    // each fingerprint stored exactly once
-    val fps = spark.read.parquet(s"$store/data").select("fingerprint")
-      .as[String].collect()
-    assert(fps.length === 3 && fps.distinct.length === 3)
   }
 
   test("compactStore: one file per pb dir, rows/config intact, store still dedups") {
@@ -854,240 +301,6 @@ class StreamingPipelinesSpec extends SparkSpec {
       .filter(_.getName.startsWith("pb=")).foreach { d =>
         assert(d.listFiles().count(_.getName.endsWith(".parquet")) === 1)
       }
-  }
-
-  test("transitionStream: any batch cut emits the batch census, one-row state") {
-    implicit val sc = spark.sqlContext
-    import Pipelines.TransEvent
-    val evs = Seq(
-      TransEvent(1L, 1000L, 1L, "view"), TransEvent(1L, 2000L, 2L, "click"),
-      TransEvent(1L, 3000L, 3L, "purchase"),
-      TransEvent(2L, 1000L, 4L, "click"), TransEvent(2L, 2000L, 5L, "view"))
-    def run(tag: String, cuts: Seq[Seq[TransEvent]]): Seq[(Long, String, String)] = {
-      val in = MemoryStream[TransEvent]
-      val q = Pipelines.transitionStream(in.toDS()).writeStream
-        .format("memory").queryName(s"transout_$tag").outputMode("append").start()
-      try cuts.foreach { c => in.addData(c: _*); q.processAllAvailable() }
-      finally q.stop()
-      spark.table(s"transout_$tag")
-        .select("user_id", "from_type", "to_type")
-        .as[(Long, String, String)].collect().toSeq.sorted
-    }
-    val oneBatch = run("a", Seq(evs))
-    val split = run("b", Seq(evs.take(2), evs.drop(2)))   // cut mid-user
-    assert(oneBatch === split, "batch cut must not change emissions")
-    assert(oneBatch === Seq(
-      (1L, "click", "purchase"), (1L, "view", "click"),
-      (2L, "click", "view")))
-    // and the streamed emissions aggregate to the batch census
-    val census = graft.operators.EventOps.transitionCounts(
-        evs.toDF(), "user_id", "ts_ms", "event_id", "event_type")
-      .as[(String, String, Long)].collect().toSeq.sorted
-    val streamedCensus = oneBatch.groupBy(t => (t._2, t._3))
-      .map { case ((f, t), rs) => (f, t, rs.size.toLong) }.toSeq.sorted
-    assert(streamedCensus === census)
-  }
-
-  test("funnelStream: stage advances match the batch funnel under any cut") {
-    implicit val sc = spark.sqlContext
-    import Pipelines.TransEvent
-    val steps = Seq("view", "click", "purchase")
-    // user 1 completes in order; user 2's click precedes its view (never
-    // advances past stage 0); user 3 stalls at click
-    val evs = Seq(
-      TransEvent(1L, 1000L, 1L, "view"), TransEvent(1L, 2000L, 2L, "click"),
-      TransEvent(1L, 3000L, 3L, "purchase"),
-      TransEvent(2L, 1000L, 4L, "click"), TransEvent(2L, 2000L, 5L, "view"),
-      TransEvent(2L, 3000L, 6L, "error"),
-      TransEvent(3L, 1000L, 7L, "view"), TransEvent(3L, 2000L, 8L, "click"))
-    def run(tag: String, cuts: Seq[Seq[TransEvent]]): Seq[(Long, Int, Long)] = {
-      val in = MemoryStream[TransEvent]
-      val q = Pipelines.funnelStream(in.toDS(), steps).writeStream
-        .format("memory").queryName(s"funout_$tag").outputMode("append").start()
-      try cuts.foreach { c => in.addData(c: _*); q.processAllAvailable() }
-      finally q.stop()
-      spark.table(s"funout_$tag").select("user_id", "stage", "ts_ms")
-        .as[(Long, Int, Long)].collect().toSeq.sorted
-    }
-    val one = run("a", Seq(evs))
-    val cut = run("b", Seq(evs.take(4), evs.drop(4)))   // cut mid-user-1? no: mid-stream
-    assert(one === cut, "batch cut must not change funnel advances")
-    assert(one === Seq(
-      (1L, 0, 1000L), (1L, 1, 2000L), (1L, 2, 3000L),
-      (2L, 0, 2000L),
-      (3L, 0, 1000L), (3L, 1, 2000L)))
-    // final stages equal the batch funnelTimes verdicts
-    val ft = graft.operators.EventOps.funnelTimes(
-        evs.toDF().withColumn("ts", col("ts_ms")), "user_id", "ts",
-        "event_type", steps)
-      .select(col("user_id"),
-        (col("t2").isNotNull.cast("int") + col("t1").isNotNull.cast("int")
-          + col("t0").isNotNull.cast("int")).as("stage_count"))
-      .as[(Long, Int)].collect().toMap
-    val streamedMax = one.groupBy(_._1).view.mapValues(_.map(_._2).max + 1).toMap
-    assert(streamedMax === ft.filter(_._2 > 0))
-  }
-
-  test("ewmaStream: integer fold with zero gap days; cut-invariant; matches batch on full keys") {
-    implicit val sc = spark.sqlContext
-    import Pipelines.{DayCount, EwmaOut}
-    // key a: days 0 (n=4), GAP day 1 (zero-fold), day 2 (n=8)
-    //   e0 = ⌊40000/4⌋ = 10000; e1 = ⌊30000/4⌋ = 7500;
-    //   e2 = ⌊(22500 + 80000)/4⌋ = 25625
-    // key b: day 0 (n=2) → 5000; day 1 (n=6) → ⌊(15000+60000)/4⌋ = 18750
-    val cts = Seq(DayCount("a", 0L, 4L), DayCount("b", 0L, 2L),
-      DayCount("b", 1L, 6L), DayCount("a", 2L, 8L))
-    def run(tag: String, cuts: Seq[Seq[DayCount]]): Seq[EwmaOut] = {
-      val in = MemoryStream[DayCount]
-      val q = Pipelines.ewmaStream(in.toDS()).writeStream
-        .format("memory").queryName(s"ewout_$tag").outputMode("append")
-        .start()
-      try cuts.foreach { c => in.addData(c: _*); q.processAllAvailable() }
-      finally q.stop()
-      spark.table(s"ewout_$tag").as[EwmaOut].collect().toSeq
-        .sortBy(e => (e.key, e.day))
-    }
-    val one = run("a", Seq(cts))
-    val cut = run("b", Seq(cts.take(2), cts.drop(2)))   // later days split
-    assert(one === cut, "batch cut must not change emissions")
-    assert(one === Seq(
-      EwmaOut("a", 0L, 4L, 10000L, 30000L),
-      EwmaOut("a", 2L, 8L, 25625L, 54375L),
-      EwmaOut("b", 0L, 2L, 5000L, 15000L),
-      EwmaOut("b", 1L, 6L, 18750L, 41250L)))
-    // key a observes the last spine day, so its final baseline equals
-    // the batch ewmaBaseline over the equivalent event set
-    def d(day: Int, sec: Int) =
-      new Timestamp((day * 86400 + sec) * 1000L)
-    val evs = ((1 to 4).map(i => (d(0, i), "a")) ++
-      (1 to 8).map(i => (d(2, i), "a")) ++
-      (1 to 2).map(i => (d(0, i), "b")) ++
-      (1 to 6).map(i => (d(1, i), "b"))).toDF("ts", "event_type")
-    val batch = graft.operators.EventOps
-      .ewmaBaseline(evs, "ts", "event_type")
-      .select("etype", "ewma4").as[(String, Long)].collect().toMap
-    assert(one.filter(_.key == "a").last.ewma4 === batch("a"))
-  }
-
-  test("cusumStream: explicit-target fold, zero-count gap days, alarm crossing, cut-invariant") {
-    implicit val sc = spark.sqlContext
-    import Pipelines.{CusumOut, DayCount}
-    // target4 50000, slack4 5000, threshold4 100000
-    // key a: day0 n=20 → c = max(0, 200000−55000) = 145000 (ALARM);
-    //   gap day1 → max(0, 145000−55000) = 90000 (below);
-    //   day2 n=1 → max(0, 90000+10000−55000) = 45000
-    val cts = Seq(DayCount("a", 0L, 20L), DayCount("a", 2L, 1L))
-    def run(tag: String, cuts: Seq[Seq[DayCount]]): Seq[CusumOut] = {
-      val in = MemoryStream[DayCount]
-      val q = Pipelines.cusumStream(in.toDS(), target4 = 50000L,
-          slack4 = 5000L, threshold4 = 100000L).writeStream
-        .format("memory").queryName(s"csout_$tag").outputMode("append")
-        .start()
-      try cuts.foreach { c => in.addData(c: _*); q.processAllAvailable() }
-      finally q.stop()
-      spark.table(s"csout_$tag").as[CusumOut].collect().toSeq
-        .sortBy(e => (e.key, e.day))
-    }
-    val one = run("a", Seq(cts))
-    val cut = run("b", Seq(cts.take(1), cts.drop(1)))
-    assert(one === cut)
-    assert(one === Seq(
-      CusumOut("a", 0L, 20L, 145000L, true),
-      CusumOut("a", 2L, 1L, 45000L, false)))
-  }
-
-  test("rateLimitStream: first-k-per-window policy equals the batch row_number rewrite") {
-    implicit val sc = spark.sqlContext
-    import Pipelines.TransEvent
-    val windowMs = 1000L
-    // user 1: 4 events in window 0 (k=2 keeps the first two by (ts, id)),
-    // then 1 in window 1; user 2: 2 events, both kept; the batch cut
-    // splits user 1's window-0 burst across batches
-    val evs = Seq(
-      TransEvent(1L, 100L, 1L, "a"), TransEvent(1L, 100L, 2L, "b"),
-      TransEvent(1L, 200L, 3L, "c"), TransEvent(1L, 300L, 4L, "d"),
-      TransEvent(1L, 1200L, 5L, "e"),
-      TransEvent(2L, 500L, 6L, "f"), TransEvent(2L, 600L, 7L, "g"))
-    def run(tag: String, cuts: Seq[Seq[TransEvent]]): Set[Long] = {
-      val in = MemoryStream[TransEvent]
-      val q = Pipelines.rateLimitStream(in.toDS(), windowMs, k = 2)
-        .writeStream.format("memory").queryName(s"rlout_$tag")
-        .outputMode("append").start()
-      try cuts.foreach { c => in.addData(c: _*); q.processAllAvailable() }
-      finally q.stop()
-      spark.table(s"rlout_$tag").select("event_id")
-        .as[Long].collect().toSet
-    }
-    val one = run("a", Seq(evs))
-    val cut = run("b", Seq(evs.take(2), evs.drop(2)))
-    assert(one === cut, "batch cut must not change the kept set")
-    assert(one === Set(1L, 2L, 5L, 6L, 7L))
-    // equals the batch rewrite
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id"), floor(col("ts_ms") / windowMs))
-      .orderBy(col("ts_ms"), col("event_id"))
-    val batch = evs.toDF()
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= 2)
-      .select("event_id").as[Long].collect().toSet
-    assert(one === batch)
-  }
-
-  test("attributionStream: conversions credit like the batch model under any cut") {
-    implicit val sc = spark.sqlContext
-    import Pipelines.{Attribution, TouchEvent}
-    val lookbackMs = 100000L   // 100 s
-    // user 1: view click buy             — first=view last=click
-    // user 2: view(1s) … buy(200s)       — touch expired → (none)
-    // user 3: buy with no touches        — (none)
-    // user 4: view+click SAME instant, buy — tie: first=view last=click
-    // user 5: touch in batch 1, buy in batch 2 (state carries over)
-    val evs = Seq(
-      TouchEvent(1L, 1000L, 1L, "view", 0.0),
-      TouchEvent(1L, 2000L, 2L, "click", 0.0),
-      TouchEvent(1L, 3000L, 3L, "purchase", 10.0),
-      TouchEvent(2L, 1000L, 4L, "view", 0.0),
-      TouchEvent(2L, 200000L, 5L, "purchase", 20.0),
-      TouchEvent(3L, 5000L, 6L, "purchase", 40.0),
-      TouchEvent(4L, 1000L, 7L, "view", 0.0),
-      TouchEvent(4L, 1000L, 8L, "click", 0.0),
-      TouchEvent(4L, 2000L, 9L, "purchase", 80.0),
-      TouchEvent(5L, 90000L, 10L, "click", 0.0),
-      TouchEvent(5L, 150000L, 11L, "purchase", 1.5))
-    def run(tag: String, cuts: Seq[Seq[TouchEvent]]) = {
-      val in = MemoryStream[TouchEvent]
-      val q = Pipelines.attributionStream(in.toDS(), Seq("view", "click"),
-          "purchase", lookbackMs).writeStream
-        .format("memory").queryName(s"attrout_$tag").outputMode("append").start()
-      try cuts.foreach { c => in.addData(c: _*); q.processAllAvailable() }
-      finally q.stop()
-      spark.table(s"attrout_$tag").as[Attribution].collect().toSeq
-        .sortBy(a => (a.user_id, a.conv_ts_ms))
-    }
-    val one = run("a", Seq(evs))
-    val cut = run("b", Seq(evs.take(9), evs.drop(9)))  // user 5 split across batches
-    assert(one === cut, "batch cut must not change attributions")
-    assert(one === Seq(
-      Attribution(1L, 3000L, 3L, "view", "click", 1000L),
-      Attribution(2L, 200000L, 5L, "(none)", "(none)", 2000L),
-      Attribution(3L, 5000L, 6L, "(none)", "(none)", 4000L),
-      Attribution(4L, 2000L, 9L, "view", "click", 8000L),
-      Attribution(5L, 150000L, 11L, "click", "click", 150L)))
-    // aggregated emissions equal the batch touchAttribution report
-    val batchIn = evs.toDF()
-      .select(col("user_id"),
-        (col("ts_ms") / 1000.0).cast("timestamp").as("ts"),
-        col("event_type"), col("value"))
-    val batch = graft.operators.EventOps.touchAttribution(batchIn,
-        "user_id", "ts", "event_type", "value",
-        Seq("view", "click"), "purchase", lookbackSec = 100L)
-      .as[(String, String, Long, Long)].collect()
-      .map(r => (r._1, r._2) -> ((r._3, r._4))).toMap
-    def agg(sel: Attribution => String, model: String) =
-      one.groupBy(sel).map { case (t, rs) =>
-        (model, t) -> ((rs.size.toLong, rs.map(_.v2).sum)) }
-    assert((agg(_.first_touch, "first") ++ agg(_.last_touch, "last")).toMap
-      === batch)
   }
 
   test("weightedSampleAgainstStore: streamed reservoir equals the batch A-ES sample") {
@@ -1945,34 +1158,21 @@ class StreamingPipelinesSpec extends SparkSpec {
       "recovery from reservoir_next must keep pre-crash history")
   }
 
-  test("histCompact: a torn compaction swap heals at the next read, write, or retry") {
-    val store = java.nio.file.Files.createTempDirectory("histcrash").toString + "/hist"
-    val ingest = Pipelines.histStream("grp", "score", store)
-    ingest(Seq(("a", 0.10), ("a", 0.10), ("b", 0.20))
-      .toDF("grp", "score"), 0L)
-    ingest(Seq(("a", 0.30), ("b", 0.20)).toDF("grp", "score"), 1L)
-    Pipelines.histCompact(spark, store, 0L)
-    val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    def mass(): Long = Pipelines.histCells(spark, store)
-      .agg(sum(col("n"))).head().getLong(0)
-    val m = mass()
-    // torn swap: live dir gone, `_old` holds the only complete copy
-    assert(fs.rename(new org.apache.hadoop.fs.Path(store),
-      new org.apache.hadoop.fs.Path(s"${store}_old")))
-    assert(mass() === m, "a reader heals the torn swap via histWatermark")
-    // torn again — this time a RETRIED compaction must restore before
-    // its deletes instead of destroying the last copy
-    assert(fs.rename(new org.apache.hadoop.fs.Path(store),
-      new org.apache.hadoop.fs.Path(s"${store}_old")))
-    Pipelines.histCompact(spark, store, 1L)
-    assert(mass() === m, "retried compaction preserves the full mass")
-    // torn before an append: the writer heals first, so the append
-    // lands on the FULL history, not a fresh empty dir
-    assert(fs.rename(new org.apache.hadoop.fs.Path(store),
-      new org.apache.hadoop.fs.Path(s"${store}_old")))
-    ingest(Seq(("c", 0.50)).toDF("grp", "score"), 2L)
-    assert(mass() === m + 1, "append after heal keeps pre-crash history")
+  test("swapStore: a promotion that finds no replacement leaves the pre-swap copy for the next open") {
+    val store = java.nio.file.Files.createTempDirectory("swapfail").toString
+    Pipelines.dedupAgainstStore("text", store, 8) { _ => () }(
+      Seq((1L, "alpha one"), (2L, "beta two")).toDF("doc_id", "text"), 0L)
+    val data = s"$store/data"
+    def fingerprints(): Seq[String] = Pipelines.readStore(spark, data)
+      .select("fingerprint").as[String].collect().sorted.toSeq
+    val before = fingerprints()
+    // the replacement never lands at the aside, so the swap fails
+    // between its two renames (the local FS throws on renaming a
+    // missing dir; others return false and the swap's `require` throws)
+    intercept[Exception] {
+      Pipelines.swapStore(spark, data)(_ => ())
+    }
+    assert(fingerprints() === before, "a failed promotion must keep a complete copy")
   }
 
   test("torn swap, every store family: the next batch and a retried compaction see the full history") {
@@ -2001,14 +1201,12 @@ class StreamingPipelinesSpec extends SparkSpec {
       Seq((4L, Some(3L), 1L)))
     val edges = Seq(Seq((1L, 2L), (3L, 4L)), Seq((2L, 3L)),
       Seq((4L, 5L), (6L, 7L)))
-    val baskets = Seq(Seq((1L, "x"), (1L, "y"), (2L, "x"), (2L, "z")),
-      Seq((3L, "x"), (3L, "y")), Seq((4L, "y"), (4L, "z"), (5L, "x"), (5L, "y")))
     val families = Seq(
       Family("dedup", Seq("data"),
         (s, b) => collecting(sink => Pipelines.dedupAgainstStore("text", s, 8) {
           f => sink(f.select("doc_id")) }(docs(b).toDF("doc_id", "text"), b.toLong)),
         s => Pipelines.compactStore(spark, s),
-        s => rows(spark.read.parquet(s"$s/data").select("fingerprint"))),
+        s => rows(Pipelines.readStore(spark, s"$s/data").select("fingerprint"))),
       Family("hierarchy", Seq("log/data"),
         (s, b) => collecting(sink => Pipelines.hierarchyIngestStream(s,
           buckets = 8, autoCompactFilesPerDir = 0)(sink)(
@@ -2020,14 +1218,7 @@ class StreamingPipelinesSpec extends SparkSpec {
           buckets = 8, autoCompactMergeFiles = 0)(sink)(
           edges(b).toDF("id_a", "id_b"), b.toLong)),
         s => Pipelines.clusterCompact(spark, s),
-        s => rows(Pipelines.clusterStoreReps(spark, s))),
-      Family("basket", Seq("items", "pairs", "baskets"),
-        (s, b) => {
-          Pipelines.basketStream("b", "i", s)(baskets(b).toDF("b", "i"), b.toLong)
-          Nil
-        },
-        s => Pipelines.basketCompact(spark, s, 1L),
-        s => rows(Pipelines.basketRulesFromStore(spark, s, 0.2))))
+        s => rows(Pipelines.clusterStoreReps(spark, s))))
     val conf = spark.sessionState.newHadoopConf()
     families.foreach { f =>
       val base = java.nio.file.Files.createTempDirectory(s"torn-${f.name}").toString
@@ -2052,6 +1243,9 @@ class StreamingPipelinesSpec extends SparkSpec {
         def tear(): Unit = f.live.foreach { d =>
           assert(fs.rename(new Path(s"$s/$d"), new Path(s"$s/$d$window")), tag)
         }
+        // a reader that comes first heals the store before any write
+        tear()
+        assert(f.readOut(s) === pre, s"$tag: read-out before any write lost history")
         tear()
         assert(f.ingest(s, 2) === emitted,
           s"$tag: the next batch re-emitted already-ingested rows")
@@ -2172,41 +1366,5 @@ class StreamingPipelinesSpec extends SparkSpec {
     assert(canon(Pipelines.scd2StoreIntervalsAsOf(spark, store, Seq("seg"), 0L))
       === canon(graft.operators.Scd.scd2Build(hist0, "k", "snap_ts",
         Seq("seg"))))
-  }
-
-  test("skyline store: streamed ≡ batch, dominated cells pruned, replay absorbed") {
-    val store = java.nio.file.Files.createTempDirectory("skystore").toFile
-    store.delete()
-    val body = Pipelines.skylineIngestStream("u", "t",
-      "file:" + store.getAbsolutePath)
-    def sky() = Pipelines
-      .skylineReport(spark, "file:" + store.getAbsolutePath)
-      .as[(Long, Long, Long)].collect().toSet
-    // batch 0: (10,3)×2 and (5,1) — both on the front
-    val b0 = Seq((10L, 3L), (10L, 3L), (5L, 1L)).toDF("u", "t")
-    body(b0, 0L)
-    assert(sky() === Set((10L, 3L, 2L), (5L, 1L, 1L)))
-    // batch 1: (8,2) joins the front, (10,3) recurs and accumulates,
-    // (4,7) is dominated by (5,1) → pruned at APPEND time
-    val b1 = Seq((8L, 2L), (4L, 7L), (10L, 3L)).toDF("u", "t")
-    body(b1, 1L)
-    assert(sky() === Set((10L, 3L, 3L), (8L, 2L, 1L), (5L, 1L, 1L)))
-    // the pruned cell never reached the store
-    val stored = spark.read.parquet("file:" + store.getAbsolutePath)
-      .select("u", "t").distinct().as[(Long, Long)].collect().toSet
-    assert(!stored.contains((4L, 7L)))
-    // redelivery of batch 1 (same batch_id, identical rows) → no change
-    body(b1, 1L)
-    assert(sky() === Set((10L, 3L, 3L), (8L, 2L, 1L), (5L, 1L, 1L)))
-    // streamed ≡ batch skyline over everything ever ingested
-    val batchSky = graft.operators.Profiling
-      .skyline2d(b0.unionAll(b1), "u", "t")
-      .as[(Long, Long, Long)].collect().toSet
-    assert(sky() === batchSky)
-    // a later batch can still dominate OLD front cells at read time:
-    // (11,1) beats (10,3) and (8,2) outright, and (5,1) via the
-    // t-tie with strictly larger u — the whole front collapses to it
-    body(Seq((11L, 1L)).toDF("u", "t"), 2L)
-    assert(sky() === Set((11L, 1L, 1L)))
   }
 }
