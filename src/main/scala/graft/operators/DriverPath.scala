@@ -71,11 +71,12 @@ object DriverPath {
 
   /** `rows` as a local relation of `schema`, read as ONE partition:
     * the rows live in the plan, so a collect of the frame needs no job,
-    * and since the frame is within the budget by construction, one
-    * partition costs no parallelism while letting an order or a keyed
-    * aggregate over it plan no exchange (a bare local relation reads as
-    * up to one partition per core of unknown partitioning, so a global
-    * sort over it pays a sampling job and a shuffle). */
+    * and since the rows are already bounded on the driver (by the
+    * budget, or by the memory sink [[graft.streaming.Pipelines.runToMemory]]
+    * drains), one partition costs no parallelism while letting an order
+    * or a keyed aggregate over it plan no exchange (a bare local relation
+    * reads as up to one partition per core of unknown partitioning, so a
+    * global sort over it pays a sampling job and a shuffle). */
   def localFrame(spark: SparkSession, schema: StructType,
                  rows: Seq[Row]): DataFrame =
     spark.createDataFrame(rows.asJava, schema).coalesce(1)

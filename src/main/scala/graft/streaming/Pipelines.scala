@@ -317,8 +317,13 @@ object Pipelines {
     * append-mode streaming plans (the fixture file arrives through
     * the real file-stream source, so the plan under test is the
     * streaming one, e.g. StreamingSymmetricHashJoin — not a batch
-    * rewrite). The memory sink is driver-resident by design, so this
-    * is for oracle-gated result sets, not corpus-sized output. */
+    * rewrite). The memory sink is the bound: it holds every output row
+    * on the driver by design, so this is for oracle-gated result sets,
+    * not corpus-sized output, and it takes no budget of its own. The
+    * rows are handed on as they already are, on the driver: collecting
+    * the sink is a local table scan (no job), and the result is a
+    * [[graft.operators.DriverPath.localFrame]], so a keyed aggregate or
+    * an order over it plans no exchange. */
   def runToMemory(streamDf: DataFrame): DataFrame = {
     val spark = streamDf.sparkSession
     val name = s"graft_mem_sink_${memSinkSeq.incrementAndGet()}"
@@ -334,7 +339,9 @@ object Pipelines {
         .outputMode("append").start()
       try q.processAllAvailable() finally q.stop()
     } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    val out = spark.table(name).localCheckpoint(true)
+    val sink = spark.table(name)
+    val out = graft.operators.DriverPath.localFrame(spark, sink.schema,
+      sink.collect().toSeq)
     spark.catalog.dropTempView(name)
     out
   }

@@ -8,14 +8,15 @@ import scala.jdk.CollectionConverters._
 
 import graft.{GraftSession, Tables}
 import graft.queries.{GQuery, Registry}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
-  SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated,
+  SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FormattedMode, SparkPlan}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
   BroadcastNestedLoopJoinExec, CartesianProductExec, SortMergeJoinExec}
 import org.apache.spark.sql.streaming.{StateOperatorProgress, StreamingQueryListener}
+import org.apache.spark.storage.BroadcastBlockId
 
 /** One main for the engine's per-query numbers. Wall time on a shared
   * box swings ±15 % run to run, so round-over-round judging uses the two
@@ -26,8 +27,9 @@ import org.apache.spark.sql.streaming.{StateOperatorProgress, StreamingQueryList
   * {{{
   *   Audit perf <out.json> [sfDir]  every query warm, then measured: JSON of jobs,
   *                                  shuffle MB, wall; top 15; exit 1 over 8 GB
-  *   Audit jobs <query>             job count, then each job's cost, task
-  *                                  deserialization, description and stages
+  *   Audit jobs <query>             job and broadcast counts, then each job's
+  *                                  cost, task deserialization, description
+  *                                  and stages
   *   Audit time <q1,…> [reps]       build / plan / exec split of each rep
   *   Audit stream <query> [reps]    each micro-batch's durationMs and state
   *   Audit plans [q…]               static-plan census (exit 1 on a cartesian
@@ -55,16 +57,16 @@ object Audit {
       durationMs: Map[String, Long], state: Seq[StateOperatorProgress])
 
   /** Jobs, per-job timings, descriptions, stage names and task
-    * deserialization time, shuffle bytes of completed stages and stream
-    * micro-batch progress, fed by one SparkListener and one
+    * deserialization time, shuffle bytes of completed stages, broadcasts
+    * and stream micro-batch progress, fed by one SparkListener and one
     * StreamingQueryListener. */
   private[graft] final class Collector {
+    import Collector.Open
     private val jobs, readBytes, writeBytes = new AtomicLong
     val finished = new ConcurrentLinkedQueue[Job]
     val batches = new ConcurrentLinkedQueue[Batch]
     private val events = new AtomicLong
-    private final case class Open(startMs: Long, description: String, stages: String,
-        stageIds: Seq[Int], deserializeMs: AtomicLong)
+    private val broadcastIds = ConcurrentHashMap.newKeySet[java.lang.Long]()
     private val open = new ConcurrentHashMap[Int, Open]
     private val stageJob = scala.collection.concurrent.TrieMap.empty[Int, Int]
 
@@ -94,6 +96,15 @@ object Audit {
         // a stage completes before the job that ran it ends
         stageJob.get(s.stageInfo.stageId).flatMap(id => Option(open.get(id)))
           .foreach(_.deserializeMs.addAndGet(m.executorDeserializeTime))
+        events.incrementAndGet()
+      }
+      // every broadcast reports its pieces to the master as it is written
+      override def onBlockUpdated(b: SparkListenerBlockUpdated): Unit = {
+        b.blockUpdatedInfo.blockId match {
+          case BroadcastBlockId(id, _) if b.blockUpdatedInfo.storageLevel.isValid =>
+            broadcastIds.add(id)
+          case _ =>
+        }
         events.incrementAndGet()
       }
     }
@@ -129,12 +140,19 @@ object Audit {
       }
       (jobs.get, readBytes.get, writeBytes.get)
     }
+
+    /** Distinct broadcasts written so far; read after [[settle]]. */
+    def broadcasts: Long = broadcastIds.size.toLong
+  }
+  private[graft] object Collector {
+    private final case class Open(startMs: Long, description: String, stages: String,
+        stageIds: Seq[Int], deserializeMs: AtomicLong)
   }
 
   /** One query's counts: measured pass deltas, plus the warm pass's
     * shuffle write so the budget sees every byte. */
   final case class Run(name: String, jobs: Long, readBytes: Long, writeBytes: Long,
-      wall: Double, ok: Boolean, warmWriteBytes: Long)
+      wall: Double, ok: Boolean, warmWriteBytes: Long, broadcasts: Long)
 
   /** Runs `q` into the noop sink twice and measures the second pass: the
     * warm pass fills the session-shared caches, so the measured ladder does
@@ -150,10 +168,11 @@ object Audit {
     val (_, _, w0) = c.settle()
     once()
     val (j1, r1, w1) = c.settle()
+    val b1 = c.broadcasts
     c.finished.clear(); c.batches.clear()
     val (ok, wall) = timed(once())
     val (j2, r2, w2) = c.settle()
-    Run(q.name, j2 - j1, r2 - r1, w2 - w1, wall, ok, w1 - w0)
+    Run(q.name, j2 - j1, r2 - r1, w2 - w1, wall, ok, w1 - w0, c.broadcasts - b1)
   }
 
   private def timed[A](f: => A): (A, Double) = {
@@ -234,7 +253,7 @@ object Audit {
       case "jobs" =>
         val r = warmThenMeasure(spark, dir, named("q329_streaming_pit_enrich").head, c)
         val js = c.finished.asScala.toSeq.map(j => (j.endMs - j.startMs, j)).sortBy(-_._1)
-        println(f"[jobs] ${r.name}: ${r.jobs} jobs, ${r.wall}%.2f s")
+        println(f"[jobs] ${r.name}: ${r.jobs} jobs, ${r.broadcasts} broadcasts, ${r.wall}%.2f s")
         println(f"[jobs] job-sum=${js.map(_._1).sum / 1e3}%.2f s")
         println(f"[jobs] deserialize-sum=${js.map(_._2.deserializeMs).sum / 1e3}%.2f s")
         for ((ms, j) <- js.take(40)) println(f"[jobs] $ms%8d ms  job#${j.id}  " +

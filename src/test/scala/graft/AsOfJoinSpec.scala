@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.AsOfJoin
-import org.apache.spark.sql.functions._
 
 class AsOfJoinSpec extends SparkSpec {
   import spark.implicits._

@@ -77,6 +77,23 @@ class AuditSpec extends SparkSpec {
     }
   }
 
+  test("the collector counts each broadcast once, however many pieces it has, and not its removal") {
+    val c = new Audit.Collector().attach(spark)
+    try {
+      c.settle()
+      val b0 = c.broadcasts
+      val rnd = new scala.util.Random(7L)
+      // incompressible, so it spans three 4 MB pieces
+      val big = spark.sparkContext.broadcast(Array.fill(9 << 20)(rnd.nextInt().toByte))
+      val small = spark.sparkContext.broadcast(Seq(1, 2, 3))
+      c.settle()
+      assert(c.broadcasts - b0 === 2L)
+      big.destroy(); small.destroy()
+      c.settle()
+      assert(c.broadcasts - b0 === 2L)
+    } finally c.detach(spark)
+  }
+
   test("the census flags a non-broadcast cartesian product and passes a broadcast one") {
     val (a, b) = (spark.range(50).toDF("a"), spark.range(50).toDF("b"))
     withConf("spark.sql.adaptive.enabled" -> "false",
@@ -91,7 +108,7 @@ class AuditSpec extends SparkSpec {
   test("the shuffle budget flags a query above 8 GB on its warm or measured pass") {
     def run(name: String, write: Long, warm: Long) =
       Audit.Run(name, jobs = 3, readBytes = 0L, writeBytes = write, wall = 0.1, ok = true,
-        warmWriteBytes = warm)
+        warmWriteBytes = warm, broadcasts = 0L)
     val rows = Seq(run("q_small", 1L << 20, 1L << 20), run("q_at_bound", 8000000000L, 0L),
       run("q_measured", 8000000001L, 0L), run("q_warm", 0L, 9000000000L))
     assert(Audit.overBudget(rows).map(_.name) === Seq("q_measured", "q_warm"))

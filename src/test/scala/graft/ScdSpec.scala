@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.Scd
-import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
 class ScdSpec extends SparkSpec {

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
@@ -290,6 +293,85 @@ class StreamStreamJoinSpec extends SparkSpec {
           .sorted.toSeq
         assert(got === expected, s"seed=$seed diverged")
       } finally q.stop()
+    }
+  }
+
+  /** The hand-off `runToMemory` made before it returned driver rows:
+    * the memory sink's rows, checkpointed. */
+  private def drainByCheckpoint(df: DataFrame, name: String): DataFrame = {
+    val q = df.writeStream.format("memory").queryName(name)
+      .outputMode("append").start()
+    try q.processAllAvailable() finally q.stop()
+    val out = spark.table(name).localCheckpoint(true)
+    spark.catalog.dropTempView(name)
+    out
+  }
+
+  private object Aqe extends AdaptiveSparkPlanHelper
+
+  test("runToMemory hands the sink's rows on without a job, as one partition, on the q331 and q333 shapes") {
+    import graft.streaming.Pipelines
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import scala.jdk.CollectionConverters._
+    // views and clicks of 6 users over 10 hours, through the file source
+    val rnd = new scala.util.Random(331L)
+    val base = Timestamp.valueOf("2024-01-01 00:00:00").getTime
+    val events = (1 to 240).map { i =>
+      (rnd.nextInt(6).toLong, i.toLong, if (rnd.nextInt(3) == 0) "click" else "view",
+        new Timestamp(base + rnd.nextInt(600) * 60000L))
+    }.sortBy(_._4.getTime)
+    val dir = java.nio.file.Files.createTempDirectory("handoff").toString
+    events.toDF("user_id", "event_id", "event_type", "ts").write.parquet(s"$dir/events")
+    val schema = spark.read.parquet(s"$dir/events").schema
+    def shape(joinType: String): DataFrame = {
+      val ev = spark.readStream.schema(schema).parquet(s"$dir/events")
+      val views = ev.where(col("event_type") === "view")
+        .select(col("user_id"), col("event_id").as("view_id"), col("ts").as("view_ts"))
+      val clicks = ev.where(col("event_type") === "click")
+        .select(col("user_id").as("uid_c"), col("event_id").as("click_id"),
+          col("ts").as("click_ts"))
+      Pipelines.intervalJoinStreams(views, clicks, "user_id", "uid_c",
+          "view_ts", "click_ts", delay = "1 hour", within = "2 hours", joinType)
+        .select(col("user_id"), col("view_id"), col("click_id"),
+          (unix_timestamp(col("click_ts")) - unix_timestamp(col("view_ts"))).as("lag_s"))
+    }
+    val seen = new ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(seen.add)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      for (joinType <- Seq("inner", "left_outer")) {
+        val want = drainByCheckpoint(shape(joinType), s"handoff_$joinType")
+          .collect().map(_.toString).sorted.toSeq
+        seen.clear()
+        // the stream's batches carry their own description; the
+        // hand-off after the stream stops runs under this one
+        sc.setJobDescription("hand-off")
+        val got = try Pipelines.runToMemory(shape(joinType))
+          finally sc.setJobDescription(null)
+        sc.setJobDescription("sentinel")
+        try sc.parallelize(Seq(1)).count() finally sc.setJobDescription(null)
+        val deadline = System.nanoTime() + 10000000000L
+        while (!seen.contains("sentinel") && System.nanoTime() < deadline)
+          Thread.sleep(20)
+        assert(seen.contains("sentinel"))
+        assert(!seen.contains("hand-off"), s"$joinType: ${seen.asScala.toSeq}")
+        assert(got.collect().map(_.toString).sorted.toSeq === want, joinType)
+        assert(want.nonEmpty && (joinType == "inner" || want.exists(_.contains("null"))))
+        val agg = got.groupBy(col("user_id")).agg(count(col("click_id")).as("n"))
+          .orderBy(col("user_id"))
+        agg.collect()
+        val plan = agg.queryExecution.executedPlan
+        assert(Aqe.collect(plan) { case e: ShuffleExchangeExec => e }.isEmpty,
+          s"$joinType:\n$plan")
+      }
+    } finally {
+      sc.removeSparkListener(listener)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.UnigramLm
-import org.apache.spark.sql.functions._
 
 /** Unigram-LM tokenizer laws: Viterbi optimality against brute-force
   * enumeration (cost AND tie-break), coverage totality, EM census
